@@ -3,9 +3,10 @@
 This is the throughput-critical redesign of the reference's
 `calculate_feature_matrix` cutoff loop (calculate_feature_matrix.py:
 437-506 re-filters the whole EntitySet once per unique cutoff time —
-O(#cutoffs) passes). We do ONE pass, with two physical strategies:
+O(#cutoffs) passes). We do ONE pass, with two physical strategies,
+both pure JVM (no row crosses into Python):
 
-strategy="join" (default; pure JVM, whole-stage codegen):
+strategy="join" (default; whole-stage codegen):
     cutoffs ⋈ events on the entity key with the time predicate as a
     join condition, then ONE groupBy(instance, cutoff).agg(...) for
     every expression-strategy primitive. Catalyst/AQE pick
@@ -17,42 +18,46 @@ strategy="join" (default; pure JVM, whole-stage codegen):
     (entityset.py:1407-1457): include_cutoff_time=True → t <= cutoff,
     window t > cutoff-w; False → t < cutoff, window t >= cutoff-w.
 
-strategy="sortmerge" (marker-union kernel):
-    union events + per-cutoff WINDOW MARKERS (one row at the cutoff
-    time, one at the window start / key start), hash-repartition on
-    the entity key, sortWithinPartitions(key, time, tiebreak). Because
-    markers sort into the event stream, every window bound is read off
-    cumulative event aggregates at the marker's sorted position. Two
-    evaluators share that one exchange + sort: UNBOUNDED windows with
-    no last-N clamp run as pure-JVM running window functions at the
-    marker rows (r8 — no Python boundary at all; the measured dominant
-    cost of the Arrow sweep was JVM→Python serialization of the whole
-    stream, not compute); windowed/last-N/trend calls run the ONE
-    mapInArrow numpy pass per partition (prefix sums / reduceat, zero
-    per-key Python). Wins when cutoffs per entity are many (dense
-    backfills). Primitives the kernel cannot vectorize (median,
-    num_unique, twostage holistics), non-numeric inputs, and
-    secondary-time-index masks are routed to strategy="join"
-    automatically and merged back on (instance, cutoff).
-    Skew note: a single entity heavier than one range partition stays
-    in one partition by default. Pass salt=S for EXPLICIT hot-key
-    salting (the north-rule requirement): events hash into S
-    sub-streams, markers replicate to each, the kernel emits per-salt
-    distributive PARTIALS, and one JVM groupBy merges — a 50%-hot
-    entity runs ~2x faster salted (BENCH/BASELINE.md skew section).
+strategy="sortmerge" (marker union + running windows):
+    union events with per-cutoff WINDOW MARKERS (a hi-marker at the
+    cutoff and, for a bounded training_window, a lo-marker at the
+    window start), hash-partition on the entity key and sort within
+    partitions by (key, time, tiebreak): one Exchange, one Sort.
+    Markers sort into the event stream at their window bounds, so each
+    primitive is finalized from a few running window aggregates (its
+    _PARTIALS: counts, sums, min/max, first/last valid value and time)
+    read at the marker rows. An unbounded window reads them at the
+    hi-marker; a bounded one is the prefix difference hi − lo, paired
+    by one groupBy(key, cutoff) that the key partitioning already
+    satisfies (no new Exchange). O(events + cutoffs) instead of the
+    join's events × cutoffs, so unbounded windows win when cutoffs per
+    entity are many (dense backfills); a window also bounds the join's
+    expansion, and bounded calls measured level with join at 200k
+    events and behind it at 2M. Specs a running window cannot compute
+    route to strategy="join" and merge back on (instance, cutoff):
+    holistic primitives (median, num_unique, ...), use_previous in
+    observations, non-numeric inputs and secondary-time-index masks.
+    A bounded call that needs the join at all — also for primitives
+    that are not a prefix difference (min, max, first, trend, ...) —
+    runs on it entirely (_split_kernel_specs).
+    Skew note: a single entity stays in one partition by default.
+    Pass salt=S for EXPLICIT hot-key salting: events hash into S
+    sub-streams, markers replicate to each, and the groupBy(key,
+    cutoff) combines the per-salt partials — a 50%-hot entity runs
+    ~2x faster salted (BENCH/BASELINE.md skew section).
     Alternatively route skewed tables to strategy="join", where AQE
     skew-join splits the hot key.
 
-Both return one row per cutoff row, with primitive default values
-filled for instances that have no qualifying events.
+Every path first maps NaN to null in the float/double value columns,
+so NaN is skipped the way pandas (the reference) skips it. All return
+one row per cutoff row, with primitive default values filled for
+instances that have no qualifying events.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
@@ -111,9 +116,9 @@ def asof_aggregate(
 
     salt (sortmerge only): EXPLICIT hot-entity salting — events hash
     into `salt` sub-streams, window markers replicate to every
-    sub-stream, the kernel emits per-salt PARTIALS and one JVM
-    groupBy merges them, so a single hot entity spreads across up to
-    `salt` range partitions instead of straggling in one.
+    sub-stream and one JVM groupBy combines the per-salt partials, so
+    a single hot entity spreads across up to `salt` partitions instead
+    of straggling in one. Specs routed to the join path ignore it.
 
     `cutoffs` must be distinct on (instance_col, cutoff_col) — the
     caller (cfm) guarantees it, avoiding redundant exchanges here.
@@ -123,14 +128,17 @@ def asof_aggregate(
     scalar "tuple path", cfm.py:399-432) — strictly cheaper than the
     join-then-aggregate shape needed for per-row cutoffs.
     """
+    child = _nan_to_null(child, specs)
     if strategy == "sortmerge" and not hops:
-        kern, rest = _split_kernel_specs(child, time_col, specs)
+        kern, rest = _split_kernel_specs(
+            child, time_col, specs, training_window is not None,
+            n_observations)
         parts = []
         if kern:
             parts.append(_asof_sortmerge(
                 child, key_col, time_col, cutoffs, instance_col, kern,
                 cutoff_col, include_cutoff_time, training_window,
-                n_observations, salt=salt,
+                salt=salt,
             ))
         if rest:
             parts.append(_asof_join(
@@ -155,6 +163,18 @@ def asof_aggregate(
         cutoff_col, include_cutoff_time, training_window, n_observations,
         aux=aux, hops=hops,
     )
+
+
+def _nan_to_null(child: DataFrame, specs: list[AggSpec]) -> DataFrame:
+    """NaN -> null in the float/double columns the specs read, so every
+    evaluator skips NaN the way pandas (the reference) does; Spark's
+    aggregates would otherwise propagate it (sum NaN, max NaN)."""
+    read = {c for s in specs for c in s.input_cols}
+    fixes = {
+        c: F.nanvl(F.col(c), F.lit(None).cast(t))
+        for c, t in child.dtypes if c in read and t in ("float", "double")
+    }
+    return child.withColumns(fixes) if fixes else child
 
 
 def _asof_scalar(child, key_col, time_col, cutoffs, instance_col, specs,
@@ -528,94 +548,19 @@ def _fill_defaults(out: DataFrame, specs: list[AggSpec]) -> DataFrame:
 
 
 # ----------------------------------------------------------------------
-# strategy 2: sort-merge sweep in a vectorized Arrow kernel
+# strategy 2: marker union + JVM running windows
 # ----------------------------------------------------------------------
-_KERNEL_PRIMS = {
-    "count", "sum", "mean", "min", "max", "std", "variance",
-    "first", "last", "time_since_last", "time_since_first",
-    "avg_time_between", "first_last_time_delta", "trend",
-    "num_true", "percent_true", "any", "all",
-}
-# kernel outputs are double except the boolean reducers and the
-# count family (cast back to long at the merge boundary for schema
-# parity with the join strategy)
-_KERNEL_BOOL = {"any", "all"}
-_KERNEL_INT = {"count", "num_true"}
-_INTEGRAL_T = {"tinyint", "smallint", "int", "bigint"}
-
-
-def _kernel_parity_type(spec, child_types: dict) -> str | None:
-    """Output type the JOIN strategy would produce for this spec when
-    it differs from the kernel's native double — strategy="auto" may
-    route the same call to either path by data size, so the result
-    schema must not depend on the router's choice. None = the kernel
-    type already matches. Integer casts are lossless (counts/sums of
-    integrals are exact in double far past any window size); decimal
-    inputs keep the kernel's double rather than faking decimal
-    precision the kernel never had."""
-    p = spec.primitive.name
-    if p in _KERNEL_INT:
-        return "long"
-    it = child_types.get(spec.input_cols[0]) if spec.input_cols else None
-    if p == "sum" and it in _INTEGRAL_T:
-        return "long"        # Spark widens integral sums to bigint
-    if p in ("min", "max", "first", "last") and it \
-            and it != "double" and not it.startswith("decimal"):
-        return it            # join path preserves the input type
-    return None
-_NUMERIC_TYPES = (
-    "byte", "short", "integer", "long", "float", "double", "decimal",
-    "boolean",
-)
-
-
-def _split_kernel_specs(child, time_col, specs):
-    """Partition specs into (kernel-vectorizable, join-routed).
-
-    The Arrow kernel only takes primitives whose window aggregate
-    reduces to prefix sums / reduceat over doubles. Everything else —
-    holistic primitives (median, num_unique, mode, entropy, ...),
-    non-numeric inputs, secondary-time-index masks — routes to the
-    JVM join strategy and is merged back on (instance, cutoff), so
-    strategy='sortmerge' never raises and never falls back to
-    per-row Python.
-    """
-    if time_col is None:
-        return [], list(specs)
-    numeric_ok = {
-        f.name: f.dataType.typeName() in _NUMERIC_TYPES
-        for f in child.schema.fields
-    }
-    kern, rest = [], []
-    for s in specs:
-        ok = (
-            s.primitive.name in _KERNEL_PRIMS
-            and s.primitive.strategy == "expr"
-            and s.sec_time_col is None
-            # aux-resident columns (stacked inputs / agg-dep where
-            # clauses at per-row cutoffs) only exist after the cutoff
-            # join — the kernel reads the child frame, so route to join
-            and not any(c.startswith("__aux_")
-                        for c in (*s.input_cols,
-                                  *( [s.where_col] if s.where_col else [] )))
-            # percent_true's denominator is EVERY window row (nulls
-            # count as False); under a where mask it must count only
-            # mask-selected rows — join path handles that
-            and not (s.primitive.name == "percent_true" and s.where_col)
-            # count's value column is irrelevant to the kernel:
-            # _asof_sortmerge strips it (AggSpec rebuild below) and
-            # counts where-mask hits / window rows directly, so a
-            # non-numeric child index on a masked COUNT is fine here
-            and (s.primitive.name == "count"
-                 or all(numeric_ok.get(c, False) for c in s.input_cols))
-        )
-        (kern if ok else rest).append(s)
-    return kern, rest
-
-
-# per-primitive partial columns the salted kernel emits; merged by
-# _salt_merge_exprs in one JVM groupBy(instance, cutoff)
-_SALT_PARTIALS = {
+# The partial columns each primitive is finalized from. A partial is a
+# running window aggregate over one (value, mask) stream, read at the
+# marker rows:
+#   n             valid values (masked rows when the spec has no value)
+#   s, ss         sum and sum of squares of the values
+#   na            masked rows, nulls included (percent_true)
+#   mn, mx        min and max value
+#   ft, lt        time (micros) of the first and last valid value
+#   fv, lv        the first and last valid value
+#   sx, sx2, sxy  sums of x, x² and x·value; x = seconds from the cutoff
+_PARTIALS = {
     "count": ["n"],
     "sum": ["n", "s"],
     "mean": ["n", "s"],
@@ -631,273 +576,206 @@ _SALT_PARTIALS = {
     "avg_time_between": ["n", "ft", "lt"],
     "trend": ["n", "s", "ft", "sx", "sx2", "sxy"],
     "num_true": ["n", "s"],
-    "percent_true": ["n", "s", "na"],   # na = window rows incl. nulls
+    "percent_true": ["n", "s", "na"],
     "any": ["n", "mx"],
     "all": ["n", "mn"],
 }
+# partials that combine by summing, so a bounded window is
+# running(hi) − running(lo): lo-markers carry them negated
+_ADDITIVE = {"n", "s", "ss", "na", "sx", "sx2", "sxy"}
+# partials a bounded window reads at its hi-marker alone: when the
+# window holds a valid value, the last valid value before the cutoff
+# lies inside it
+_HI_ONLY = {"lt", "lv"}
+# primitives a bounded window computes by prefix difference
+_BOUNDED_PRIMS = {
+    p for p, parts in _PARTIALS.items() if set(parts) <= _ADDITIVE | _HI_ONLY
+}
+_BOOL_PRIMS = {"any", "all"}
+_INTEGRAL_T = {"tinyint", "smallint", "int", "bigint"}
+_NUMERIC_TYPES = (
+    "byte", "short", "integer", "long", "float", "double", "decimal",
+    "boolean",
+)
 
 
-def _salt_merge_exprs(spec_rows):
-    """Final-value aggregate expressions over the salted kernel's
-    partial columns (grouped by instance + __t_out micros)."""
-    ct_us = F.max(F.col("__t_out"))
-    exprs = []
-    for out_name, pname, _in, _w in spec_rows:
-        def c(p, o=out_name):
-            return F.col(f"{o}__{p}")
-
-        N = F.sum(c("n"))
-        if pname == "count":
-            e = N
-        elif pname == "sum":
-            e = F.when(N > 0, F.sum(c("s")))
-        elif pname == "mean":
-            e = F.when(N > 0, F.sum(c("s")) / N)
-        elif pname in ("std", "variance"):
-            m = F.sum(c("s")) / N
-            var = F.greatest(F.sum(c("ss")) / N - m * m, F.lit(0.0))
-            e = F.when(N > 0, F.sqrt(var) if pname == "std" else var)
-        elif pname == "min":
-            e = F.min(c("mn"))
-        elif pname == "max":
-            e = F.max(c("mx"))
-        elif pname == "num_true":
-            e = F.when(N > 0, F.sum(c("s")))
-        elif pname == "percent_true":
-            # reference fillna(False): nulls count in the denominator
-            NA = F.sum(c("na"))
-            e = F.when(NA > 0, F.sum(c("s")) / NA)
-        elif pname == "any":
-            e = F.max(c("mx")) > 0
-        elif pname == "all":
-            e = F.min(c("mn")) > 0
-        elif pname == "first":
-            e = F.min_by(c("fv"), c("ft"))
-        elif pname == "last":
-            e = F.max_by(c("lv"), c("lt"))
-        elif pname == "time_since_last":
-            e = F.when(N > 0, (ct_us - F.max(c("lt"))) / 1e6)
-        elif pname == "time_since_first":
-            e = F.when(N > 0, (ct_us - F.min(c("ft"))) / 1e6)
-        elif pname == "first_last_time_delta":
-            e = F.when(N > 0, (F.max(c("lt")) - F.min(c("ft"))) / 1e6)
-        elif pname == "avg_time_between":
-            e = F.when(
-                N > 1, (F.max(c("lt")) - F.min(c("ft"))) / 1e6 / (N - 1)
-            )
-        elif pname == "trend":
-            sx, sx2 = F.sum(c("sx")), F.sum(c("sx2"))
-            sy, sxy = F.sum(c("s")), F.sum(c("sxy"))
-            varx = sx2 / N - (sx / N) * (sx / N)
-            cov = sxy / N - (sx / N) * (sy / N)
-            zero = varx <= 1e-12 * F.greatest(sx2 / N, F.lit(1e-300))
-            first_i = F.floor(F.min(c("ft")) / 1e6).cast("long")
-            div = (
-                F.when(F.pmod(first_i, F.lit(86400)) == 0, F.lit(86400.0))
-                .when(F.pmod(first_i, F.lit(3600)) == 0, F.lit(3600.0))
-                .when(F.pmod(first_i, F.lit(60)) == 0, F.lit(60.0))
-                .otherwise(F.lit(1.0))
-            )
-            e = (
-                F.when(N <= 2, F.lit(None).cast("double"))
-                .when(zero, F.lit(0.0))
-                .otherwise(cov / varx * div)
-            )
-        else:  # pragma: no cover — gated by _SALT_PARTIALS lookup
-            raise ValueError(pname)
-        out_type = "boolean" if pname in _KERNEL_BOOL else "double"
-        exprs.append(e.cast(out_type).alias(out_name))
-    return exprs
+def _output_type(spec, child_types: dict) -> str:
+    """The type the JOIN strategy produces for this spec (the running
+    windows compute in doubles) — strategy="auto" may route the same
+    call to either path by data size, so the result schema must not
+    depend on the router's choice. Integer casts are lossless
+    (counts/sums of integrals are exact in double far past any window
+    size); decimal inputs keep double rather than faking decimal
+    precision the windows never had."""
+    p = spec.primitive.name
+    if p in _BOOL_PRIMS:
+        return "boolean"
+    if p in ("count", "num_true"):
+        return "long"
+    it = child_types.get(spec.input_cols[0]) if spec.input_cols else None
+    if p == "sum" and it in _INTEGRAL_T:
+        return "long"        # Spark widens integral sums to bigint
+    if p in ("min", "max", "first", "last") and it \
+            and it != "double" and not it.startswith("decimal"):
+        return it            # join path preserves the input type
+    return "double"
 
 
-# Primitives whose unbounded-window value is a RUNNING aggregate over
-# the sorted (key, time, tiebreak) stream — expressible as pure-JVM
-# window functions (guide §4.1: built-ins over any Python boundary).
-# trend is excluded: its origin-shifted x/x²/x·y sums would need a
-# different numeric sequence than the Arrow kernel's; specs containing
-# it keep the Arrow path.
-_RUNNING_PRIMS = _KERNEL_PRIMS - {"trend"}
+def _split_kernel_specs(child, time_col, specs, bounded, n_observations):
+    """Partition specs into (running-window, join-routed).
 
-
-def _running_window_result(unioned, spec_rows, instance_col, key_cast,
-                           range_cols, salted):
-    """Pure-JVM replacement for the Arrow sweep in the UNBOUNDED,
-    no-n_observations case: every kernel output is a running window
-    aggregate over the same one exchange + one sort the kernel already
-    needs (partitionBy key[, salt], orderBy (t, tiebreak), ROWS
-    UNBOUNDED PRECEDING..CURRENT ROW), read off at the marker rows.
-
-    Rationale (guide §4.1/§4.2 measured the other way around): at 20M
-    events + 12.8M markers the mapInArrow kernel's cost is NOT the
-    numpy math (~0.2s/task) but the JVM→Python Arrow serialization of
-    the whole 33M-row stream (~7s of an 11.7s stage — measured with a
-    drain-only UDF, BENCH r8). Running JVM window aggregates keep the
-    same algorithm — cumulative counts/sums at each marker position —
-    without any row ever crossing the Python boundary.
-
-    Emits the exact schema the Arrow kernel emits (unsalted: finals;
-    salted: the _SALT_PARTIALS columns), so every downstream step
-    (salt merge, casts, defaults) is shared.
+    The running windows take every _PARTIALS primitive on an unbounded
+    window and the _BOUNDED_PRIMS on a bounded one. Everything else
+    routes to the JVM join strategy and is merged back on (instance,
+    cutoff), so strategy='sortmerge' never raises:
+    - holistic primitives (median, num_unique, mode, entropy, ...);
+    - non-numeric inputs and secondary-time-index masks;
+    - use_previous in observations: a last-N row limit per cutoff,
+      not a running aggregate, so the whole group goes to join.
+    A bounded call that routes any spec to join routes all of them:
+    the other specs ride that join's groupBy instead of paying a
+    second exchange + sort and a merge join. An unbounded call splits.
+    Measured on a 4-vCPU host, request p50, a 30-day window over
+    count, sum, mean, std, time_since_last, trend and max, all-join vs
+    split: 1.25 vs 1.95 s at 4 cutoffs per entity (200k events), 3.97
+    vs 4.49 s at 64 (200k events), 10.1 vs 14.4 s at 64 (2M events);
+    unbounded at 64 cutoffs with median added: 7.75 vs 7.47 s, split
+    faster in 4 of 5 pairs.
     """
-    is_ev = F.col("__tag") == F.lit(0)
-    w = (
-        W.partitionBy(*range_cols)
-        .orderBy("__t", "__srt")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-
-    def over(e):
-        return e.over(w)
-
-    ct = F.col("__t")
-    out_exprs = []
-    for out_name, pname, in_cols, wcol in spec_rows:
-        col = in_cols[0] if in_cols else None
-        cond = is_ev
-        if wcol is not None:
-            cond = cond & F.coalesce(F.col(f"__w_{wcol}"), F.lit(False))
-        if col is not None:
-            v = F.when(cond, F.col(f"__v_{col}"))      # null unless valid
-            vt = F.when(cond & F.col(f"__v_{col}").isNotNull(),
-                        F.col("__t"))
-            n = over(F.count(v))
-        else:
-            v = None
-            vt = F.when(cond, F.col("__t"))
-            n = over(F.count(F.when(cond, F.lit(1))))
-
-        def need(p):
-            if p == "n":
-                return n.cast("double")
-            if p == "s":
-                return over(F.sum(v))
-            if p == "ss":
-                return over(F.sum(v * v))
-            if p == "mn":
-                return over(F.min(v))
-            if p == "mx":
-                return over(F.max(v))
-            if p == "ft":
-                return over(F.min(vt)).cast("double")
-            if p == "lt":
-                return over(F.max(vt)).cast("double")
-            if p == "fv":
-                return over(F.first(v, ignorenulls=True))
-            if p == "lv":
-                return over(F.last(v, ignorenulls=True))
-            if p == "na":
-                return over(F.count(F.when(is_ev, F.lit(1)))).cast("double")
-            raise ValueError(p)  # pragma: no cover
-
-        if salted:
-            for p in _SALT_PARTIALS[pname]:
-                out_exprs.append(need(p).alias(f"{out_name}__{p}"))
-            continue
-
-        # unsalted finals — mirror the Arrow kernel's formulas (and
-        # NaN-means-null conventions) op for op
-        if pname == "count":
-            e = n.cast("double")
-        elif pname in ("sum", "num_true"):
-            e = over(F.sum(v))
-        elif pname == "mean":
-            e = over(F.sum(v)) / n
-        elif pname in ("std", "variance"):
-            s_, ss_ = over(F.sum(v)), over(F.sum(v * v))
-            m = s_ / n
-            var = F.greatest(ss_ / n - m * m, F.lit(0.0))
-            e = F.when(n > 0, F.sqrt(var) if pname == "std" else var)
-        elif pname == "min":
-            e = over(F.min(v))
-        elif pname == "max":
-            e = over(F.max(v))
-        elif pname in ("first", "last"):
-            e = (over(F.first(v, ignorenulls=True)) if pname == "first"
-                 else over(F.last(v, ignorenulls=True)))
-        elif pname == "percent_true":
-            na = over(F.count(F.when(is_ev, F.lit(1))))
-            e = F.when(na > 0, F.coalesce(over(F.sum(v)), F.lit(0.0)) / na)
-        elif pname == "any":
-            e = over(F.max(v)) > 0
-        elif pname == "all":
-            e = over(F.min(v)) > 0
-        elif pname == "time_since_last":
-            e = F.when(n > 0, (ct - over(F.max(vt))) / F.lit(1e6))
-        elif pname == "time_since_first":
-            e = F.when(n > 0, (ct - over(F.min(vt))) / F.lit(1e6))
-        elif pname == "first_last_time_delta":
-            e = F.when(
-                n > 0, (over(F.max(vt)) - over(F.min(vt))) / F.lit(1e6))
-        elif pname == "avg_time_between":
-            e = F.when(
-                n > 1,
-                (over(F.max(vt)) - over(F.min(vt))) / F.lit(1e6) / (n - 1),
-            )
-        else:  # pragma: no cover — gated by _RUNNING_PRIMS
-            raise ValueError(pname)
-        typ = "boolean" if pname in _KERNEL_BOOL else "double"
-        out_exprs.append(e.cast(typ).alias(out_name))
-
-    out_names = (
-        [f"{o}__{p}" for o, pname, _i, _w in spec_rows
-         for p in _SALT_PARTIALS[pname]]
-        if salted else [o for o, _p, _i, _w in spec_rows]
-    )
-    return (
-        unioned
-        .select(F.col("__k"), F.col("__t"), F.col("__tag"), *out_exprs)
-        .filter(F.col("__tag") == F.lit(1))
-        .select(
-            F.col("__k").cast(key_cast).alias(instance_col),
-            F.col("__t").alias("__t_out"),
-            *[F.col(f"`{c}`") for c in out_names],
+    if time_col is None or n_observations is not None:
+        return [], list(specs)
+    prims = _BOUNDED_PRIMS if bounded else _PARTIALS
+    numeric_ok = {
+        f.name: f.dataType.typeName() in _NUMERIC_TYPES
+        for f in child.schema.fields
+    }
+    kern, rest = [], []
+    for s in specs:
+        ok = (
+            s.primitive.name in prims
+            and s.primitive.strategy == "expr"
+            and s.sec_time_col is None
+            # aux-resident columns (stacked inputs / agg-dep where
+            # clauses at per-row cutoffs) only exist after the cutoff
+            # join — the windows read the child frame, so route to join
+            and not any(c.startswith("__aux_")
+                        for c in (*s.input_cols,
+                                  *( [s.where_col] if s.where_col else [] )))
+            # percent_true's denominator is EVERY window row (nulls
+            # count as False); under a where mask it must count only
+            # mask-selected rows — join path handles that
+            and not (s.primitive.name == "percent_true" and s.where_col)
+            # count's value column is irrelevant: _asof_sortmerge
+            # strips it and counts where-mask hits / window rows, so a
+            # non-numeric child index on a masked COUNT is fine here
+            and (s.primitive.name == "count"
+                 or all(numeric_ok.get(c, False) for c in s.input_cols))
         )
-    )
+        (kern if ok else rest).append(s)
+    if bounded and rest:
+        return [], list(specs)
+    return kern, rest
 
 
-# When set to a dict (tools/profile_sortmerge.py), _asof_sortmerge
-# records its staged DataFrames so the profiler can time the
-# shuffle+sort input and the kernel output independently of the
-# merge-back. Never set in production paths.
-_DEBUG_CAPTURE = None
+def _combine(p, e, c):
+    """Aggregate expression merging partial `p` (row expression `e`)
+    over a cutoff's marker rows — its hi and lo rows and its salt
+    sub-streams; c(q) is the row expression of the stream's partial q."""
+    if p in _ADDITIVE:
+        return F.sum(e)
+    if p in ("mn", "ft"):
+        return F.min(e)
+    if p in ("mx", "lt"):
+        return F.max(e)
+    if p == "fv":
+        return F.min_by(e, c("ft"))
+    return F.max_by(e, c("lt"))      # lv
+
+
+def _finalize(pname, c, ct_us):
+    """The primitive's value from its partials; c(p) is the column
+    holding partial p, ct_us the cutoff in micros."""
+    N = c("n")
+    if pname == "count":
+        return N
+    if pname in ("sum", "num_true"):
+        return F.when(N > 0, c("s"))
+    if pname == "mean":
+        return F.when(N > 0, c("s") / N)
+    if pname in ("std", "variance"):
+        m = c("s") / N
+        var = F.greatest(c("ss") / N - m * m, F.lit(0.0))
+        return F.when(N > 0, F.sqrt(var) if pname == "std" else var)
+    if pname in ("min", "all"):
+        return c("mn") > 0 if pname == "all" else c("mn")
+    if pname in ("max", "any"):
+        return c("mx") > 0 if pname == "any" else c("mx")
+    if pname == "first":
+        return c("fv")
+    if pname == "last":
+        return F.when(N > 0, c("lv"))
+    if pname == "percent_true":
+        # reference fillna(False): nulls count in the denominator
+        return F.when(c("na") > 0, F.coalesce(c("s"), F.lit(0.0)) / c("na"))
+    if pname == "time_since_last":
+        return F.when(N > 0, (ct_us - c("lt")) / F.lit(1e6))
+    if pname == "time_since_first":
+        return F.when(N > 0, (ct_us - c("ft")) / F.lit(1e6))
+    if pname == "first_last_time_delta":
+        return F.when(N > 0, (c("lt") - c("ft")) / F.lit(1e6))
+    if pname == "avg_time_between":
+        return F.when(N > 1, (c("lt") - c("ft")) / F.lit(1e6) / (N - 1))
+    if pname == "trend":
+        # reference calculate_trend parity: n<=2 -> NaN, all-equal x
+        # -> 0, slope scaled by the unit dividend of the first valid
+        # timestamp (whole days/hours/minutes)
+        sx, sx2, sy, sxy = c("sx"), c("sx2"), c("s"), c("sxy")
+        varx = sx2 / N - (sx / N) * (sx / N)
+        cov = sxy / N - (sx / N) * (sy / N)
+        # running-sum cancellation guard: relative epsilon
+        zero = varx <= 1e-12 * F.greatest(sx2 / N, F.lit(1e-300))
+        first_i = F.floor(c("ft") / 1e6).cast("long")
+        div = (
+            F.when(F.pmod(first_i, F.lit(86400)) == 0, F.lit(86400.0))
+            .when(F.pmod(first_i, F.lit(3600)) == 0, F.lit(3600.0))
+            .when(F.pmod(first_i, F.lit(60)) == 0, F.lit(60.0))
+            .otherwise(F.lit(1.0))
+        )
+        return (
+            F.when(N <= 2, F.lit(None).cast("double"))
+            .when(zero, F.lit(0.0))
+            .otherwise(cov / varx * div)
+        )
+    raise ValueError(pname)  # pragma: no cover — gated by _PARTIALS
 
 
 def _asof_sortmerge(child, key_col, time_col, cutoffs, instance_col, specs,
                     cutoff_col, include_cutoff_time, training_window,
-                    n_observations=None, salt=None):
-    """Range-partition + secondary-sort + one vectorized Arrow sweep.
+                    salt=None):
+    """Marker union, one exchange, one sort, JVM running windows.
 
-    Physical shape (the north-rule kernel): the cutoff table is turned
-    into WINDOW MARKERS — a hi-marker at the cutoff time and a
-    lo-marker at (cutoff - training_window), or at -inf when the
-    window is unbounded — and unioned into the event stream. One
-    repartitionByRange on the entity key co-locates each entity while
-    keeping ranges balanced, sortWithinPartitions(key, time, tiebreak)
-    interleaves markers with events at exactly the window-boundary
-    position (the tiebreak column encodes include_cutoff_time), then
-    ONE mapInPandas pass per partition reads every window bound off a
-    cumulative event count at the marker's position:
+    The cutoff table is turned into WINDOW MARKERS — a hi-marker
+    (tag 1) at each cutoff and, for a bounded training_window, a
+    lo-marker (tag 2) at cutoff − window — unioned into the event
+    stream (tag 0). One hash exchange on the entity key[, salt]
+    co-locates each entity; sortWithinPartitions(key[, salt], time,
+    tiebreak) interleaves markers with events at exactly the
+    window-boundary position (the tiebreak encodes
+    include_cutoff_time). A running window aggregate (ROWS UNBOUNDED
+    PRECEDING..CURRENT ROW) read at a marker covers every event sorted
+    before it, so each primitive's _PARTIALS are running windows read
+    at the markers:
 
-        hi[i] = (# events sorted before cutoff-marker i)
-        lo[i] = (# events sorted before lo-marker i)
+        unbounded, unsalted   finalized at the hi-marker rows directly
+        bounded or salted     one groupBy(key, cutoff) combines hi − lo
+                              and the per-salt partials, then finalizes
 
-    No per-key loop, no searchsorted — the kernel is O(partition)
-    numpy end-to-end; aggregates evaluate via global prefix arrays /
-    reduceat over [lo, hi) index pairs. use_previous in observations
-    is the clamp lo = max(lo, hi - n_obs). Memory is bounded by the
-    range partition size (tune spark.sql.shuffle.partitions), not by
-    the biggest entity alone.
+    No row crosses into Python: shipping the stream to a vectorized
+    Python sweep of the same algorithm cost more in JVM→Python
+    serialization than in math (~7 s of an 11.7 s stage at 20M events
+    + 12.8M markers, BENCH r8).
     """
-    if time_col is None:
-        raise ValueError("sortmerge strategy requires a time index")
     salted = salt is not None and salt > 1
-    if salted and n_observations is not None:
-        raise ValueError(
-            "salt is incompatible with use_previous in observations "
-            "(last-N is a global per-entity order, not per-salt); "
-            "use salt=None or strategy='join'"
-        )
-
     specs = [
         AggSpec(s.out_name, s.primitive,
                 [] if s.primitive.name == "count" else s.input_cols,
@@ -918,7 +796,6 @@ def _asof_sortmerge(child, key_col, time_col, cutoffs, instance_col, specs,
         if training_window
         else None
     )
-    NEG_INF = -(1 << 62)
 
     nulls = [
         *[F.lit(None).cast("double").alias(f"__v_{c}") for c in value_cols],
@@ -926,8 +803,7 @@ def _asof_sortmerge(child, key_col, time_col, cutoffs, instance_col, specs,
     ]
     # salting: events hash into `salt` sub-streams; every marker
     # replicates to every sub-stream, so each (key, salt) block is a
-    # self-contained mini as-of problem whose bounds the kernel reads
-    # the same way — it just emits partials instead of finals.
+    # self-contained as-of problem whose partials the groupBy combines
     ev_salt = (
         [F.pmod(
             F.xxhash64(F.col(key_col),
@@ -950,445 +826,131 @@ def _asof_sortmerge(child, key_col, time_col, cutoffs, instance_col, specs,
         *[F.col(c).cast("boolean").alias(f"__w_{c}") for c in where_cols],
     )
     cut_t = F.unix_micros(F.col(cutoff_col).cast("timestamp"))
-    hi_rows = cutoffs.select(
-        F.col(instance_col).alias("__k"),
-        cut_t.alias("__t"),
-        F.lit(srt).cast("byte").alias("__srt"),
-        F.lit(1).cast("byte").alias("__tag"),
-        *marker_salt,
-        *nulls,
-    )
-    # Unbounded window (no training_window): every lo-marker would sit
-    # at -inf, i.e. at its (key[, salt]) block start — a position the
-    # kernel can read off the sorted stream directly (running max of
-    # events-before-block at key-change boundaries). Skipping the
-    # lo-marker frame halves the marker rows AND removes one full
-    # evaluation of the cutoff-table plan from the union (guide §2.4 /
-    # §1.2 "don't compute things you throw away"); when the cutoff
-    # table is itself a derived plan (not a stored scan), that is an
-    # entire extra scan+aggregate of the child table.
-    if window_us is not None:
-        lo_t = cut_t - F.lit(window_us)
-        lo_rows = cutoffs.select(
+
+    def markers(t, tag):
+        return cutoffs.select(
             F.col(instance_col).alias("__k"),
-            lo_t.cast("long").alias("__t"),
+            t.alias("__t"),
             F.lit(srt).cast("byte").alias("__srt"),
-            F.lit(2).cast("byte").alias("__tag"),
+            F.lit(tag).cast("byte").alias("__tag"),
             *marker_salt,
             *nulls,
         )
-    else:
-        lo_rows = None
+
+    # An unbounded window needs no lo-marker: its lower bound is the
+    # (key[, salt]) block start, where every running window begins.
+    unioned = ev.unionByName(markers(cut_t, 1))
+    if window_us is not None:
+        unioned = unioned.unionByName(
+            markers((cut_t - F.lit(window_us)).cast("long"), 2))
     range_cols = ["__k", "__salt"] if salted else ["__k"]
-    sort_cols = (["__k", "__salt", "__t", "__srt"] if salted
-                 else ["__k", "__t", "__srt"])
-    # hash-partition on the entity key (and salt). The kernel only
-    # needs (a) all rows of a key in ONE partition and (b) the
-    # within-partition sort — it never reads cross-partition order —
-    # so hash partitioning is equivalent to the previous
-    # repartitionByRange, minus the range partitioner's SAMPLING JOB,
-    # which evaluated the whole union (scan + markers) once extra
-    # before the real exchange (guide §2.4: remove shuffles/passes
-    # outright). Balance is the same: hashes spread keys uniformly,
-    # and neither partitioner can split a single hot key (salting is
-    # the tool for that, unchanged).
-    unioned = ev.unionByName(hi_rows)
-    if lo_rows is not None:
-        unioned = unioned.unionByName(lo_rows)
+    # hash-partition on the entity key (and salt): the windows need all
+    # rows of a block in ONE partition and the within-partition sort,
+    # never cross-partition order — so no range partitioner and its
+    # sampling job (an extra evaluation of the whole union)
     unioned = (
         unioned
         .repartition(*[F.col(c) for c in range_cols])
-        .sortWithinPartitions(*sort_cols)
+        .sortWithinPartitions(*range_cols, "__t", "__srt")
     )
-
-    spec_rows = [
-        (s.out_name, s.primitive.name, s.input_cols, s.where_col) for s in specs
-    ]
-    key_type = dict(zip(cutoffs.schema.names, cutoffs.schema))[instance_col]
-    out_fields = f"`{instance_col}` {key_type.dataType.simpleString()}, __t_out long"
-    if salted:
-        for s in specs:
-            for p in _SALT_PARTIALS[s.primitive.name]:
-                out_fields += f", `{s.out_name}__{p}` double"
-    else:
-        for s in specs:
-            t = "boolean" if s.primitive.name in _KERNEL_BOOL else "double"
-            out_fields += f", `{s.out_name}` {t}"
-    nobs = n_observations
-
-    def merge_partition(batches):
-        # Arrow-native ingest (guide §4.2): concatenate the record
-        # batches into one table (one memcpy per column) and read
-        # numeric columns as numpy views — no pandas DataFrame, no
-        # per-row string boxing for the key column (the old pd.concat
-        # + column conversions dominated the Python-side cost).
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        blist = list(batches)
-        if not blist:
-            return
-        tbl = pa.Table.from_batches(blist).combine_chunks()
-        n_rows = tbl.num_rows
-        if n_rows == 0:
-            return
-
-        def col_np(name, fill_false=False):
-            c = tbl.column(name).chunk(0)
-            if fill_false:
-                c = pc.fill_null(c, False)
-            return c.to_numpy(zero_copy_only=False)
-
-        tag = col_np("__tag")
-        is_ev = tag == 0
-        pos_cut = np.flatnonzero(tag == 1)
-        nC = len(pos_cut)
-        if nC == 0:
-            return
-        # every window bound is a cumulative event count at a marker's
-        # sorted position: cum_ev[j] = # event rows at positions <= j,
-        # and a marker at j is not an event, so cum_ev[j] = # events
-        # sorted strictly before it = its bound in event-index space.
-        cum_ev = np.cumsum(is_ev, dtype=np.int64)
-        hi = cum_ev[pos_cut]
-        if window_us is not None:
-            # the i-th lo-marker corresponds to the i-th cutoff: both
-            # sequences sort by (key, time + const) so their global
-            # order is identical per key and across keys.
-            lo = cum_ev[np.flatnonzero(tag == 2)]
-        else:
-            # unbounded window: no lo-markers were shipped; the lower
-            # bound of every window is its (key[, salt]) block start =
-            # events strictly before the block's first row. Block-start
-            # values are nondecreasing with position, so a running max
-            # over (cum_ev - is_ev) at block boundaries propagates the
-            # right value to every marker position. Boundary flags come
-            # from vectorized Arrow comparisons of the column against
-            # itself shifted by one (null-vs-null counts as a boundary,
-            # matching the previous pandas .ne(shift) semantics).
-            def bounds(name):
-                c = tbl.column(name).chunk(0)
-                flags = np.ones(n_rows, dtype=bool)
-                if n_rows > 1:
-                    ne = pc.fill_null(pc.not_equal(
-                        c.slice(1), c.slice(0, n_rows - 1)), True)
-                    flags[1:] = ne.to_numpy(zero_copy_only=False)
-                return flags
-            kb = bounds("__k")
-            if "__salt" in tbl.column_names:
-                kb = kb | bounds("__salt")
-            lo = np.maximum.accumulate(
-                np.where(kb, cum_ev - is_ev, 0))[pos_cut]
-        if nobs is not None:
-            lo = np.maximum(lo, hi - nobs)
-
-        t_all = col_np("__t")
-        et = t_all[is_ev]
-        ck = tbl.column("__k").chunk(0).take(pa.array(pos_cut))
-        ct = t_all[pos_cut]
-        # time origin for trend's x prefix sums (precision; see prefixes)
-        o_us = int(et[0]) if len(et) else 0
-
-        out = {instance_col: ck, "__t_out": ct}
-        val_cache = {}
-        pfx_cache = {}
-
-        def vals(col, wcol):
-            k = (col, wcol)
-            if k not in val_cache:
-                # nullable double -> float64 with NaN at nulls
-                v = col_np(f"__v_{col}")[is_ev] if col else None
-                if wcol is not None:
-                    m = col_np(f"__w_{wcol}", fill_false=True)[is_ev]
-                    if v is not None:
-                        v = np.where(m, v, np.nan)
-                    val_cache[k] = (v, m)
-                else:
-                    val_cache[k] = (v, None)
-            return val_cache[k]
-
-        def prefixes(col, wcol):
-            k = (col, wcol)
-            if k in pfx_cache:
-                return pfx_cache[k]
-            v, wmask = vals(col, wcol)
-            if col is not None:
-                valid = ~np.isnan(v)
-            elif wmask is not None:
-                valid = wmask
-            else:
-                valid = np.ones(len(et), dtype=bool)
-            vz = np.where(valid, np.nan_to_num(v) if col is not None else 0.0,
-                          0.0)
-            p = {
-                "valid": valid,
-                "vidx": np.flatnonzero(valid),
-                "cnt": np.concatenate(([0], np.cumsum(valid))),
-                "sum": np.concatenate(([0.0], np.cumsum(vz))),
-                "sumsq": np.concatenate(([0.0], np.cumsum(vz * vz))),
-            }
-            # seconds relative to the partition's first event: raw
-            # epoch seconds (~1.7e9) make t2sum cumulate to ~3e18 and
-            # the segment-difference varx loses day-scale precision —
-            # the slope is shift-invariant, so build prefix sums on
-            # shifted x and re-center each window at its cutoff below
-            tx = np.where(valid, (et - o_us) / 1e6, 0.0)
-            p["tsum"] = np.concatenate(([0.0], np.cumsum(tx)))
-            p["t2sum"] = np.concatenate(([0.0], np.cumsum(tx * tx)))
-            if col is not None:
-                p["tysum"] = np.concatenate(([0.0], np.cumsum(tx * vz)))
-            pfx_cache[k] = (p, v, wmask)
-            return pfx_cache[k]
-
-        def pair_reduce(ufunc, arr, lo_, hi_, fill=np.nan):
-            """ufunc.reduceat over arbitrary [lo, hi) pairs. reduceat
-            rejects index == len(arr), so hi==len pairs are clamped to
-            len-1 and the dropped last element is folded back in."""
-            res = np.full(len(lo_), fill)
-            ok = hi_ > lo_
-            if not ok.any() or len(arr) == 0:
-                return res
-            l2, h2 = lo_[ok], hi_[ok]
-            at_end = h2 == len(arr)
-            h_clamped = np.where(at_end, len(arr) - 1, h2)
-            # where clamping collapses the segment (lo == len-1), the
-            # reduceat result is arr[lo] which the fold-in overwrites
-            idx = np.empty(len(l2) * 2, dtype=np.int64)
-            idx[0::2] = l2
-            idx[1::2] = np.maximum(h_clamped, l2)
-            red = ufunc.reduceat(arr, idx)[0::2]
-            collapsed = at_end & (l2 == len(arr) - 1)
-            red = np.where(
-                at_end, np.where(collapsed, arr[-1], ufunc(red, arr[-1])), red
-            )
-            res[ok] = red
-            return res
-
-        for out_name, pname, in_cols, wcol in spec_rows:
-            col = in_cols[0] if in_cols else None
-            if salted:
-                p, v, wmask = prefixes(col, wcol)
-                n = (p["cnt"][hi] - p["cnt"][lo]).astype(np.float64)
-                cand = {"n": n}
-                want = _SALT_PARTIALS[pname]
-                if "s" in want:
-                    cand["s"] = p["sum"][hi] - p["sum"][lo]
-                if "ss" in want:
-                    cand["ss"] = p["sumsq"][hi] - p["sumsq"][lo]
-                if "na" in want:   # percent_true: window rows incl. nulls
-                    cand["na"] = (hi - lo).astype(np.float64)
-                if "mn" in want or "mx" in want:
-                    vv = np.where(p["valid"], v, np.nan)
-                    red = pair_reduce(
-                        np.fmin if "mn" in want else np.fmax, vv, lo, hi
-                    )
-                    cand["mn" if "mn" in want else "mx"] = red
-                if {"ft", "lt", "fv", "lv"} & set(want):
-                    vidx = p["vidx"]
-                    pos_f = np.searchsorted(vidx, lo, side="left")
-                    pos_l = np.searchsorted(vidx, hi, side="left") - 1
-                    okf = (pos_f < len(vidx)) & (n > 0)
-                    okl = (pos_l >= 0) & (n > 0)
-                    saf = np.minimum(pos_f, max(len(vidx) - 1, 0))
-                    sal = np.maximum(pos_l, 0)
-                    ft = np.full(nC, np.nan)
-                    lt = np.full(nC, np.nan)
-                    fv = np.full(nC, np.nan)
-                    lv = np.full(nC, np.nan)
-                    if len(vidx):
-                        ft[okf] = et[vidx[saf]][okf].astype(np.float64)
-                        lt[okl] = et[vidx[sal]][okl].astype(np.float64)
-                        if "fv" in want:
-                            fv[okf] = v[vidx[saf]][okf]
-                        if "lv" in want:
-                            lv[okl] = v[vidx[sal]][okl]
-                    for nm, arr in (("ft", ft), ("lt", lt),
-                                    ("fv", fv), ("lv", lv)):
-                        if nm in want:
-                            cand[nm] = arr
-                if "sx" in want:
-                    # prefix sums use the partition origin; partials
-                    # from different salt sub-streams (different
-                    # partitions, different origins) must agree on ONE
-                    # x-origin before the JVM merge sums them — the
-                    # cutoff time is constant per (key, __t_out) group,
-                    # so re-center each window there (exact shifts:
-                    # sx'=sx-n*d, sx2'=sx2-2d*sx+n*d^2, sxy'=sxy-d*sy)
-                    d = (ct - o_us) / 1e6
-                    sxs = p["tsum"][hi] - p["tsum"][lo]
-                    sys_ = p["sum"][hi] - p["sum"][lo]
-                    cand["sx2"] = (
-                        (p["t2sum"][hi] - p["t2sum"][lo])
-                        - 2.0 * d * sxs + n * d * d
-                    )
-                    cand["sxy"] = (p["tysum"][hi] - p["tysum"][lo]) - d * sys_
-                    cand["sx"] = sxs - n * d
-                for pn in want:
-                    out[f"{out_name}__{pn}"] = cand[pn]
-                continue
-            p, v, wmask = prefixes(col, wcol)
-            n = p["cnt"][hi] - p["cnt"][lo]
-            has = n > 0
-            res = np.full(nC, np.nan)
-            if pname == "count":
-                res = n.astype(np.float64)
-            elif pname in ("sum", "num_true"):
-                res[has] = (p["sum"][hi] - p["sum"][lo])[has]
-            elif pname == "percent_true":
-                # reference fillna(False): nulls count in the
-                # denominator (every window row), numerator = valid 1s
-                n_all = (hi - lo).astype(np.float64)
-                ok_pt = n_all > 0
-                with np.errstate(invalid="ignore"):
-                    res[ok_pt] = ((p["sum"][hi] - p["sum"][lo]) / n_all)[ok_pt]
-            elif pname in ("any", "all"):
-                vv = np.where(p["valid"], v, np.nan)
-                red = pair_reduce(np.fmax if pname == "any" else np.fmin,
-                                  vv, lo, hi)
-                res_b = np.empty(nC, dtype=object)
-                res_b[:] = None
-                okb = has & ~np.isnan(red)
-                res_b[okb] = (red[okb] > 0)
-                out[out_name] = res_b
-                continue
-            elif pname == "mean":
-                with np.errstate(invalid="ignore"):
-                    res[has] = ((p["sum"][hi] - p["sum"][lo]) / n)[has]
-            elif pname in ("std", "variance"):
-                with np.errstate(invalid="ignore"):
-                    m = ((p["sum"][hi] - p["sum"][lo]) / n)
-                    msq = ((p["sumsq"][hi] - p["sumsq"][lo]) / n)
-                    var = np.maximum(msq - m * m, 0.0)
-                    tmp = np.sqrt(var) if pname == "std" else var
-                res[has] = tmp[has]
-            elif pname in ("min", "max"):
-                vv = np.where(p["valid"], v, np.nan)
-                red = pair_reduce(np.fmin if pname == "min" else np.fmax,
-                                  vv, lo, hi)
-                res[has] = red[has]
-            elif pname in ("first", "last"):
-                vidx = p["vidx"]
-                if pname == "first":
-                    pos = np.searchsorted(vidx, lo, side="left")
-                    ok = (pos < len(vidx)) & has
-                    res[ok] = v[vidx[np.minimum(pos, max(len(vidx) - 1, 0))]][ok]
-                else:
-                    pos = np.searchsorted(vidx, hi, side="left") - 1
-                    ok = (pos >= 0) & has
-                    res[ok] = v[vidx[np.maximum(pos, 0)]][ok]
-            elif pname in ("time_since_last", "time_since_first",
-                           "avg_time_between", "first_last_time_delta"):
-                vidx = p["vidx"]
-                pos_last = np.searchsorted(vidx, hi, side="left") - 1
-                pos_first = np.searchsorted(vidx, lo, side="left")
-                ok = has & (pos_last >= 0) & (pos_first < len(vidx))
-                t_last = et[vidx[np.maximum(pos_last, 0)]] if len(vidx) else ct
-                t_first = (et[vidx[np.minimum(pos_first, max(len(vidx) - 1, 0))]]
-                           if len(vidx) else ct)
-                if pname == "time_since_last":
-                    res[ok] = ((ct - t_last) / 1e6)[ok]
-                elif pname == "time_since_first":
-                    res[ok] = ((ct - t_first) / 1e6)[ok]
-                elif pname == "first_last_time_delta":
-                    res[ok] = ((t_last - t_first) / 1e6)[ok]
-                else:
-                    ok2 = ok & (n > 1)
-                    res[ok2] = ((t_last - t_first) / 1e6)[ok2] / (n[ok2] - 1)
-            elif pname == "trend":
-                # reference calculate_trend parity: n<=2 -> NaN,
-                # all-equal x -> 0, slope scaled by the unit dividend
-                # of the first valid timestamp (whole days/hours/min)
-                # segment sums are relative to the partition origin;
-                # re-center each window at its cutoff (shift-invariant
-                # slope, keeps varx at window-span scale so the
-                # cancellation guard below is meaningful)
-                d = (ct - o_us) / 1e6
-                sx = p["tsum"][hi] - p["tsum"][lo]
-                sy = p["sum"][hi] - p["sum"][lo]
-                sx2 = (p["t2sum"][hi] - p["t2sum"][lo]
-                       - 2.0 * d * sx + n * d * d)
-                sxy = (p["tysum"][hi] - p["tysum"][lo]) - d * sy
-                sx = sx - n * d
-                vidx = p["vidx"]
-                pos_first = np.searchsorted(vidx, lo, side="left")
-                safe = np.minimum(pos_first, max(len(vidx) - 1, 0))
-                t_first = (et[vidx[safe]] if len(vidx)
-                           else np.zeros(nC, dtype=np.int64))
-                fsec = np.floor(t_first / 1e6)
-                div = np.where(
-                    fsec % 86400 == 0, 86400.0,
-                    np.where(fsec % 3600 == 0, 3600.0,
-                             np.where(fsec % 60 == 0, 60.0, 1.0)),
-                )
-                with np.errstate(invalid="ignore", divide="ignore"):
-                    varx = sx2 / n - (sx / n) ** 2
-                    cov = sxy / n - (sx / n) * (sy / n)
-                    # prefix-sum cancellation guard: relative epsilon
-                    zero_var = varx <= 1e-12 * np.maximum(sx2 / n, 1e-300)
-                    ok3 = n >= 3
-                    res[ok3 & zero_var] = 0.0
-                    ok = ok3 & ~zero_var
-                    res[ok] = (cov / varx * div)[ok]
-            out[out_name] = res
-        # Arrow-native egress: numpy -> Arrow directly against the
-        # declared schema (from_pandas=True keeps the mapInPandas
-        # convention that NaN means null)
-        arrs = []
-        for i, (_nm, a) in enumerate(out.items()):
-            ftype = arrow_out_schema.field(i).type
-            if isinstance(a, (pa.Array, pa.ChunkedArray)):
-                arrs.append(a.cast(ftype) if a.type != ftype else a)
-            else:
-                arrs.append(pa.array(a, type=ftype, from_pandas=True))
-        yield pa.RecordBatch.from_arrays(arrs, schema=arrow_out_schema)
-
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import StructType
-
-    arrow_out_schema = to_arrow_schema(StructType.fromDDL(out_fields))
-    if _DEBUG_CAPTURE is not None:
-        _DEBUG_CAPTURE["unioned"] = unioned
-    # Unbounded windows with no last-N clamp: every kernel output is a
-    # running aggregate at the marker's sorted position — evaluate it
-    # as pure-JVM window functions over the exchange+sort the kernel
-    # already pays, instead of shipping the whole stream through the
-    # Python boundary (the measured dominant cost; see
-    # _running_window_result). FT_SPARK_SM_JVM=0 forces the Arrow
-    # kernel (A/B and parity tests).
-    import os as _os
-    use_jvm = (
-        window_us is None
-        and nobs is None
-        and all(r[1] in _RUNNING_PRIMS for r in spec_rows)
-        and _os.environ.get("FT_SPARK_SM_JVM", "1") != "0"
+    w = (
+        W.partitionBy(*range_cols)
+        .orderBy("__t", "__srt")
+        .rowsBetween(W.unboundedPreceding, W.currentRow)
     )
-    if use_jvm:
-        result = _running_window_result(
-            unioned, spec_rows, instance_col,
-            key_type.dataType.simpleString(), range_cols, salted,
-        )
-    else:
-        result = unioned.mapInArrow(merge_partition, schema=out_fields)
-    if _DEBUG_CAPTURE is not None:
-        _DEBUG_CAPTURE["kernel_out"] = result
-    if salted:
-        # ONE JVM merge of the per-salt partials (map-side combinable)
-        result = result.groupBy(instance_col, "__t_out").agg(
-            *_salt_merge_exprs(spec_rows)
-        )
-    result = result.withColumn(
-        cutoff_col, F.timestamp_micros(F.col("__t_out"))
-    ).drop("__t_out")
-    # schema parity with the join strategy: the kernel computes every
-    # numeric reducer in doubles (flat arrays); cast each output back
-    # to the type the join path would produce (_kernel_parity_type) —
-    # strategy="auto" may pick either path by data size, so the dtype
-    # must not depend on the router's choice
+    trend = any(s.primitive.name == "trend" for s in specs)
+    if trend:
+        # trend's x sums run on seconds from the block's first row: raw
+        # epoch seconds (~1.7e9) square to ~3e18 and lose the
+        # window-scale precision of varx. Same window spec, so this
+        # stacks on the same sort.
+        unioned = unioned.withColumn("__o", F.nth_value("__t", 1).over(w))
+    tag, t = F.col("__tag"), F.col("__t")
+    # the cutoff (micros) a marker row belongs to: its group key
+    ct = t if window_us is None else (
+        F.when(tag == 2, t + F.lit(window_us)).otherwise(t))
+    is_ev = tag == F.lit(0)
+
+    # one partial column per (value column, where column, partial):
+    # specs reading the same stream share them
+    def stream(s):
+        return (s.input_cols[0] if s.input_cols else None, s.where_col)
+
+    streams: dict = {}      # (col, wcol) -> {partial: column name}
+    for s in specs:
+        names = streams.setdefault(stream(s), {})
+        i = list(streams).index(stream(s))
+        for p in _PARTIALS[s.primitive.name]:
+            names.setdefault(p, f"__p{i}_{p}")
+
+    running = []
+    for (col, wcol), names in streams.items():
+        cond = is_ev
+        if wcol is not None:
+            cond = cond & F.coalesce(F.col(f"__w_{wcol}"), F.lit(False))
+        v = F.when(cond, F.col(f"__v_{col}")) if col else None
+        valid = (cond & v.isNotNull()) if col else cond
+        vt = F.when(valid, t)
+        x = (t - F.col("__o")) / F.lit(1e6) if "sx" in names else None
+        agg = {
+            "n": lambda: F.count(vt),
+            "na": lambda: F.count(F.when(cond, F.lit(1))),
+            "s": lambda: F.sum(v),
+            "ss": lambda: F.sum(v * v),
+            "mn": lambda: F.min(v),
+            "mx": lambda: F.max(v),
+            "ft": lambda: F.min(vt),
+            "lt": lambda: F.max(vt),
+            "fv": lambda: F.first(v, ignorenulls=True),
+            "lv": lambda: F.last(v, ignorenulls=True),
+            "sx": lambda: F.sum(F.when(valid, x)),
+            "sx2": lambda: F.sum(F.when(valid, x * x)),
+            "sxy": lambda: F.sum(x * v),
+        }
+        running += [agg[p]().over(w).alias(nm) for p, nm in names.items()]
+    marked = unioned.select(
+        "__k", ct.alias("__c"), "__tag", *(["__o"] if trend else []),
+        *running,
+    ).filter(tag != 0)
+
+    # each partial's share at its marker row: trend's x sums re-centred
+    # at the cutoff, so every row of one (key, cutoff) group shares one
+    # origin (exact shifts: sx' = sx − n·d, sx2' = sx2 − 2d·sx + n·d²,
+    # sxy' = sxy − d·sy); lo rows negate the additive partials and drop
+    # the rest
+    rows: dict = {}
+    lo = tag == 2
+    sign = F.when(lo, F.lit(-1)).otherwise(F.lit(1))
+    d = (F.col("__c") - F.col("__o")) / F.lit(1e6) if trend else None
+    for names in streams.values():
+        c = {p: F.col(nm) for p, nm in names.items()}
+        for p, nm in names.items():
+            e = c[p]
+            if p == "sx":
+                e = e - c["n"] * d
+            elif p == "sx2":
+                e = e - 2.0 * d * c["sx"] + c["n"] * d * d
+            elif p == "sxy":
+                e = e - d * c["s"]
+            if window_us is not None:
+                e = e * sign if p in _ADDITIVE else F.when(~lo, e)
+            rows[nm] = e
+    if window_us is not None or salted:
+        # __k alone is the exchange's partitioning, so an unsalted
+        # combine needs no new Exchange
+        marked = marked.groupBy("__k", "__c").agg(*[
+            _combine(p, rows[nm], lambda q, n=names: rows[n[q]]).alias(nm)
+            for names in streams.values() for p, nm in names.items()
+        ])
+        rows = {nm: F.col(nm) for nm in rows}
+    key_type = cutoffs.schema[instance_col].dataType.simpleString()
     child_t = dict(child.dtypes)
-    casts = {s.out_name: _kernel_parity_type(s, child_t) for s in specs}
-    result = result.select(*[
-        F.col(f"`{c}`").cast(casts[c]).alias(c)
-        if casts.get(c) else F.col(f"`{c}`")
-        for c in result.columns
-    ])
+    c_us = F.col("__c")
+    result = marked.select(
+        F.col("__k").cast(key_type).alias(instance_col),
+        F.timestamp_micros(c_us).alias(cutoff_col),
+        *[_finalize(s.primitive.name,
+                    lambda p, n=streams[stream(s)]: rows[n[p]], c_us)
+          .cast(_output_type(s, child_t)).alias(s.out_name) for s in specs],
+    )
     return _fill_defaults(result, specs)

@@ -192,6 +192,55 @@ def test_stacked_features_per_row_cutoffs(spark, es):
                     assert abs(float(x) - float(y)) < 1e-9
 
 
+def test_holistic_over_stacked_per_row_cutoffs(spark, es):
+    """Holistic (twostage) primitives over a stacked depth-2 input at
+    PER-ROW cutoffs are served from the shared cutoff-join frame
+    (which carries the __aux_* inner matrix). Ground truth: the scalar
+    path per distinct cutoff."""
+    import datetime as dt
+
+    import featuretools_spark as fts
+    from featuretools_spark.features import (
+        AggregationFeature, IdentityFeature,
+    )
+
+    qty = IdentityFeature(es, "lineitem", "l_quantity")
+    inner = AggregationFeature(qty, "orders", "sum", es=es)
+    feats = [
+        AggregationFeature(inner, "customer", "mode", es=es),        # counts
+        AggregationFeature(inner, "customer", "entropy", es=es),     # counts
+        AggregationFeature(inner, "customer", "count_above_mean",
+                           es=es),                                   # flag
+        AggregationFeature(inner, "customer",
+                           "max_consecutive_positives", es=es),      # complex
+    ]
+    cols = [f.get_name() for f in feats]
+    t1, t2 = dt.datetime(1995, 1, 1), dt.datetime(1997, 1, 1)
+    custs = [r[0] for r in
+             es["customer"].select("c_custkey").limit(30).collect()]
+    cuts = spark.createDataFrame(
+        [(c, t1 if i % 2 == 0 else t2) for i, c in enumerate(custs)],
+        "c_custkey long, time timestamp",
+    )
+    fm = fts.calculate_feature_matrix(feats, es, cutoff_time=cuts)
+    got = {(r["c_custkey"], r["time"]): tuple(r[c] for c in cols)
+           for r in fm.collect()}
+    assert len(got) == len(custs)
+    for t in (t1, t2):
+        ids = [c for i, c in enumerate(custs) if (i % 2 == 0) == (t == t1)]
+        ref = fts.calculate_feature_matrix(
+            feats, es, cutoff_time=t, instance_ids=ids)
+        for r in ref.collect():
+            want = tuple(r[c] for c in cols)
+            have = got[(r["c_custkey"], t)]
+            for x, y in zip(want, have):
+                if x is None or y is None:
+                    assert x == y, (r["c_custkey"], t, want, have)
+                else:
+                    assert abs(float(x) - float(y)) < 1e-9, (
+                        r["c_custkey"], t, want, have)
+
+
 def test_diamond_paths_enumerate_distinct_features(spark):
     """A diamond schema (two backward paths A->D) must yield ONE
     feature per path, disambiguated by the hop-name chain in the

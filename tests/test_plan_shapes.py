@@ -1,18 +1,36 @@
-"""Plan-shape guards for the round-7 curation ops: the three new ops
-are all PURE MAPS — their scale contract is zero shuffle (beyond the
-optional ensure_min_width round-robin, which is a no-op whenever the
-scan is already as wide as the session). A regression that introduces
-an Exchange would silently turn a 100-TB map job into a 100-TB
-shuffle, so pin the executed plan here."""
+"""Plan-shape guards.
+
+The curation ops are all PURE MAPS — their scale contract is zero
+shuffle (beyond the optional ensure_min_width round-robin, which is a
+no-op whenever the scan is already as wide as the session). A
+regression that introduces an Exchange would silently turn a 100-TB
+map job into a 100-TB shuffle, so pin the executed plan here.
+
+The as-of evaluators are pure JVM: no plan crosses into Python, and
+strategy="sortmerge" is one Exchange + one Sort under its running
+windows (plus the salt merge's Exchange when salted)."""
+import datetime as dt
+import re
+
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
+import featuretools_spark as fts
+from featuretools_spark.asof import CUTOFF_COL, AggSpec, asof_aggregate
+from featuretools_spark.datagen import make_sequences
+from featuretools_spark.features import AggregationFeature, IdentityFeature
 from featuretools_spark.ops.classify import classifier_score
 from featuretools_spark.ops.split import hash_split, sample_by_hash
 from featuretools_spark.ops.textstats import (
     WITNESS_BPE_MERGES,
     bpe_token_count,
 )
+from featuretools_spark.primitives import get_aggregation_primitive
+from featuretools_spark.timedelta import Timedelta
+
+PYTHON_NODES = ("MapInArrow", "MapInPandas", "ArrowEvalPython",
+                "BatchEvalPython", "FlatMapGroupsInPandas")
 
 
 def _wide_docs(spark):
@@ -81,3 +99,100 @@ def test_hash_split_and_sample_are_shuffle_free_codegen(spark):
         plan = _executed(out)
         assert "Exchange" not in plan
         assert "EvalPython" not in plan
+
+
+def _nodes(df):
+    """Operator names of the executed plan, top-down."""
+    return re.findall(r"^[\s:+-]*(\w+)", _executed(df), re.M)
+
+
+@pytest.fixture(scope="module")
+def asof_inputs(spark):
+    seqs = make_sequences(spark, n_rows=300, n_entities=10)
+    t = dt.datetime(2024, 2, 1)
+    # a local cutoff table: its plan adds no Exchange of its own
+    cuts = spark.createDataFrame(
+        [(f"e{i:05d}", t + dt.timedelta(days=d))
+         for i in range(10) for d in (0, 20)],
+        f"entity_id string, {CUTOFF_COL} timestamp")
+    return seqs, cuts
+
+
+def _specs(*names):
+    return [AggSpec(p, get_aggregation_primitive(p),
+                    [] if p in ("count", "time_since_last") else ["n_tok"])
+            for p in names]
+
+
+WINDOWED = ("count", "sum", "mean", "std", "last", "time_since_last")
+
+
+@pytest.mark.parametrize("salt", [None, 4])
+@pytest.mark.parametrize("case", ["unbounded", "30 days",
+                                  "30 days with max", "5 observations",
+                                  "trend"])
+def test_sortmerge_asof_plan_shape(spark, asof_inputs, case, salt):
+    """No sortmerge as-of plan crosses into Python. Its running windows
+    sit on exactly one Exchange and one Sort; unbounded unsalted calls
+    aggregate nothing, bounded ones add an Aggregate but no Exchange,
+    salted ones add only the salt merge's Exchange. Last-N, and a
+    bounded call with a primitive that is not a prefix difference,
+    route to the join path (no marker Union)."""
+    seqs, cuts = asof_inputs
+    kw = {
+        "unbounded": dict(specs=_specs(*WINDOWED, "min", "first")),
+        "30 days": dict(specs=_specs(*WINDOWED),
+                        training_window=Timedelta(30, "d")),
+        "30 days with max": dict(specs=_specs(*WINDOWED, "max"),
+                                 training_window=Timedelta(30, "d")),
+        "5 observations": dict(specs=_specs(*WINDOWED), n_observations=5),
+        "trend": dict(specs=_specs("trend", "count")),
+    }[case]
+    out = asof_aggregate(seqs, "entity_id", "event_time", cuts, "entity_id",
+                         strategy="sortmerge", salt=salt, **kw)
+    nodes = _nodes(out)
+    for node in PYTHON_NODES:
+        assert node not in nodes, node
+    if case in ("30 days with max", "5 observations"):
+        assert "Union" not in nodes
+        return
+    windows = [i for i, n in enumerate(nodes) if n == "Window"]
+    exchanges = [i for i, n in enumerate(nodes) if n == "Exchange"]
+    sorts = [i for i, n in enumerate(nodes) if n == "Sort"]
+    assert len(windows) == (2 if case == "trend" else 1)
+    assert len(sorts) == 1 and sorts[0] > windows[-1]
+    below = [i for i in exchanges if i > sorts[0]]
+    above = [i for i in exchanges if i < windows[0]]
+    assert len(below) == 1
+    assert len(above) == (1 if salt else 0)
+    has_agg = any("Aggregate" in n for n in nodes[:windows[0]])
+    assert has_agg == (salt is not None or case == "30 days")
+    assert len(out.collect()) == cuts.count()
+
+
+def test_sortmerge_matrix_has_no_python_node(spark, hot_seq_es):
+    es, cuts, feats = hot_seq_es
+    nodes = _nodes(fts.calculate_feature_matrix(
+        feats, es, cutoff_time=cuts, strategy="sortmerge"))
+    for node in PYTHON_NODES:
+        assert node not in nodes, node
+    assert "Window" in nodes
+
+
+def test_strategy_auto_routes_to_pure_jvm_join(spark, es):
+    """strategy="auto" must produce the join path's pure-JVM plan (no
+    Python stages) for plain aggregations. Unknown strategy names
+    raise."""
+    val = IdentityFeature(es, "events", "value")
+    agg = AggregationFeature(val, "users", "sum", es=es)
+    fm = fts.calculate_feature_matrix(
+        [agg], es, cutoff_time=dt.datetime(2024, 3, 1), strategy="auto")
+    nodes = _nodes(fm)
+    for node in PYTHON_NODES:
+        assert node not in nodes, node
+    assert fm.count() > 0
+
+    with pytest.raises(ValueError, match="unknown strategy"):
+        fts.calculate_feature_matrix(
+            [agg], es, cutoff_time=dt.datetime(2024, 3, 1),
+            strategy="hash")

@@ -156,8 +156,8 @@ def test_auto_flips_to_sortmerge_past_max_parts(spark, auto_es):
 def test_strategy_schema_parity_count_is_long(spark, auto_es):
     """strategy="auto" may route the SAME call to either path by data
     size, so the result schema must not depend on the router: the
-    kernel casts count-family outputs back to long at the merge
-    boundary (asof._KERNEL_INT) to match the join path's bigint."""
+    sortmerge casts count-family outputs back to long at the merge
+    boundary (asof._output_type) to match the join path's bigint."""
     es, cuts, feats = auto_es
     dj = dict(fts.calculate_feature_matrix(
         feats, es, cutoff_time=cuts, strategy="join").dtypes)

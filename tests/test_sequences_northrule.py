@@ -1,15 +1,25 @@
 """North-rule tests on the BASELINE.json target table shape:
 zero temporal leakage, token-array pass-through equality,
-partitioning invariance, include_cutoff_time semantics."""
+partitioning invariance, include_cutoff_time semantics — and the as-of
+evaluators (scalar, join, sortmerge running windows) agreeing on
+windows, salting, last-N, empty windows, trend precision and NaN."""
 
 import datetime as dt
+import math
 
 import pytest
 from pyspark.sql import functions as F
 
 import featuretools_spark as fts
+from featuretools_spark.asof import _BOUNDED_PRIMS
 from featuretools_spark.datagen import make_cutoffs, make_entities, make_sequences
-from featuretools_spark.features import AggregationFeature, IdentityFeature
+from featuretools_spark.features import (
+    AggregationFeature,
+    IdentityFeature,
+    TransformFeature,
+)
+from featuretools_spark.primitives.transform import GreaterThanScalar
+from featuretools_spark.timedelta import Timedelta
 
 
 @pytest.fixture(scope="module")
@@ -193,7 +203,7 @@ def _assert_close(a, b):
 @pytest.mark.parametrize("include_cutoff", [True, False])
 @pytest.mark.parametrize("window", [None, "3 days"])
 def test_sortmerge_matches_join_windows(spark, seq_es, include_cutoff, window):
-    """Kernel parity across the 4 window-boundary modes: the lo/hi
+    """sortmerge parity across the 4 window-boundary modes: the lo/hi
     marker tiebreaks must reproduce _time_predicate exactly."""
     es, seqs = seq_es
     cuts = make_cutoffs(spark, seqs, per_entity=3)
@@ -210,7 +220,7 @@ def test_sortmerge_matches_join_windows(spark, seq_es, include_cutoff, window):
         # routed to the join strategy inside strategy='sortmerge'
         AggregationFeature(n_tok, "entities", "median", es=es),
         AggregationFeature(src, "entities", "num_unique", es=es),
-        # where-clause through the kernel mask path
+        # where-clause through the running-window mask path
         AggregationFeature(n_tok, "entities", "sum", es=es,
                            where=(src == "web")).rename("sum_web"),
     ]
@@ -227,8 +237,8 @@ def test_sortmerge_matches_join_windows(spark, seq_es, include_cutoff, window):
 @pytest.mark.parametrize("window", [None, "3 days"])
 def test_salted_sortmerge_matches_join(spark, seq_es, window):
     """Explicit hot-key salting: events split into salt sub-streams,
-    markers replicate, kernel emits partials, one JVM groupBy merges —
-    results must equal the join strategy for every kernel primitive."""
+    markers replicate, one JVM groupBy combines the per-salt partials —
+    results must equal the join strategy for every primitive."""
     es, seqs = seq_es
     cuts = make_cutoffs(spark, seqs, per_entity=3)
     n_tok = IdentityFeature(es, "sequences", "n_tok")
@@ -250,10 +260,7 @@ def test_salted_sortmerge_matches_join(spark, seq_es, window):
         AggregationFeature(ts, "entities", "first_last_time_delta", es=es),
         AggregationFeature(ts, "entities", "avg_time_between", es=es),
     ]
-    # boolean reducers (round-3 kernel additions)
-    from featuretools_spark.features import TransformFeature
-    from featuretools_spark.primitives.transform import GreaterThanScalar
-
+    # boolean reducers
     big = TransformFeature(GreaterThanScalar(value=256), [n_tok])
     feats += [
         AggregationFeature(big, "entities", "num_true", es=es),
@@ -271,8 +278,8 @@ def test_salted_sortmerge_matches_join(spark, seq_es, window):
 
 
 def test_sortmerge_matches_join_n_observations(spark, seq_es):
-    """use_previous='N observations' in the kernel is the clamp
-    lo = max(lo, hi - n): must equal the join strategy's row_number."""
+    """use_previous='N observations' routes sortmerge to the join
+    path's row_number clamp: must equal the join strategy."""
     es, seqs = seq_es
     cuts = make_cutoffs(spark, seqs, per_entity=3)
     n_tok = IdentityFeature(es, "sequences", "n_tok")
@@ -313,3 +320,186 @@ def test_sortmerge_matches_join_on_sequences(spark, seq_es):
             elif abs(float(x) - float(y)) > 1e-6:
                 bad.append((k, a[k], b[k]))
     assert not bad, bad[:5]
+
+
+def _assert_close_rel(a, b):
+    assert a.keys() == b.keys()
+    for k in a:
+        for x, y in zip(a[k], b[k]):
+            if x is None or y is None:
+                assert x == y, (k, x, y)
+            elif isinstance(x, float):
+                assert x == pytest.approx(y, rel=1e-9, abs=1e-9) or (
+                    math.isnan(x) and math.isnan(y)), (k, x, y)
+            else:
+                assert x == y, (k, x, y)
+
+
+@pytest.mark.parametrize("salt", [None, 4])
+@pytest.mark.parametrize("window", [None, "30 days"])
+def test_sortmerge_matches_join_all_primitives(spark, hot_seq_es, window,
+                                               salt):
+    """Every running-window primitive (and a where-masked count) on a
+    hot-entity input: sortmerge, unsalted and salted, unbounded and
+    windowed (the prefix-difference primitives, running hi − lo),
+    equals the join strategy to 1e-9."""
+    es, cuts, feats = hot_seq_es
+    if window:
+        # any other primitive routes a bounded call to join entirely
+        feats = [f for f in feats if f.primitive.name in _BOUNDED_PRIMS]
+    cols = [f.get_name() for f in feats]
+    kw = dict(cutoff_time=cuts, training_window=window)
+    a = _fm_dict(fts.calculate_feature_matrix(
+        feats, es, strategy="join", **kw), cols)
+    b = _fm_dict(fts.calculate_feature_matrix(
+        feats, es, strategy="sortmerge", salt=salt, **kw), cols)
+    _assert_close_rel(a, b)
+
+
+@pytest.fixture(scope="module")
+def plain_es(spark):
+    """sequences child, parent WITHOUT a time index (so no target-grain
+    PIT mask can hide strategy disagreements)."""
+    seqs = make_sequences(spark, n_rows=400, n_entities=8).cache()
+    ents = make_entities(seqs).drop("first_seen")
+    es = fts.EntitySet("plain")
+    es.add_dataframe("entities", ents, index="entity_id")
+    es.add_dataframe("sequences", seqs, index="doc_id",
+                     time_index="event_time")
+    es.add_relationship("entities", "entity_id", "sequences", "entity_id")
+    return es, seqs, ents
+
+
+def _per_row_cutoffs(spark, ents, base, step_ms=7):
+    ids = [r["entity_id"] for r in ents.select("entity_id").collect()]
+    return spark.createDataFrame(
+        [(e, base + dt.timedelta(milliseconds=step_ms * i))
+         for i, e in enumerate(ids)],
+        "entity_id string, time timestamp",
+    )
+
+
+def test_count_zero_on_empty_window_all_strategies(spark, plain_es):
+    """COUNT with pruned inputs must return 0 (not 1) when the entity
+    exists but no child row qualifies: the join path's LEFT join
+    null-extended row must not be counted."""
+    es, seqs, ents = plain_es
+    tmin = seqs.agg(F.min("event_time")).collect()[0][0]
+    # distinct per-row cutoffs 1s after the earliest event with a 1ms
+    # training window: every window is empty, every entity pre-exists
+    cuts = _per_row_cutoffs(spark, ents, tmin + dt.timedelta(seconds=1))
+    did = IdentityFeature(es, "sequences", "doc_id")
+    ntok = IdentityFeature(es, "sequences", "n_tok")
+    feats = [
+        AggregationFeature(did, "entities", "count", es=es),
+        AggregationFeature(ntok, "entities", "sum", es=es),
+    ]
+    for strat in ("join", "sortmerge"):
+        fm = fts.calculate_feature_matrix(
+            feats, es, cutoff_time=cuts,
+            training_window=Timedelta(0.001, "s"), strategy=strat,
+        )
+        ccol = [c for c in fm.columns if "COUNT" in c.upper()][0]
+        vals = [r[ccol] for r in fm.collect()]
+        assert vals and all(v == 0 for v in vals), (strat, vals)
+
+
+def test_masked_count_string_index_sortmerge(spark, plain_es):
+    """A WHERE-masked COUNT whose input is the (string) child index
+    survives strategy='sortmerge': the running window counts mask hits,
+    never the casted value column."""
+    es, seqs, ents = plain_es
+    tmax = seqs.agg(F.max("event_time")).collect()[0][0]
+    cuts = _per_row_cutoffs(spark, ents, tmax + dt.timedelta(seconds=1))
+    did = IdentityFeature(es, "sequences", "doc_id")
+    ntok = IdentityFeature(es, "sequences", "n_tok")
+    wh = TransformFeature(GreaterThanScalar(value=30), [ntok])
+    cntw = AggregationFeature(did, "entities", "count", es=es, where=wh)
+    res = {}
+    for strat in ("join", "sortmerge"):
+        fm = fts.calculate_feature_matrix([cntw], es, cutoff_time=cuts,
+                                          strategy=strat)
+        ccol = [c for c in fm.columns if "COUNT" in c.upper()][0]
+        res[strat] = sorted((r["entity_id"], float(r[ccol]))
+                            for r in fm.collect())
+    assert res["join"] == res["sortmerge"]
+    assert any(v > 0 for _, v in res["join"])  # mask actually selects rows
+
+
+@pytest.mark.parametrize("salt", [None, 4])
+def test_trend_subhour_window_kernel(spark, salt):
+    """sortmerge TREND must not zero out sub-hour windows: its x sums
+    run on block-origin seconds re-centred at each cutoff, so varx
+    keeps window-span precision (raw epoch seconds lose it)."""
+    # 10 events 37s apart (~6 min span), exact slope 2.0/s; the first
+    # timestamp is NOT minute-aligned so the reference unit dividend = 1
+    t0 = dt.datetime(2024, 5, 1, 13, 7, 11)
+    rows = [
+        (f"d{i}", "e1", t0 + dt.timedelta(seconds=37 * i),
+         2.0 * 37 * i + 5.0)
+        for i in range(10)
+    ]
+    child = spark.createDataFrame(
+        rows, "doc_id string, entity_id string, event_time timestamp, "
+              "val double")
+    ents = spark.createDataFrame([("e1",)], "entity_id string")
+    es = fts.EntitySet("trend")
+    es.add_dataframe("entities", ents, index="entity_id")
+    es.add_dataframe("sequences", child, index="doc_id",
+                     time_index="event_time")
+    es.add_relationship("entities", "entity_id", "sequences", "entity_id")
+    tr = AggregationFeature(
+        IdentityFeature(es, "sequences", "val"), "entities", "trend", es=es)
+    cuts = spark.createDataFrame(
+        [("e1", t0 + dt.timedelta(hours=1)),
+         ("e1", t0 + dt.timedelta(hours=2))],
+        "entity_id string, time timestamp")
+    fm = fts.calculate_feature_matrix([tr], es, cutoff_time=cuts,
+                                      strategy="sortmerge", salt=salt)
+    tcol = [c for c in fm.columns if "TREND" in c.upper()][0]
+    vals = [r[tcol] for r in fm.collect()]
+    assert len(vals) == 2
+    for v in vals:
+        assert v == pytest.approx(2.0, rel=1e-9), (salt, vals)
+
+
+def test_nan_is_skipped_on_every_path(spark):
+    """NaN in a double value column is skipped like a null, as pandas
+    (the reference) skips it: sum 4.0, mean 2.0, max 3.0 over
+    [1.0, NaN, 3.0] on the scalar, join and sortmerge paths —
+    unbounded, windowed and salted."""
+    t0 = dt.datetime(2024, 5, 1)
+    rows = [(f"d{i}", "e1", t0 + dt.timedelta(days=i), v)
+            for i, v in enumerate([1.0, float("nan"), 3.0])]
+    child = spark.createDataFrame(
+        rows, "doc_id string, entity_id string, event_time timestamp, "
+              "val double")
+    es = fts.EntitySet("nan")
+    es.add_dataframe("entities",
+                     spark.createDataFrame([("e1",)], "entity_id string"),
+                     index="entity_id")
+    es.add_dataframe("sequences", child, index="doc_id",
+                     time_index="event_time")
+    es.add_relationship("entities", "entity_id", "sequences", "entity_id")
+    val = IdentityFeature(es, "sequences", "val")
+    feats = [AggregationFeature(val, "entities", p, es=es)
+             for p in ("sum", "mean", "max")]
+    want = (4.0, 2.0, 3.0)
+    cut = t0 + dt.timedelta(days=10)
+    cuts = spark.createDataFrame([("e1", cut)],
+                                 "entity_id string, time timestamp")
+    paths = {
+        "scalar": (feats, dict(cutoff_time=cut)),
+        "join": (feats, dict(cutoff_time=cuts, strategy="join")),
+        "sortmerge": (feats, dict(cutoff_time=cuts, strategy="sortmerge")),
+        # without max, which would route the bounded call to join
+        "sortmerge 30 days": (feats[:2], dict(
+            cutoff_time=cuts, strategy="sortmerge",
+            training_window="30 days")),
+        "sortmerge salt=4": (feats, dict(cutoff_time=cuts,
+                                         strategy="sortmerge", salt=4)),
+    }
+    for path, (fs, kw) in paths.items():
+        rows = fts.calculate_feature_matrix(fs, es, **kw).collect()
+        assert [tuple(r[f.get_name()] for f in fs) for r in rows] == \
+            [want[:len(fs)]], path

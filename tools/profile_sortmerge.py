@@ -1,30 +1,14 @@
-"""Sortmerge-kernel stage profile + join/kernel crossover sweep
-(round 5, VERDICT #6).
+"""Join vs sortmerge crossover sweep for the flagship as-of backfill.
 
-Stage decomposition of the flagship as-of backfill through
-strategy="sortmerge" — each stage is timed as its own action with
-fresh lineage so the split is additive-ish (same JVM, medians of
---reps):
-
-  scan          read the materialized sequences parquet (pruned cols)
-  union_sort    markers + union + repartitionByRange + sortWithinParts
-                (everything BEFORE Python: JVM shuffle + sort)
-  kernel        union_sort + the ONE mapInPandas Arrow sweep
-  full_sm       the whole matrix build (kernel + JVM merge-back)
-  full_join     the join-strategy build of the SAME features
-
-kernel - union_sort  ≈ Arrow exchange + numpy sweep cost
-full_sm - kernel     ≈ merge-back joins
-
-Crossover sweep: --sweep times full_sm vs full_join at increasing
-cutoff density (cutoffs per entity); the join path expands
-|events| x |cutoffs-per-entity| rows before aggregating, the kernel
-is O(events + cutoffs), so the curves cross at some density. The
-crossing point feeds the strategy="auto" router threshold.
+Times the whole matrix build through strategy="sortmerge" and
+strategy="join" at increasing cutoff density (cutoffs per entity),
+interleaved rep by rep. The join path expands |events| x
+|cutoffs-per-entity| rows before aggregating; sortmerge is
+O(events + cutoffs), so the curves cross at some density. The
+crossing point feeds the strategy="auto" router.
 
 Usage:
-  python tools/profile_sortmerge.py [--rows 2000000] [--reps 3]
-  python tools/profile_sortmerge.py --sweep 4,16,64,256 [--reps 3]
+  python tools/profile_sortmerge.py --sweep 4,16,64,256 [--rows 2000000] [--reps 3]
 """
 from __future__ import annotations
 
@@ -46,20 +30,11 @@ def _median(xs):
     return s[m] if len(s) % 2 else (s[m - 1] + s[m]) / 2.0
 
 
-def _timed(build, reps):
-    ts = []
-    for _ in range(reps):
-        t0 = time.time()
-        _noop(build())
-        ts.append(round(time.time() - t0, 3))
-    return round(_median(ts), 3), ts
-
-
 def _timed_interleaved(builders: dict, reps: int):
-    """Time each named builder `reps` times in interleaved order
-    (a,b,c,a,b,c,...) so OS page cache / codegen warm-up and any
-    slow host drift land on every stage equally instead of on
-    whichever ran first."""
+    """Time each named query `reps` times in interleaved order
+    (a,b,a,b,...) so OS page cache / codegen warm-up and any slow host
+    drift land on every query equally instead of on whichever ran
+    first."""
     raw = {k: [] for k in builders}
     for _ in range(reps):
         for k, b in builders.items():
@@ -70,90 +45,52 @@ def _timed_interleaved(builders: dict, reps: int):
 
 
 def main():
-    rows = int(next((sys.argv[i + 1] for i, a in enumerate(sys.argv)
-                     if a == "--rows"), 2_000_000))
-    reps = int(next((sys.argv[i + 1] for i, a in enumerate(sys.argv)
-                     if a == "--reps"), 3))
-    sweep = next((sys.argv[i + 1] for i, a in enumerate(sys.argv)
-                  if a == "--sweep"), None)
+    def arg(name, default):
+        return next((sys.argv[i + 1] for i, a in enumerate(sys.argv)
+                     if a == name), default)
+
+    rows = int(arg("--rows", 2_000_000))
+    reps = int(arg("--reps", 3))
+    sweep = arg("--sweep", None)
+    if not sweep:
+        sys.exit(__doc__)
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
     os.environ["SPARK_GRAFT_BENCH_ROWS"] = str(rows)
     import bench
-    from featuretools_spark import asof
+    from featuretools_spark.datagen import make_cutoffs
     from featuretools_spark.session import get_spark
 
     spark = get_spark("profile_sm", master=f"local[{cpus}]",
                       shuffle_partitions=cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    sf = rows / 20_000_000
-    qs = bench._backfill_queries(sf)
+    qs = bench._backfill_queries(rows / 20_000_000)
     qs["__prepare__"](spark, names=["backfill_seq"])
 
     out = {"rows": rows, "cpus": cpus, "reps": reps}
-
-    if sweep:
-        densities = [int(x) for x in sweep.split(",")]
-        from featuretools_spark.datagen import make_cutoffs
-        res = {}
-        # warm the cached input tables + codegen once before timing
-        _noop(qs["__run__"](spark, "join"))
-        for d in densities:
-            path = f"/tmp/ft_prof_cuts_{rows}_{d}"
-            try:
-                cuts = spark.read.parquet(path)
-            except Exception:
-                base = qs["__frames__"](spark)["seqs"]
-                make_cutoffs(spark, base, per_entity=d) \
-                    .write.mode("overwrite").parquet(path)
-                cuts = spark.read.parquet(path)
-            timed = _timed_interleaved({
-                "sortmerge": lambda c=cuts: qs["__run__"](
-                    spark, "sortmerge", cuts=c),
-                "join": lambda c=cuts: qs["__run__"](spark, "join", cuts=c),
-            }, reps)
-            (t_sm, r_sm), (t_j, r_j) = timed["sortmerge"], timed["join"]
-            res[d] = {"sortmerge": t_sm, "join": t_j,
-                      "sm_reps": r_sm, "join_reps": r_j,
-                      "ratio_join_over_sm": round(t_j / t_sm, 3)}
-            print(json.dumps({"density": d, **res[d]}), flush=True)
-        out["sweep"] = res
-        print(json.dumps(out))
-        return
-
-    # stage profile
-    def staged(which):
-        def build():
-            cap = {}
-            asof._DEBUG_CAPTURE = cap
-            try:
-                full = qs["backfill_seq_sm"](spark, None)
-                if which == "full":
-                    return full
-                return cap[which]
-            finally:
-                asof._DEBUG_CAPTURE = None
-        return build
-
-    # one warm-up of the widest plan so parquet page cache + codegen
-    # are hot before ANY stage is timed; stages then run interleaved
-    # so residual drift lands on all of them equally
-    _noop(staged("full")())
-    timed = _timed_interleaved({
-        "scan": lambda: qs["__frames__"](spark)["seqs"].select(
-            "entity_id", "event_time", "n_tok", "doc_id"),
-        "union_sort": staged("unioned"),
-        "kernel": staged("kernel_out"),
-        "full_sm": staged("full"),
-        "full_join": lambda: qs["backfill_seq"](spark, None),
-    }, reps)
-    med = {k: v[0] for k, v in timed.items()}
-    out.update({
-        **med,
-        "arrow_sweep_cost": round(med["kernel"] - med["union_sort"], 3),
-        "merge_back_cost": round(med["full_sm"] - med["kernel"], 3),
-        "reps_detail": {k: v[1] for k, v in timed.items()},
-    })
+    res = {}
+    # warm the cached input tables + codegen once before timing
+    _noop(qs["__run__"](spark, "join"))
+    for d in (int(x) for x in sweep.split(",")):
+        path = f"/tmp/ft_prof_cuts_{rows}_{d}"
+        try:
+            cuts = spark.read.parquet(path)
+        except Exception:
+            base = qs["__frames__"](spark)["seqs"]
+            make_cutoffs(spark, base, per_entity=d) \
+                .write.mode("overwrite").parquet(path)
+            cuts = spark.read.parquet(path)
+        timed = _timed_interleaved({
+            "sortmerge": lambda c=cuts: qs["__run__"](
+                spark, "sortmerge", cuts=c),
+            "join": lambda c=cuts: qs["__run__"](spark, "join", cuts=c),
+        }, reps)
+        (t_sm, r_sm), (t_j, r_j) = timed["sortmerge"], timed["join"]
+        res[d] = {"sortmerge": t_sm, "join": t_j,
+                  "sm_reps": r_sm, "join_reps": r_j,
+                  "ratio_join_over_sm": round(t_j / t_sm, 3)}
+        print(json.dumps({"density": d, **res[d]}), flush=True)
+    out["sweep"] = res
     print(json.dumps(out))
 
 
