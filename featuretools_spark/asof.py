@@ -126,7 +126,10 @@ def asof_aggregate(
     the plan becomes filter → ONE groupBy(key) with map-side partial
     aggregation → left join onto the instance keys (the reference's
     scalar "tuple path", cfm.py:399-432) — strictly cheaper than the
-    join-then-aggregate shape needed for per-row cutoffs.
+    join-then-aggregate shape needed for per-row cutoffs. That path
+    returns `cutoffs` itself plus the outputs: it needs no cutoff_col
+    and keeps every column, so a caller's frame (a stacked input's
+    child frame) takes its aggregates in one join.
     """
     child = _nan_to_null(child, specs)
     if strategy == "sortmerge" and not hops:
@@ -153,8 +156,8 @@ def asof_aggregate(
     if scalar_cutoff is not None:
         return _asof_scalar(
             child, key_col, time_col, cutoffs, instance_col, specs,
-            cutoff_col, include_cutoff_time, training_window,
-            n_observations, scalar_cutoff,
+            include_cutoff_time, training_window, n_observations,
+            scalar_cutoff,
         )
     # hop PIT predicates (multi-hop paths at per-row cutoffs) need the
     # cutoff in the join condition — always the join strategy
@@ -178,10 +181,10 @@ def _nan_to_null(child: DataFrame, specs: list[AggSpec]) -> DataFrame:
 
 
 def _asof_scalar(child, key_col, time_col, cutoffs, instance_col, specs,
-                 cutoff_col, include_cutoff_time, training_window,
-                 n_observations, scalar_cutoff):
+                 include_cutoff_time, training_window, n_observations,
+                 scalar_cutoff):
     """Scalar-cutoff fast path: filter events once, aggregate per key
-    (partial agg map-side), join results onto the instance keys."""
+    (partial agg map-side), left-join results onto `cutoffs`."""
     cut_lit = F.lit(scalar_cutoff).cast("timestamp")
     ev = child
     if time_col is not None:
@@ -214,7 +217,7 @@ def _asof_scalar(child, key_col, time_col, cutoffs, instance_col, specs,
             m = sm if m is None else (m & sm)
         return m
 
-    out = cutoffs.select(instance_col, cutoff_col)
+    out = cutoffs
     if expr_specs or flag_specs:
         aggs = []
         if flag_specs:

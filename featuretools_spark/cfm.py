@@ -10,10 +10,17 @@ with a single declarative plan:
   the reference's `group_features` fusion, feature_set.py:157-183)
 - where-clauses become conditional aggregation (F.when inside the
   agg), not a second pass (fsc.py:672-674 analog)
-- direct features recurse: parent features are computed at the
-  parent grain with propagated cutoffs, then joined back down the FK
-  (fsc.py:594-650 analog); purely-static parent attributes skip the
-  recursion and join directly (broadcast-able dimension join)
+- direct features of purely-static parent attributes are one
+  broadcast-able join of the parent's masked columns down the FK
+  (fsc.py:594-650 analog); a direct whose base is itself a direct or
+  aggregation recurses: the parent matrix is computed with propagated
+  per-row cutoffs, then joined back down the FK
+- stacked inputs (an aggregation's or direct's input that is itself an
+  aggregation or direct, depth>=2 DFS) at a scalar cutoff attach to
+  the child frame like the reference's trie walk: a per-key aggregate
+  joined on the table index, the parent's masked columns joined on the
+  FK. At per-row cutoffs they ride an auxiliary per-(child, cutoff)
+  matrix joined after the cutoff join
 - transform features compile to Column expressions on the target
   frame; uses_full_dataframe (window) transforms are computed over
   the full table in time order BEFORE instance filtering
@@ -47,129 +54,38 @@ from featuretools_spark.timedelta import Timedelta
 
 
 # ----------------------------------------------------------------------
-# shared-scan cache: one cfm call (including its recursive stacked
-# sub-matrices) can consume the same fact table many times — deep-path
-# groups, stacked inner matrices, direct-feature parents, where bases.
-# Each consumer would otherwise be its own parquet scan + hop join in
-# the physical plan (Catalyst dedupes exchanges, not scans). The cache
-# hands every consumer the SAME column-pruned logical frame and, on the
-# second request, persists it (MEMORY_AND_DISK): Spark's CacheManager
-# substitutes the matching plan fragment with InMemoryRelation for
-# every branch planned afterwards — including the first consumer's,
-# since the final matrix is planned lazily at action time. Frames stay
-# cached until the NEXT top-level cfm call (results are normally
-# materialized in between); clear_scan_cache() releases them eagerly.
+# shared-scan cache: at a scalar cutoff one cfm call reads the same
+# PIT-filtered fact and hop frames from several consumers — deep-path
+# groups, stacked inputs, where bases. The cache builds each (table,
+# cutoff) filter once per top-level call and hands every consumer the
+# same DataFrame. Frames are not persisted: a persisted frame is rebuilt
+# as an InMemoryRelation on every request, one AQE table-cache stage
+# (an extra Spark job) each, which measured slower than re-reading the
+# column-pruned parquet scan (CHANGES.md).
 # ----------------------------------------------------------------------
 _SCAN_CACHE: dict = {}
-_SCAN_PERSISTED: list = []
-_SCAN_COLS: dict = {}
 _CFM_DEPTH = 0
 
 
-def clear_scan_cache():
-    """Unpersist frames cached by the previous calculate_feature_matrix
-    call and reset the shared-scan cache."""
-    for df in _SCAN_PERSISTED:
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    _SCAN_PERSISTED.clear()
-    _SCAN_CACHE.clear()
-    _SCAN_COLS.clear()
-
-
-def _cached_frame(key, builder, persistable=True) -> DataFrame:
-    ent = _SCAN_CACHE.get(key)
-    if ent is None:
-        _SCAN_CACHE[key] = ent = [builder(), 0, persistable]
-    ent[1] += 1
-    if ent[2] and ent[1] == 2:
-        from pyspark import StorageLevel
-
-        ent[0] = ent[0].persist(StorageLevel.MEMORY_AND_DISK)
-        _SCAN_PERSISTED.append(ent[0])
-    return ent[0]
-
-
-def _scan_base(es, name: str) -> DataFrame:
-    """Column-pruned base frame for a table (pruning keeps the
-    persisted cache as narrow as the parquet ReadSchema would be)."""
-    df = es[name]
-    cols = _SCAN_COLS.get(name)
-    if cols:
-        keep = [c for c in df.columns if c in cols]
-        if len(keep) < len(df.columns):
-            df = df.select(*keep)
-    return df
+def _cached_frame(key, make) -> DataFrame:
+    if key not in _SCAN_CACHE:
+        _SCAN_CACHE[key] = make()
+    return _SCAN_CACHE[key]
 
 
 def _pit_child(es, name: str, time_col, pit) -> DataFrame:
-    """Deepest-child fact frame, PIT-pre-filtered at a scalar cutoff so
-    the persisted cache holds only pre-cutoff history (the as-of layer
-    re-applies the full predicate incl. training window). Per-row
-    cutoffs cannot pre-filter — those frames are shared but never
-    persisted (unbounded width at scale)."""
+    """Deepest-child fact frame, PIT-pre-filtered at a scalar cutoff
+    (the as-of layer re-applies the full predicate incl. training
+    window). Per-row cutoffs cannot pre-filter."""
     if pit is None or time_col is None:
-        return _cached_frame(
-            (id(es), name, "base"),
-            lambda: _scan_base(es, name),
-            persistable=(pit is not None),
-        )
+        return es[name]
     sc, inc, _tw = pit
     cut = F.lit(sc).cast("timestamp")
     pred = (F.col(time_col) <= cut) if inc else (F.col(time_col) < cut)
     return _cached_frame(
         (id(es), name, "pit", str(sc), inc),
-        lambda: _scan_base(es, name).filter(pred),
+        lambda: es[name].filter(pred),
     )
-
-
-def _tgt(es, target: str) -> DataFrame:
-    """Shared pruned target-table frame (key/time/ident projections all
-    read one cached scan instead of one parquet scan per site)."""
-    return _cached_frame(
-        (id(es), target, "dim"), lambda: _scan_base(es, target))
-
-
-def _needed_columns(es, feats) -> dict:
-    """table -> set of columns any consumer of this cfm call (incl.
-    recursive stacked sub-matrices — their features are in the dep
-    closure) can touch: identity deps, relationship keys, time/LTI/
-    secondary-time columns. Used to prune the cached scan frames so
-    persisting them keeps parquet column pruning."""
-    need: dict = {}
-
-    def add(t, c):
-        if c:
-            need.setdefault(t, set()).add(c)
-
-    seen, stack = set(), list(feats)
-    while stack:
-        f = stack.pop()
-        if id(f) in seen:
-            continue
-        seen.add(id(f))
-        if isinstance(f, IdentityFeature):
-            add(f.entity, f.column)
-        rels = list(getattr(f, "relationship_path", None) or [])
-        r1 = getattr(f, "relationship", None)  # DirectFeature
-        if r1 is not None:
-            rels.append(r1)
-        for r in rels:
-            add(r.parent_name, r.parent_col)
-            add(r.child_name, r.child_col)
-        stack.extend(f.get_dependencies())
-    for t in list(need):
-        add(t, es.index(t))
-        add(t, es.time_index(t))
-        meta = es.meta.get(t)
-        if meta is not None:
-            for sec in (meta.secondary_time_index or {}):
-                add(t, sec)
-            if meta.last_time_index and LTI_COLUMN_NAME in es[t].columns:
-                add(t, LTI_COLUMN_NAME)
-    return need
 
 
 # ----------------------------------------------------------------------
@@ -349,18 +265,12 @@ def _resolve_auto_strategy(spark, base_keys: DataFrame,
 
 
 def calculate_feature_matrix(*args, **kwargs) -> DataFrame:
-    """Public entry: manages the shared-scan cache across the call and
-    its recursive stacked sub-calls, then delegates to the engine."""
+    """Public entry: resets the shared-scan cache once per top-level
+    call (not in its recursive per-row sub-calls), then delegates to
+    the engine."""
     global _CFM_DEPTH
     if _CFM_DEPTH == 0:
-        clear_scan_cache()
-        try:
-            features = args[0] if args else kwargs["features"]
-            es = (args[1] if len(args) > 1 else None) or \
-                kwargs.get("entityset") or _find_es(features)
-            _SCAN_COLS.update(_needed_columns(es, features))
-        except Exception:
-            _SCAN_COLS.clear()  # pruning is best-effort; cache full width
+        _SCAN_CACHE.clear()
     _CFM_DEPTH += 1
     try:
         return _calculate_feature_matrix(*args, **kwargs)
@@ -520,21 +430,8 @@ def _calculate_feature_matrix(
             .repartition(F.col(index_col)).distinct()
         if matrix_is_bare:
             matrix = base_keys
-    scalar_ctx = (scalar_cutoff, include_cutoff_time, training_window,
-                  strategy)
 
-    # ---- aggregation features, grouped per (path, window, n_obs) ----
-    groups: dict = {}
-    for f in agg_feats:
-        path_key = tuple(
-            (r.parent_name, r.parent_col, r.child_name, r.child_col)
-            for r in f.relationship_path
-        )
-        up = f.use_previous
-        win = up if (up and not up.is_observation) else None
-        nobs = int(up.value) if (up and up.is_observation) else None
-        groups.setdefault((path_key, win, nobs), []).append(f)
-
+    # ---- aggregation features, one as-of aggregation per group ----
     if approx_td is not None and scalar_cutoff is None:
         step = int(round(approx_td.to_seconds()))
         binned_expr = F.timestamp_seconds(
@@ -547,134 +444,10 @@ def _calculate_feature_matrix(
     else:
         agg_keys = base_keys
 
-    for (path_key, win, nobs), feats in groups.items():
-        path = feats[0].relationship_path
-        child_df, key_col, time_col, hops = _child_frame(
-            es, path,
-            pit=(scalar_cutoff, include_cutoff_time, training_window)
-            if scalar_cutoff is not None else None,
-        )
-        specs = []
-        # per-row cutoffs + stacked aggregation/direct inputs: the
-        # stacked value VARIES PER CUTOFF, so it cannot live on
-        # child_df — compute the inner matrix at propagated
-        # (child_instance, cutoff) pairs and hand it to the as-of
-        # join as an auxiliary frame joined AFTER the cutoff join.
-        aux = None
-        aux_cols: dict = {}
-        if scalar_cutoff is None:
-            stacked = []
-            seen_stk = set()
-            for f in feats:
-                cands = list(f.base_features)
-                if f.where is not None:
-                    # where clauses over agg outputs (depth>=3
-                    # conditional aggs, e.g. COUNT(orders WHERE
-                    # SUM(lineitem.qty) > 5)) ride the aux matrix the
-                    # same way stacked bases do
-                    cands.append(f.where)
-                for b in cands:
-                    # hoist bare agg/direct inputs AND transforms that
-                    # contain one (depth>=3: MEAN(orders.ABS(SUM(...))))
-                    # — the recursive per-row sub-matrix computes
-                    # transforms of agg outputs on its own matrix
-                    if (b.get_name() not in seen_stk
-                            and (isinstance(b, (AggregationFeature,
-                                                DirectFeature))
-                                 or _has_agg_or_direct_dep(b))):
-                        seen_stk.add(b.get_name())
-                        stacked.append(b)
-            if stacked:
-                child_name = feats[0].child_entity
-                child_idx = es.index(child_name)
-                cmap = (
-                    child_df.select(F.col(child_idx).alias("__cid"),
-                                    F.col(key_col).alias("__ak"))
-                    .join(
-                        agg_keys.select(F.col(index_col).alias("__ak"),
-                                        F.col(CUTOFF_COL)),
-                        on="__ak",
-                    )
-                    .select(F.col("__cid").alias(child_idx), CUTOFF_COL)
-                    .distinct()
-                )
-                sub = calculate_feature_matrix(
-                    stacked, es,
-                    cutoff_time=cmap.select(
-                        F.col(child_idx),
-                        F.col(CUTOFF_COL).alias("time"),
-                    ),
-                    include_cutoff_time=include_cutoff_time,
-                    training_window=training_window,
-                    strategy=strategy,
-                )
-                sel = [F.col(f"`{child_idx}`").alias("__aux_k"),
-                       F.col("time").alias("__aux_t")]
-                for i, sf in enumerate(stacked):
-                    an = f"__aux_f{i}"
-                    sel.append(F.col(f"`{sf.get_name()}`").alias(an))
-                    aux_cols[sf.get_name()] = an
-                aux = (sub.select(*sel), child_idx)
-
-        # materialize every NON-stacked base/where feature of the
-        # group in ONE pass so shared inputs (and recursive stacked
-        # sub-matrices on the scalar path) are computed once per group
-        base_list: list = []
-        for f in feats:
-            for b in f.base_features:
-                if b.get_name() not in aux_cols:
-                    base_list.append(b)
-            if f.where is not None and f.where.get_name() not in aux_cols:
-                base_list.append(f.where)
-        child_df, mat_cols = _materialize_features(
-            es, feats[0].child_entity, child_df, base_list, time_col,
-            scalar_ctx=scalar_ctx,
-        )
-        col_iter = iter(mat_cols)
-        for f in feats:
-            in_cols = [
-                aux_cols[b.get_name()]
-                if b.get_name() in aux_cols else next(col_iter)
-                for b in f.base_features
-            ]
-            where_col = None
-            if f.where is not None:
-                wn = f.where.get_name()
-                where_col = (aux_cols[wn] if wn in aux_cols
-                             else next(col_iter))
-            kinds = getattr(f.primitive, "input_kinds", ("numeric",))
-            sec_time_col = _secondary_mask_col(es, f)
-            if kinds == ():
-                in_cols = []
-            elif (f.primitive.name == "count" and f.where is None
-                    and sec_time_col is None):
-                # unmasked COUNT = row count; dropping the index input
-                # lets Catalyst prune the column from the scan
-                in_cols = []
-            specs.append(
-                AggSpec(internal[f.get_name()], f.primitive, in_cols,
-                        where_col, sec_time_col)
-            )
-        # reference applies BOTH filters (ES pre-filtered by
-        # training_window, then use_previous): with fixed-duration
-        # windows that composes to the more restrictive of the two
-        if win and training_window:
-            eff_window = (
-                win if win.to_seconds() <= training_window.to_seconds()
-                else training_window
-            )
-        else:
-            eff_window = win or training_window
-        part = asof_aggregate(
-            child_df, key_col, time_col, agg_keys, index_col, specs,
-            include_cutoff_time=include_cutoff_time,
-            training_window=eff_window,
-            n_observations=nobs,
-            strategy=strategy,
-            scalar_cutoff=scalar_cutoff if strategy == "join" else None,
-            salt=salt,
-            aux=aux,
-            hops=hops,
+    for feats in _agg_groups(agg_feats):
+        part = _aggregate_group(
+            es, feats, agg_keys, index_col, internal, scalar_cutoff,
+            include_cutoff_time, training_window, strategy, salt,
         )
         if approx_td is not None and scalar_cutoff is None:
             # remap approx results onto exact cutoffs via the binned key
@@ -691,9 +464,9 @@ def _calculate_feature_matrix(
             matrix = matrix.join(part, on=[index_col, CUTOFF_COL], how="left")
         # re-fill defaults lost through the outer join
         fills = {
-            s.out_name: s.primitive.default_value
-            for s in specs
-            if s.primitive.default_value is not None
+            internal[f.get_name()]: f.primitive.default_value
+            for f in feats
+            if f.primitive.default_value is not None
         }
         if fills:
             matrix = matrix.fillna(fills)
@@ -716,76 +489,14 @@ def _calculate_feature_matrix(
     dynamic_direct = [f for f in direct_feats if not _base_is_static(f)]
 
     if static_direct:
-        by_rel: dict = {}
-        for f in static_direct:
-            by_rel.setdefault(f.relationship, []).append(f)
-        target_keys = _tgt(es, target).select(
-            index_col, *{f.relationship.child_col for f in static_direct}
-        )
-        matrix = matrix.join(target_keys, on=index_col, how="left")
-        for rel, feats in by_rel.items():
-            # shared pruned parent frame (PIT/LTI arrive as column
-            # masks, not filters — missing parents must yield defaults)
-            parent_df = _cached_frame(
-                (id(es), rel.parent_name, "dim"),
-                lambda t=rel.parent_name: _scan_base(es, t),
-            )
-            pti = es.time_index(rel.parent_name)
-            parent_df, cols = _materialize_features(
-                es, rel.parent_name, parent_df,
-                [f.base_feature for f in feats], pti,
-            )
-            sec_by_feat = {
-                internal[f.get_name()]: _sec_governing_col(
-                    es, rel.parent_name, f.base_feature
-                )
-                for f in feats
-            }
-            need_sec = sorted({c for c in sec_by_feat.values() if c})
-            has_lti = (
-                es.meta[rel.parent_name].last_time_index
-                and LTI_COLUMN_NAME in parent_df.columns
-            )
-            sel = parent_df.select(
-                F.col(rel.parent_col).alias(rel.child_col),
-                *[
-                    F.col(c).alias(internal[f.get_name()])
-                    for c, f in zip(cols, feats)
-                ],
-                *([F.col(pti).alias("_ft_par_ti")] if pti else []),
-                *([F.col(LTI_COLUMN_NAME).alias("_ft_par_lti")]
-                  if has_lti else []),
-                *[F.col(c).alias(f"_ft_psec_{c}") for c in need_sec],
-            )
-            matrix = matrix.join(F.broadcast(sel), on=rel.child_col, how="left")
-            # point-in-time mask (reference _handle_time filters EVERY
-            # dataframe to t <= cutoff): a parent row "from the future"
-            # contributes NULL, not a value; secondary-time-index
-            # columns stay NULL until their governing time has passed
-            for f in feats:
-                cname = internal[f.get_name()]
-                cond = None
-                if pti:
-                    cond = _pit_mask(
-                        F.col("_ft_par_ti"), F.col(CUTOFF_COL),
-                        include_cutoff_time, training_window,
-                        lti=F.col("_ft_par_lti") if has_lti else None,
-                    )
-                sec = sec_by_feat[cname]
-                if sec:
-                    smask = F.col(f"_ft_psec_{sec}") < F.col(CUTOFF_COL)
-                    cond = smask if cond is None else (cond & smask)
-                if cond is not None:
-                    matrix = matrix.withColumn(
-                        cname, F.when(cond, F.col(cname))
-                    )
-            matrix = matrix.drop(
-                "_ft_par_ti", "_ft_par_lti",
-                *[f"_ft_psec_{c}" for c in need_sec],
-            )
-        matrix = matrix.drop(
-            *{f.relationship.child_col for f in static_direct}
-        )
+        fks = {f.relationship.child_col for f in static_direct}
+        matrix = matrix.join(
+            es[target].select(index_col, *fks), on=index_col,
+            how="left")
+        matrix = _join_directs(
+            es, matrix, static_direct, internal, F.col(CUTOFF_COL),
+            include_cutoff_time, training_window)
+        matrix = matrix.drop(*fks)
 
     # batched per relationship: all dynamic bases over one relationship
     # share ONE recursive parent matrix and one join-back instead of a
@@ -794,7 +505,7 @@ def _calculate_feature_matrix(
     for f in dynamic_direct:
         dyn_by_rel.setdefault(f.relationship, []).append(f)
     for rel, feats in dyn_by_rel.items():
-        fk_map = _tgt(es, target).select(index_col, rel.child_col)
+        fk_map = es[target].select(index_col, rel.child_col)
         parent_cutoffs = (
             base_keys.join(fk_map, on=index_col, how="left")
             .select(
@@ -824,7 +535,7 @@ def _calculate_feature_matrix(
 
     # ---- identity + transform features on the target ----
     if other_feats:
-        tdf = _tgt(es, target)
+        tdf = es[target]
         ti = es.time_index(target)
         # full-dataframe (window) transforms: compute over the whole
         # table in time order first
@@ -849,7 +560,7 @@ def _calculate_feature_matrix(
             _ident_deps(f, target, ident_cols)
         if ident_cols:
             matrix = matrix.join(
-                _tgt(es, target).select(
+                es[target].select(
                     index_col,
                     *[F.col(c).alias(f"_ft_mt_{c}")
                       for c in sorted(ident_cols)],
@@ -966,7 +677,7 @@ def _calculate_feature_matrix(
             es.meta[target].last_time_index
             and LTI_COLUMN_NAME in es[target].columns
         )
-        tsel = _tgt(es, target).select(
+        tsel = es[target].select(
             index_col,
             *([F.col(tti).alias("_ft_tgt_ti")] if tti else []),
             *([F.col(LTI_COLUMN_NAME).alias("_ft_tgt_lti")]
@@ -1030,6 +741,237 @@ def _calculate_feature_matrix(
 
 
 # ----------------------------------------------------------------------
+# feature groups, shared by the matrix and by stacked inputs
+# ----------------------------------------------------------------------
+def _agg_groups(feats) -> list:
+    """Aggregation features grouped by (relationship path, use_previous):
+    each group is one as-of aggregation."""
+    groups: dict = {}
+    for f in feats:
+        path_key = tuple(
+            (r.parent_name, r.parent_col, r.child_name, r.child_col)
+            for r in f.relationship_path
+        )
+        groups.setdefault((path_key, *_use_previous(f)), []).append(f)
+    return list(groups.values())
+
+
+def _use_previous(f):
+    """(duration window | None, observation count | None) of f."""
+    up = f.use_previous
+    win = up if (up and not up.is_observation) else None
+    nobs = int(up.value) if (up and up.is_observation) else None
+    return win, nobs
+
+
+def _aggregate_group(es, feats, keys, index_col, names, scalar_cutoff,
+                     include_cutoff_time, training_window, strategy="join",
+                     salt=None) -> DataFrame:
+    """One as-of aggregation for a group from _agg_groups: the deepest
+    child of the group's path, the group's inputs materialized on it,
+    one AggSpec per feature (output column names[f.get_name()]).
+
+    keys carries index_col and, at per-row cutoffs, CUTOFF_COL. At a
+    scalar cutoff with strategy "join" it may be any frame keyed by
+    index_col: the aggregates are left-joined onto it and every column
+    it carries is kept (how stacked inputs attach to a child frame).
+    Returns keys plus one column per feature, defaults filled."""
+    win, nobs = _use_previous(feats[0])
+    pit = ((scalar_cutoff, include_cutoff_time, training_window)
+           if scalar_cutoff is not None else None)
+    child_df, key_col, time_col, hops = _child_frame(
+        es, feats[0].relationship_path, pit=pit)
+    aux, aux_cols = None, {}
+    if pit is None:
+        aux, aux_cols = _stacked_aux(
+            es, feats, child_df, key_col, keys, index_col,
+            include_cutoff_time, training_window, strategy)
+
+    # materialize every non-aux base/where feature of the group in ONE
+    # pass so shared inputs (and stacked inputs at a scalar cutoff)
+    # are computed once per group
+    base_list: list = []
+    for f in feats:
+        for b in f.base_features:
+            if b.get_name() not in aux_cols:
+                base_list.append(b)
+        if f.where is not None and f.where.get_name() not in aux_cols:
+            base_list.append(f.where)
+    child_df, mat_cols = _materialize_features(
+        es, feats[0].child_entity, child_df, base_list, time_col, pit=pit,
+    )
+    col_iter = iter(mat_cols)
+    specs = []
+    for f in feats:
+        in_cols = [
+            aux_cols[b.get_name()]
+            if b.get_name() in aux_cols else next(col_iter)
+            for b in f.base_features
+        ]
+        where_col = None
+        if f.where is not None:
+            wn = f.where.get_name()
+            where_col = (aux_cols[wn] if wn in aux_cols
+                         else next(col_iter))
+        kinds = getattr(f.primitive, "input_kinds", ("numeric",))
+        sec_time_col = _secondary_mask_col(es, f)
+        if kinds == ():
+            in_cols = []
+        elif (f.primitive.name == "count" and f.where is None
+                and sec_time_col is None):
+            # unmasked COUNT = row count; dropping the index input
+            # lets Catalyst prune the column from the scan
+            in_cols = []
+        specs.append(
+            AggSpec(names[f.get_name()], f.primitive, in_cols,
+                    where_col, sec_time_col)
+        )
+    # reference applies BOTH filters (ES pre-filtered by
+    # training_window, then use_previous): with fixed-duration
+    # windows that composes to the more restrictive of the two
+    if win and training_window:
+        eff_window = (
+            win if win.to_seconds() <= training_window.to_seconds()
+            else training_window
+        )
+    else:
+        eff_window = win or training_window
+    return asof_aggregate(
+        child_df, key_col, time_col, keys, index_col, specs,
+        include_cutoff_time=include_cutoff_time,
+        training_window=eff_window,
+        n_observations=nobs,
+        strategy=strategy,
+        scalar_cutoff=scalar_cutoff if strategy == "join" else None,
+        salt=salt,
+        aux=aux,
+        hops=hops,
+    )
+
+
+def _stacked_aux(es, feats, child_df, key_col, keys, index_col,
+                 include_cutoff_time, training_window, strategy):
+    """Per-row cutoffs: a stacked aggregation/direct input VARIES PER
+    CUTOFF, so it cannot live on child_df. Compute the inner matrix at
+    propagated (child instance, cutoff) pairs and hand it to the as-of
+    join as an auxiliary frame joined AFTER the cutoff join. Returns
+    (aux | None, {stacked feature name: aux column})."""
+    stacked = []
+    seen = set()
+    for f in feats:
+        cands = list(f.base_features)
+        if f.where is not None:
+            # where clauses over agg outputs (depth>=3 conditional
+            # aggs, e.g. COUNT(orders WHERE SUM(lineitem.qty) > 5))
+            # ride the aux matrix the same way stacked bases do
+            cands.append(f.where)
+        for b in cands:
+            # hoist bare agg/direct inputs AND transforms that contain
+            # one (depth>=3: MEAN(orders.ABS(SUM(...)))) — the
+            # recursive per-row sub-matrix computes transforms of agg
+            # outputs on its own matrix
+            if (b.get_name() not in seen
+                    and (isinstance(b, (AggregationFeature, DirectFeature))
+                         or _has_agg_or_direct_dep(b))):
+                seen.add(b.get_name())
+                stacked.append(b)
+    if not stacked:
+        return None, {}
+    child_idx = es.index(feats[0].child_entity)
+    cmap = (
+        child_df.select(F.col(child_idx).alias("__cid"),
+                        F.col(key_col).alias("__ak"))
+        .join(
+            keys.select(F.col(index_col).alias("__ak"), F.col(CUTOFF_COL)),
+            on="__ak",
+        )
+        .select(F.col("__cid").alias(child_idx), CUTOFF_COL)
+        .distinct()
+    )
+    sub = calculate_feature_matrix(
+        stacked, es,
+        cutoff_time=cmap.select(
+            F.col(child_idx), F.col(CUTOFF_COL).alias("time")),
+        include_cutoff_time=include_cutoff_time,
+        training_window=training_window,
+        strategy=strategy,
+    )
+    sel = [F.col(f"`{child_idx}`").alias("__aux_k"),
+           F.col("time").alias("__aux_t")]
+    aux_cols = {}
+    for i, sf in enumerate(stacked):
+        an = f"__aux_f{i}"
+        sel.append(F.col(f"`{sf.get_name()}`").alias(an))
+        aux_cols[sf.get_name()] = an
+    return (sub.select(*sel), child_idx), aux_cols
+
+
+def _join_directs(es, frame, feats, names, cutoff, include_cutoff_time,
+                  training_window, pit=None) -> DataFrame:
+    """Attach direct features to `frame`, which already carries each
+    feature's foreign key (relationship.child_col): per relationship,
+    ONE left join of the parent's columns on that key (reference
+    fsc.py:594-650), named names[f.get_name()].
+
+    The parent's bases materialize on the parent table; at a scalar
+    cutoff (`pit`) stacked bases attach to it first. PIT and
+    last time index arrive as column masks at `cutoff`, not filters
+    (reference _handle_time filters EVERY dataframe to t <= cutoff): a
+    parent row "from the future", or a missing parent, contributes
+    NULL; secondary-time-index columns stay NULL until their governing
+    time has passed."""
+    by_rel: dict = {}
+    for f in feats:
+        by_rel.setdefault(f.relationship, []).append(f)
+    for rel, rfeats in by_rel.items():
+        pti = es.time_index(rel.parent_name)
+        parent_df, cols = _materialize_features(
+            es, rel.parent_name, es[rel.parent_name],
+            [f.base_feature for f in rfeats], pti, pit=pit,
+        )
+        sec_by_feat = {
+            names[f.get_name()]: _sec_governing_col(
+                es, rel.parent_name, f.base_feature)
+            for f in rfeats
+        }
+        need_sec = sorted({c for c in sec_by_feat.values() if c})
+        has_lti = (
+            es.meta[rel.parent_name].last_time_index
+            and LTI_COLUMN_NAME in parent_df.columns
+        )
+        sel = parent_df.select(
+            F.col(rel.parent_col).alias(rel.child_col),
+            *[F.col(c).alias(names[f.get_name()])
+              for c, f in zip(cols, rfeats)],
+            *([F.col(pti).alias("_ft_par_ti")] if pti else []),
+            *([F.col(LTI_COLUMN_NAME).alias("_ft_par_lti")]
+              if has_lti else []),
+            *[F.col(c).alias(f"_ft_psec_{c}") for c in need_sec],
+        )
+        frame = frame.join(F.broadcast(sel), on=rel.child_col, how="left")
+        for f in rfeats:
+            cname = names[f.get_name()]
+            cond = None
+            if pti:
+                cond = _pit_mask(
+                    F.col("_ft_par_ti"), cutoff, include_cutoff_time,
+                    training_window,
+                    lti=F.col("_ft_par_lti") if has_lti else None,
+                )
+            sec = sec_by_feat[cname]
+            if sec:
+                smask = F.col(f"_ft_psec_{sec}") < cutoff
+                cond = smask if cond is None else (cond & smask)
+            if cond is not None:
+                frame = frame.withColumn(cname, F.when(cond, F.col(cname)))
+        frame = frame.drop(
+            "_ft_par_ti", "_ft_par_lti",
+            *[f"_ft_psec_{c}" for c in need_sec],
+        )
+    return frame
+
+
+# ----------------------------------------------------------------------
 # helpers
 # ----------------------------------------------------------------------
 def _find_es(features):
@@ -1080,7 +1022,7 @@ def _build_cutoffs(es, target, index_col, cutoff_time):
         cutoff_time = _max_time(es)
     if isinstance(cutoff_time, str):
         cutoff_time = _dt.datetime.fromisoformat(cutoff_time)
-    df = _tgt(es, target).select(
+    df = es[target].select(
         F.col(index_col), F.lit(cutoff_time).cast("timestamp").alias(CUTOFF_COL)
     )
     return df, [], cutoff_time
@@ -1149,21 +1091,17 @@ def _child_frame(es, path, pit=None):
     hops: list = []      # (ti_col, lti_col | None) pairs
     for i, (rel, nxt) in enumerate(zip(path, path[1:])):
         # the intermediate hop table, shared + PIT-filtered via the
-        # scan cache (the same orders hop serves deep-path groups,
-        # stacked sub-matrices, and direct parents in one call)
+        # scan cache (the same orders hop serves deep-path groups and
+        # stacked inputs in one call)
         if pit is not None:
             tbl = _cached_frame(
                 (id(es), rel.child_name, "hop", str(pit[0]), pit[1],
                  str(pit[2])),
                 lambda t=rel.child_name: _apply_scalar_pit(
-                    es, t, _scan_base(es, t), pit),
+                    es, t, es[t], pit),
             )
         else:
-            tbl = _cached_frame(
-                (id(es), rel.child_name, "base"),
-                lambda t=rel.child_name: _scan_base(es, t),
-                persistable=False,
-            )
+            tbl = es[rel.child_name]
         extra_exprs, extra_names = [], []
         if pit is None:
             ti = es.time_index(rel.child_name)
@@ -1302,8 +1240,7 @@ def _is_static(feature) -> bool:
 
 
 def _materialize_features(es, table, df, feats, time_col,
-                          cutoff_frame=None, index_col=None,
-                          scalar_ctx=None):
+                          cutoff_frame=None, index_col=None, pit=None):
     """Add one column per feature to df; returns (df, colnames).
 
     Pure row-wise transforms compile into a single select; window
@@ -1315,13 +1252,19 @@ def _materialize_features(es, table, df, feats, time_col,
 
     Stacked inputs — AggregationFeature/DirectFeature nodes at this
     table's grain (depth>=2 DFS, e.g. MEAN(orders.SUM(lineitem.x)))
-    — are computed by a recursive calculate_feature_matrix at the
-    scalar cutoff and joined back on the table index. Per-row cutoffs
-    would require propagating every ancestor cutoff down the path
-    (the reference re-filters the whole ES per unique cutoff instead,
-    calculate_feature_matrix.py:437-506); use approximate= binning or
-    a scalar cutoff for stacked features.
+    — need a scalar cutoff, pit = (cutoff, include_cutoff_time,
+    training_window), and attach straight onto df the way the
+    reference's trie walk computes a child's features on the child
+    frame: each aggregation group is one left join of its per-key
+    aggregate on the table index (fsc.py:764-771), each relationship's
+    direct features one left join of the parent's masked columns on
+    the foreign key (fsc.py:594-650). df needs no target-grain mask:
+    it is already filtered to t <= cutoff (_pit_child or the hop
+    filter), and the consuming aggregation drops rows outside the
+    training window. At per-row cutoffs the group loop routes stacked
+    inputs to the aux matrix (_stacked_aux) instead.
     """
+    global _MAT_COUNTER
     needs_cutoff = any(_uses_calc_time(f) for f in feats)
     precomputed: dict = {}
 
@@ -1337,8 +1280,7 @@ def _materialize_features(es, table, df, feats, time_col,
     for f in feats:
         _collect_special(f)
     if special:
-        sc = scalar_ctx[0] if scalar_ctx else None
-        if sc is None:
+        if pit is None:
             # internal invariant, not a user-reachable limit: every
             # calculate_feature_matrix call site routes agg/direct-
             # bearing features elsewhere before materializing here —
@@ -1352,23 +1294,19 @@ def _materialize_features(es, table, df, feats, time_col,
                 "_materialize_features without a scalar cutoff "
                 f"context: {[f.get_name() for f in special]!r}"
             )
-        _, inc, tw, strat = scalar_ctx
         uniq = list({f.get_name(): f for f in special}.values())
-        sub = calculate_feature_matrix(
-            uniq, es, cutoff_time=sc, include_cutoff_time=inc,
-            training_window=tw, strategy=strat,
-        )
-        tbl_index = es.index(table)
-        global _MAT_COUNTER
-        sel = [F.col(f"`{tbl_index}`")]
         for f in uniq:
             _MAT_COUNTER += 1
-            cn = f"_ft_m{_MAT_COUNTER}"
-            # feature names contain dots, which bare F.col would parse
-            # as struct traversal — quote with backticks
-            sel.append(F.col(f"`{f.get_name()}`").alias(cn))
-            precomputed[f.get_name()] = cn
-        df = df.join(sub.select(*sel), on=tbl_index, how="left")
+            precomputed[f.get_name()] = f"_ft_m{_MAT_COUNTER}"
+        sc, inc, tw = pit
+        for group in _agg_groups(
+                [f for f in uniq if isinstance(f, AggregationFeature)]):
+            df = _aggregate_group(es, group, df, es.index(table),
+                                  precomputed, sc, inc, tw)
+        directs = [f for f in uniq if isinstance(f, DirectFeature)]
+        if directs:
+            df = _join_directs(es, df, directs, precomputed,
+                               F.lit(sc).cast("timestamp"), inc, tw, pit)
     if needs_cutoff:
         if cutoff_frame is None:
             raise ValueError("uses_calc_time feature outside cutoff context")

@@ -39,6 +39,12 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
+        # no Python call-site capture: with it on, every DataFrame and
+        # functions.* call pays ~3 extra py4j round trips
+        # (getActiveSession, a conf.get, PySparkCurrentOrigin.set):
+        # ~60% of the round trips of a depth-2 DFS plan build.
+        # Trade-off: analysis errors lose the DataFrame call-site context.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
     )
     for k, v in (extra_conf or {}).items():

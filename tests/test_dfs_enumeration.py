@@ -241,6 +241,92 @@ def test_holistic_over_stacked_per_row_cutoffs(spark, es):
                         r["c_custkey"], t, want, have)
 
 
+@pytest.mark.parametrize("window,include,lti", [
+    (None, True, False),
+    (None, False, True),
+    ("30 days", True, True),
+    ("30 days", False, False),
+])
+def test_stacked_scalar_cutoff_matches_per_row(spark, window, include, lti):
+    """A scalar cutoff and the same cutoff given per row agree on every
+    depth-2 DFS feature plus a where over a stacked aggregation. The
+    per-row path computes stacked inputs through the aux matrix, an
+    evaluator independent of the scalar path's. orders carries a
+    secondary time index over o_totalprice (masks the stacked direct
+    orders.o_totalprice at lineitem grain); with `lti`, last time
+    indexes let the training window keep orders by later activity."""
+    import datetime as dt
+
+    from pyspark.sql import functions as F
+
+    from conftest import SF_DIR as d
+    from featuretools_spark.entityset import EntitySet
+    from featuretools_spark.features import AggregationFeature
+
+    es = EntitySet("stacked_parity")
+    es.add_dataframe("customer", spark.read.parquet(f"{d}/customer.parquet"),
+                     index="c_custkey")
+    es.add_dataframe(
+        "orders",
+        spark.read.parquet(f"{d}/orders.parquet").withColumn(
+            "o_paydate", F.col("o_orderdate") + F.expr("INTERVAL 45 DAYS")),
+        index="o_orderkey", time_index="o_orderdate",
+        secondary_time_index={"o_paydate": ["o_totalprice"]})
+    # a unique lineitem index: the `es` fixture's l_orderkey * 10 +
+    # l_linenumber repeats in this data (4599 distinct of 6000 rows)
+    lineitem = spark.read.parquet(f"{d}/lineitem.parquet").withColumn(
+        "_li_id", F.xxhash64("l_orderkey", "l_partkey", "l_suppkey",
+                             "l_linenumber", "l_shipdate"))
+    assert lineitem.select("_li_id").distinct().count() == 6000
+    es.add_dataframe("lineitem", lineitem, index="_li_id",
+                     time_index="l_shipdate")
+    es.add_relationship("customer", "c_custkey", "orders", "o_custkey")
+    es.add_relationship("orders", "o_orderkey", "lineitem", "l_orderkey")
+    feats = fts.dfs(
+        entityset=es, target_dataframe_name="customer", features_only=True,
+        agg_primitives=["sum", "mean", "count"], trans_primitives=[],
+        ignore_columns={
+            "lineitem": ["l_partkey", "l_suppkey", "l_linenumber", "l_tax",
+                         "l_returnflag", "l_linestatus"],
+            "customer": ["c_name", "c_nationkey"],
+            "orders": ["o_paydate"],
+        },
+        max_depth=2)
+    names = [f.get_name() for f in feats]
+    assert "MEAN(orders.SUM(lineitem.l_quantity))" in names
+    assert "SUM(lineitem.orders.o_totalprice)" in names
+    qty = IdentityFeature(es, "lineitem", "l_quantity")
+    big = AggregationFeature(qty, "orders", "sum", es=es) > 100
+    feats.append(AggregationFeature(
+        IdentityFeature(es, "orders", "o_totalprice"), "customer", "sum",
+        where=big, es=es))
+    if lti:
+        es.add_last_time_indexes()
+    cols = [f.get_name() for f in feats]
+    t = dt.datetime(1998, 3, 1)
+    kw = dict(training_window=window, include_cutoff_time=include)
+    scalar = fts.calculate_feature_matrix(feats, es, cutoff_time=t, **kw)
+    per_row = fts.calculate_feature_matrix(
+        feats, es,
+        cutoff_time=es["customer"].select(
+            "c_custkey", F.lit(t).cast("timestamp").alias("time")),
+        **kw)
+    want = {r["c_custkey"]: r for r in scalar.collect()}
+    have = {r["c_custkey"]: r for r in per_row.collect()}
+    assert len(want) == 150 and want.keys() == have.keys()
+    checked = 0
+    for k, w in want.items():
+        for c in cols:
+            x, y = w[c], have[k][c]
+            if x is None or y is None or isinstance(x, str):
+                assert x == y, (k, c, x, y)
+            else:
+                assert abs(float(x) - float(y)) <= 1e-9 * max(
+                    1.0, abs(float(x))), (k, c, x, y)
+                checked += x != 0
+    assert checked > 0
+
+
 def test_diamond_paths_enumerate_distinct_features(spark):
     """A diamond schema (two backward paths A->D) must yield ONE
     feature per path, disambiguated by the hop-name chain in the

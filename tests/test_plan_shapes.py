@@ -8,7 +8,10 @@ map job into a 100-TB shuffle, so pin the executed plan here.
 
 The as-of evaluators are pure JVM: no plan crosses into Python, and
 strategy="sortmerge" is one Exchange + one Sort under its running
-windows (plus the salt merge's Exchange when salted)."""
+windows (plus the salt merge's Exchange when salted).
+
+A depth-2 DFS at a scalar cutoff attaches its stacked inputs to the
+child frame: no table joins itself on its own index."""
 import datetime as dt
 import re
 
@@ -196,3 +199,68 @@ def test_strategy_auto_routes_to_pure_jvm_join(spark, es):
         fts.calculate_feature_matrix(
             [agg], es, cutoff_time=dt.datetime(2024, 3, 1),
             strategy="hash")
+
+
+def _plan_nodes(jplan) -> list:
+    """Every node of a JVM logical plan."""
+    todo, out = [jplan], []
+    while todo:
+        n = todo.pop()
+        out.append(n)
+        ch = n.children()
+        todo.extend(ch.apply(i) for i in range(ch.size()))
+    return out
+
+
+_TPCH_PREFIX = {"l_": "lineitem", "o_": "orders", "c_": "customer"}
+
+
+def _relations(jplan) -> list:
+    """Tables of the parquet relations under a plan node, named by their
+    TPC-H column prefix."""
+    return [_TPCH_PREFIX[n.output().apply(0).name()[:2]]
+            for n in _plan_nodes(jplan) if n.nodeName() == "LogicalRelation"]
+
+
+def test_depth2_dfs_scalar_plan_has_no_self_join(spark, es, monkeypatch):
+    """At a scalar cutoff a stacked input (MEAN(orders.SUM(lineitem.x)),
+    SUM(lineitem.orders.o_totalprice)) is one join onto the child
+    frame: a per-key aggregate on the table index, or the parent's
+    columns on the foreign key. calculate_feature_matrix runs once (no
+    sub-matrix per stacked input), nothing is persisted, no join of
+    lineitem or orders with itself on its own index is left in the
+    optimized plan, and lineitem is read twice (deep-path aggregations
+    and stacked aggregations at orders grain)."""
+    from featuretools_spark import cfm
+
+    calls = []
+    engine = cfm._calculate_feature_matrix
+    monkeypatch.setattr(
+        cfm, "_calculate_feature_matrix",
+        lambda *a, **kw: calls.append(1) or engine(*a, **kw))
+    feats = fts.dfs(
+        entityset=es, target_dataframe_name="customer", features_only=True,
+        agg_primitives=["sum", "mean", "count"], trans_primitives=[],
+        ignore_columns={
+            "lineitem": ["l_partkey", "l_suppkey", "l_linenumber", "l_tax",
+                         "l_returnflag", "l_linestatus"],
+            "customer": ["c_name", "c_nationkey"],
+        },
+        max_depth=2)
+    fm = fts.calculate_feature_matrix(feats, es,
+                                      cutoff_time=dt.datetime(1998, 1, 1))
+    assert len(calls) == 1
+    plan = fm._jdf.queryExecution().optimizedPlan()
+    nodes = _plan_nodes(plan)
+    assert "InMemoryRelation" not in {n.nodeName() for n in nodes}
+    for n in nodes:
+        if n.nodeName() != "Join" or not n.condition().isDefined():
+            continue
+        cond = n.condition().get().toString()
+        for table, index in (("lineitem", "_li_id"), ("orders", "o_orderkey")):
+            if re.search(rf"\b{index}#\d+L? = {index}#\d+", cond):
+                sides = [_relations(n.children().apply(i)) for i in (0, 1)]
+                assert not all(table in side for side in sides), cond
+    rels = _relations(plan)
+    assert rels.count("lineitem") <= 2, rels
+    assert rels.count("orders") <= 3, rels

@@ -2,9 +2,11 @@
 query through Spark AND its oracle SQL through DuckDB at a given SF,
 compare row counts + order-insensitive values."""
 import math
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+# this checkout, so two checkouts can be checked side by side
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 import __spark_entry__ as entrymod

@@ -13,7 +13,8 @@ Input: the materialized 20M-row synthetic sequences table (written by
 `python bench.py --scaling` to /tmp/ft_bench_seqs_20000000_16).
 """
 import os, sys, time
-sys.path.insert(0, "/root/repo")
+# this checkout, so two checkouts can be run side by side
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 cpus = int(sys.argv[1])
 import featuretools_spark as fts
 from featuretools_spark.datagen import make_cutoffs, make_entities
