@@ -172,7 +172,9 @@ def _nan_to_null(child: DataFrame, specs: list[AggSpec]) -> DataFrame:
     """NaN -> null in the float/double columns the specs read, so every
     evaluator skips NaN the way pandas (the reference) does; Spark's
     aggregates would otherwise propagate it (sum NaN, max NaN)."""
-    read = {c for s in specs for c in s.input_cols}
+    read = {c for s in specs
+            if not getattr(s.primitive, "reads_partials", False)
+            for c in s.input_cols}
     fixes = {
         c: F.nanvl(F.col(c), F.lit(None).cast(t))
         for c, t in child.dtypes if c in read and t in ("float", "double")
@@ -403,7 +405,7 @@ def _asof_join(child, key_col, time_col, cutoffs, instance_col, specs,
         # the cutoff join, where both keys are in scope
         aux_df, aux_key = aux
         joined = joined.join(
-            aux_df,
+            _nan_to_null(aux_df, specs),
             (F.col(f"__ev.{aux_key}") == F.col("__aux_k"))
             & (F.col(f"__cut.{cutoff_col}") == F.col("__aux_t")),
             "left",

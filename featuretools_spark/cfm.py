@@ -21,11 +21,24 @@ with a single declarative plan:
   joined on the table index, the parent's masked columns joined on the
   FK. At per-row cutoffs they ride an auxiliary per-(child, cutoff)
   matrix joined after the cutoff join
+- deep-path aggregations (a path A <- M <- ... <- C) at a scalar cutoff
+  without a training window roll up when decomposable (_rollup): a
+  count, sum, mean, min or max of a number on C, or of a direct from
+  M over the last hop, with no where, use_previous or secondary time
+  index. Its partials per M row (n, s, mn, mx; a direct's weighted by
+  the row's C count) are stacked inputs at the M grain, riding the
+  groupBy(C -> M key) of the other M-grain stacked inputs; A combines
+  and finalizes them in the groupBy(M -> A key) of its M-level
+  features. Longer paths fold one hop at a time. Everything else (per-
+  row cutoffs, a training window, std/trend/holistic primitives) joins
+  each C row to its A ancestor through the PIT-filtered hops
 - transform features compile to Column expressions on the target
   frame; uses_full_dataframe (window) transforms are computed over
   the full table in time order BEFORE instance filtering
   (feature_set.py:102-155 semantics) — sound because all our window
-  frames look only backward in time (no leakage)
+  frames look only backward in time (no leakage). At a scalar cutoff
+  (strategy "join") they are the key frame the aggregations left-join
+  onto, so the target table is scanned once
 
 Internally all features get sanitized column names (_f0.._fn); the
 final select renames to reference-parity feature names.
@@ -38,7 +51,14 @@ import datetime as _dt
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from featuretools_spark.asof import CUTOFF_COL, AggSpec, asof_aggregate
+from featuretools_spark.asof import (
+    _PARTIALS,
+    CUTOFF_COL,
+    AggSpec,
+    _combine,
+    _finalize,
+    asof_aggregate,
+)
 from featuretools_spark.entityset import LTI_COLUMN_NAME, EntitySet
 from featuretools_spark.features import (
     AggregationFeature,
@@ -49,7 +69,11 @@ from featuretools_spark.features import (
     IdentityFeature,
     TransformFeature,
 )
-from featuretools_spark.primitives.base import TransformContext
+from featuretools_spark.primitives.base import (
+    AGG_PRIMITIVES,
+    AggregationPrimitive,
+    TransformContext,
+)
 from featuretools_spark.timedelta import Timedelta
 
 
@@ -444,9 +468,27 @@ def _calculate_feature_matrix(
     else:
         agg_keys = base_keys
 
+    # at a scalar cutoff the join path keeps every column of its key
+    # frame, so the target's own features ride the first aggregation:
+    # one scan of the target instead of a second scan and a join
+    scalar_join = scalar_cutoff is not None and strategy == "join"
+    if scalar_join and other_feats:
+        tdf, tcols = _materialize_features(
+            es, target, es[target], other_feats, es.time_index(target),
+            pit=(scalar_cutoff, include_cutoff_time, training_window))
+        matrix = tdf.select(
+            index_col, F.lit(scalar_cutoff).cast("timestamp").alias(CUTOFF_COL),
+            *[F.col(c).alias(internal[f.get_name()])
+              for c, f in zip(tcols, other_feats)])
+        if instance_ids is not None:
+            matrix = matrix.filter(F.col(index_col).isin(list(instance_ids)))
+
+    if scalar_join:
+        agg_feats = _rolled_up(es, agg_feats, training_window)
     for feats in _agg_groups(agg_feats):
         part = _aggregate_group(
-            es, feats, agg_keys, index_col, internal, scalar_cutoff,
+            es, feats, matrix if scalar_join and matrix_is_bare else agg_keys,
+            index_col, internal, scalar_cutoff,
             include_cutoff_time, training_window, strategy, salt,
         )
         if approx_td is not None and scalar_cutoff is None:
@@ -457,9 +499,11 @@ def _calculate_feature_matrix(
             ).drop("_ft_bin")
             matrix_is_bare = False
         elif matrix_is_bare:
-            # part carries exactly the base key set — skip the join
+            # part carries exactly the base key set, defaults filled —
+            # skip the join
             matrix = part
             matrix_is_bare = False
+            continue
         else:
             matrix = matrix.join(part, on=[index_col, CUTOFF_COL], how="left")
         # re-fill defaults lost through the outer join
@@ -534,7 +578,7 @@ def _calculate_feature_matrix(
         matrix = matrix.drop(rel.child_col)
 
     # ---- identity + transform features on the target ----
-    if other_feats:
+    if other_feats and not scalar_join:
         tdf = es[target]
         ti = es.time_index(target)
         # full-dataframe (window) transforms: compute over the whole
@@ -762,6 +806,162 @@ def _use_previous(f):
     win = up if (up and not up.is_observation) else None
     nobs = int(up.value) if (up and up.is_observation) else None
     return win, nobs
+
+
+# ----------------------------------------------------------------------
+# deep-path rollup: at a scalar cutoff without a training window, a
+# decomposable aggregation over a path A <- M <- ... <- C is computed
+# from per-M partials instead of joining every C row to its A ancestor.
+# The partials (asof._PARTIALS: n, s, mn, mx) are stacked inputs at the
+# M grain, so they ride the groupBy(C -> M key) that already computes
+# the M-grain stacked inputs; A combines them (asof._combine) inside the
+# groupBy(M -> A key) of its M-level features and finalizes
+# (asof._finalize). Longer paths fold one hop at a time.
+# ----------------------------------------------------------------------
+_ROLLUP_PRIMS = ("count", "sum", "mean", "min", "max")
+# value types whose rollup types equal the join path's: a decimal's sum
+# of sums widens its precision, and float * count is computed in float
+_ROLLUP_TYPES = ("tinyint", "smallint", "int", "bigint", "double")
+
+
+class _Partial(AggregationPrimitive):
+    """One partial of raw child values: n (valid values; child rows
+    when `rows`), s, mn or mx."""
+    name = "partial"
+
+    def __init__(self, part: str, rows: bool = False):
+        self.part = part
+        if rows:
+            self.input_kinds = ()
+
+    def expr(self, inputs, ctx):
+        if not inputs:
+            return F.count(F.lit(1))
+        fn = {"n": F.count, "s": F.sum, "mn": F.min, "mx": F.max}
+        return fn[self.part](inputs[0])
+
+
+class _RollUp(AggregationPrimitive):
+    """Combine partials one grain down into one partial (`target` a
+    partial) or, when `final`, into the primitive `target`'s value.
+    weighted: the inputs are a direct value y and its child row count
+    w, and each row contributes y's partials over its w child rows."""
+    name = "rollup"
+
+    def __init__(self, target: str, final: bool, weighted: bool = False,
+                 default=None):
+        self.target, self.final, self.weighted = target, final, weighted
+        self.default_value = default
+        # partials are already NaN-free: a NaN there is inf - inf, which
+        # the aggregate over the raw rows also yields
+        self.reads_partials = not weighted
+
+    def expr(self, inputs, ctx):
+        if self.weighted:
+            y, w = inputs
+            rows = {"n": F.when(y.isNotNull(), w), "s": y * w,
+                    "mn": F.when(w > 0, y), "mx": F.when(w > 0, y)}
+        else:
+            parts = _PARTIALS[self.target] if self.final else [self.target]
+            rows = dict(zip(parts, inputs))
+
+        def c(q):
+            return _combine(q, rows[q], None)
+
+        return (_finalize(self.target, c, None) if self.final
+                else c(self.target))
+
+
+def _is_number(es, f) -> bool:
+    """True when f's values have one of _ROLLUP_TYPES: a column of such
+    a type, a row-wise numeric transform of such values, a direct of
+    one, or a count/sum/mean/min/max of one."""
+    if isinstance(f, IdentityFeature):
+        return (es[f.entity].schema[f.column].dataType.simpleString()
+                in _ROLLUP_TYPES)
+    if isinstance(f, DirectFeature):
+        return _is_number(es, f.base_feature)
+    if isinstance(f, AggregationFeature):
+        p = f.primitive
+        return p.name == "count" or (
+            p.name in _ROLLUP_PRIMS and _is_number(es, f.base_features[0]))
+    if type(f) is not TransformFeature:
+        return False
+    p = f.primitive
+    return (p.return_kind == "numeric" and not p.uses_full_dataframe
+            and getattr(p, "strategy", "expr") == "expr"
+            and all(_is_number(es, b) for b in f.base_features))
+
+
+def _rolled_up(es, feats, training_window) -> list:
+    """feats with each decomposable deep aggregation replaced by its
+    rollup; the caller is at a scalar cutoff. A training window keeps
+    the deep path: its hop mask keeps rows whose last time index is in
+    the window, which the partials' child mask does not."""
+    if training_window is not None:
+        return feats
+    return [_rollup(es, f) or f for f in feats]
+
+
+def _rollup(es, f):
+    """f rewritten as an aggregation over its first hop of partials one
+    grain down, named like f; None when f must take the deep path.
+
+    f qualifies when its primitive is count, sum, mean, min or max, it
+    has no where, no use_previous and no secondary-time-index mask, and
+    its input is a number (_is_number) on the deepest child C, or a
+    direct of a number on C's parent M over the path's last hop. Such
+    a direct weighs each M row by its C row count: sum = Σ y·n_C,
+    count and mean from Σ n_C·[y not null], min/max over rows with
+    n_C > 0."""
+    path, p = f.relationship_path, f.primitive
+    if (len(path) < 2 or p.name not in _ROLLUP_PRIMS
+            or type(p) is not AGG_PRIMITIVES.get(p.name)
+            or f.where is not None or f.use_previous is not None
+            or _secondary_mask_col(es, f) is not None):
+        return None
+    x, weighted = f.base_features[0], False
+    if p.name == "count":
+        x = None                         # an unmasked count counts rows
+    elif isinstance(x, DirectFeature):
+        y = x.base_feature
+        if not (x.relationship == path[-1] and _is_number(es, y)
+                and _sec_governing_col(es, y.entity, y) is None):
+            return None
+        x, weighted = y, True
+    elif not _is_number(es, x):
+        return None
+    return _rolled(es, p.name, path, x, weighted, final=True,
+                   default=p.default_value).rename(f.get_name())
+
+
+def _rolled(es, target, path, x, weighted, final=False, default=None):
+    """AggregationFeature at path[0].parent_name over path[0]: `target`
+    of x over the whole path, a partial unless `final` (then filled
+    with `default`). x None counts the deepest child's rows; a weighted
+    x is a direct value on path[-1].parent_name."""
+    r = path[0]
+    if len(path) == 1:
+        if x is None:
+            x = IdentityFeature(es, r.child_name, es.index(r.child_name))
+            prim, tag = _Partial(target, rows=True), "rows"
+        else:
+            prim, tag = _Partial(target), target
+        bases = [x]
+    elif weighted and len(path) == 2:
+        prim = _RollUp(target, final, weighted=True, default=default)
+        bases = [x, _rolled(es, "n", path[1:], None, False)]
+        tag = f"{target}*n"
+    else:
+        prim = _RollUp(target, final, default=default)
+        parts = _PARTIALS[target] if final else [target]
+        bases = [_rolled(es, q, path[1:], x, weighted) for q in parts]
+        tag = target
+    f = AggregationFeature(bases, r.parent_name, prim, es=es,
+                           relationship_path=path[:1])
+    return f.rename(
+        f"_ft_{tag}[{r.parent_name}<-{r.child_name}.{r.child_col}]"
+        f"({', '.join(b.get_name() for b in bases)})")
 
 
 def _aggregate_group(es, feats, keys, index_col, names, scalar_cutoff,
@@ -1246,9 +1446,10 @@ def _materialize_features(es, table, df, feats, time_col,
     Pure row-wise transforms compile into a single select; window
     transforms (uses_full_dataframe) compile into Window expressions
     over (partition?, time) — computed over all rows before any
-    instance filtering. uses_calc_time transforms require the cutoff
-    column: if a cutoff_frame is given, df is joined with it first
-    (adding CUTOFF_COL and possibly duplicating rows per cutoff).
+    instance filtering. uses_calc_time transforms read the cutoff: the
+    literal one at a scalar cutoff (pit), else the cutoff column — if a
+    cutoff_frame is given, df is joined with it first (adding
+    CUTOFF_COL and possibly duplicating rows per cutoff).
 
     Stacked inputs — AggregationFeature/DirectFeature nodes at this
     table's grain (depth>=2 DFS, e.g. MEAN(orders.SUM(lineitem.x)))
@@ -1299,15 +1500,19 @@ def _materialize_features(es, table, df, feats, time_col,
             _MAT_COUNTER += 1
             precomputed[f.get_name()] = f"_ft_m{_MAT_COUNTER}"
         sc, inc, tw = pit
-        for group in _agg_groups(
-                [f for f in uniq if isinstance(f, AggregationFeature)]):
+        aggs = [f for f in uniq if isinstance(f, AggregationFeature)]
+        for group in _agg_groups(_rolled_up(es, aggs, tw)):
             df = _aggregate_group(es, group, df, es.index(table),
                                   precomputed, sc, inc, tw)
         directs = [f for f in uniq if isinstance(f, DirectFeature)]
         if directs:
             df = _join_directs(es, df, directs, precomputed,
                                F.lit(sc).cast("timestamp"), inc, tw, pit)
-    if needs_cutoff:
+    cutoff = F.col(CUTOFF_COL) if CUTOFF_COL in df.columns else None
+    if needs_cutoff and pit is not None:
+        # a scalar cutoff is one literal: no cutoff join
+        cutoff = F.lit(pit[0]).cast("timestamp")
+    elif needs_cutoff:
         if cutoff_frame is None:
             raise ValueError("uses_calc_time feature outside cutoff context")
         # window transforms must be computed BEFORE the cutoff join
@@ -1325,10 +1530,11 @@ def _materialize_features(es, table, df, feats, time_col,
             )
         if CUTOFF_COL not in df.columns:
             df = df.join(cutoff_frame, on=index_col, how="inner")
+            cutoff = F.col(CUTOFF_COL)
 
     ctx = TransformContext(
         time=F.col(time_col) if time_col else None,
-        cutoff=F.col(CUTOFF_COL) if CUTOFF_COL in df.columns else None,
+        cutoff=cutoff,
         order_cols=[c for c in (time_col, es.index(table)) if c],
     )
 

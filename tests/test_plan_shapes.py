@@ -212,7 +212,8 @@ def _plan_nodes(jplan) -> list:
     return out
 
 
-_TPCH_PREFIX = {"l_": "lineitem", "o_": "orders", "c_": "customer"}
+_TPCH_PREFIX = {"l_": "lineitem", "o_": "orders", "c_": "customer",
+                "n_": "nation"}
 
 
 def _relations(jplan) -> list:
@@ -229,8 +230,11 @@ def test_depth2_dfs_scalar_plan_has_no_self_join(spark, es, monkeypatch):
     columns on the foreign key. calculate_feature_matrix runs once (no
     sub-matrix per stacked input), nothing is persisted, no join of
     lineitem or orders with itself on its own index is left in the
-    optimized plan, and lineitem is read twice (deep-path aggregations
-    and stacked aggregations at orders grain)."""
+    optimized plan. The deep-path aggregations (SUM(lineitem.x),
+    SUM(lineitem.orders.o_totalprice)) roll up from partials that ride
+    the orders-grain groupBy of the stacked aggregations, and the
+    target's own features ride the key frame, so lineitem, orders and
+    customer are each read once."""
     from featuretools_spark import cfm
 
     calls = []
@@ -262,5 +266,19 @@ def test_depth2_dfs_scalar_plan_has_no_self_join(spark, es, monkeypatch):
                 sides = [_relations(n.children().apply(i)) for i in (0, 1)]
                 assert not all(table in side for side in sides), cond
     rels = _relations(plan)
-    assert rels.count("lineitem") <= 2, rels
-    assert rels.count("orders") <= 3, rels
+    assert rels.count("lineitem") == 1, rels
+    assert rels.count("orders") <= 1, rels
+    assert rels.count("customer") == 1, rels
+
+
+def test_depth3_dfs_scalar_plan_reads_lineitem_once(spark):
+    """The registered dfs_depth3 query (36 features over nation <-
+    customer <- orders <- lineitem at a scalar cutoff) folds its deep
+    paths one hop at a time: lineitem is read once, orders once."""
+    import __spark_entry__ as entry
+    from conftest import SF_DIR
+
+    out = entry.q_dfs_depth3(spark, SF_DIR)
+    rels = _relations(out._jdf.queryExecution().optimizedPlan())
+    assert rels.count("lineitem") == 1, rels
+    assert rels.count("orders") == 1, rels

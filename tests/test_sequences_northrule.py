@@ -35,6 +35,21 @@ def seq_es(spark):
     return es, seqs
 
 
+@pytest.fixture(scope="module")
+def seq_es_untimed(seq_es):
+    """seq_es with a parent that has no time index. With one and no
+    last time index, the target-grain PIT mask defaults nearly every
+    windowed row, and evaluators would only be compared on defaults."""
+    _, seqs = seq_es
+    es = fts.EntitySet("seq_untimed")
+    es.add_dataframe("entities", make_entities(seqs).drop("first_seen"),
+                     index="entity_id")
+    es.add_dataframe("sequences", seqs, index="doc_id",
+                     time_index="event_time")
+    es.add_relationship("entities", "entity_id", "sequences", "entity_id")
+    return es, seqs
+
+
 def _feats(es):
     n_tok = IdentityFeature(es, "sequences", "n_tok")
     did = IdentityFeature(es, "sequences", "doc_id")
@@ -202,10 +217,11 @@ def _assert_close(a, b):
 
 @pytest.mark.parametrize("include_cutoff", [True, False])
 @pytest.mark.parametrize("window", [None, "3 days"])
-def test_sortmerge_matches_join_windows(spark, seq_es, include_cutoff, window):
+def test_sortmerge_matches_join_windows(spark, seq_es_untimed,
+                                       include_cutoff, window):
     """sortmerge parity across the 4 window-boundary modes: the lo/hi
     marker tiebreaks must reproduce _time_predicate exactly."""
-    es, seqs = seq_es
+    es, seqs = seq_es_untimed
     cuts = make_cutoffs(spark, seqs, per_entity=3)
     n_tok = IdentityFeature(es, "sequences", "n_tok")
     did = IdentityFeature(es, "sequences", "doc_id")
@@ -232,14 +248,16 @@ def test_sortmerge_matches_join_windows(spark, seq_es, include_cutoff, window):
     b = _fm_dict(fts.calculate_feature_matrix(feats, es, strategy="sortmerge",
                                               **kw), cols)
     _assert_close(a, b)
+    # many windows hold events: the comparison is not one of defaults
+    assert sum(v[0] > 0 for v in a.values()) > len(a) / 4
 
 
 @pytest.mark.parametrize("window", [None, "3 days"])
-def test_salted_sortmerge_matches_join(spark, seq_es, window):
+def test_salted_sortmerge_matches_join(spark, seq_es_untimed, window):
     """Explicit hot-key salting: events split into salt sub-streams,
     markers replicate, one JVM groupBy combines the per-salt partials —
     results must equal the join strategy for every primitive."""
-    es, seqs = seq_es
+    es, seqs = seq_es_untimed
     cuts = make_cutoffs(spark, seqs, per_entity=3)
     n_tok = IdentityFeature(es, "sequences", "n_tok")
     did = IdentityFeature(es, "sequences", "doc_id")
@@ -275,6 +293,7 @@ def test_salted_sortmerge_matches_join(spark, seq_es, window):
     b = _fm_dict(fts.calculate_feature_matrix(
         feats, es, strategy="sortmerge", salt=4, **kw), cols)
     _assert_close(a, b)
+    assert sum(v[0] > 0 for v in a.values()) > len(a) / 4
 
 
 def test_sortmerge_matches_join_n_observations(spark, seq_es):

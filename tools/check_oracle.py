@@ -1,6 +1,16 @@
 """Mimic the driver's correctness gate: run each __spark_entry__
 query through Spark AND its oracle SQL through DuckDB at a given SF,
-compare row counts + order-insensitive values."""
+compare row counts + order-insensitive values.
+
+    python tools/check_oracle.py <testdata dir> [query,query,...]
+
+A row whose only differences are 4-decimal values one rounding step
+apart is re-run with the queries' rounding switched off. When the
+unrounded values agree to BOUNDARY_RTOL it is a rounding-boundary row:
+the engines summed doubles in a different order and the few-ulp
+difference straddles a .00005 boundary. Those rows are printed with
+their unrounded values and relative error, and do not fail the query;
+every other difference does."""
 import math
 import os
 import sys
@@ -105,9 +115,82 @@ def type_mismatches(sdf, arrow_schema):
     return out
 
 
+BOUNDARY_RTOL = 1e-12
+
+
+def _pairs(srows, orows, ki):
+    """Mismatched (spark, oracle) row pairs: by the key at position ki
+    when it is unique on both sides with the same key set, else by
+    sorted position."""
+    sk, ok = {r[ki]: r for r in srows}, {r[ki]: r for r in orows}
+    if len(sk) == len(srows) and len(ok) == len(orows) and sk.keys() == ok.keys():
+        return [(sk[k], ok[k]) for k in sk if sk[k] != ok[k]]
+    return [(a, b) for a, b in zip(srows, orows) if a != b]
+
+
+def _one_step(a, b):
+    """a and b are 4-decimal values one rounding step apart."""
+    return (isinstance(a, float) and isinstance(b, float)
+            and abs(abs(a - b) - 1e-4)
+            <= 1e-9 + 8 * math.ulp(max(abs(a), abs(b))))
+
+
+def _unrounded(name, key):
+    """The query's Spark and oracle rows with its 4-decimal rounding
+    switched off, as {key: {column: value}}."""
+    saved = entrymod._r4, entrymod._r4e, entrymod._R, entrymod._Re
+    entrymod._r4 = entrymod._r4e = lambda df, cols: df
+    entrymod._R = entrymod._Re = lambda e: f"({e})"
+    try:
+        sdf = qs[name](spark, SF_DIR)
+        sql = entrymod.oracle_sql()[name]
+    finally:
+        entrymod._r4, entrymod._r4e, entrymod._R, entrymod._Re = saved
+    srows = {r[key]: r.asDict() for r in sdf.collect()}
+    od = con.execute(sql)
+    names = [d[0] for d in od.description]
+    orows = {}
+    for row in od.fetchall():
+        d = dict(zip(names, row))
+        orows[d[key]] = d
+    return srows, orows
+
+
+def _boundary_rows(name, pairs, scols, key):
+    """Split mismatched row pairs into rounding-boundary rows (printed
+    with unrounded values) and the rest."""
+    ki = scols.index(key)
+    cand = [p for p in pairs
+            if all(x == y or _one_step(x, y) for x, y in zip(*p))]
+    if not cand:
+        return [], pairs
+    sraw, oraw = _unrounded(name, key)
+    boundary = []
+    for a, b in cand:
+        k = a[ki]
+        errs = []
+        for c, x, y in zip(scols, a, b):
+            if x == y:
+                continue
+            sv, ov = sraw.get(k, {}).get(c), oraw.get(k, {}).get(c)
+            if sv is None or ov is None:
+                errs = None
+                break
+            sv, ov = float(sv), float(ov)
+            errs.append((c, sv, ov, abs(sv - ov) / max(abs(sv), abs(ov), 1e-300)))
+        if errs and all(e[3] <= BOUNDARY_RTOL for e in errs):
+            boundary.append(a)
+            for c, sv, ov, rel in errs:
+                print(f"  BOUNDARY {name} {key}={k} {c}: spark={sv!r} "
+                      f"oracle={ov!r} rel_err={rel:.2g}")
+    rest = [p for p in pairs if not any(p[0] is a for a in boundary)]
+    return boundary, rest
+
+
 qs = entrymod.queries()
 oras = entrymod.oracle_sql()
 fails = []
+boundary_queries = []
 for name, fn in qs.items():
     if ONLY and name not in ONLY:
         continue
@@ -137,21 +220,28 @@ for name, fn in qs.items():
         )
         ok_schema = scols == ocols
         ok_count = len(srows) == len(orows)
-        mism = 0
-        for a, b in zip(srows, orows):
-            if a != b:
-                mism += 1
-                if mism <= 3:
-                    print(f"  MISMATCH {name}: spark={a} oracle={b}")
+        pairs = _pairs(srows, orows, scols.index(sdf.columns[0]))
+        boundary = []
+        if ok_schema and ok_count and pairs:
+            boundary, pairs = _boundary_rows(name, pairs, scols,
+                                             sdf.columns[0])
+        for a, b in pairs[:3]:
+            print(f"  MISMATCH {name}: spark={a} oracle={b}")
+        mism = len(pairs)
         status = ("OK" if (ok_schema and ok_count and mism == 0
                            and not tmism) else "FAIL")
         if status == "FAIL":
             fails.append(name)
+        if boundary:
+            boundary_queries.append(f"{name}({len(boundary)})")
         print(f"{name}: {status} rows={len(srows)}/{len(orows)} "
-              f"schema={'ok' if ok_schema else f'{scols} vs {ocols}'} mismatches={mism}")
+              f"schema={'ok' if ok_schema else f'{scols} vs {ocols}'} mismatches={mism}"
+              f" rounding_boundary={len(boundary)}")
     except Exception as e:
         fails.append(name)
         print(f"{name}: ERROR {type(e).__name__}: {str(e)[:300]}")
 
+if boundary_queries:
+    print("\nROUNDING BOUNDARY ROWS (not failures):", boundary_queries)
 print("\nFAILED:" if fails else "\nALL OK", fails if fails else "")
 sys.exit(1 if fails else 0)
