@@ -60,6 +60,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from featuretools_spark.primitives.base import AggContext, AggregationPrimitive
 from featuretools_spark.timedelta import Timedelta
@@ -108,8 +109,6 @@ def asof_aggregate(
     strategy: str = "join",
     scalar_cutoff=None,
     salt: int | None = None,
-    aux=None,
-    hops=None,
 ) -> DataFrame:
     """Compute per-(instance, cutoff) aggregations of child rows with
     t ~ cutoff semantics. Returns [instance_col, cutoff_col, *outs].
@@ -132,7 +131,7 @@ def asof_aggregate(
     child frame) takes its aggregates in one join.
     """
     child = _nan_to_null(child, specs)
-    if strategy == "sortmerge" and not hops:
+    if strategy == "sortmerge":
         kern, rest = _split_kernel_specs(
             child, time_col, specs, training_window is not None,
             n_observations)
@@ -147,7 +146,7 @@ def asof_aggregate(
             parts.append(_asof_join(
                 child, key_col, time_col, cutoffs, instance_col, rest,
                 cutoff_col, include_cutoff_time, training_window,
-                n_observations, aux=aux,
+                n_observations,
             ))
         out = parts[0]
         for p in parts[1:]:
@@ -159,12 +158,9 @@ def asof_aggregate(
             include_cutoff_time, training_window, n_observations,
             scalar_cutoff,
         )
-    # hop PIT predicates (multi-hop paths at per-row cutoffs) need the
-    # cutoff in the join condition — always the join strategy
     return _asof_join(
         child, key_col, time_col, cutoffs, instance_col, specs,
         cutoff_col, include_cutoff_time, training_window, n_observations,
-        aux=aux, hops=hops,
     )
 
 
@@ -299,7 +295,8 @@ def _asof_scalar(child, key_col, time_col, cutoffs, instance_col, specs,
             s.input_cols, s.out_name, ctx2,
         ).withColumnRenamed("__gk", instance_col)
         out = out.join(part, on=instance_col, how="left")
-    return _fill_defaults(out, specs)
+    return _fill_defaults(out, {s.out_name: s.primitive.default_value
+                                for s in specs})
 
 
 # ----------------------------------------------------------------------
@@ -307,44 +304,43 @@ def _asof_scalar(child, key_col, time_col, cutoffs, instance_col, specs,
 # ----------------------------------------------------------------------
 def _asof_join(child, key_col, time_col, cutoffs, instance_col, specs,
                cutoff_col, include_cutoff_time, training_window,
-               n_observations, aux=None, hops=None):
-    def evc(c):
-        """Column ref: child columns live under the __ev alias; the
-        auxiliary per-cutoff frame's columns are top-level."""
-        return F.col(c) if c.startswith("__aux_") else F.col(f"__ev.{c}")
-
-    ev = child.alias("__ev")
-    cut = cutoffs.select(instance_col, cutoff_col).alias("__cut")
-    cond = F.col(f"__ev.{key_col}") == F.col(f"__cut.{instance_col}")
+               n_observations):
+    cut = cutoffs.select(F.col(instance_col).alias("__k"),
+                         F.col(cutoff_col).alias("__c"))
+    cond = F.col(key_col) == F.col("__k")
     if time_col is not None:
         cond = cond & _time_predicate(
-            F.col(f"__ev.{time_col}"),
-            F.col(f"__cut.{cutoff_col}"),
-            include_cutoff_time,
-            training_window,
-        )
-    # intermediate hop tables are PIT-filtered like the reference's
-    # trie descent: a child row whose ANCESTOR on the path postdates
-    # the cutoff is invisible (its hop time columns ride on the
-    # denormalized mapping); an LTI inside the training window keeps
-    # the ancestor current, mirroring _handle_time's lti mask
-    for ti_col, lti_col in (hops or []):
-        hp = _time_predicate(
-            F.col(f"__ev.{ti_col}"), F.col(f"__cut.{cutoff_col}"),
-            include_cutoff_time, None,
-        )
-        if training_window is not None:
-            start = training_window.subtract_from(F.col(f"__cut.{cutoff_col}"))
-            wmask = (F.col(f"__ev.{ti_col}") > start if include_cutoff_time
-                     else F.col(f"__ev.{ti_col}") >= start)
-            if lti_col is not None:
-                lmask = (F.col(f"__ev.{lti_col}") > start
-                         if include_cutoff_time
-                         else F.col(f"__ev.{lti_col}") >= start)
-                wmask = wmask | lmask
-            hp = hp & wmask
-        cond = cond & hp
+            F.col(time_col), F.col("__c"), include_cutoff_time,
+            training_window)
+    # Join strategy deliberately left to the planner (guide §3.1 was
+    # evaluated here in round 8): forcing a shuffled-hash build on the
+    # cutoff side wins ~10% at sparse cutoff densities (4/entity) but
+    # loses 3x at dense ones (64/entity: the "small" build side is
+    # events x 64, measured 10.4s -> 32.5s at 20M rows), and the
+    # engine cannot know the density without counting. Sort-merge
+    # degrades gracefully in both regimes.
+    return _aggregate_rows(
+        cut.join(child, cond, "left"),
+        [("__k", instance_col), ("__c", cutoff_col)], "__c", key_col,
+        time_col, specs, n_observations)
 
+
+def _aggregate_rows(rows, group, cutoff, present, time_col, specs,
+                    n_observations=None, carry=()):
+    """One output row per cutoff row, from `rows`: a LEFT join of the
+    cutoff rows with their child rows, NaN already mapped to null
+    (_nan_to_null). The join strategy's second half, and how cfm
+    aggregates the per-row frames it joins itself.
+
+    group: (column of rows, output name) pairs that identify a cutoff
+    row; cutoff: the column of rows holding its cutoff time; present: a
+    child column that is null exactly on a cutoff row without child
+    rows (the join's null-extended row); carry: (column, output name)
+    pairs of further cutoff-row columns, kept as they are. Returns the
+    group and carry columns plus one column per spec, defaults filled."""
+    gcols = [F.col(c) for c, _ in group]
+    keys = [n for _, n in group]
+    cut = F.col(cutoff)
     expr_specs = [s for s in specs if s.primitive.strategy == "expr"]
     two_specs = [s for s in specs if s.primitive.strategy == "twostage"]
     # holistic batching: "flag" primitives merge into the main groupBy
@@ -366,125 +362,78 @@ def _asof_join(child, key_col, time_col, cutoffs, instance_col, specs,
         else:
             complex_specs.append(s)
 
-    keys = [instance_col, cutoff_col]
-    out = cut.select(
-        F.col(f"__cut.{instance_col}").alias(instance_col),
-        F.col(f"__cut.{cutoff_col}").alias(cutoff_col),
-    ) if not (expr_specs or flag_specs) else None
-    # Join strategy deliberately left to the planner (guide §3.1 was
-    # evaluated here in round 8): forcing a shuffled-hash build on the
-    # cutoff side wins ~10% at sparse cutoff densities (4/entity) but
-    # loses 3x at dense ones (64/entity: the "small" build side is
-    # events x 64, measured 10.4s -> 32.5s at 20M rows), and the
-    # engine cannot know the density without counting. Sort-merge
-    # degrades gracefully in both regimes.
-    joined = cut.join(ev, cond, "left")
-
     def spec_mask(s):
-        m = evc(s.where_col) if s.where_col else None
+        m = F.col(s.where_col) if s.where_col else None
         if s.sec_time_col:
             # secondary-time-index mask (reference
             # entityset.py:1450-1455): values are NULL until their
             # governing time has passed
-            sm = F.col(f"__ev.{s.sec_time_col}") < F.col(f"__cut.{cutoff_col}")
+            sm = F.col(s.sec_time_col) < cut
             m = sm if m is None else (m & sm)
         return m
 
     if n_observations is not None:
         # use_previous in observations: last-n child rows per cutoff
-        w = W.partitionBy(
-            F.col(f"__cut.{instance_col}"), F.col(f"__cut.{cutoff_col}")
-        ).orderBy(F.col(f"__ev.{time_col}").desc_nulls_last())
-        joined = joined.withColumn("__rn", F.row_number().over(w)).filter(
-            (F.col("__rn") <= n_observations) | F.col(f"__ev.{key_col}").isNull()
+        w = W.partitionBy(*gcols).orderBy(
+            F.col(time_col).desc_nulls_last())
+        rows = rows.withColumn("__rn", F.row_number().over(w)).filter(
+            (F.col("__rn") <= n_observations) | F.col(present).isNull()
         )
 
-    if aux is not None:
-        # stacked (depth>=2) inputs at per-row cutoffs: the inner
-        # matrix is keyed (child instance, cutoff) — attach it AFTER
-        # the cutoff join, where both keys are in scope
-        aux_df, aux_key = aux
-        joined = joined.join(
-            _nan_to_null(aux_df, specs),
-            (F.col(f"__ev.{aux_key}") == F.col("__aux_k"))
-            & (F.col(f"__cut.{cutoff_col}") == F.col("__aux_t")),
-            "left",
+    ctx = AggContext(time=F.col(time_col) if time_col else None,
+                     cutoff=cut)
+    # null-extended rows drop out of every aggregate; the count guard
+    # reproduces "no child rows -> NULL -> fill default" for primitives
+    # that coalesce nulls internally (percent_true's fillna(False))
+    guard = F.count(F.col(present)) > 0
+    aggs = []
+    if flag_specs:
+        wk = W.partitionBy(*gcols)
+        wo = wk.orderBy(
+            F.col(time_col).asc_nulls_last()
+            if time_col else F.monotonically_increasing_id()
         )
-
-    if expr_specs or flag_specs:
-        ctx = AggContext(
-            time=F.col(f"__ev.{time_col}") if time_col else None,
-            cutoff=F.col(f"__cut.{cutoff_col}"),
-        )
-        aggs = []
-        if flag_specs:
-            wk = W.partitionBy(
-                F.col(f"__cut.{instance_col}"), F.col(f"__cut.{cutoff_col}")
+        for i, s in enumerate(flag_specs):
+            v = _wrap_where(F.col(s.input_cols[0]), spec_mask(s))
+            cols, agg = s.primitive.flag_parts(
+                v, s.out_name, ctx, wk, wo, f"j{i}")
+            for cname, cexpr in cols.items():
+                rows = rows.withColumn(cname, cexpr)
+            aggs.append(F.when(guard, agg).alias(s.out_name))
+    for s in expr_specs:
+        where = spec_mask(s)
+        if s.primitive.uses_time_index and not s.input_cols:
+            inputs = []
+            local_ctx = AggContext(
+                time=_wrap_where(F.col(time_col), where), cutoff=cut)
+        elif not s.input_cols:
+            # pruned-input primitives (unmasked COUNT): count the
+            # mandatory child column — F.count(F.lit(1)) would count
+            # the null-extended row as 1
+            inputs = [_wrap_where(F.col(present), where)]
+            local_ctx = ctx
+        else:
+            inputs = [_wrap_where(F.col(c), where) for c in s.input_cols]
+            local_ctx = ctx if not s.where_col else AggContext(
+                time=(_wrap_where(F.col(time_col), where)
+                      if time_col else None),
+                cutoff=cut,
             )
-            wo = wk.orderBy(
-                F.col(f"__ev.{time_col}").asc_nulls_last()
-                if time_col else F.monotonically_increasing_id()
-            )
-            # null value on the LEFT join's null-extended row (or under
-            # a mask) drops out of every flag aggregate; the count
-            # guard reproduces "no event rows -> NULL -> fill default"
-            guard = F.count(F.col(f"__ev.{key_col}")) > 0
-            for i, s in enumerate(flag_specs):
-                v = _wrap_where(evc(s.input_cols[0]), spec_mask(s))
-                cols, agg = s.primitive.flag_parts(
-                    v, s.out_name, ctx, wk, wo, f"j{i}")
-                for cname, cexpr in cols.items():
-                    joined = joined.withColumn(cname, cexpr)
-                aggs.append(F.when(guard, agg).alias(s.out_name))
-        for s in expr_specs:
-            where = evc(s.where_col) if s.where_col else None
-            if s.sec_time_col:
-                mask = F.col(f"__ev.{s.sec_time_col}") < F.col(
-                    f"__cut.{cutoff_col}"
-                )
-                where = mask if where is None else (where & mask)
-            if s.primitive.uses_time_index and not s.input_cols:
-                inputs = []
-                local_ctx = AggContext(
-                    time=_wrap_where(F.col(f"__ev.{time_col}"), where),
-                    cutoff=ctx.cutoff,
-                )
-            elif not s.input_cols:
-                # pruned-input primitives (unmasked COUNT): the LEFT
-                # join null-extends cutoffs with zero qualifying rows,
-                # so count a mandatory EVENT-side column — F.count(
-                # F.lit(1)) would count the null-extended row as 1
-                inputs = [_wrap_where(F.col(f"__ev.{key_col}"), where)]
-                local_ctx = ctx
-            else:
-                inputs = [
-                    _wrap_where(evc(c), where) for c in s.input_cols
-                ]
-                local_ctx = ctx if not s.where_col else AggContext(
-                    time=_wrap_where(F.col(f"__ev.{time_col}"), where)
-                    if time_col else None,
-                    cutoff=ctx.cutoff,
-                )
-            # empty-window guard: primitives that coalesce nulls
-            # internally (percent_true's fillna(False)) would otherwise
-            # count the LEFT join's null-extended row as an observation
-            # — "no child rows" must yield NULL, then the default fill
-            guard0 = F.count(F.col(f"__ev.{key_col}")) > 0
-            aggs.append(
-                F.when(guard0, s.primitive.expr(inputs, local_ctx))
-                .alias(s.out_name))
-        # the LEFT join preserves every cutoff row, so the groupBy
-        # output IS the full key set — no join-back needed
-        out = joined.groupBy(
-            F.col(f"__cut.{instance_col}").alias(instance_col),
-            F.col(f"__cut.{cutoff_col}").alias(cutoff_col),
-        ).agg(*aggs)
+        aggs.append(
+            F.when(guard, s.primitive.expr(inputs, local_ctx))
+            .alias(s.out_name))
+    aggs += [F.first(F.col(c)).alias(n) for c, n in carry]
+    out_keys = [F.col(c).alias(n) for c, n in group]
+    # the LEFT join keeps every cutoff row, so the groupBy output IS the
+    # full cutoff set — no join-back needed
+    out = (rows.groupBy(*out_keys).agg(*aggs) if aggs
+           else rows.select(*out_keys).distinct())
 
     if counts_specs:
         # ONE per-(key, value) counts subplan per distinct
         # (input, where, sec-mask): mode / n_most_common / entropy /
         # n_most_common_frequency all reduce over the same ranked
-        # counts frame — one event-side join and one groupBy serve
+        # counts frame — one child-side join and one groupBy serve
         # every counts primitive in the group
         groups: dict = {}
         for s in counts_specs:
@@ -493,22 +442,18 @@ def _asof_join(child, key_col, time_col, cutoffs, instance_col, specs,
             ).append(s)
         for gkey in sorted(groups, key=str):
             gspecs = groups[gkey]
-            vals = _wrap_where(evc(gkey[0]), spec_mask(gspecs[0]))
+            vals = _wrap_where(F.col(gkey[0]), spec_mask(gspecs[0]))
             counts = (
-                joined.select(
-                    F.col(f"__cut.{instance_col}").alias(instance_col),
-                    F.col(f"__cut.{cutoff_col}").alias(cutoff_col),
-                    vals.alias("_vcv"),
-                )
+                rows.select(*out_keys, vals.alias("_vcv"))
                 .filter(F.col("_vcv").isNotNull())
-                .groupBy(instance_col, cutoff_col, "_vcv")
+                .groupBy(*keys, "_vcv")
                 .agg(F.count(F.lit(1)).alias("_cnt"))
             )
-            wrk = W.partitionBy(instance_col, cutoff_col).orderBy(
+            wrk = W.partitionBy(*keys).orderBy(
                 F.desc("_cnt"), F.asc("_vcv"))
             part = (
                 counts.withColumn("_rn", F.row_number().over(wrk))
-                .groupBy(instance_col, cutoff_col)
+                .groupBy(*keys)
                 .agg(*[s.primitive.counts_agg("_vcv", s.out_name)
                        for s in gspecs])
             )
@@ -518,38 +463,41 @@ def _asof_join(child, key_col, time_col, cutoffs, instance_col, specs,
         # multi-stage holistics (consecutive runs, since-last) off the
         # SHARED joined frame — n_observations clamp inherited from it
         # (last-N per reference is applied BEFORE the where filter)
-        inner = joined.filter(F.col(f"__ev.{key_col}").isNotNull())
+        inner = rows.filter(F.col(present).isNotNull())
         if s.where_col:
-            inner = inner.filter(evc(s.where_col))
-        sec_mask = (
-            F.col(f"__ev.{s.sec_time_col}") < F.col(f"__cut.{cutoff_col}")
-            if s.sec_time_col else None
-        )
+            inner = inner.filter(F.col(s.where_col))
+        sec_mask = F.col(s.sec_time_col) < cut if s.sec_time_col else None
         inner = inner.select(
-            F.col(f"__cut.{instance_col}").alias(instance_col),
-            F.col(f"__cut.{cutoff_col}").alias(cutoff_col),
-            *[_wrap_where(evc(c), sec_mask).alias(c)
+            *out_keys,
+            *[_wrap_where(F.col(c), sec_mask).alias(c)
               for c in s.input_cols],
-            *( [F.col(f"__ev.{time_col}").alias(time_col)]
+            *( [F.col(time_col)]
                if time_col and time_col not in s.input_cols else [] ),
         )
         ctx2 = AggContext(
             time=F.col(time_col) if time_col else None,
-            cutoff=F.col(cutoff_col),
+            cutoff=F.col(dict(group)[cutoff]),
         )
-        part = s.primitive.twostage(inner, keys, s.input_cols, s.out_name, ctx2)
+        part = s.primitive.twostage(inner, keys, s.input_cols, s.out_name,
+                                    ctx2)
         out = out.join(part, on=keys, how="left")
 
-    return _fill_defaults(out, specs)
+    return _fill_defaults(out, {s.out_name: s.primitive.default_value
+                                for s in specs})
 
 
-def _fill_defaults(out: DataFrame, specs: list[AggSpec]) -> DataFrame:
-    fills = {}
-    for s in specs:
-        dv = s.primitive.default_value
-        if dv is not None:
-            fills[s.out_name] = dv
-    return out.fillna(fills) if fills else out
+def _fill_defaults(out: DataFrame, defaults: dict) -> DataFrame:
+    """Replace NULL (not NaN — a NaN result, e.g. a sum over inf and
+    -inf, stays NaN as in pandas) with each column's default value,
+    cast to the column's type. Like DataFrame.fillna, a numeric default
+    fills only numeric columns."""
+    types = {f.name: f.dataType for f in out.schema.fields}
+    fills = {
+        c: F.coalesce(F.col(c), F.lit(dv).cast(types[c]))
+        for c, dv in defaults.items()
+        if dv is not None and isinstance(types[c], T.NumericType)
+    }
+    return out.withColumns(fills) if fills else out
 
 
 # ----------------------------------------------------------------------
@@ -660,12 +608,6 @@ def _split_kernel_specs(child, time_col, specs, bounded, n_observations):
             s.primitive.name in prims
             and s.primitive.strategy == "expr"
             and s.sec_time_col is None
-            # aux-resident columns (stacked inputs / agg-dep where
-            # clauses at per-row cutoffs) only exist after the cutoff
-            # join — the windows read the child frame, so route to join
-            and not any(c.startswith("__aux_")
-                        for c in (*s.input_cols,
-                                  *( [s.where_col] if s.where_col else [] )))
             # percent_true's denominator is EVERY window row (nulls
             # count as False); under a where mask it must count only
             # mask-selected rows — join path handles that
@@ -958,4 +900,5 @@ def _asof_sortmerge(child, key_col, time_col, cutoffs, instance_col, specs,
                     lambda p, n=streams[stream(s)]: rows[n[p]], c_us)
           .cast(_output_type(s, child_t)).alias(s.out_name) for s in specs],
     )
-    return _fill_defaults(result, specs)
+    return _fill_defaults(result, {s.out_name: s.primitive.default_value
+                                   for s in specs})

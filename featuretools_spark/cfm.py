@@ -10,28 +10,34 @@ with a single declarative plan:
   the reference's `group_features` fusion, feature_set.py:157-183)
 - where-clauses become conditional aggregation (F.when inside the
   agg), not a second pass (fsc.py:672-674 analog)
-- direct features of purely-static parent attributes are one
-  broadcast-able join of the parent's masked columns down the FK
-  (fsc.py:594-650 analog); a direct whose base is itself a direct or
-  aggregation recurses: the parent matrix is computed with propagated
-  per-row cutoffs, then joined back down the FK
+- the cutoff is a Column: the literal at a scalar cutoff, CUTOFF_COL
+  on the frame at per-row cutoffs (pit = (cutoff | None,
+  include_cutoff_time, training_window)); PIT masks are predicates
+  against it (_pit_mask), and one code path serves both forms
+- direct features are one broadcast-able join of the parent's masked
+  columns down the FK per relationship (fsc.py:594-650 analog); at
+  per-row cutoffs a base that varies per cutoff (a direct chain, an
+  aggregation, a cutoff-reading transform) is computed on the
+  parent's (key, cutoff) frame and joined on both
 - stacked inputs (an aggregation's or direct's input that is itself an
-  aggregation or direct, depth>=2 DFS) at a scalar cutoff attach to
-  the child frame like the reference's trie walk: a per-key aggregate
-  joined on the table index, the parent's masked columns joined on the
-  FK. At per-row cutoffs they ride an auxiliary per-(child, cutoff)
-  matrix joined after the cutoff join
-- deep-path aggregations (a path A <- M <- ... <- C) at a scalar cutoff
-  without a training window roll up when decomposable (_rollup): a
-  count, sum, mean, min or max of a number on C, or of a direct from
-  M over the last hop, with no where, use_previous or secondary time
-  index. Its partials per M row (n, s, mn, mx; a direct's weighted by
-  the row's C count) are stacked inputs at the M grain, riding the
-  groupBy(C -> M key) of the other M-grain stacked inputs; A combines
-  and finalizes them in the groupBy(M -> A key) of its M-level
-  features. Longer paths fold one hop at a time. Everything else (per-
-  row cutoffs, a training window, std/trend/holistic primitives) joins
-  each C row to its A ancestor through the PIT-filtered hops
+  aggregation or direct, depth>=2 DFS) attach to the child frame like
+  the reference's trie walk: a per-row aggregate of the child's own
+  children, the parent's masked columns joined on the FK. At a scalar
+  cutoff the child frame is the PIT-filtered table and an aggregate
+  joins on its index; at per-row cutoffs the frame is the (instance,
+  cutoff) key set joined down the path, each table once, and an
+  aggregate groups back per (key, cutoff) (_aggregate_keyed)
+- deep-path aggregations (a path A <- M <- ... <- C) without a
+  training window roll up when decomposable (_rollup): a count, sum,
+  mean, min or max of a number on C, or of a direct from M over the
+  last hop, with no where, use_previous or secondary time index. Its
+  partials per M row (n, s, mn, mx; a direct's weighted by the row's C
+  count) are stacked inputs at the M grain, riding the groupBy(C -> M
+  key) of the other M-grain stacked inputs; A combines and finalizes
+  them in the groupBy(M -> A key) of its M-level features. Longer
+  paths fold one hop at a time. Everything else (a training window,
+  std/trend/holistic primitives) joins each C row to its A ancestor
+  through the PIT-filtered hops
 - transform features compile to Column expressions on the target
   frame; uses_full_dataframe (window) transforms are computed over
   the full table in time order BEFORE instance filtering
@@ -55,8 +61,11 @@ from featuretools_spark.asof import (
     _PARTIALS,
     CUTOFF_COL,
     AggSpec,
+    _aggregate_rows,
     _combine,
+    _fill_defaults,
     _finalize,
+    _nan_to_null,
     asof_aggregate,
 )
 from featuretools_spark.entityset import LTI_COLUMN_NAME, EntitySet
@@ -88,7 +97,6 @@ from featuretools_spark.timedelta import Timedelta
 # column-pruned parquet scan (CHANGES.md).
 # ----------------------------------------------------------------------
 _SCAN_CACHE: dict = {}
-_CFM_DEPTH = 0
 
 
 def _cached_frame(key, make) -> DataFrame:
@@ -100,8 +108,8 @@ def _cached_frame(key, make) -> DataFrame:
 def _pit_child(es, name: str, time_col, pit) -> DataFrame:
     """Deepest-child fact frame, PIT-pre-filtered at a scalar cutoff
     (the as-of layer re-applies the full predicate incl. training
-    window). Per-row cutoffs cannot pre-filter."""
-    if pit is None or time_col is None:
+    window)."""
+    if time_col is None:
         return es[name]
     sc, inc, _tw = pit
     cut = F.lit(sc).cast("timestamp")
@@ -288,21 +296,7 @@ def _resolve_auto_strategy(spark, base_keys: DataFrame,
     return d["strategy"]
 
 
-def calculate_feature_matrix(*args, **kwargs) -> DataFrame:
-    """Public entry: resets the shared-scan cache once per top-level
-    call (not in its recursive per-row sub-calls), then delegates to
-    the engine."""
-    global _CFM_DEPTH
-    if _CFM_DEPTH == 0:
-        _SCAN_CACHE.clear()
-    _CFM_DEPTH += 1
-    try:
-        return _calculate_feature_matrix(*args, **kwargs)
-    finally:
-        _CFM_DEPTH -= 1
-
-
-def _calculate_feature_matrix(
+def calculate_feature_matrix(
     features: list[FeatureBase],
     entityset: EntitySet | None = None,
     cutoff_time=None,
@@ -351,6 +345,7 @@ def _calculate_feature_matrix(
         raise ValueError(
             f"unknown strategy {strategy!r}: use 'join', 'sortmerge', "
             "or 'auto'")
+    _SCAN_CACHE.clear()
     es = entityset or _find_es(features)
     target = features[0].entity
     for f in features:
@@ -471,11 +466,12 @@ def _calculate_feature_matrix(
     # at a scalar cutoff the join path keeps every column of its key
     # frame, so the target's own features ride the first aggregation:
     # one scan of the target instead of a second scan and a join
+    pit = (scalar_cutoff, include_cutoff_time, training_window)
     scalar_join = scalar_cutoff is not None and strategy == "join"
     if scalar_join and other_feats:
         tdf, tcols = _materialize_features(
             es, target, es[target], other_feats, es.time_index(target),
-            pit=(scalar_cutoff, include_cutoff_time, training_window))
+            pit=pit)
         matrix = tdf.select(
             index_col, F.lit(scalar_cutoff).cast("timestamp").alias(CUTOFF_COL),
             *[F.col(c).alias(internal[f.get_name()])
@@ -483,13 +479,12 @@ def _calculate_feature_matrix(
         if instance_ids is not None:
             matrix = matrix.filter(F.col(index_col).isin(list(instance_ids)))
 
-    if scalar_join:
+    if strategy == "join":
         agg_feats = _rolled_up(es, agg_feats, training_window)
     for feats in _agg_groups(agg_feats):
         part = _aggregate_group(
             es, feats, matrix if scalar_join and matrix_is_bare else agg_keys,
-            index_col, internal, scalar_cutoff,
-            include_cutoff_time, training_window, strategy, salt,
+            index_col, internal, pit, strategy, salt,
         )
         if approx_td is not None and scalar_cutoff is None:
             # remap approx results onto exact cutoffs via the binned key
@@ -507,75 +502,22 @@ def _calculate_feature_matrix(
         else:
             matrix = matrix.join(part, on=[index_col, CUTOFF_COL], how="left")
         # re-fill defaults lost through the outer join
-        fills = {
-            internal[f.get_name()]: f.primitive.default_value
-            for f in feats
-            if f.primitive.default_value is not None
-        }
-        if fills:
-            matrix = matrix.fillna(fills)
+        matrix = _fill_defaults(matrix, {
+            internal[f.get_name()]: f.primitive.default_value for f in feats})
 
     # ---- direct features ----
-    # a base that is ITSELF a direct feature (multi-hop chain, e.g.
-    # region.x -> nation -> customer) or contains one (transform of a
-    # direct at the parent grain) routes through the dynamic recursion:
-    # each hop's point-in-time mask must be applied at ITS OWN parent's
-    # time index (reference _handle_time filters EVERY dataframe), and
-    # the recursive matrix computes the inner hop as a top-level direct
-    # with exactly that masking. Pure static bases (identities and
-    # transforms of identities) keep the broadcast fast path.
-    def _base_is_static(f):
-        return (_is_static(f.base_feature)
-                and not isinstance(f.base_feature, DirectFeature)
-                and not _has_agg_or_direct_dep(f.base_feature))
-
-    static_direct = [f for f in direct_feats if _base_is_static(f)]
-    dynamic_direct = [f for f in direct_feats if not _base_is_static(f)]
-
-    if static_direct:
-        fks = {f.relationship.child_col for f in static_direct}
-        matrix = matrix.join(
-            es[target].select(index_col, *fks), on=index_col,
-            how="left")
-        matrix = _join_directs(
-            es, matrix, static_direct, internal, F.col(CUTOFF_COL),
-            include_cutoff_time, training_window)
-        matrix = matrix.drop(*fks)
-
-    # batched per relationship: all dynamic bases over one relationship
-    # share ONE recursive parent matrix and one join-back instead of a
-    # recursion + two joins per feature
-    dyn_by_rel: dict = {}
-    for f in dynamic_direct:
-        dyn_by_rel.setdefault(f.relationship, []).append(f)
-    for rel, feats in dyn_by_rel.items():
-        fk_map = es[target].select(index_col, rel.child_col)
-        parent_cutoffs = (
-            base_keys.join(fk_map, on=index_col, how="left")
-            .select(
-                F.col(rel.child_col).alias(rel.parent_col),
-                F.col(CUTOFF_COL).alias("time"),
-            )
-            .distinct()
-        )
-        bases = list({f.base_feature.get_name(): f.base_feature
-                      for f in feats}.values())
-        pm = calculate_feature_matrix(
-            bases, es, cutoff_time=parent_cutoffs,
-            training_window=training_window,
-            include_cutoff_time=include_cutoff_time,
-            strategy=strategy,
-        )
-        pm = pm.select(
-            F.col(rel.parent_col).alias(rel.child_col),
-            F.col("time").alias(CUTOFF_COL),
-            # base names can contain dots (multi-hop directs) — quote
-            *[F.col(f"`{f.base_feature.get_name()}`")
-              .alias(internal[f.get_name()]) for f in feats],
-        )
+    # one left join per relationship of the parent's masked columns on
+    # the foreign key; a base that varies per cutoff (a direct chain, an
+    # aggregation, a cutoff-reading transform) is computed on the
+    # parent's (key, cutoff) frame and joined on both (_join_directs)
+    if direct_feats:
+        fks = {f.relationship.child_col for f in direct_feats}
+        fk_map = es[target].select(index_col, *fks)
         matrix = matrix.join(fk_map, on=index_col, how="left")
-        matrix = matrix.join(pm, on=[rel.child_col, CUTOFF_COL], how="left")
-        matrix = matrix.drop(rel.child_col)
+        matrix = _join_directs(
+            es, matrix, direct_feats, internal, pit,
+            keys=base_keys.join(fk_map, on=index_col, how="left"))
+        matrix = matrix.drop(*fks)
 
     # ---- identity + transform features on the target ----
     if other_feats and not scalar_join:
@@ -809,13 +751,13 @@ def _use_previous(f):
 
 
 # ----------------------------------------------------------------------
-# deep-path rollup: at a scalar cutoff without a training window, a
-# decomposable aggregation over a path A <- M <- ... <- C is computed
-# from per-M partials instead of joining every C row to its A ancestor.
-# The partials (asof._PARTIALS: n, s, mn, mx) are stacked inputs at the
-# M grain, so they ride the groupBy(C -> M key) that already computes
-# the M-grain stacked inputs; A combines them (asof._combine) inside the
-# groupBy(M -> A key) of its M-level features and finalizes
+# deep-path rollup: without a training window, a decomposable
+# aggregation over a path A <- M <- ... <- C is computed from per-M
+# partials instead of joining every C row to its A ancestor. The
+# partials (asof._PARTIALS: n, s, mn, mx) are stacked inputs at the M
+# grain, so they ride the groupBy(C -> M key[, cutoff]) that already
+# computes the M-grain stacked inputs; A combines them (asof._combine)
+# inside the groupBy(M -> A key) of its M-level features and finalizes
 # (asof._finalize). Longer paths fold one hop at a time.
 # ----------------------------------------------------------------------
 _ROLLUP_PRIMS = ("count", "sum", "mean", "min", "max")
@@ -895,7 +837,7 @@ def _is_number(es, f) -> bool:
 
 def _rolled_up(es, feats, training_window) -> list:
     """feats with each decomposable deep aggregation replaced by its
-    rollup; the caller is at a scalar cutoff. A training window keeps
+    rollup. A training window keeps
     the deep path: its hop mask keeps rows whose last time index is in
     the window, which the partials' child mask does not."""
     if training_window is not None:
@@ -964,171 +906,188 @@ def _rolled(es, target, path, x, weighted, final=False, default=None):
         f"({', '.join(b.get_name() for b in bases)})")
 
 
-def _aggregate_group(es, feats, keys, index_col, names, scalar_cutoff,
-                     include_cutoff_time, training_window, strategy="join",
-                     salt=None) -> DataFrame:
+def _aggregate_group(es, feats, keys, index_col, names, pit, strategy="join",
+                     salt=None, row_keys=None) -> DataFrame:
     """One as-of aggregation for a group from _agg_groups: the deepest
     child of the group's path, the group's inputs materialized on it,
     one AggSpec per feature (output column names[f.get_name()]).
 
-    keys carries index_col and, at per-row cutoffs, CUTOFF_COL. At a
-    scalar cutoff with strategy "join" it may be any frame keyed by
-    index_col: the aggregates are left-joined onto it and every column
-    it carries is kept (how stacked inputs attach to a child frame).
-    Returns keys plus one column per feature, defaults filled."""
+    pit = (cutoff, include_cutoff_time, training_window); the cutoff is
+    None at per-row cutoffs. keys carries index_col and, at per-row
+    cutoffs, CUTOFF_COL. At a scalar cutoff with strategy "join" keys
+    may be any frame keyed by index_col; at per-row cutoffs, any frame
+    whose row_keys columns identify a row. The aggregates attach to it
+    and every column it carries is kept (how stacked inputs attach to a
+    child frame). Per-row cutoffs with row_keys, a deep path or an
+    input that varies per cutoff take _aggregate_keyed. Returns keys
+    plus one column per feature, defaults filled."""
     win, nobs = _use_previous(feats[0])
-    pit = ((scalar_cutoff, include_cutoff_time, training_window)
-           if scalar_cutoff is not None else None)
-    child_df, key_col, time_col, hops = _child_frame(
-        es, feats[0].relationship_path, pit=pit)
-    aux, aux_cols = None, {}
-    if pit is None:
-        aux, aux_cols = _stacked_aux(
-            es, feats, child_df, key_col, keys, index_col,
-            include_cutoff_time, training_window, strategy)
-
-    # materialize every non-aux base/where feature of the group in ONE
-    # pass so shared inputs (and stacked inputs at a scalar cutoff)
-    # are computed once per group
-    base_list: list = []
-    for f in feats:
-        for b in f.base_features:
-            if b.get_name() not in aux_cols:
-                base_list.append(b)
-        if f.where is not None and f.where.get_name() not in aux_cols:
-            base_list.append(f.where)
-    child_df, mat_cols = _materialize_features(
-        es, feats[0].child_entity, child_df, base_list, time_col, pit=pit,
-    )
-    col_iter = iter(mat_cols)
-    specs = []
-    for f in feats:
-        in_cols = [
-            aux_cols[b.get_name()]
-            if b.get_name() in aux_cols else next(col_iter)
-            for b in f.base_features
-        ]
-        where_col = None
-        if f.where is not None:
-            wn = f.where.get_name()
-            where_col = (aux_cols[wn] if wn in aux_cols
-                         else next(col_iter))
-        kinds = getattr(f.primitive, "input_kinds", ("numeric",))
-        sec_time_col = _secondary_mask_col(es, f)
-        if kinds == ():
-            in_cols = []
-        elif (f.primitive.name == "count" and f.where is None
-                and sec_time_col is None):
-            # unmasked COUNT = row count; dropping the index input
-            # lets Catalyst prune the column from the scan
-            in_cols = []
-        specs.append(
-            AggSpec(names[f.get_name()], f.primitive, in_cols,
-                    where_col, sec_time_col)
-        )
+    sc, inc, tw = pit
     # reference applies BOTH filters (ES pre-filtered by
     # training_window, then use_previous): with fixed-duration
     # windows that composes to the more restrictive of the two
-    if win and training_window:
-        eff_window = (
-            win if win.to_seconds() <= training_window.to_seconds()
-            else training_window
-        )
+    if win and tw:
+        window = win if win.to_seconds() <= tw.to_seconds() else tw
     else:
-        eff_window = win or training_window
+        window = win or tw
+    path = feats[0].relationship_path
+    child = path[-1].child_name
+    time_col = es.time_index(child)
+    bases = [b for f in feats
+             for b in (*f.base_features, *filter(None, [f.where]))]
+    if sc is None and (row_keys or len(path) > 1
+                       or any(map(_per_cutoff, bases))):
+        return _aggregate_keyed(es, feats, bases, keys, index_col, names,
+                                pit, window, nobs, row_keys)
+    if sc is None:
+        child_df, key_col = es[child], path[0].child_col
+    else:
+        child_df, key_col = _child_frame(es, path, pit)
+    # every base/where feature of the group in ONE pass, so shared
+    # inputs (and stacked inputs at a scalar cutoff) are computed once
+    child_df, cols = _materialize_features(es, child, child_df, bases,
+                                           time_col, pit=pit)
     return asof_aggregate(
-        child_df, key_col, time_col, keys, index_col, specs,
-        include_cutoff_time=include_cutoff_time,
-        training_window=eff_window,
+        child_df, key_col, time_col, keys, index_col,
+        _specs(es, feats, names, bases, cols),
+        include_cutoff_time=inc,
+        training_window=window,
         n_observations=nobs,
         strategy=strategy,
-        scalar_cutoff=scalar_cutoff if strategy == "join" else None,
+        scalar_cutoff=sc if strategy == "join" else None,
         salt=salt,
-        aux=aux,
-        hops=hops,
     )
 
 
-def _stacked_aux(es, feats, child_df, key_col, keys, index_col,
-                 include_cutoff_time, training_window, strategy):
-    """Per-row cutoffs: a stacked aggregation/direct input VARIES PER
-    CUTOFF, so it cannot live on child_df. Compute the inner matrix at
-    propagated (child instance, cutoff) pairs and hand it to the as-of
-    join as an auxiliary frame joined AFTER the cutoff join. Returns
-    (aux | None, {stacked feature name: aux column})."""
-    stacked = []
-    seen = set()
-    for f in feats:
-        cands = list(f.base_features)
-        if f.where is not None:
-            # where clauses over agg outputs (depth>=3 conditional
-            # aggs, e.g. COUNT(orders WHERE SUM(lineitem.qty) > 5))
-            # ride the aux matrix the same way stacked bases do
-            cands.append(f.where)
-        for b in cands:
-            # hoist bare agg/direct inputs AND transforms that contain
-            # one (depth>=3: MEAN(orders.ABS(SUM(...)))) — the
-            # recursive per-row sub-matrix computes transforms of agg
-            # outputs on its own matrix
-            if (b.get_name() not in seen
-                    and (isinstance(b, (AggregationFeature, DirectFeature))
-                         or _has_agg_or_direct_dep(b))):
-                seen.add(b.get_name())
-                stacked.append(b)
-    if not stacked:
-        return None, {}
-    child_idx = es.index(feats[0].child_entity)
-    cmap = (
-        child_df.select(F.col(child_idx).alias("__cid"),
-                        F.col(key_col).alias("__ak"))
-        .join(
-            keys.select(F.col(index_col).alias("__ak"), F.col(CUTOFF_COL)),
-            on="__ak",
+def _aggregate_keyed(es, feats, bases, keys, index_col, names, pit, window,
+                     nobs, row_keys=None) -> DataFrame:
+    """A group at per-row cutoffs whose path is deep or whose inputs
+    vary per cutoff: the rows of `keys` joined down the group's path,
+    each table once, then aggregated back to one row per row of keys.
+
+    Each hop table is LEFT-joined on its foreign key under _pit_mask
+    against the row's cutoff (the reference's _handle_time on the trie
+    descent), the deepest child under the as-of time predicate. The
+    child's inputs that do not vary per cutoff are computed on the
+    child table first (a window transform sees each row once); the rest
+    on the joined rows, where stacked inputs attach as at a scalar
+    cutoff, per (child row, cutoff) instead of per child row. keys'
+    columns are renamed apart from the child's for the join and come
+    back unchanged."""
+    global _MAT_COUNTER
+    _, inc, tw = pit
+    path = feats[0].relationship_path
+    child = path[-1].child_name
+    time_col = es.time_index(child)
+    cut = F.col(CUTOFF_COL)
+    row_keys = row_keys or [index_col, CUTOFF_COL]
+    _MAT_COUNTER += 1
+    up = {c: c if c == CUTOFF_COL else f"_ft_u{_MAT_COUNTER}_{c}"
+          for c in keys.columns}
+    rows = keys.select(*[F.col(f"`{c}`").alias(n) for c, n in up.items()])
+    link, hop_keys = up[index_col], []
+    for rel, nxt in zip(path, path[1:]):
+        ti = es.time_index(rel.child_name)
+        tbl = es[rel.child_name]
+        lti = (es.meta[rel.child_name].last_time_index
+               and LTI_COLUMN_NAME in tbl.columns)
+        _MAT_COUNTER += 1
+        hop_keys.append(f"_ft_hop{_MAT_COUNTER}")
+        hop = tbl.select(
+            F.col(rel.child_col).alias("_ft_fk"),
+            F.col(nxt.parent_col).alias(hop_keys[-1]),
+            *([F.col(ti).alias("_ft_ti")] if ti else []),
+            *([F.col(LTI_COLUMN_NAME).alias("_ft_lti")] if lti else []),
         )
-        .select(F.col("__cid").alias(child_idx), CUTOFF_COL)
-        .distinct()
-    )
-    sub = calculate_feature_matrix(
-        stacked, es,
-        cutoff_time=cmap.select(
-            F.col(child_idx), F.col(CUTOFF_COL).alias("time")),
-        include_cutoff_time=include_cutoff_time,
-        training_window=training_window,
-        strategy=strategy,
-    )
-    sel = [F.col(f"`{child_idx}`").alias("__aux_k"),
-           F.col("time").alias("__aux_t")]
-    aux_cols = {}
-    for i, sf in enumerate(stacked):
-        an = f"__aux_f{i}"
-        sel.append(F.col(f"`{sf.get_name()}`").alias(an))
-        aux_cols[sf.get_name()] = an
-    return (sub.select(*sel), child_idx), aux_cols
+        cond = F.col(link) == F.col("_ft_fk")
+        if ti:
+            cond = cond & _pit_mask(F.col("_ft_ti"), cut, inc, tw,
+                                    lti=F.col("_ft_lti") if lti else None)
+        rows = rows.join(hop, cond, "left").drop("_ft_fk", "_ft_ti",
+                                                 "_ft_lti")
+        link = hop_keys[-1]
+    static = [b for b in bases if not _per_cutoff(b)]
+    varying = [b for b in bases if _per_cutoff(b)]
+    child_df, scols = _materialize_features(es, child, es[child], static,
+                                            time_col)
+    key_col = path[-1].child_col
+    cond = F.col(link) == F.col(key_col)
+    if time_col:
+        cond = cond & _pit_mask(F.col(time_col), cut, inc, window)
+    rows = rows.join(child_df, cond, "left")
+    # a row of keys without child rows is one null-extended row; so is
+    # each hop row without child rows, which is dropped when the row of
+    # keys has real child rows
+    hit = F.col(key_col).isNotNull()
+    if len(path) > 1:
+        per_row = W.partitionBy(*[up[c] for c in row_keys])
+        rows = (rows.withColumn("_ft_any", F.max(hit).over(per_row))
+                .filter(hit | ~F.col("_ft_any")).drop("_ft_any"))
+    rows, vcols = _materialize_features(
+        es, child, rows, varying, time_col, pit=pit,
+        row_keys=[up[c] for c in row_keys] + hop_keys + [es.index(child)])
+    # what attached to a null-extended row is no child's value
+    rows = rows.withColumns({c: F.when(hit, F.col(c)) for c in vcols})
+    specs = _specs(es, feats, names, static + varying, scols + vcols)
+    return _aggregate_rows(
+        _nan_to_null(rows, specs), [(up[c], c) for c in row_keys],
+        CUTOFF_COL, key_col, time_col, specs, nobs,
+        carry=[(n, c) for c, n in up.items() if c not in row_keys])
 
 
-def _join_directs(es, frame, feats, names, cutoff, include_cutoff_time,
-                  training_window, pit=None) -> DataFrame:
+def _specs(es, feats, names, bases, cols) -> list:
+    """One AggSpec per feature of a group; bases[i] materialized to
+    column cols[i]."""
+    col = dict(zip((b.get_name() for b in bases), cols))
+    specs = []
+    for f in feats:
+        in_cols = [col[b.get_name()] for b in f.base_features]
+        where_col = col[f.where.get_name()] if f.where is not None else None
+        kinds = getattr(f.primitive, "input_kinds", ("numeric",))
+        sec_time_col = _secondary_mask_col(es, f)
+        if kinds == () or (f.primitive.name == "count" and f.where is None
+                           and sec_time_col is None):
+            # an unmasked COUNT is a row count: dropping the index input
+            # lets Catalyst prune the column from the scan
+            in_cols = []
+        specs.append(AggSpec(names[f.get_name()], f.primitive, in_cols,
+                             where_col, sec_time_col))
+    return specs
+
+
+def _join_directs(es, frame, feats, names, pit, keys=None) -> DataFrame:
     """Attach direct features to `frame`, which already carries each
     feature's foreign key (relationship.child_col): per relationship,
     ONE left join of the parent's columns on that key (reference
     fsc.py:594-650), named names[f.get_name()].
 
-    The parent's bases materialize on the parent table; at a scalar
-    cutoff (`pit`) stacked bases attach to it first. PIT and
-    last time index arrive as column masks at `cutoff`, not filters
-    (reference _handle_time filters EVERY dataframe to t <= cutoff): a
-    parent row "from the future", or a missing parent, contributes
-    NULL; secondary-time-index columns stay NULL until their governing
-    time has passed."""
+    The parent's bases materialize on the parent table, stacked bases
+    attached first. At per-row cutoffs a base that varies per cutoff
+    needs the parent per (key, cutoff): the parent joined to the
+    distinct (foreign key, cutoff) pairs of `keys`, a frame of the
+    same rows as `frame` before anything attached, and the join is on
+    both. PIT and last time index arrive as column masks at the cutoff,
+    not filters (reference _handle_time filters EVERY dataframe to
+    t <= cutoff): a parent row "from the future", or a missing parent,
+    contributes NULL; secondary-time-index columns stay NULL until
+    their governing time has passed."""
+    cutoff = _cut(pit)
     by_rel: dict = {}
     for f in feats:
         by_rel.setdefault(f.relationship, []).append(f)
     for rel, rfeats in by_rel.items():
         pti = es.time_index(rel.parent_name)
+        bases = [f.base_feature for f in rfeats]
+        parent_df, on = es[rel.parent_name], [rel.child_col]
+        if pit[0] is None and any(map(_per_cutoff, bases)):
+            parent_df = parent_df.join(
+                keys.select(F.col(rel.child_col).alias(rel.parent_col),
+                            CUTOFF_COL).distinct(),
+                on=rel.parent_col)
+            on.append(CUTOFF_COL)
         parent_df, cols = _materialize_features(
-            es, rel.parent_name, es[rel.parent_name],
-            [f.base_feature for f in rfeats], pti, pit=pit,
-        )
+            es, rel.parent_name, parent_df, bases, pti, pit=pit,
+            row_keys=[rel.parent_col, CUTOFF_COL])
         sec_by_feat = {
             names[f.get_name()]: _sec_governing_col(
                 es, rel.parent_name, f.base_feature)
@@ -1141,6 +1100,7 @@ def _join_directs(es, frame, feats, names, cutoff, include_cutoff_time,
         )
         sel = parent_df.select(
             F.col(rel.parent_col).alias(rel.child_col),
+            *on[1:],
             *[F.col(c).alias(names[f.get_name()])
               for c, f in zip(cols, rfeats)],
             *([F.col(pti).alias("_ft_par_ti")] if pti else []),
@@ -1148,14 +1108,14 @@ def _join_directs(es, frame, feats, names, cutoff, include_cutoff_time,
               if has_lti else []),
             *[F.col(c).alias(f"_ft_psec_{c}") for c in need_sec],
         )
-        frame = frame.join(F.broadcast(sel), on=rel.child_col, how="left")
+        frame = frame.join(sel if len(on) > 1 else F.broadcast(sel), on=on,
+                           how="left")
         for f in rfeats:
             cname = names[f.get_name()]
             cond = None
             if pti:
                 cond = _pit_mask(
-                    F.col("_ft_par_ti"), cutoff, include_cutoff_time,
-                    training_window,
+                    F.col("_ft_par_ti"), cutoff, pit[1], pit[2],
                     lti=F.col("_ft_par_lti") if has_lti else None,
                 )
             sec = sec_by_feat[cname]
@@ -1257,93 +1217,66 @@ def _apply_scalar_pit(es, table, df, pit):
     return df.filter(_pit_mask(F.col(ti), cut, inc, tw, lti=lti))
 
 
-def _child_frame(es, path, pit=None):
+def _child_frame(es, path, pit):
     """DataFrame of the deepest child on the path with the TOP ancestor
-    key attached (denormalized path keys — reference fsc.py:373-431).
-    Returns (df, ancestor_key_col, time_col).
+    key attached (denormalized path keys — reference fsc.py:373-431),
+    at a scalar cutoff. Returns (df, ancestor_key_col).
 
     The mapping chain only ever joins on PARENT indexes (validated
     unique by add_relationship), never on child indexes — child tables
     need no unique key for multi-hop aggregation. Intermediate
     mappings are dimension-sized; Catalyst broadcasts them when small.
 
-    pit: optional (scalar_cutoff, include_cutoff_time, training_window)
-    — intermediate tables are row-filtered to the cutoff like the
-    reference's trie descent (a lineitem belonging to a post-cutoff
-    order is invisible at the customer grain). With PER-ROW cutoffs
-    the hop time indexes are CARRIED as `_ft_hop_ti_{i}` /
-    `_ft_hop_lti_{i}` columns instead (returned as `hops`), and the
-    as-of join applies the same predicate per cutoff row.
-
-    Returns (df, ancestor_key_col, time_col, hops) where hops is a
-    list of (ti_col, lti_col | None) carried column names.
+    pit: (scalar_cutoff, include_cutoff_time, training_window) — every
+    table is row-filtered to the cutoff like the reference's trie
+    descent (a lineitem belonging to a post-cutoff order is invisible at
+    the customer grain).
     """
     child_name = path[-1].child_name
-    time_col = es.time_index(child_name)
-    df = _pit_child(es, child_name, time_col, pit)
+    df = _pit_child(es, child_name, es.time_index(child_name), pit)
     if len(path) == 1:
-        return df, path[0].child_col, time_col, []
+        return df, path[0].child_col
     key_col = "_ft_ancestor_key"
-    # mapping: (index of the next rel's parent table) -> top ancestor
-    # key (+ carried hop time columns for per-row PIT)
+    # mapping: (index of the next rel's parent table) -> top ancestor key
     mapping = None
-    carried: list = []   # hop column names accumulated on `mapping`
-    hops: list = []      # (ti_col, lti_col | None) pairs
-    for i, (rel, nxt) in enumerate(zip(path, path[1:])):
+    for rel, nxt in zip(path, path[1:]):
         # the intermediate hop table, shared + PIT-filtered via the
         # scan cache (the same orders hop serves deep-path groups and
         # stacked inputs in one call)
-        if pit is not None:
-            tbl = _cached_frame(
-                (id(es), rel.child_name, "hop", str(pit[0]), pit[1],
-                 str(pit[2])),
-                lambda t=rel.child_name: _apply_scalar_pit(
-                    es, t, es[t], pit),
-            )
-        else:
-            tbl = es[rel.child_name]
-        extra_exprs, extra_names = [], []
-        if pit is None:
-            ti = es.time_index(rel.child_name)
-            if ti is not None:
-                tname = f"_ft_hop_ti_{i}"
-                extra_exprs.append(F.col(ti).alias(tname))
-                extra_names.append(tname)
-                lname = None
-                if (es.meta[rel.child_name].last_time_index
-                        and LTI_COLUMN_NAME in tbl.columns):
-                    lname = f"_ft_hop_lti_{i}"
-                    extra_exprs.append(F.col(LTI_COLUMN_NAME).alias(lname))
-                    extra_names.append(lname)
-                hops.append((tname, lname))
+        tbl = _cached_frame(
+            (id(es), rel.child_name, "hop", str(pit[0]), pit[1],
+             str(pit[2])),
+            lambda t=rel.child_name: _apply_scalar_pit(es, t, es[t], pit),
+        )
         if mapping is None:
             mapping = tbl.select(
                 F.col(nxt.parent_col).alias("_ft_link"),
                 F.col(rel.child_col).alias(key_col),
-                *extra_exprs,
             )
         else:
             mapping = (
                 tbl.select(
                     F.col(nxt.parent_col).alias("_ft_link_new"),
                     F.col(rel.child_col).alias("_ft_link"),
-                    *extra_exprs,
                 )
                 .join(mapping, on="_ft_link", how="left")
-                .select(
-                    F.col("_ft_link_new").alias("_ft_link"),
-                    F.col(key_col),
-                    *[F.col(c) for c in carried + extra_names],
-                )
+                .select(F.col("_ft_link_new").alias("_ft_link"),
+                        F.col(key_col))
             )
-        carried += extra_names
     last = path[-1]
     df = df.join(
         mapping,
         df[last.child_col] == mapping["_ft_link"],
         "left",
     ).drop("_ft_link")
-    return df, key_col, time_col, hops
+    return df, key_col
+
+
+def _cut(pit) -> Column:
+    """The cutoff of a pit as a Column: the literal at a scalar cutoff,
+    else the frame's CUTOFF_COL."""
+    return (F.col(CUTOFF_COL) if pit[0] is None
+            else F.lit(pit[0]).cast("timestamp"))
 
 
 def _pit_mask(time_col, cutoff, include_cutoff_time, training_window,
@@ -1405,7 +1338,7 @@ def _has_agg_or_direct_dep(f) -> bool:
 
 def _agg_direct_roots(f, acc=None) -> list:
     """Top-most AggregationFeature/DirectFeature nodes under f (the
-    recursive engine computes everything below them)."""
+    aggregation and direct machinery computes everything below them)."""
     if acc is None:
         acc = []
     for d in f.get_dependencies():
@@ -1428,42 +1361,42 @@ def _ident_deps(f, table, acc: set):
         _ident_deps(d, table, acc)
 
 
-def _is_static(feature) -> bool:
-    """True if the feature never looks at cutoffs or child tables —
-    safe to compute once per parent row and join directly."""
-    if isinstance(feature, AggregationFeature):
-        return False
-    prim = getattr(feature, "primitive", None)
-    if prim is not None and getattr(prim, "uses_calc_time", False):
-        return False
-    return all(_is_static(d) for d in feature.get_dependencies())
+def _per_cutoff(f) -> bool:
+    """True when f's value at a row varies with the cutoff: it reads
+    the cutoff, or is or contains an aggregation or a direct feature
+    (whose parent row is PIT-masked)."""
+    return (isinstance(f, (AggregationFeature, DirectFeature))
+            or _has_agg_or_direct_dep(f) or _uses_calc_time(f))
 
 
 def _materialize_features(es, table, df, feats, time_col,
-                          cutoff_frame=None, index_col=None, pit=None):
+                          cutoff_frame=None, index_col=None, pit=None,
+                          row_keys=None):
     """Add one column per feature to df; returns (df, colnames).
 
     Pure row-wise transforms compile into a single select; window
     transforms (uses_full_dataframe) compile into Window expressions
     over (partition?, time) — computed over all rows before any
-    instance filtering. uses_calc_time transforms read the cutoff: the
-    literal one at a scalar cutoff (pit), else the cutoff column — if a
-    cutoff_frame is given, df is joined with it first (adding
-    CUTOFF_COL and possibly duplicating rows per cutoff).
+    instance filtering. uses_calc_time transforms read the cutoff of
+    pit = (cutoff, include_cutoff_time, training_window) (_cut: the
+    literal at a scalar cutoff, else df's CUTOFF_COL); without a pit
+    df is joined with cutoff_frame first (adding CUTOFF_COL and
+    possibly duplicating rows per cutoff).
 
     Stacked inputs — AggregationFeature/DirectFeature nodes at this
     table's grain (depth>=2 DFS, e.g. MEAN(orders.SUM(lineitem.x)))
-    — need a scalar cutoff, pit = (cutoff, include_cutoff_time,
-    training_window), and attach straight onto df the way the
-    reference's trie walk computes a child's features on the child
-    frame: each aggregation group is one left join of its per-key
-    aggregate on the table index (fsc.py:764-771), each relationship's
-    direct features one left join of the parent's masked columns on
-    the foreign key (fsc.py:594-650). df needs no target-grain mask:
-    it is already filtered to t <= cutoff (_pit_child or the hop
-    filter), and the consuming aggregation drops rows outside the
-    training window. At per-row cutoffs the group loop routes stacked
-    inputs to the aux matrix (_stacked_aux) instead.
+    — need a pit and attach straight onto df the way the reference's
+    trie walk computes a child's features on the child frame: each
+    aggregation group is one aggregate per table row (fsc.py:764-771),
+    each relationship's direct features one left join of the parent's
+    masked columns on the foreign key (fsc.py:594-650). At a scalar
+    cutoff df is the table filtered to t <= cutoff (_pit_child or the
+    hop filter) and an aggregate joins on the table index; at per-row
+    cutoffs df is the table's rows per cutoff, CUTOFF_COL among its
+    columns and row_keys identifying a row, and an aggregate groups
+    back to those rows (_aggregate_keyed). df needs no target-grain
+    mask: the consuming aggregation drops rows outside the cutoff's
+    window.
     """
     global _MAT_COUNTER
     needs_cutoff = any(_uses_calc_time(f) for f in feats)
@@ -1481,37 +1414,23 @@ def _materialize_features(es, table, df, feats, time_col,
     for f in feats:
         _collect_special(f)
     if special:
-        if pit is None:
-            # internal invariant, not a user-reachable limit: every
-            # calculate_feature_matrix call site routes agg/direct-
-            # bearing features elsewhere before materializing here —
-            # the group loop hoists them onto the aux matrix at
-            # per-row cutoffs, the direct-feature split sends nested
-            # direct/agg bases through the dynamic recursion, and
-            # target-grain transforms of agg outputs compile on the
-            # matrix (test_custom_and_direct.py::test_direct_chain_*)
-            raise AssertionError(
-                "unreachable: agg/direct-bearing feature reached "
-                "_materialize_features without a scalar cutoff "
-                f"context: {[f.get_name() for f in special]!r}"
-            )
         uniq = list({f.get_name(): f for f in special}.values())
         for f in uniq:
             _MAT_COUNTER += 1
             precomputed[f.get_name()] = f"_ft_m{_MAT_COUNTER}"
-        sc, inc, tw = pit
+        keys = df
         aggs = [f for f in uniq if isinstance(f, AggregationFeature)]
-        for group in _agg_groups(_rolled_up(es, aggs, tw)):
+        for group in _agg_groups(_rolled_up(es, aggs, pit[2])):
             df = _aggregate_group(es, group, df, es.index(table),
-                                  precomputed, sc, inc, tw)
+                                  precomputed, pit, row_keys=row_keys)
         directs = [f for f in uniq if isinstance(f, DirectFeature)]
         if directs:
-            df = _join_directs(es, df, directs, precomputed,
-                               F.lit(sc).cast("timestamp"), inc, tw, pit)
+            df = _join_directs(es, df, directs, precomputed, pit, keys=keys)
     cutoff = F.col(CUTOFF_COL) if CUTOFF_COL in df.columns else None
     if needs_cutoff and pit is not None:
-        # a scalar cutoff is one literal: no cutoff join
-        cutoff = F.lit(pit[0]).cast("timestamp")
+        # a scalar cutoff is one literal, a per-row one is on df: no
+        # cutoff join
+        cutoff = _cut(pit)
     elif needs_cutoff:
         if cutoff_frame is None:
             raise ValueError("uses_calc_time feature outside cutoff context")

@@ -1,9 +1,11 @@
-"""Deep-path aggregations at a scalar cutoff roll up from partials one
-grain down (cfm._rollup): count, sum, mean, min and max over
+"""Deep-path aggregations roll up from partials one grain down
+(cfm._rollup): count, sum, mean, min and max over
 nation <- customer <- orders <- lineitem, and the same primitives over
-a direct feature from orders weighted by its lineitem count. Ground
-truth is the per-row-cutoff path with every instance at the same time:
-it joins each lineitem to its ancestor instead."""
+a direct feature from orders weighted by its lineitem count. The scalar
+cutoff is checked against the same cutoff given per row: both roll up,
+the scalar form aggregating per order and joining on the index, the
+per-row form grouping per (order, cutoff) under column masks, so the
+two plan shapes are pinned to each other."""
 
 import datetime as dt
 import re
@@ -175,3 +177,31 @@ def test_stacked_direct_reading_the_cutoff(tiny_es):
                                 "customer", "mean", es=es)]
     scalar, per_row = _matrices(es, "customer", feats)
     _assert_same(scalar, per_row, "c_custkey", [feats[0].get_name()])
+
+
+def test_deep_path_per_row_skips_hop_rows_without_children(tiny_es):
+    """Deep aggregations that do not roll up (percent_true, std,
+    num_unique, a where) join each lineitem to its customer through the
+    orders hop. At per-row cutoffs an order without lineitems before
+    the cutoff is a row of its own beside the real lineitems (customer
+    1's order 2 at Jan 5) and counts in no aggregate: both cutoff forms
+    agree."""
+    es = tiny_es
+    big = IdentityFeature(es, "lineitem", "l_n") > 3
+    feats = [
+        AggregationFeature(big, "customer", "percent_true", es=es),
+        AggregationFeature(IdentityFeature(es, "lineitem", "l_quantity"),
+                           "customer", "std", es=es),
+        AggregationFeature(IdentityFeature(es, "lineitem", "l_n"),
+                           "customer", "num_unique", es=es),
+        AggregationFeature(IdentityFeature(es, "lineitem", "_li_id"),
+                           "customer", "count", where=big, es=es),
+    ]
+    assert all(cfm._rollup(es, f) is None for f in feats)
+    t = _d(5)
+    scalar = fts.calculate_feature_matrix(feats, es, cutoff_time=t)
+    per_row = fts.calculate_feature_matrix(
+        feats, es, cutoff_time=es["customer"].select(
+            "c_custkey", F.lit(t).cast("timestamp").alias("time")))
+    _assert_same(scalar, per_row, "c_custkey",
+                 [f.get_name() for f in feats])

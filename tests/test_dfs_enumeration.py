@@ -194,9 +194,11 @@ def test_stacked_features_per_row_cutoffs(spark, es):
 
 def test_holistic_over_stacked_per_row_cutoffs(spark, es):
     """Holistic (twostage) primitives over a stacked depth-2 input at
-    PER-ROW cutoffs are served from the shared cutoff-join frame
-    (which carries the __aux_* inner matrix). Ground truth: the scalar
-    path per distinct cutoff."""
+    PER-ROW cutoffs, two distinct cutoffs among the rows: the stacked
+    SUM attaches per (order, cutoff) to the orders rows joined to
+    their (customer, cutoff) keys, and every holistic reads those rows.
+    They equal the scalar cutoff computed once per distinct cutoff,
+    which aggregates per order instead."""
     import datetime as dt
 
     import featuretools_spark as fts
@@ -249,12 +251,18 @@ def test_holistic_over_stacked_per_row_cutoffs(spark, es):
 ])
 def test_stacked_scalar_cutoff_matches_per_row(spark, window, include, lti):
     """A scalar cutoff and the same cutoff given per row agree on every
-    depth-2 DFS feature plus a where over a stacked aggregation. The
-    per-row path computes stacked inputs through the aux matrix, an
-    evaluator independent of the scalar path's. orders carries a
-    secondary time index over o_totalprice (masks the stacked direct
-    orders.o_totalprice at lineitem grain); with `lti`, last time
-    indexes let the training window keep orders by later activity."""
+    depth-2 DFS feature plus a where over a stacked aggregation. Both
+    forms run one plan: the scalar one filters each table by the
+    literal cutoff and joins per-key aggregates back on the index, the
+    per-row one joins the key set down the path and groups back per
+    (key, cutoff), with its PIT masks, rollups and stacked attachments
+    as column predicates against the cutoff column. So this pins the
+    two plan shapes to each other, not to an independent evaluator;
+    test_per_row_repeating_child_index_matches_duckdb is that. orders
+    carries a secondary time index over o_totalprice (masks the
+    stacked direct orders.o_totalprice at lineitem grain); with `lti`,
+    last time indexes let the training window keep orders by later
+    activity."""
     import datetime as dt
 
     from pyspark.sql import functions as F
@@ -325,6 +333,39 @@ def test_stacked_scalar_cutoff_matches_per_row(spark, window, include, lti):
                     1.0, abs(float(x))), (k, c, x, y)
                 checked += x != 0
     assert checked > 0
+
+
+def test_per_row_repeating_child_index_matches_duckdb(spark, es, duck):
+    """A per-row cutoff over a child whose index repeats: the `es`
+    fixture's lineitem index l_orderkey * 10 + l_linenumber takes 4599
+    values over 6000 rows. A deep aggregation and a stacked direct over
+    it, asked in one call, equal DuckDB's for customer 8 at 1998-03-01;
+    an evaluator joining per-child-row values back on that index counts
+    the repeated rows several times."""
+    import datetime as dt
+
+    from featuretools_spark.features import AggregationFeature, DirectFeature
+
+    feats = [
+        AggregationFeature(IdentityFeature(es, "lineitem", "l_quantity"),
+                           "customer", "sum", es=es),
+        AggregationFeature(
+            DirectFeature(IdentityFeature(es, "orders", "o_totalprice"),
+                          "lineitem", es=es),
+            "customer", "sum", es=es),
+    ]
+    t = dt.datetime(1998, 3, 1)
+    cuts = spark.createDataFrame([(8, t)], "c_custkey long, time timestamp")
+    got = fts.calculate_feature_matrix(feats, es, cutoff_time=cuts).collect()
+    want = duck.execute(
+        "SELECT SUM(l.l_quantity), SUM(o.o_totalprice) FROM lineitem l "
+        "JOIN orders o ON l.l_orderkey = o.o_orderkey WHERE o.o_custkey = 8 "
+        "AND o.o_orderdate <= TIMESTAMP '1998-03-01' "
+        "AND l.l_shipdate <= TIMESTAMP '1998-03-01'").fetchone()
+    assert len(got) == 1
+    for f, w in zip(feats, want):
+        assert abs(got[0][f.get_name()] - w) <= 1e-9 * abs(w), (f, w)
+    assert round(want[0]) == 272
 
 
 def test_diamond_paths_enumerate_distinct_features(spark):

@@ -11,7 +11,8 @@ strategy="sortmerge" is one Exchange + one Sort under its running
 windows (plus the salt merge's Exchange when salted).
 
 A depth-2 DFS at a scalar cutoff attaches its stacked inputs to the
-child frame: no table joins itself on its own index."""
+child frame: no table joins itself on its own index. At per-row
+cutoffs it reads each table once too."""
 import datetime as dt
 import re
 
@@ -237,10 +238,12 @@ def test_depth2_dfs_scalar_plan_has_no_self_join(spark, es, monkeypatch):
     customer are each read once."""
     from featuretools_spark import cfm
 
+    # every call through the module's entry point counts, this one and
+    # any a stacked input would make
     calls = []
-    engine = cfm._calculate_feature_matrix
+    engine = cfm.calculate_feature_matrix
     monkeypatch.setattr(
-        cfm, "_calculate_feature_matrix",
+        cfm, "calculate_feature_matrix",
         lambda *a, **kw: calls.append(1) or engine(*a, **kw))
     feats = fts.dfs(
         entityset=es, target_dataframe_name="customer", features_only=True,
@@ -251,7 +254,7 @@ def test_depth2_dfs_scalar_plan_has_no_self_join(spark, es, monkeypatch):
             "customer": ["c_name", "c_nationkey"],
         },
         max_depth=2)
-    fm = fts.calculate_feature_matrix(feats, es,
+    fm = cfm.calculate_feature_matrix(feats, es,
                                       cutoff_time=dt.datetime(1998, 1, 1))
     assert len(calls) == 1
     plan = fm._jdf.queryExecution().optimizedPlan()
@@ -282,3 +285,53 @@ def test_depth3_dfs_scalar_plan_reads_lineitem_once(spark):
     rels = _relations(out._jdf.queryExecution().optimizedPlan())
     assert rels.count("lineitem") == 1, rels
     assert rels.count("orders") == 1, rels
+
+
+def test_depth2_dfs_per_row_plan_reads_each_table_once(spark, es):
+    """Per-row cutoffs take the scalar path's plan: the (customer,
+    cutoff) key set joins down customer <- orders <- lineitem once, and
+    the stacked aggregation (MEAN(orders.SUM(lineitem.x))), the stacked
+    direct (SUM(lineitem.orders.o_totalprice)) and a direct of an
+    aggregation (SUM(lineitem.orders.COUNT(lineitem))) attach per
+    (key, cutoff) to that one join. Executed, the plan scans customer,
+    orders and lineitem once each, and its values equal the scalar
+    cutoff's."""
+    from featuretools_spark.features import AggregationFeature, DirectFeature
+
+    feats = fts.dfs(
+        entityset=es, target_dataframe_name="customer", features_only=True,
+        agg_primitives=["sum", "mean", "count"], trans_primitives=[],
+        ignore_columns={
+            "lineitem": ["l_partkey", "l_suppkey", "l_linenumber", "l_tax",
+                         "l_returnflag", "l_linestatus"],
+            "customer": ["c_name", "c_nationkey"],
+        },
+        max_depth=2)
+    count = AggregationFeature(IdentityFeature(es, "lineitem", "_li_id"),
+                               "orders", "count", es=es)
+    feats.append(AggregationFeature(DirectFeature(count, "lineitem", es=es),
+                                    "customer", "sum", es=es))
+    names = [f.get_name() for f in feats]
+    assert "MEAN(orders.SUM(lineitem.l_quantity))" in names
+    assert "SUM(lineitem.orders.o_totalprice)" in names
+    t = dt.datetime(1998, 1, 1)
+    # a local cutoff table: customer is scanned for its features only
+    cuts = spark.createDataFrame(
+        [(r[0], t) for r in es["customer"].select("c_custkey").collect()],
+        "c_custkey long, time timestamp")
+    fm = fts.calculate_feature_matrix(feats, es, cutoff_time=cuts)
+    have = {r["c_custkey"]: r for r in fm.collect()}
+    final = _executed(fm).split("== Initial Plan ==")[0]
+    for table in ("customer", "orders", "lineitem"):
+        scans = re.findall(rf"FileScan parquet [^\n]*/{table}\.parquet\]",
+                           final)
+        assert len(scans) == 1, (table, final)
+    want = fts.calculate_feature_matrix(feats, es, cutoff_time=t).collect()
+    assert len(want) == len(have) == 150
+    for w in want:
+        for c in names:
+            x, y = w[c], have[w["c_custkey"]][c]
+            if x is None or y is None or isinstance(x, str):
+                assert x == y, (c, x, y)
+            else:
+                assert abs(x - y) <= 1e-9 * max(1.0, abs(x)), (c, x, y)

@@ -231,3 +231,38 @@ def test_agg_consecutive_and_peaks(spark, small_sdf, small_pdf):
     # our num_peaks uses lag/lead over nulls-last ordering; NaN neighbors
     # make the comparison null → not counted, same as the loop above
     _agg_parity(spark, small_sdf, small_pdf, "num_peaks", "val", n_peaks)
+
+
+@pytest.mark.parametrize("per_row", [False, True])
+def test_sum_over_cancelling_infinities_is_nan(spark, per_row):
+    """SUM over [inf, -inf] is NaN, as in pandas, not the default 0:
+    defaults fill NULL (no qualifying rows) and leave a NaN result
+    alone. MEAN stays NaN; a user without events gets SUM's default 0
+    and a NULL MEAN; NaN inputs are skipped."""
+    from featuretools_spark.entityset import EntitySet
+
+    inf, nan, t = float("inf"), float("nan"), dt.datetime(2024, 1, 1)
+    ev = spark.createDataFrame(
+        [(1, 1, t, inf), (2, 1, t, -inf), (3, 2, t, 1.5), (4, 2, t, nan)],
+        "event_id long, user_id long, ts timestamp, v double")
+    es = EntitySet("nan_sum")
+    es.add_dataframe("users", spark.createDataFrame(
+        [(1,), (2,), (3,)], "user_id long"), index="user_id")
+    es.add_dataframe("events", ev, index="event_id", time_index="ts")
+    es.add_relationship("users", "user_id", "events", "user_id")
+    v = IdentityFeature(es, "events", "v")
+    feats = [AggregationFeature(v, "users", p, es=es)
+             for p in ("sum", "mean")]
+    cut = t + dt.timedelta(days=1)
+    if per_row:
+        cut = spark.createDataFrame([(u, cut) for u in (1, 2, 3)],
+                                    "user_id long, time timestamp")
+    fm = fts.calculate_feature_matrix(feats, es, cutoff_time=cut)
+    got = {r["user_id"]: (r["SUM(events.v)"], r["MEAN(events.v)"])
+           for r in fm.collect()}
+    want = pd.DataFrame({"u": [1, 1, 2, 2], "v": [inf, -inf, 1.5, nan]}) \
+        .groupby("u")["v"].agg(["sum", "mean"])
+    assert math.isnan(want.loc[1, "sum"]) and math.isnan(got[1][0])
+    assert math.isnan(want.loc[1, "mean"]) and math.isnan(got[1][1])
+    assert got[2] == (want.loc[2, "sum"], want.loc[2, "mean"]) == (1.5, 1.5)
+    assert got[3] == (0.0, None)
