@@ -278,10 +278,6 @@ def _backfill_queries(sf: float):
             "cuts": _cutoffs(spark),
             "ents": _entities(spark),
         },
-        # strategy-parameterized dense run for tools/stress_escalation.py
-        # (the named dense queries pin join/sortmerge; the escalation
-        # probe needs strategy="auto" over the same dense cutoffs)
-        "__run_dense__": run_dense,
     }
 
 

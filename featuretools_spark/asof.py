@@ -19,34 +19,32 @@ strategy="join" (default; whole-stage codegen):
     window t > cutoff-w; False → t < cutoff, window t >= cutoff-w.
 
 strategy="sortmerge" (marker union + running windows):
-    union events with per-cutoff WINDOW MARKERS (a hi-marker at the
-    cutoff and, for a bounded training_window, a lo-marker at the
-    window start), hash-partition on the entity key and sort within
-    partitions by (key, time, tiebreak): one Exchange, one Sort.
-    Markers sort into the event stream at their window bounds, so each
-    primitive is finalized from a few running window aggregates (its
-    _PARTIALS: counts, sums, min/max, first/last valid value and time)
-    read at the marker rows. An unbounded window reads them at the
-    hi-marker; a bounded one is the prefix difference hi − lo, paired
-    by one groupBy(key, cutoff) that the key partitioning already
-    satisfies (no new Exchange). O(events + cutoffs) instead of the
-    join's events × cutoffs, so unbounded windows win when cutoffs per
-    entity are many (dense backfills); a window also bounds the join's
-    expansion, and bounded calls measured level with join at 200k
-    events and behind it at 2M. Specs a running window cannot compute
-    route to strategy="join" and merge back on (instance, cutoff):
-    holistic primitives (median, num_unique, ...), use_previous in
-    observations, non-numeric inputs and secondary-time-index masks.
-    A bounded call that needs the join at all — also for primitives
-    that are not a prefix difference (min, max, first, trend, ...) —
-    runs on it entirely (_split_kernel_specs).
+    union events with one MARKER row per cutoff, hash-partition on the
+    entity key and sort within partitions by (key, time, tiebreak):
+    one Exchange, one Sort. Markers sort into the event stream at their
+    cutoffs, so each primitive is finalized from a few running window
+    aggregates (its _PARTIALS: counts, sums, variance, min/max,
+    first/last valid value and time) read at the marker rows.
+    O(events + cutoffs) instead of the join's events × cutoffs.
+    Routing is decided from the call's own arguments:
+    - a call with a training_window runs on strategy="join" whole. A
+      window bounds the join's expansion, and bounded running windows
+      (a prefix difference hi − lo) never measured faster than join
+      beyond the run-to-run spread, at 200k or 2M events;
+    - in an unbounded call, specs a running window cannot compute
+      route to strategy="join" and merge back on (instance, cutoff):
+      holistic primitives (median, num_unique, ...), use_previous in
+      observations, non-numeric inputs and secondary-time-index masks
+      (_split_kernel_specs).
+    The caller picks the strategy; both give the same schema
+    (_output_type).
     Skew note: a single entity stays in one partition by default.
     Pass salt=S for EXPLICIT hot-key salting: events hash into S
-    sub-streams, markers replicate to each, and the groupBy(key,
+    sub-streams, markers replicate to each, and a groupBy(key,
     cutoff) combines the per-salt partials — a 50%-hot entity runs
     ~2x faster salted (BENCH/BASELINE.md skew section).
-    Alternatively route skewed tables to strategy="join", where AQE
-    skew-join splits the hot key.
+    Alternatively use strategy="join", where AQE's skew join splits
+    the hot key.
 
 Every path first maps NaN to null in the float/double value columns,
 so NaN is skipped the way pandas (the reference) skips it. All return
@@ -95,6 +93,17 @@ def _wrap_where(col: Column, where: Column | None) -> Column:
     return F.when(where, col) if where is not None else col
 
 
+def _spec_input(col: Column, s: AggSpec, cutoff: Column) -> Column:
+    """`col` as spec `s` aggregates it. A secondary-time-index mask
+    nulls the value (reference entityset.py:1450-1455), the primitive
+    fills nulls (percent_true's fillna(False)), and a where mask then
+    removes the row: a null every aggregate skips."""
+    if s.sec_time_col:
+        col = F.when(F.col(s.sec_time_col) < cutoff, col)
+    return _wrap_where(s.primitive.fill_nulls(col),
+                       F.col(s.where_col) if s.where_col else None)
+
+
 def asof_aggregate(
     child: DataFrame,
     key_col: str,
@@ -113,8 +122,12 @@ def asof_aggregate(
     """Compute per-(instance, cutoff) aggregations of child rows with
     t ~ cutoff semantics. Returns [instance_col, cutoff_col, *outs].
 
+    strategy="sortmerge" runs an unbounded call on the running windows
+    (its holistic specs on the join path); a call with a
+    training_window runs on the join path whole.
+
     salt (sortmerge only): EXPLICIT hot-entity salting — events hash
-    into `salt` sub-streams, window markers replicate to every
+    into `salt` sub-streams, cutoff markers replicate to every
     sub-stream and one JVM groupBy combines the per-salt partials, so
     a single hot entity spreads across up to `salt` partitions instead
     of straggling in one. Specs routed to the join path ignore it.
@@ -131,16 +144,14 @@ def asof_aggregate(
     child frame) takes its aggregates in one join.
     """
     child = _nan_to_null(child, specs)
-    if strategy == "sortmerge":
-        kern, rest = _split_kernel_specs(
-            child, time_col, specs, training_window is not None,
-            n_observations)
+    if strategy == "sortmerge" and training_window is None:
+        kern, rest = _split_kernel_specs(child, time_col, specs,
+                                         n_observations)
         parts = []
         if kern:
             parts.append(_asof_sortmerge(
                 child, key_col, time_col, cutoffs, instance_col, kern,
-                cutoff_col, include_cutoff_time, training_window,
-                salt=salt,
+                cutoff_col, include_cutoff_time, salt=salt,
             ))
         if rest:
             parts.append(_asof_join(
@@ -244,7 +255,8 @@ def _asof_scalar(child, key_col, time_col, cutoffs, instance_col, specs,
                     time=_wrap_where(F.col(time_col), where), cutoff=cut_lit
                 )
             else:
-                inputs = [_wrap_where(F.col(c), where) for c in s.input_cols]
+                inputs = [_spec_input(F.col(c), s, cut_lit)
+                          for c in s.input_cols]
                 local_ctx = AggContext(
                     time=(_wrap_where(F.col(time_col), where)
                           if time_col else None),
@@ -384,7 +396,7 @@ def _aggregate_rows(rows, group, cutoff, present, time_col, specs,
                      cutoff=cut)
     # null-extended rows drop out of every aggregate; the count guard
     # reproduces "no child rows -> NULL -> fill default" for primitives
-    # that coalesce nulls internally (percent_true's fillna(False))
+    # that fill nulls (percent_true's fillna(False))
     guard = F.count(F.col(present)) > 0
     aggs = []
     if flag_specs:
@@ -413,7 +425,7 @@ def _aggregate_rows(rows, group, cutoff, present, time_col, specs,
             inputs = [_wrap_where(F.col(present), where)]
             local_ctx = ctx
         else:
-            inputs = [_wrap_where(F.col(c), where) for c in s.input_cols]
+            inputs = [_spec_input(F.col(c), s, cut) for c in s.input_cols]
             local_ctx = ctx if not s.where_col else AggContext(
                 time=(_wrap_where(F.col(time_col), where)
                       if time_col else None),
@@ -507,7 +519,10 @@ def _fill_defaults(out: DataFrame, defaults: dict) -> DataFrame:
 # running window aggregate over one (value, mask) stream, read at the
 # marker rows:
 #   n             valid values (masked rows when the spec has no value)
-#   s, ss         sum and sum of squares of the values
+#   s             sum of the values
+#   vp            population variance of the values: Spark's own
+#                 (n, avg, m2) buffer, as on the join path (a sum of
+#                 squares loses every digit on large-offset values)
 #   na            masked rows, nulls included (percent_true)
 #   mn, mx        min and max value
 #   ft, lt        time (micros) of the first and last valid value
@@ -517,8 +532,8 @@ _PARTIALS = {
     "count": ["n"],
     "sum": ["n", "s"],
     "mean": ["n", "s"],
-    "std": ["n", "s", "ss"],
-    "variance": ["n", "s", "ss"],
+    "std": ["n", "s", "vp"],
+    "variance": ["n", "s", "vp"],
     "min": ["n", "mn"],
     "max": ["n", "mx"],
     "first": ["n", "ft", "fv"],
@@ -533,17 +548,8 @@ _PARTIALS = {
     "any": ["n", "mx"],
     "all": ["n", "mn"],
 }
-# partials that combine by summing, so a bounded window is
-# running(hi) − running(lo): lo-markers carry them negated
-_ADDITIVE = {"n", "s", "ss", "na", "sx", "sx2", "sxy"}
-# partials a bounded window reads at its hi-marker alone: when the
-# window holds a valid value, the last valid value before the cutoff
-# lies inside it
-_HI_ONLY = {"lt", "lv"}
-# primitives a bounded window computes by prefix difference
-_BOUNDED_PRIMS = {
-    p for p, parts in _PARTIALS.items() if set(parts) <= _ADDITIVE | _HI_ONLY
-}
+# partials that combine across salt sub-streams by summing
+_ADDITIVE = {"n", "s", "na", "sx", "sx2", "sxy"}
 _BOOL_PRIMS = {"any", "all"}
 _INTEGRAL_T = {"tinyint", "smallint", "int", "bigint"}
 _NUMERIC_TYPES = (
@@ -554,12 +560,11 @@ _NUMERIC_TYPES = (
 
 def _output_type(spec, child_types: dict) -> str:
     """The type the JOIN strategy produces for this spec (the running
-    windows compute in doubles) — strategy="auto" may route the same
-    call to either path by data size, so the result schema must not
-    depend on the router's choice. Integer casts are lossless
-    (counts/sums of integrals are exact in double far past any window
-    size); decimal inputs keep double rather than faking decimal
-    precision the windows never had."""
+    windows compute in doubles). The caller picks the strategy, so the
+    result schema must not depend on that choice. Integer casts are
+    lossless (counts/sums of integrals are exact in double far past
+    any window size); decimal inputs keep double rather than faking
+    decimal precision the windows never had."""
     p = spec.primitive.name
     if p in _BOOL_PRIMS:
         return "boolean"
@@ -574,30 +579,23 @@ def _output_type(spec, child_types: dict) -> str:
     return "double"
 
 
-def _split_kernel_specs(child, time_col, specs, bounded, n_observations):
-    """Partition specs into (running-window, join-routed).
+def _split_kernel_specs(child, time_col, specs, n_observations):
+    """Partition an unbounded call's specs into (running-window,
+    join-routed).
 
-    The running windows take every _PARTIALS primitive on an unbounded
-    window and the _BOUNDED_PRIMS on a bounded one. Everything else
-    routes to the JVM join strategy and is merged back on (instance,
-    cutoff), so strategy='sortmerge' never raises:
+    The running windows take every _PARTIALS primitive. Everything
+    else routes to the JVM join strategy and is merged back on
+    (instance, cutoff), so strategy='sortmerge' never raises:
     - holistic primitives (median, num_unique, mode, entropy, ...);
     - non-numeric inputs and secondary-time-index masks;
     - use_previous in observations: a last-N row limit per cutoff,
       not a running aggregate, so the whole group goes to join.
-    A bounded call that routes any spec to join routes all of them:
-    the other specs ride that join's groupBy instead of paying a
-    second exchange + sort and a merge join. An unbounded call splits.
-    Measured on a 4-vCPU host, request p50, a 30-day window over
-    count, sum, mean, std, time_since_last, trend and max, all-join vs
-    split: 1.25 vs 1.95 s at 4 cutoffs per entity (200k events), 3.97
-    vs 4.49 s at 64 (200k events), 10.1 vs 14.4 s at 64 (2M events);
-    unbounded at 64 cutoffs with median added: 7.75 vs 7.47 s, split
-    faster in 4 of 5 pairs.
+    Splitting measured faster than running the whole call on join, on
+    a 4-vCPU host at 64 cutoffs per entity with median added: request
+    p50 7.47 vs 7.75 s, split faster in 4 of 5 pairs.
     """
     if time_col is None or n_observations is not None:
         return [], list(specs)
-    prims = _BOUNDED_PRIMS if bounded else _PARTIALS
     numeric_ok = {
         f.name: f.dataType.typeName() in _NUMERIC_TYPES
         for f in child.schema.fields
@@ -605,13 +603,9 @@ def _split_kernel_specs(child, time_col, specs, bounded, n_observations):
     kern, rest = [], []
     for s in specs:
         ok = (
-            s.primitive.name in prims
+            s.primitive.name in _PARTIALS
             and s.primitive.strategy == "expr"
             and s.sec_time_col is None
-            # percent_true's denominator is EVERY window row (nulls
-            # count as False); under a where mask it must count only
-            # mask-selected rows — join path handles that
-            and not (s.primitive.name == "percent_true" and s.where_col)
             # count's value column is irrelevant: _asof_sortmerge
             # strips it and counts where-mask hits / window rows, so a
             # non-numeric child index on a masked COUNT is fine here
@@ -619,15 +613,27 @@ def _split_kernel_specs(child, time_col, specs, bounded, n_observations):
                  or all(numeric_ok.get(c, False) for c in s.input_cols))
         )
         (kern if ok else rest).append(s)
-    if bounded and rest:
-        return [], list(specs)
     return kern, rest
+
+
+def _chan_merge(acc, x):
+    """One step of Chan, Golub and LeVeque's (1979) pairwise update:
+    (n, mean, m2) accumulator `acc` absorbs sub-stream `x` = (n, s, vp).
+    A sum of n·mean² terms would cancel as a sum of squares does."""
+    n = acc["n"] + x["n"]
+    d = x["s"] / x["n"] - acc["mean"]
+    return F.when(x["n"] == 0, acc).otherwise(F.struct(
+        n.alias("n"),
+        (acc["mean"] + d * x["n"] / n).alias("mean"),
+        (acc["m2"] + x["vp"] * x["n"] + d * d * acc["n"] * x["n"] / n)
+        .alias("m2"),
+    ))
 
 
 def _combine(p, e, c):
     """Aggregate expression merging partial `p` (row expression `e`)
-    over a cutoff's marker rows — its hi and lo rows and its salt
-    sub-streams; c(q) is the row expression of the stream's partial q."""
+    over a cutoff's salt sub-streams; c(q) is the row expression of
+    the stream's partial q."""
     if p in _ADDITIVE:
         return F.sum(e)
     if p in ("mn", "ft"):
@@ -636,7 +642,16 @@ def _combine(p, e, c):
         return F.max(e)
     if p == "fv":
         return F.min_by(e, c("ft"))
-    return F.max_by(e, c("lt"))      # lv
+    if p == "lv":
+        return F.max_by(e, c("lt"))
+    # vp: fold the at most `salt` sub-streams pairwise
+    subs = F.collect_list(F.struct(
+        c("n").alias("n"), c("s").alias("s"), e.alias("vp")))
+    zero = F.struct(F.lit(0).cast("long").alias("n"),
+                    F.lit(0.0).alias("mean"), F.lit(0.0).alias("m2"))
+    return F.aggregate(subs, zero, _chan_merge,
+                       lambda acc: F.when(acc["n"] > 0,
+                                          acc["m2"] / acc["n"]))
 
 
 def _finalize(pname, c, ct_us):
@@ -650,9 +665,7 @@ def _finalize(pname, c, ct_us):
     if pname == "mean":
         return F.when(N > 0, c("s") / N)
     if pname in ("std", "variance"):
-        m = c("s") / N
-        var = F.greatest(c("ss") / N - m * m, F.lit(0.0))
-        return F.when(N > 0, F.sqrt(var) if pname == "std" else var)
+        return F.when(N > 0, F.sqrt(c("vp")) if pname == "std" else c("vp"))
     if pname in ("min", "all"):
         return c("mn") > 0 if pname == "all" else c("mn")
     if pname in ("max", "any"):
@@ -697,25 +710,22 @@ def _finalize(pname, c, ct_us):
 
 
 def _asof_sortmerge(child, key_col, time_col, cutoffs, instance_col, specs,
-                    cutoff_col, include_cutoff_time, training_window,
-                    salt=None):
-    """Marker union, one exchange, one sort, JVM running windows.
+                    cutoff_col, include_cutoff_time, salt=None):
+    """Marker union, one exchange, one sort, JVM running windows, for
+    an unbounded window.
 
-    The cutoff table is turned into WINDOW MARKERS — a hi-marker
-    (tag 1) at each cutoff and, for a bounded training_window, a
-    lo-marker (tag 2) at cutoff − window — unioned into the event
+    Each cutoff becomes a MARKER row (tag 1), unioned into the event
     stream (tag 0). One hash exchange on the entity key[, salt]
     co-locates each entity; sortWithinPartitions(key[, salt], time,
-    tiebreak) interleaves markers with events at exactly the
-    window-boundary position (the tiebreak encodes
-    include_cutoff_time). A running window aggregate (ROWS UNBOUNDED
-    PRECEDING..CURRENT ROW) read at a marker covers every event sorted
-    before it, so each primitive's _PARTIALS are running windows read
-    at the markers:
+    tiebreak) interleaves markers with events at exactly the cutoff
+    position (the tiebreak encodes include_cutoff_time). A running
+    window aggregate (ROWS UNBOUNDED PRECEDING..CURRENT ROW) read at a
+    marker covers every event sorted before it, so each primitive's
+    _PARTIALS are running windows read at the markers:
 
-        unbounded, unsalted   finalized at the hi-marker rows directly
-        bounded or salted     one groupBy(key, cutoff) combines hi − lo
-                              and the per-salt partials, then finalizes
+        unsalted   finalized at the marker rows directly
+        salted     one groupBy(key, cutoff) combines the per-salt
+                   partials, then finalizes
 
     No row crosses into Python: shipping the stream to a vectorized
     Python sweep of the same algorithm cost more in JVM→Python
@@ -734,20 +744,9 @@ def _asof_sortmerge(child, key_col, time_col, cutoffs, instance_col, specs,
 
     # tiebreak: events sort at 0. include_cutoff_time=True wants events
     # at t == cutoff INSIDE the window -> markers sort after ties (+1);
-    # False wants them outside -> markers sort before ties (-1). The
-    # same sign is correct for lo-markers (window is t > cutoff-w when
-    # inclusive, t >= cutoff-w when exclusive: _time_predicate above).
+    # False wants them outside -> markers sort before ties (-1)
     srt = 1 if include_cutoff_time else -1
-    window_us = (
-        int(round(training_window.to_seconds() * 1_000_000))
-        if training_window
-        else None
-    )
 
-    nulls = [
-        *[F.lit(None).cast("double").alias(f"__v_{c}") for c in value_cols],
-        *[F.lit(None).cast("boolean").alias(f"__w_{c}") for c in where_cols],
-    ]
     # salting: events hash into `salt` sub-streams; every marker
     # replicates to every sub-stream, so each (key, salt) block is a
     # self-contained as-of problem whose partials the groupBy combines
@@ -759,10 +758,6 @@ def _asof_sortmerge(child, key_col, time_col, cutoffs, instance_col, specs,
         ).cast("int").alias("__salt")]
         if salted else []
     )
-    marker_salt = (
-        [F.explode(F.sequence(F.lit(0), F.lit(salt - 1))).alias("__salt")]
-        if salted else []
-    )
     ev = child.filter(F.col(time_col).isNotNull()).select(
         F.col(key_col).alias("__k"),
         F.unix_micros(F.col(time_col).cast("timestamp")).alias("__t"),
@@ -772,31 +767,23 @@ def _asof_sortmerge(child, key_col, time_col, cutoffs, instance_col, specs,
         *[F.col(c).cast("double").alias(f"__v_{c}") for c in value_cols],
         *[F.col(c).cast("boolean").alias(f"__w_{c}") for c in where_cols],
     )
-    cut_t = F.unix_micros(F.col(cutoff_col).cast("timestamp"))
-
-    def markers(t, tag):
-        return cutoffs.select(
-            F.col(instance_col).alias("__k"),
-            t.alias("__t"),
-            F.lit(srt).cast("byte").alias("__srt"),
-            F.lit(tag).cast("byte").alias("__tag"),
-            *marker_salt,
-            *nulls,
-        )
-
-    # An unbounded window needs no lo-marker: its lower bound is the
-    # (key[, salt]) block start, where every running window begins.
-    unioned = ev.unionByName(markers(cut_t, 1))
-    if window_us is not None:
-        unioned = unioned.unionByName(
-            markers((cut_t - F.lit(window_us)).cast("long"), 2))
+    markers = cutoffs.select(
+        F.col(instance_col).alias("__k"),
+        F.unix_micros(F.col(cutoff_col).cast("timestamp")).alias("__t"),
+        F.lit(srt).cast("byte").alias("__srt"),
+        F.lit(1).cast("byte").alias("__tag"),
+        *([F.explode(F.sequence(F.lit(0), F.lit(salt - 1))).alias("__salt")]
+          if salted else []),
+        *[F.lit(None).cast("double").alias(f"__v_{c}") for c in value_cols],
+        *[F.lit(None).cast("boolean").alias(f"__w_{c}") for c in where_cols],
+    )
     range_cols = ["__k", "__salt"] if salted else ["__k"]
     # hash-partition on the entity key (and salt): the windows need all
     # rows of a block in ONE partition and the within-partition sort,
     # never cross-partition order — so no range partitioner and its
     # sampling job (an extra evaluation of the whole union)
     unioned = (
-        unioned
+        ev.unionByName(markers)
         .repartition(*[F.col(c) for c in range_cols])
         .sortWithinPartitions(*range_cols, "__t", "__srt")
     )
@@ -812,11 +799,8 @@ def _asof_sortmerge(child, key_col, time_col, cutoffs, instance_col, specs,
         # window-scale precision of varx. Same window spec, so this
         # stacks on the same sort.
         unioned = unioned.withColumn("__o", F.nth_value("__t", 1).over(w))
-    tag, t = F.col("__tag"), F.col("__t")
-    # the cutoff (micros) a marker row belongs to: its group key
-    ct = t if window_us is None else (
-        F.when(tag == 2, t + F.lit(window_us)).otherwise(t))
-    is_ev = tag == F.lit(0)
+    t = F.col("__t")
+    is_ev = F.col("__tag") == F.lit(0)
 
     # one partial column per (value column, where column, partial):
     # specs reading the same stream share them
@@ -843,7 +827,7 @@ def _asof_sortmerge(child, key_col, time_col, cutoffs, instance_col, specs,
             "n": lambda: F.count(vt),
             "na": lambda: F.count(F.when(cond, F.lit(1))),
             "s": lambda: F.sum(v),
-            "ss": lambda: F.sum(v * v),
+            "vp": lambda: F.var_pop(v),
             "mn": lambda: F.min(v),
             "mx": lambda: F.max(v),
             "ft": lambda: F.min(vt),
@@ -856,18 +840,14 @@ def _asof_sortmerge(child, key_col, time_col, cutoffs, instance_col, specs,
         }
         running += [agg[p]().over(w).alias(nm) for p, nm in names.items()]
     marked = unioned.select(
-        "__k", ct.alias("__c"), "__tag", *(["__o"] if trend else []),
-        *running,
-    ).filter(tag != 0)
+        "__k", t.alias("__c"), *(["__o"] if trend else []), *running,
+    ).filter(~is_ev)
 
-    # each partial's share at its marker row: trend's x sums re-centred
-    # at the cutoff, so every row of one (key, cutoff) group shares one
+    # each partial at its marker row: trend's x sums re-centred at the
+    # cutoff, so every salt sub-stream of one (key, cutoff) shares one
     # origin (exact shifts: sx' = sx − n·d, sx2' = sx2 − 2d·sx + n·d²,
-    # sxy' = sxy − d·sy); lo rows negate the additive partials and drop
-    # the rest
+    # sxy' = sxy − d·sy)
     rows: dict = {}
-    lo = tag == 2
-    sign = F.when(lo, F.lit(-1)).otherwise(F.lit(1))
     d = (F.col("__c") - F.col("__o")) / F.lit(1e6) if trend else None
     for names in streams.values():
         c = {p: F.col(nm) for p, nm in names.items()}
@@ -879,12 +859,8 @@ def _asof_sortmerge(child, key_col, time_col, cutoffs, instance_col, specs,
                 e = e - 2.0 * d * c["sx"] + c["n"] * d * d
             elif p == "sxy":
                 e = e - d * c["s"]
-            if window_us is not None:
-                e = e * sign if p in _ADDITIVE else F.when(~lo, e)
             rows[nm] = e
-    if window_us is not None or salted:
-        # __k alone is the exchange's partitioning, so an unsalted
-        # combine needs no new Exchange
+    if salted:
         marked = marked.groupBy("__k", "__c").agg(*[
             _combine(p, rows[nm], lambda q, n=names: rows[n[q]]).alias(nm)
             for names in streams.values() for p, nm in names.items()

@@ -120,182 +120,6 @@ def _pit_child(es, name: str, time_col, pit) -> DataFrame:
     )
 
 
-# ----------------------------------------------------------------------
-# strategy="auto" pre-flight (round 6, VERDICT r5 #3): the 10x stress
-# probe located the join path's 100x knee at the FINAL (entity, cutoff)
-# hash aggregation — its state is |cutoff pairs| x feature width and,
-# unlike the map-side partials, cannot be combined away. Escalation
-# ladder when the per-task slice of that state would cross the
-# executor's execution-memory budget:
-#   1. raise the shuffle width (state is hash-partitioned by the group
-#      key, so width dilutes per-task state linearly; AQE coalesces
-#      the extra partitions back for every SMALL stage, so
-#      over-provisioning costs little)
-#   2. if the width needed exceeds FT_SPARK_AUTO_MAX_PARTS, flip to
-#      the sortmerge kernel: its memory is O(events per partition)
-#      flat arrays, independent of cutoff density.
-# Reference analog: the memory guardrail in featuretools'
-# computational_backends/utils.py:193-206 (n_jobs x chunk memory vs
-# system memory warning) — here it ACTS instead of warning.
-# ----------------------------------------------------------------------
-
-#: decision record of the most recent strategy="auto" pre-flight —
-#: {"strategy", "reason", "state_bytes", "budget_bytes_per_task",
-#:  "parts_before", "parts_after", "n_pairs", "n_agg_feats"}
-LAST_PREFLIGHT: dict = {}
-
-
-def _escalation_decision(state_bytes: int, budget_bytes_per_task: int,
-                         current_parts: int, max_parts: int,
-                         spill_tolerance: float | None = None) -> dict:
-    """Pure decision core (unit-testable without a SparkSession).
-
-    Returns {"strategy": "join"|"sortmerge", "parts": int|None,
-    "reason": str}: parts is the escalated shuffle width when the
-    current one would overflow the per-task budget, None when no
-    change is needed.
-
-    spill_tolerance (default 4, env FT_SPARK_AUTO_SPILL_TOLERANCE):
-    escalation fires only when projected per-task state exceeds
-    spill_tolerance x the fair-share budget. Calibrated round 7
-    (BENCH/preflight_calibration_r7.json): Spark's unified manager
-    lets a task transiently take pool/activeTasks — measured 512 MiB
-    single-task hash-agg peaks, 3.3x the fair share, on a job whose
-    static-width RSS fit the heap — and TungstenAggregationIterator's
-    sort-fallback absorbs bounded overage, so escalating at 1x fair
-    share paid a measured 22% width premium on workloads that fit
-    (BENCH/stress_escalation_r6.json). Once escalation IS warranted,
-    the new width targets 1x budget (land comfortably, hysteresis)."""
-    import os
-    if spill_tolerance is None:
-        spill_tolerance = float(os.environ.get(
-            "FT_SPARK_AUTO_SPILL_TOLERANCE", "4"))
-    budget = max(budget_bytes_per_task, 1)
-    per_task = state_bytes / max(current_parts, 1)
-    if per_task <= budget * max(spill_tolerance, 1.0):
-        return {
-            "strategy": "join", "parts": None,
-            "reason": (
-                f"join hash-agg state ~{state_bytes >> 20} MiB over "
-                f"{current_parts} tasks = {int(per_task) >> 10} KiB/task "
-                f"within {spill_tolerance:g}x budget "
-                f"{budget >> 20} MiB/task"),
-        }
-    needed = -(-state_bytes // budget)          # ceil
-    if needed <= max_parts:
-        return {
-            "strategy": "join", "parts": int(needed),
-            "reason": (
-                f"join hash-agg state ~{state_bytes >> 20} MiB would put "
-                f"{int(per_task) >> 20} MiB on each of {current_parts} "
-                f"tasks (budget {budget >> 20} MiB/task); raising shuffle "
-                f"width to {needed}"),
-        }
-    return {
-        "strategy": "sortmerge", "parts": None,
-        "reason": (
-            f"join hash-agg state ~{state_bytes >> 20} MiB needs "
-            f"{needed} partitions to fit {budget >> 20} MiB/task "
-            f"(> FT_SPARK_AUTO_MAX_PARTS={max_parts}); sortmerge kernel "
-            "bounds memory at O(events/partition) instead"),
-    }
-
-
-def _task_memory_budget(spark) -> int:
-    """Per-task fair share of the unified memory region in bytes:
-    heap x spark.memory.fraction / task slots. Heap comes from
-    spark.executor.memory when set (cluster), else the driver JVM's
-    Runtime.maxMemory() (local mode, where tasks share it).
-
-    Round 7 recalibration: the r6 formula halved this twice more
-    ("execution half" x "safety"), producing a 38 MiB budget on an
-    8g/32-slot box whose tasks measurably peak at 512 MiB and whose
-    static-width RSS fit — the estimator over-fired a 22% width
-    premium (BENCH/stress_escalation_r6.json). Spill headroom now
-    lives in _escalation_decision's spill_tolerance instead of being
-    baked invisibly into the budget."""
-    import os
-    ov = os.environ.get("FT_SPARK_AUTO_TASK_BUDGET_BYTES")
-    if ov:
-        return int(ov)
-    heap = None
-    mem = spark.conf.get("spark.executor.memory", None)
-    if mem and spark.sparkContext.master.startswith(
-            ("local-cluster", "spark://", "yarn", "k8s")):
-        units = {"k": 10, "m": 20, "g": 30, "t": 40}
-        m = str(mem).strip().lower()
-        if m[-1] in units:
-            heap = int(float(m[:-1])) << units[m[-1]]
-        else:
-            # Spark's JavaUtils.byteStringAsMb treats a suffix-less
-            # memory string as MiB, not bytes
-            heap = int(m) << 20
-        cores = int(spark.conf.get("spark.executor.cores", "1"))
-    else:
-        heap = int(str(
-            spark.sparkContext._jvm.java.lang.Runtime.getRuntime()
-            .maxMemory()))
-        cores = spark.sparkContext.defaultParallelism
-    frac = float(spark.conf.get("spark.memory.fraction", "0.6"))
-    return int(heap * frac / max(cores, 1))
-
-
-def _resolve_auto_strategy(spark, base_keys: DataFrame,
-                           n_agg_feats: int,
-                           count_frame: DataFrame | None = None) -> str:
-    """Run the pre-flight estimator and APPLY its decision: returns
-    the resolved strategy, raising spark.sql.shuffle.partitions (and
-    the AQE initial width, which is what AQE actually starts from)
-    session-wide when the ladder's first rung fires. The conf change
-    is sticky by design — the DataFrame executes lazily, after this
-    function returns — and is logged with the reason."""
-    import logging
-    import os
-
-    log = logging.getLogger("featuretools_spark.auto")
-    if os.environ.get("FT_SPARK_AUTO_PREFLIGHT", "1") == "0":
-        LAST_PREFLIGHT.clear()
-        LAST_PREFLIGHT.update({"strategy": "join",
-                               "reason": "preflight disabled by env"})
-        return "join"
-    # the cutoff table is an INPUT (usually a parquet scan): counting
-    # it is metadata-cheap relative to the backfill it gates, and only
-    # strategy="auto" pays it. r8 (BENCH/ab_preflight_r8.json): the
-    # count is taken on the RAW cutoff frame when provided — a
-    # map-side count with no exchange — instead of the distinct key
-    # set, whose dedup shuffle cost 5.8s at 25.6M pairs. Duplicate
-    # cutoff rows then overestimate n_pairs, which errs toward MORE
-    # shuffle width (AQE coalesces unneeded partitions back), never
-    # toward under-provisioning.
-    n_pairs = (count_frame if count_frame is not None
-               else base_keys).count()
-    key_b = int(os.environ.get("FT_SPARK_AUTO_KEY_BYTES", "64"))
-    feat_b = int(os.environ.get("FT_SPARK_AUTO_STATE_BYTES_PER_FEAT", "48"))
-    state = n_pairs * (key_b + feat_b * max(n_agg_feats, 1))
-    parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    max_parts = int(os.environ.get("FT_SPARK_AUTO_MAX_PARTS", "32768"))
-    budget = _task_memory_budget(spark)
-    d = _escalation_decision(state, budget, parts, max_parts)
-    LAST_PREFLIGHT.clear()
-    LAST_PREFLIGHT.update({
-        "strategy": d["strategy"], "reason": d["reason"],
-        "state_bytes": state, "budget_bytes_per_task": budget,
-        "parts_before": parts, "parts_after": d["parts"] or parts,
-        "n_pairs": n_pairs, "n_agg_feats": n_agg_feats,
-    })
-    if d["parts"]:
-        spark.conf.set("spark.sql.shuffle.partitions", str(d["parts"]))
-        spark.conf.set(
-            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            str(d["parts"]))
-        log.warning("strategy=auto escalation: %s", d["reason"])
-    elif d["strategy"] == "sortmerge":
-        log.warning("strategy=auto escalation: %s", d["reason"])
-    else:
-        log.info("strategy=auto: %s", d["reason"])
-    return d["strategy"]
-
-
 def calculate_feature_matrix(
     features: list[FeatureBase],
     entityset: EntitySet | None = None,
@@ -320,31 +144,19 @@ def calculate_feature_matrix(
     Returns a DataFrame keyed by (instance, time) + one column per
     feature, named with reference-parity feature names.
 
-    strategy: "join" (default) | "sortmerge" | "auto". "auto" picks
-    "join" for throughput — the round-5 profile (BENCH/BASELINE.md,
-    stage decomposition + density sweeps at 100 and 1000
-    events/entity, 4..256 cutoffs/entity) measured that the join
-    path's partial-aggregate shuffle beats the kernel's full-row
-    shuffle+sort at EVERY density, so there is no throughput regime
-    where an auto-router should flip — but additionally runs the
-    round-6 PRE-FLIGHT MEMORY ESTIMATOR at the knee the 10x stress
-    probe named: the join's final (entity, cutoff) hash-agg state is
-    |cutoff pairs| x feature width, and once the per-task slice of
-    that state crosses the executor's execution-memory budget the
-    plan spills (then OOMs). The estimator sizes the state from the
-    cutoff-table row count, first RAISES the shuffle width so each
-    task's slice fits (state is hash-partitioned by the group key,
-    so width dilutes it), and only if the needed width is absurd
-    (> FT_SPARK_AUTO_MAX_PARTS) flips to "sortmerge", whose memory
-    is O(events per partition) flat arrays, independent of cutoff
-    density. Decision + reason are logged and recorded in
-    cfm.LAST_PREFLIGHT. Pass "sortmerge" explicitly for its other
-    structural niche: explicit hot-key salting (salt=).
+    strategy: "join" (default) | "sortmerge" | "auto". "sortmerge"
+    evaluates unbounded aggregations as JVM running windows (asof.py),
+    with explicit hot-key salting through salt=; a training_window
+    call runs on the join path, where AQE's skew join splits a hot
+    key. "auto" runs "join", decided from the call's arguments with no
+    data read: no measured rule yet says when the running windows win.
     """
     if strategy not in ("join", "sortmerge", "auto"):
         raise ValueError(
             f"unknown strategy {strategy!r}: use 'join', 'sortmerge', "
             "or 'auto'")
+    if strategy == "auto":
+        strategy = "join"
     _SCAN_CACHE.clear()
     es = entityset or _find_es(features)
     target = features[0].entity
@@ -430,10 +242,6 @@ def calculate_feature_matrix(
         if not isinstance(f, (AggregationFeature, DirectFeature))
         and f.get_name() not in mt_names
     ]
-    if strategy == "auto":
-        strategy = _resolve_auto_strategy(
-            base_keys.sparkSession, base_keys, len(agg_feats),
-            count_frame=cutoffs if scalar_cutoff is None else None)
     if strategy == "join" and scalar_cutoff is None and agg_feats:
         # ONE exchange serves both the key dedup and the as-of join
         # (guide §2.4 "two operations keyed the same way share one
@@ -1559,15 +1367,6 @@ def _kernel_nparts(df) -> int:
 
     floor = int(df.sparkSession.conf.get(
         "spark.sql.shuffle.partitions", "200"))
-    # a strategy="auto" escalation raises the session width for ITS
-    # join and is sticky (lazy execution); don't let that inflate the
-    # pandas-kernel floor for every later job in the session — cap
-    # the floor back at the pre-escalation width (ADVICE r6)
-    lp = LAST_PREFLIGHT
-    if (lp.get("parts_after") and lp.get("parts_before")
-            and floor == lp["parts_after"]
-            and lp["parts_after"] > lp["parts_before"]):
-        floor = lp["parts_before"]
     target = int(os.environ.get("FT_SPARK_KERNEL_PART_BYTES",
                                 str(64 << 20)))
     cap = int(os.environ.get("FT_SPARK_KERNEL_MAX_PARTS", "32768"))

@@ -184,9 +184,12 @@ class PercentTrue(AggregationPrimitive):
     name = "percent_true"
     input_kinds = ("boolean",)
 
-    def expr(self, inputs, ctx):
+    def fill_nulls(self, value):
         # reference fillna(False) first: NULL counts as False
-        return F.avg(F.coalesce(inputs[0].cast("boolean"), F.lit(False)).cast("int"))
+        return F.coalesce(value.cast("boolean"), F.lit(False))
+
+    def expr(self, inputs, ctx):
+        return F.avg(inputs[0].cast("boolean").cast("int"))
 
 
 # ----------------------------------------------------------------------

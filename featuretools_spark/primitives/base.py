@@ -70,6 +70,12 @@ class AggregationPrimitive:
     def expr(self, inputs: list[Column], ctx: AggContext) -> Column:
         raise NotImplementedError
 
+    def fill_nulls(self, value: Column) -> Column:
+        """The input value expr() reads, nulls filled. The engine fills
+        before a where mask removes rows, so a filled null still counts
+        and a masked-out row does not."""
+        return value
+
     def twostage(
         self, df: DataFrame, keys: list, input_cols: list, out_name: str, ctx: AggContext
     ) -> DataFrame:

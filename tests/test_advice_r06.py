@@ -3,13 +3,10 @@
 1. jpeg.py — progressive scans with out-of-band Ss/Se/Ah/Al must raise
    ValueError (the strict=False degrade-to-NULL contract catches only
    ValueError), never numpy IndexError.
-2. cfm.py — suffix-less spark.executor.memory is MiB (Spark's
-   JavaUtils.byteStringAsMb), not bytes.
-3. dedup.py — simhash_near_duplicates releases its persisted chunk
+2. dedup.py — simhash_near_duplicates releases its persisted chunk
    table on the success path.
-4. cfm.py — a sticky auto-strategy escalation must not inflate
-   _kernel_nparts' floor for later jobs.
-5. encode.py — gram-path correlation clamps negative variance and
+3. cfm.py — _kernel_nparts' floor is the session's configured width.
+4. encode.py — gram-path correlation clamps negative variance and
    rejects |corr| > 1 garbage instead of letting it cross the drop
    threshold.
 """
@@ -52,36 +49,6 @@ def test_progressive_rejects_out_of_band_se():
         decode_jpeg(bad)
 
 
-def test_task_memory_budget_suffixless_is_mib():
-    from featuretools_spark.cfm import _task_memory_budget
-
-    class _Conf:
-        def __init__(self, d):
-            self._d = d
-
-        def get(self, k, default=None):
-            return self._d.get(k, default)
-
-    class _SC:
-        master = "spark://host:7077"
-
-    class _Spark:
-        sparkContext = _SC()
-
-        def __init__(self, mem):
-            self.conf = _Conf({
-                "spark.executor.memory": mem,
-                "spark.executor.cores": "1",
-                "spark.memory.fraction": "0.6",
-            })
-
-    suffixless = _task_memory_budget(_Spark("4096"))
-    with_suffix = _task_memory_budget(_Spark("4g"))
-    assert suffixless == with_suffix  # 4096 (MiB) == 4g
-    # r7 calibration: fair share = heap x memory.fraction / slots
-    assert suffixless == int((4096 << 20) * 0.6)
-
-
 def test_simhash_releases_chunk_cache(spark):
     from featuretools_spark.ops.dedup import simhash_near_duplicates
 
@@ -108,21 +75,13 @@ def test_kernel_floor_exempt_from_escalated_width(spark):
 
     df = spark.range(100).withColumn("g", F.col("id") % 4)
     base = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    saved = dict(cfm.LAST_PREFLIGHT)
+    assert cfm._kernel_nparts(df) == base
     try:
-        # simulate a prior auto-escalation left sticky in the session
+        # a session genuinely CONFIGURED wide keeps its width
         spark.conf.set("spark.sql.shuffle.partitions", "4096")
-        cfm.LAST_PREFLIGHT.clear()
-        cfm.LAST_PREFLIGHT.update(
-            {"parts_before": base, "parts_after": 4096})
-        assert cfm._kernel_nparts(df) == base
-        # ...but a session genuinely CONFIGURED wide keeps its width
-        cfm.LAST_PREFLIGHT.clear()
         assert cfm._kernel_nparts(df) == 4096
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", str(base))
-        cfm.LAST_PREFLIGHT.clear()
-        cfm.LAST_PREFLIGHT.update(saved)
 
 
 def test_gram_corr_clamps_degenerate_variance(spark):

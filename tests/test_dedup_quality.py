@@ -1,19 +1,30 @@
 """Quantitative pass criteria for the hash-specific (no-SQL-oracle)
 ops: SimHash blocking recall vs brute-force hamming, MinHash-LSH
 recall/precision on planted near-duplicates, ANN-LSH recall@k vs the
-exact brute-force baseline, fingerprint determinism/robustness."""
+exact brute-force baseline, fingerprint determinism/robustness, and
+exact-substring span removal (trim_duplicated_spans) with the
+winnowed-fingerprint machinery it shares with cross_doc_duplication.
+
+Reference analog for span removal: none — featuretools has no text
+surface; this is the LLM-curation tier (Lee et al., "Deduplicating
+Training Data Makes Language Models Better", re-expressed over
+winnowed fingerprints so a SQL oracle can reproduce it)."""
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from featuretools_spark.ops.dedup import (
+    cross_doc_duplication,
+    exact_duplicates,
     hamming_distance,
     minhash_duplicates,
     ngram_jaccard_pairs,
     simhash64,
     simhash_near_duplicates,
+    trim_duplicated_spans,
 )
+from featuretools_spark.ops.scrub import decontaminate
 from featuretools_spark.ops.similarity import brute_force_topk, lsh_topk
 from featuretools_spark.ops.textstats import fingerprint
 
@@ -316,3 +327,182 @@ def test_duplicate_clusters_transitive_and_canonical(spark):
     import pytest as _pt
     with _pt.raises(RuntimeError, match="converge"):
         duplicate_clusters(chain, max_iter=2, max_edges_driver=0)
+
+
+# ----------------------------------------------------------------------
+# exact-substring span removal over winnowed fingerprints
+# ----------------------------------------------------------------------
+def _docs(spark, rows):
+    return spark.createDataFrame(rows, ["doc_id", "text"])
+
+
+SHARED = "the quick brown fox jumps over the lazy dog near the river bank"
+
+
+def test_trim_removes_shared_span_keeps_unique(spark):
+    """Two docs sharing a long span, each with unique flanks: the
+    shared interior is cut from both, unique text survives."""
+    a = "AAAA unique alpha prelude " + SHARED + " alpha epilogue ZZZZ"
+    b = "BBBB different beta intro " + SHARED + " beta outro YYYY"
+    c = "totally unrelated text that shares nothing with the others"
+    out = {
+        r["doc_id"]: r
+        for r in trim_duplicated_spans(
+            _docs(spark, [(1, a), (2, b), (3, c)]), "doc_id", "text",
+            k=20, w=8,
+        ).collect()
+    }
+    # doc 3 untouched
+    assert out[3]["text"] == c
+    assert out[3]["n_dup_spans"] == 0 and out[3]["chars_removed"] == 0
+    # docs 1+2: the shared span's interior is gone, flanks survive
+    for i, (orig, flank_l, flank_r) in (
+        (1, (a, "unique alpha prelude", "alpha epilogue")),
+        (2, (b, "different beta intro", "beta outro")),
+    ):
+        t = out[i]["text"]
+        assert out[i]["n_dup_spans"] >= 1
+        assert out[i]["chars_removed"] >= 1
+        assert len(t) == len(orig) - out[i]["chars_removed"]
+        # the interior of the shared span must be removed
+        assert "jumps over the lazy dog" not in t
+        # unique flanks must survive (anchors are scoped to the span;
+        # at most w-1 grams ~ w+k-2 chars of boundary slack)
+        assert flank_l[: len(flank_l) // 2] in t
+        assert flank_r[len(flank_r) // 2:] in t
+
+
+def test_trim_internal_repetition_alone_not_removed(spark):
+    """min_df counts DISTINCT docs: a doc repeating its own span,
+    alone in the corpus, is untouched."""
+    rep = "repeat this exact sentence again and again! " * 3
+    out = trim_duplicated_spans(
+        _docs(spark, [(1, rep), (2, "nothing in common here at all")]),
+        "doc_id", "text", k=20, w=8,
+    ).collect()
+    r = {x["doc_id"]: x for x in out}
+    assert r[1]["text"] == rep and r[1]["chars_removed"] == 0
+    assert r[2]["chars_removed"] == 0
+
+
+def test_trim_identical_docs_fully_gutted(spark):
+    """Two byte-identical docs: every anchored window is shared, so
+    (almost) the whole text is removed from both — at most the
+    detection floor k + w - 2 chars of boundary slack survives."""
+    txt = SHARED + " and then some more words to make it long enough"
+    out = trim_duplicated_spans(
+        _docs(spark, [(1, txt), (2, txt)]), "doc_id", "text",
+        k=20, w=8,
+    ).collect()
+    for r in out:
+        assert r["chars_removed"] >= len(txt) - (20 + 8 - 2)
+        assert len(r["text"]) == len(txt) - r["chars_removed"]
+
+
+def test_trim_offset_invariance_winnowing_floor(spark):
+    """The r6 strided bug class: the same span at offsets differing
+    by a non-multiple of the old stride. Winnowing is content-defined,
+    so the span is detected and trimmed in BOTH docs regardless of
+    offset."""
+    for shift in range(1, 7):  # every offset class mod the old stride 5
+        a = "x" * 3 + SHARED + " tail one"
+        b = "y" * (3 + shift) + SHARED + " other tail"
+        out = {
+            r["doc_id"]: r
+            for r in trim_duplicated_spans(
+                _docs(spark, [(1, a), (2, b)]), "doc_id", "text",
+                k=20, w=8,
+            ).collect()
+        }
+        assert out[1]["chars_removed"] > 0, f"shift={shift} missed in a"
+        assert out[2]["chars_removed"] > 0, f"shift={shift} missed in b"
+        assert "jumps over the lazy" not in out[1]["text"]
+        assert "jumps over the lazy" not in out[2]["text"]
+
+
+def test_trim_short_and_null_docs_pass_through(spark):
+    out = {
+        r["doc_id"]: r
+        for r in trim_duplicated_spans(
+            _docs(spark, [(1, "short"), (2, ""), (3, None),
+                          (4, SHARED), (5, SHARED)]),
+            "doc_id", "text", k=20, w=8,
+        ).collect()
+    }
+    assert out[1]["text"] == "short" and out[1]["chars_removed"] == 0
+    assert out[2]["text"] == "" and out[2]["chars_removed"] == 0
+    assert out[3]["text"] is None and out[3]["chars_removed"] == 0
+    assert out[4]["chars_removed"] > 0  # 4 and 5 share everything
+
+
+def test_trim_adjacent_intervals_merge(spark):
+    """Anchors k chars apart produce touching [p, p+k) intervals that
+    must merge into ONE span (n_dup_spans counts merged islands)."""
+    long_shared = SHARED + " " + SHARED + " " + SHARED
+    a = "intro-A " + long_shared + " outro-A"
+    b = "intro-B " + long_shared + " outro-B"
+    out = {
+        r["doc_id"]: r
+        for r in trim_duplicated_spans(
+            _docs(spark, [(1, a), (2, b)]), "doc_id", "text",
+            k=20, w=8,
+        ).collect()
+    }
+    # one contiguous shared region -> a small number of merged islands
+    # (boundary anchors may split off at most one extra interval/side)
+    assert 1 <= out[1]["n_dup_spans"] <= 3
+    assert out[1]["chars_removed"] >= len(long_shared) - (20 + 8 - 2)
+
+
+def test_trim_xxhash64_matches_md5_mode(spark):
+    """The bigint scale path selects identical anchors-by-content
+    semantics; removal output must match the md5 witness mode."""
+    a = "AAAA unique alpha prelude " + SHARED + " alpha epilogue ZZZZ"
+    b = "BBBB different beta intro " + SHARED + " beta outro YYYY"
+    df = _docs(spark, [(1, a), (2, b)])
+    md = {r["doc_id"]: (r["text"], r["chars_removed"]) for r in
+          trim_duplicated_spans(df, "doc_id", "text",
+                                k=20, w=8, hash_fn="md5").collect()}
+    xx = {r["doc_id"]: (r["text"], r["chars_removed"]) for r in
+          trim_duplicated_spans(df, "doc_id", "text",
+                                k=20, w=8, hash_fn="xxhash64").collect()}
+    # winnowing picks the min-HASH per window, so anchor CHOICE can
+    # differ between hash functions — but both must remove the shared
+    # interior and keep doc-unique text
+    for i in (1, 2):
+        assert "jumps over the lazy dog" not in md[i][0]
+        assert "jumps over the lazy dog" not in xx[i][0]
+        assert md[i][1] > 0 and xx[i][1] > 0
+
+
+def test_trim_composes_with_exact_dedup_and_decontaminate(spark):
+    """Pipeline smoke: trim spans -> exact whole-doc dedup (trimming
+    two same-span docs can make them byte-identical) -> benchmark
+    decontamination, all as one lazy chained plan."""
+    a = "AAAA unique alpha prelude " + SHARED + " alpha epilogue ZZZZ"
+    docs = _docs(spark, [(1, a), (2, a), (3, "benchmark answer text "
+                                             "that must be flagged here")])
+    bench = spark.createDataFrame(
+        [("benchmark answer text that must be flagged here",)], ["text"])
+    trimmed = trim_duplicated_spans(docs, "doc_id", "text", k=20, w=8)
+    deduped = exact_duplicates(
+        trimmed.select("doc_id", "text"), ["text"], "doc_id")
+    kept = deduped.filter(~F.col("is_duplicate")).select("doc_id", "text")
+    flagged = decontaminate(kept, bench, id_col="doc_id",
+                            text_col="text", n=8)
+    by_id = {r["doc_id"]: r for r in flagged.collect()}
+    # docs 1 and 2 are identical -> identical after trimming -> one
+    # survives; doc 3 carries the benchmark gram
+    assert set(by_id) == {1, 3}
+    assert by_id[3]["contaminated"] and not by_id[1]["contaminated"]
+
+
+def test_cross_dup_winnowed_offset_invariance(spark):
+    """cross_doc_duplication (the signal twin) also detects spans at
+    any offset now — the exact r6 miss case."""
+    a = "xx" + SHARED + " tail"
+    b = "y" * 7 + SHARED + " other"  # offset differs by 5 (old stride!)
+    r = {x["doc_id"]: x["shared_frac"] for x in cross_doc_duplication(
+        _docs(spark, [(1, a), (2, b)]), "doc_id", "text",
+        k=20, w=8).collect()}
+    assert r[1] > 0 and r[2] > 0

@@ -137,11 +137,10 @@ WINDOWED = ("count", "sum", "mean", "std", "last", "time_since_last")
                                   "trend"])
 def test_sortmerge_asof_plan_shape(spark, asof_inputs, case, salt):
     """No sortmerge as-of plan crosses into Python. Its running windows
-    sit on exactly one Exchange and one Sort; unbounded unsalted calls
-    aggregate nothing, bounded ones add an Aggregate but no Exchange,
-    salted ones add only the salt merge's Exchange. Last-N, and a
-    bounded call with a primitive that is not a prefix difference,
-    route to the join path (no marker Union)."""
+    sit on exactly one Exchange and one Sort; unsalted calls aggregate
+    nothing, salted ones add only the salt merge's Exchange and
+    Aggregate. A bounded call and last-N route to the join path (no
+    marker Union)."""
     seqs, cuts = asof_inputs
     kw = {
         "unbounded": dict(specs=_specs(*WINDOWED, "min", "first")),
@@ -157,7 +156,7 @@ def test_sortmerge_asof_plan_shape(spark, asof_inputs, case, salt):
     nodes = _nodes(out)
     for node in PYTHON_NODES:
         assert node not in nodes, node
-    if case in ("30 days with max", "5 observations"):
+    if case in ("30 days", "30 days with max", "5 observations"):
         assert "Union" not in nodes
         return
     windows = [i for i, n in enumerate(nodes) if n == "Window"]
@@ -170,7 +169,7 @@ def test_sortmerge_asof_plan_shape(spark, asof_inputs, case, salt):
     assert len(below) == 1
     assert len(above) == (1 if salt else 0)
     has_agg = any("Aggregate" in n for n in nodes[:windows[0]])
-    assert has_agg == (salt is not None or case == "30 days")
+    assert has_agg == (salt is not None)
     assert len(out.collect()) == cuts.count()
 
 
@@ -200,6 +199,32 @@ def test_strategy_auto_routes_to_pure_jvm_join(spark, es):
         fts.calculate_feature_matrix(
             [agg], es, cutoff_time=dt.datetime(2024, 3, 1),
             strategy="hash")
+
+
+def test_strategy_auto_runs_the_join_plan(spark, hot_seq_es):
+    """strategy="auto" is "join", decided from the call's arguments: a
+    per-row build runs exactly as many Spark jobs as strategy="join"
+    (no count of the cutoff table) and leaves the session's shuffle
+    width as it found it."""
+    es, cuts, feats = hot_seq_es
+    sc = spark.sparkContext
+    width = spark.conf.get("spark.sql.shuffle.partitions")
+
+    def jobs(strategy, group):
+        sc.setJobGroup(group, group)
+        try:
+            fts.calculate_feature_matrix(feats, es, cutoff_time=cuts,
+                                         strategy=strategy).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    jobs("join", "strategy-warm")     # fixture caches fill here
+    n_join = jobs("join", "strategy-join")
+    assert n_join > 0
+    assert jobs("auto", "strategy-auto") == n_join
+    assert spark.conf.get("spark.sql.shuffle.partitions") == width
 
 
 def _plan_nodes(jplan) -> list:

@@ -1,5 +1,5 @@
-"""Round-6 additions: strategy="auto" pre-flight escalation (VERDICT
-r5 #3), input-scaled grouped-kernel shuffle width (#4), strict=False
+"""Round-6 additions: one result schema for every as-of strategy,
+input-scaled grouped-kernel shuffle width (VERDICT r5 #4), strict=False
 media fallback + corrupt-codec ValueError contracts (ADVICE r5), and
 the witness-oracle corpus-margin guard (ADVICE r5 #4)."""
 
@@ -18,51 +18,11 @@ from featuretools_spark.features import AggregationFeature, IdentityFeature
 SF_GATE = "/root/testdata/sf0.01"   # the driver's correctness-gate SF
 
 
-# ----------------------------------------------------------------------
-# escalation decision core (pure, no Spark)
-# ----------------------------------------------------------------------
-def test_escalation_within_budget_keeps_join():
-    d = cfm._escalation_decision(
-        state_bytes=1 << 27,            # 128 MiB
-        budget_bytes_per_task=1 << 26,  # 64 MiB/task
-        current_parts=32, max_parts=32768)
-    assert d["strategy"] == "join" and d["parts"] is None
-
-
-def test_escalation_raises_width_at_first_rung():
-    # 64 GiB of hash state over 32 tasks = 2 GiB/task >> 64 MiB budget
-    d = cfm._escalation_decision(
-        state_bytes=64 << 30, budget_bytes_per_task=64 << 20,
-        current_parts=32, max_parts=32768)
-    assert d["strategy"] == "join"
-    assert d["parts"] == 1024           # ceil(64 GiB / 64 MiB)
-    assert "raising shuffle width" in d["reason"]
-
-
-def test_escalation_flips_to_sortmerge_past_max_parts():
-    d = cfm._escalation_decision(
-        state_bytes=64 << 30, budget_bytes_per_task=64 << 20,
-        current_parts=32, max_parts=512)
-    assert d["strategy"] == "sortmerge"
-    assert "sortmerge" in d["reason"]
-
-
-def test_escalation_width_is_monotone_in_state():
-    widths = [
-        cfm._escalation_decision(s, 64 << 20, 8, 1 << 30)["parts"] or 8
-        for s in (1 << 28, 1 << 32, 1 << 36, 1 << 40)
-    ]
-    assert widths == sorted(widths) and widths[-1] > widths[0]
-
-
-# ----------------------------------------------------------------------
-# strategy="auto" end-to-end: decision recorded, results identical
-# ----------------------------------------------------------------------
 @pytest.fixture(scope="module")
-def auto_es(spark):
+def strategy_es(spark):
     seqs = make_sequences(spark, n_rows=3000, n_entities=60).cache()
     ents = make_entities(seqs)
-    es = fts.EntitySet("auto")
+    es = fts.EntitySet("strategy")
     es.add_dataframe("entities", ents, index="entity_id",
                      time_index="first_seen")
     es.add_dataframe("sequences", seqs, index="doc_id",
@@ -80,85 +40,12 @@ def auto_es(spark):
     return es, cuts, feats
 
 
-def _fm_rows(fm, cols):
-    return sorted(
-        (r["entity_id"], str(r["time"]), *(round(r[c] or 0, 6) for c in cols))
-        for r in fm.collect()
-    )
-
-
-def test_auto_small_input_stays_join_no_conf_change(spark, auto_es):
-    es, cuts, feats = auto_es
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    fts.calculate_feature_matrix(feats, es, cutoff_time=cuts,
-                                 strategy="auto").count()
-    assert cfm.LAST_PREFLIGHT["strategy"] == "join"
-    assert cfm.LAST_PREFLIGHT["parts_after"] == \
-        cfm.LAST_PREFLIGHT["parts_before"]
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
-
-
-def test_auto_escalates_width_under_tiny_budget(spark, auto_es):
-    """Force the first rung: a tiny per-task budget makes the pre-flight
-    raise the shuffle width; results must equal the plain join path."""
-    es, cuts, feats = auto_es
-    cols = [f.get_name() for f in feats]
-    want = _fm_rows(
-        fts.calculate_feature_matrix(feats, es, cutoff_time=cuts,
-                                     strategy="join"), cols)
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    os.environ["FT_SPARK_AUTO_TASK_BUDGET_BYTES"] = "4096"
-    # pin spill tolerance to 1x so the tiny fixture's state is enough
-    # to trip the rung (r7 default is 4x fair share)
-    os.environ["FT_SPARK_AUTO_SPILL_TOLERANCE"] = "1"
-    try:
-        fm = fts.calculate_feature_matrix(feats, es, cutoff_time=cuts,
-                                          strategy="auto")
-        got = _fm_rows(fm, cols)
-    finally:
-        os.environ.pop("FT_SPARK_AUTO_TASK_BUDGET_BYTES")
-        os.environ.pop("FT_SPARK_AUTO_SPILL_TOLERANCE")
-        spark.conf.set("spark.sql.shuffle.partitions", before)
-    assert cfm.LAST_PREFLIGHT["strategy"] == "join"
-    assert cfm.LAST_PREFLIGHT["parts_after"] > \
-        cfm.LAST_PREFLIGHT["parts_before"]
-    assert got == want
-
-
-def test_auto_flips_to_sortmerge_past_max_parts(spark, auto_es):
-    """Second rung: budget so small the needed width exceeds
-    FT_SPARK_AUTO_MAX_PARTS -> the router flips to the sortmerge
-    kernel; results must still equal the join path."""
-    es, cuts, feats = auto_es
-    cols = [f.get_name() for f in feats]
-    want = _fm_rows(
-        fts.calculate_feature_matrix(feats, es, cutoff_time=cuts,
-                                     strategy="join"), cols)
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    os.environ["FT_SPARK_AUTO_TASK_BUDGET_BYTES"] = "16"
-    os.environ["FT_SPARK_AUTO_MAX_PARTS"] = "64"
-    try:
-        fm = fts.calculate_feature_matrix(feats, es, cutoff_time=cuts,
-                                          strategy="auto")
-        got = _fm_rows(fm, cols)
-    finally:
-        os.environ.pop("FT_SPARK_AUTO_TASK_BUDGET_BYTES")
-        os.environ.pop("FT_SPARK_AUTO_MAX_PARTS")
-        spark.conf.set("spark.sql.shuffle.partitions", before)
-    assert cfm.LAST_PREFLIGHT["strategy"] == "sortmerge"
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
-    assert got == want
-
-
-# ----------------------------------------------------------------------
-# grouped-kernel shuffle width scales with input size
-# ----------------------------------------------------------------------
-def test_strategy_schema_parity_count_is_long(spark, auto_es):
-    """strategy="auto" may route the SAME call to either path by data
-    size, so the result schema must not depend on the router: the
-    sortmerge casts count-family outputs back to long at the merge
-    boundary (asof._output_type) to match the join path's bigint."""
-    es, cuts, feats = auto_es
+def test_strategy_schema_parity_count_is_long(spark, strategy_es):
+    """The result schema must not depend on the strategy the caller
+    picks: the sortmerge casts count-family outputs back to long at the
+    merge boundary (asof._output_type) to match the join path's
+    bigint."""
+    es, cuts, feats = strategy_es
     dj = dict(fts.calculate_feature_matrix(
         feats, es, cutoff_time=cuts, strategy="join").dtypes)
     ds = dict(fts.calculate_feature_matrix(
@@ -167,6 +54,9 @@ def test_strategy_schema_parity_count_is_long(spark, auto_es):
     assert dj["COUNT(sequences)"] == "bigint"
 
 
+# ----------------------------------------------------------------------
+# grouped-kernel shuffle width scales with input size
+# ----------------------------------------------------------------------
 def test_kernel_nparts_grows_with_input(spark):
     os.environ["FT_SPARK_KERNEL_PART_BYTES"] = str(1 << 12)  # 4 KiB
     try:

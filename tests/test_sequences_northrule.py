@@ -11,7 +11,6 @@ import pytest
 from pyspark.sql import functions as F
 
 import featuretools_spark as fts
-from featuretools_spark.asof import _BOUNDED_PRIMS
 from featuretools_spark.datagen import make_cutoffs, make_entities, make_sequences
 from featuretools_spark.features import (
     AggregationFeature,
@@ -219,8 +218,9 @@ def _assert_close(a, b):
 @pytest.mark.parametrize("window", [None, "3 days"])
 def test_sortmerge_matches_join_windows(spark, seq_es_untimed,
                                        include_cutoff, window):
-    """sortmerge parity across the 4 window-boundary modes: the lo/hi
-    marker tiebreaks must reproduce _time_predicate exactly."""
+    """sortmerge parity across the 4 window-boundary modes: the marker
+    tiebreak must reproduce _time_predicate exactly, and a bounded
+    sortmerge call (routed to the join path) must equal join."""
     es, seqs = seq_es_untimed
     cuts = make_cutoffs(spark, seqs, per_entity=3)
     n_tok = IdentityFeature(es, "sequences", "n_tok")
@@ -359,13 +359,10 @@ def _assert_close_rel(a, b):
 def test_sortmerge_matches_join_all_primitives(spark, hot_seq_es, window,
                                                salt):
     """Every running-window primitive (and a where-masked count) on a
-    hot-entity input: sortmerge, unsalted and salted, unbounded and
-    windowed (the prefix-difference primitives, running hi − lo),
-    equals the join strategy to 1e-9."""
+    hot-entity input: sortmerge, unsalted and salted, unbounded (the
+    running windows) and windowed (routed to the join path), equals the
+    join strategy to 1e-9."""
     es, cuts, feats = hot_seq_es
-    if window:
-        # any other primitive routes a bounded call to join entirely
-        feats = [f for f in feats if f.primitive.name in _BOUNDED_PRIMS]
     cols = [f.get_name() for f in feats]
     kw = dict(cutoff_time=cuts, training_window=window)
     a = _fm_dict(fts.calculate_feature_matrix(
@@ -511,8 +508,7 @@ def test_nan_is_skipped_on_every_path(spark):
         "scalar": (feats, dict(cutoff_time=cut)),
         "join": (feats, dict(cutoff_time=cuts, strategy="join")),
         "sortmerge": (feats, dict(cutoff_time=cuts, strategy="sortmerge")),
-        # without max, which would route the bounded call to join
-        "sortmerge 30 days": (feats[:2], dict(
+        "sortmerge 30 days": (feats, dict(
             cutoff_time=cuts, strategy="sortmerge",
             training_window="30 days")),
         "sortmerge salt=4": (feats, dict(cutoff_time=cuts,
@@ -522,3 +518,101 @@ def test_nan_is_skipped_on_every_path(spark):
         rows = fts.calculate_feature_matrix(fs, es, **kw).collect()
         assert [tuple(r[f.get_name()] for f in fs) for r in rows] == \
             [want[:len(fs)]], path
+
+
+@pytest.mark.parametrize("per_row", [False, True])
+@pytest.mark.parametrize("strategy", ["join", "sortmerge"])
+def test_percent_true_where_matches_pandas(spark, strategy, per_row):
+    """PERCENT_TRUE(b WHERE v > 0) as pandas (the reference) computes
+    it: the where mask removes rows from the denominator, while a null
+    value or a secondary-time-index mask counts as False
+    (fillna(False)). `bs` holds b's values, governed by `resolved`."""
+    import pandas as pd
+
+    t0 = dt.datetime(2024, 5, 1)
+    cut = t0 + dt.timedelta(days=10)
+    late = cut + dt.timedelta(days=1)
+    rows = [  # (entity, b, v, resolved)
+        ("u1", True, 1.0, t0), ("u1", False, 1.0, t0),
+        ("u1", False, -1.0, t0), ("u1", False, -1.0, t0),
+        ("u2", True, 1.0, t0), ("u2", None, 1.0, t0),
+        ("u2", True, 1.0, late), ("u2", True, -1.0, t0),
+    ]
+    child = spark.createDataFrame(
+        [(f"d{i}", e, t0 + dt.timedelta(days=i % 4), b, b, v, r)
+         for i, (e, b, v, r) in enumerate(rows)],
+        "doc_id string, entity_id string, event_time timestamp, "
+        "b boolean, bs boolean, v double, resolved timestamp")
+    es = fts.EntitySet("pct")
+    es.add_dataframe("entities", spark.createDataFrame(
+        [("u1",), ("u2",)], "entity_id string"), index="entity_id")
+    es.add_dataframe("events", child, index="doc_id",
+                     time_index="event_time",
+                     secondary_time_index={"resolved": ["bs"]})
+    es.add_relationship("entities", "entity_id", "events", "entity_id")
+    pos = IdentityFeature(es, "events", "v") > 0
+    feats = [AggregationFeature(IdentityFeature(es, "events", c),
+                                "entities", "percent_true", where=pos,
+                                es=es)
+             for c in ("b", "bs")]
+
+    pdf = pd.DataFrame(rows, columns=["e", "b", "v", "resolved"])
+    pdf["b"] = pdf["b"].astype("boolean")
+    pdf["bs"] = pdf["b"].where(pdf["resolved"] < cut)
+    sel = pdf[pdf["v"] > 0]
+    want = {e: tuple(g[c].fillna(False).astype(bool).mean()
+                     for c in ("b", "bs"))
+            for e, g in sel.groupby("e")}
+
+    cutoff = spark.createDataFrame(
+        [("u1", cut), ("u2", cut)], "entity_id string, time timestamp"
+    ) if per_row else cut
+    fm = fts.calculate_feature_matrix(feats, es, cutoff_time=cutoff,
+                                      strategy=strategy)
+    got = {r["entity_id"]: tuple(r[f.get_name()] for f in feats)
+           for r in fm.collect()}
+    assert got.keys() == want.keys()
+    for e in want:
+        assert got[e] == pytest.approx(want[e], rel=1e-12), (e, got, want)
+
+
+@pytest.mark.parametrize("strategy,salt", [("join", None),
+                                           ("sortmerge", None),
+                                           ("sortmerge", 4)])
+def test_std_keeps_digits_on_large_offset_values(spark, strategy, salt):
+    """STD and VARIANCE of values with a large offset and a small spread
+    (v = 1e9 + i % 4) stay within rel 1e-6 of numpy at per-row cutoffs:
+    the running windows read Spark's (n, avg, m2) variance buffer and
+    merge salt sub-streams by Chan et al.'s pairwise update, where a
+    sum of squares would lose every digit."""
+    import numpy as np
+
+    t0 = dt.datetime(2024, 5, 1)
+    vals = [1e9 + (i % 4) for i in range(40)]
+    child = spark.createDataFrame(
+        [(f"d{i}", "e1", t0 + dt.timedelta(hours=i), v)
+         for i, v in enumerate(vals)],
+        "doc_id string, entity_id string, event_time timestamp, "
+        "val double")
+    es = fts.EntitySet("offset")
+    es.add_dataframe("entities",
+                     spark.createDataFrame([("e1",)], "entity_id string"),
+                     index="entity_id")
+    es.add_dataframe("sequences", child, index="doc_id",
+                     time_index="event_time")
+    es.add_relationship("entities", "entity_id", "sequences", "entity_id")
+    val = IdentityFeature(es, "sequences", "val")
+    feats = [AggregationFeature(val, "entities", p, es=es)
+             for p in ("std", "variance")]
+    n_seen = (13, 22, 40)
+    cuts = spark.createDataFrame(
+        [("e1", t0 + dt.timedelta(hours=n - 0.5)) for n in n_seen],
+        "entity_id string, time timestamp")
+    fm = fts.calculate_feature_matrix(feats, es, cutoff_time=cuts,
+                                      strategy=strategy, salt=salt)
+    got = sorted((r["time"], tuple(r[f.get_name()] for f in feats))
+                 for r in fm.collect())
+    assert len(got) == len(n_seen)
+    for (_, (sd, var)), n in zip(got, n_seen):
+        assert sd == pytest.approx(np.std(vals[:n]), rel=1e-6), (n, sd)
+        assert var == pytest.approx(np.var(vals[:n]), rel=1e-6), (n, var)

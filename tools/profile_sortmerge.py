@@ -4,8 +4,7 @@ Times the whole matrix build through strategy="sortmerge" and
 strategy="join" at increasing cutoff density (cutoffs per entity),
 interleaved rep by rep. The join path expands |events| x
 |cutoffs-per-entity| rows before aggregating; sortmerge is
-O(events + cutoffs), so the curves cross at some density. The
-crossing point feeds the strategy="auto" router.
+O(events + cutoffs), so the curves cross at some density.
 
 Usage:
   python tools/profile_sortmerge.py --sweep 4,16,64,256 [--rows 2000000] [--reps 3]

@@ -18,7 +18,31 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from calibrate_preflight import _walk  # noqa: E402
+
+def _scala_seq(jseq):
+    it = jseq.iterator()
+    while it.hasNext():
+        yield it.next()
+
+
+def _walk(node):
+    """Yield every physical node, descending through AQE wrappers."""
+    yield node
+    name = node.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        yield from _walk(node.executedPlan())
+        return
+    if name.endswith("QueryStageExec"):
+        yield from _walk(node.plan())
+        return
+    for ch in _scala_seq(node.children()):
+        yield from _walk(ch)
+    # reused exchanges / subqueries hold their child via .child()
+    if name in ("ReusedExchangeExec", "ReusedSubqueryExec"):
+        try:
+            yield from _walk(node.child())
+        except Exception:
+            pass
 
 
 def _exchange_metrics_plan(plan):
