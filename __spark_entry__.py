@@ -1424,7 +1424,7 @@ def q_corr_matrix(spark, sf_dir):
     whose pairwise-F.corr plan is quadratic in width (~500k agg
     expressions at 1k columns). Oracle: DuckDB corr() per pair on the
     same lineitem columns. Greedy drop-set equivalence vs the
-    pairwise path is pytest-gated (test_round6)."""
+    pairwise path is pytest-gated (test_es_ops)."""
     from featuretools_spark.encode import _corr_matrix_gram
 
     import math

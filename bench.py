@@ -24,7 +24,7 @@ CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 HEADLINE = [
     "backfill_seq",      # flagship: north-rule as-of backfill (join strategy)
-    "backfill_seq_sm",   # same backfill through the sortmerge Arrow kernel
+    "backfill_seq_sm",   # same backfill through the JVM running windows
     "dfs_depth1",        # DFS agg fan-out on the events star
     "per_row_cutoffs",   # per-row cutoff as-of join
     "agg_basic",
@@ -270,8 +270,8 @@ def _backfill_queries(sf: float):
         "backfill_skew_sm_salted":
             lambda spark, sf_dir: run_skew(spark, "sortmerge", salt=8),
         "__prepare__": prepare,
-        # hooks for tools/profile_sortmerge.py (stage decomposition /
-        # density sweep) — not bench queries
+        # hooks for tools/profile_sortmerge.py's density sweep — not
+        # bench queries
         "__run__": run,
         "__frames__": lambda spark: {
             "seqs": _materialized(spark),

@@ -6,17 +6,26 @@ This is the throughput-critical redesign of the reference's
 O(#cutoffs) passes). We do ONE pass, with two physical strategies,
 both pure JVM (no row crosses into Python):
 
-strategy="join" (default; whole-stage codegen):
-    cutoffs ⋈ events on the entity key with the time predicate as a
-    join condition, then ONE groupBy(instance, cutoff).agg(...) for
-    every expression-strategy primitive. Catalyst/AQE pick
-    broadcast-hash when the cutoff side is small and handle skew
-    (spark.sql.adaptive.skewJoin). Cost model: per-entity work is
-    |events(entity)| × |cutoffs(entity)| — optimal when cutoffs per
-    entity are few (the common backfill shape: 1-10 label times per
-    entity). Time predicates follow the reference's _handle_time
-    (entityset.py:1407-1457): include_cutoff_time=True → t <= cutoff,
-    window t > cutoff-w; False → t < cutoff, window t >= cutoff-w.
+strategy="join" (default; whole-stage codegen): one aggregation body,
+_aggregate_rows, over the child rows visible at each cutoff, in one of
+two key shapes:
+    - per-row cutoffs: cutoffs ⋈ events on the entity key with the
+      time predicate as a join condition (a LEFT join, so a cutoff
+      without events is one null-extended row), grouped by
+      (instance, cutoff). Catalyst/AQE pick broadcast-hash when the
+      cutoff side is small and handle skew
+      (spark.sql.adaptive.skewJoin). Cost model: per-entity work is
+      |events(entity)| × |cutoffs(entity)| — optimal when cutoffs per
+      entity are few (the common backfill shape: 1-10 label times per
+      entity);
+    - a scalar cutoff: the events filtered once by the same predicate
+      against the literal, grouped by the entity key with map-side
+      partial aggregation, then left-joined onto the instance keys
+      (the reference's scalar "tuple path", cfm.py:399-432).
+    Time predicates follow the reference's _handle_time
+    (entityset.py:1407-1457, _pit_mask): include_cutoff_time=True →
+    t <= cutoff, window t > cutoff-w; False → t < cutoff, window
+    t >= cutoff-w.
 
 strategy="sortmerge" (marker union + running windows):
     union events with one MARKER row per cutoff, hash-partition on the
@@ -77,15 +86,21 @@ class AggSpec:
     sec_time_col: str | None = None
 
 
-def _time_predicate(ev_time: Column, cutoff: Column, include_cutoff_time: bool,
-                    training_window: Timedelta | None) -> Column:
-    if include_cutoff_time:
-        pred = ev_time <= cutoff
-    else:
-        pred = ev_time < cutoff
+def _pit_mask(time_col: Column, cutoff: Column, include_cutoff_time: bool,
+              training_window: Timedelta | None, lti: Column | None = None
+              ) -> Column:
+    """Column-expression form of the reference's _handle_time row filter
+    (entityset.py:1407-1447): keep t <= cutoff (or <), and inside the
+    training window — where a row's last_time_index falling in the
+    window also keeps it (child activity makes the row 'current')."""
+    pred = time_col <= cutoff if include_cutoff_time else time_col < cutoff
     if training_window is not None:
         start = training_window.subtract_from(cutoff)
-        pred = pred & (ev_time > start if include_cutoff_time else ev_time >= start)
+        wmask = time_col > start if include_cutoff_time else time_col >= start
+        if lti is not None:
+            lmask = lti > start if include_cutoff_time else lti >= start
+            wmask = wmask | lmask
+        pred = pred & wmask
     return pred
 
 
@@ -135,13 +150,13 @@ def asof_aggregate(
     `cutoffs` must be distinct on (instance_col, cutoff_col) — the
     caller (cfm) guarantees it, avoiding redundant exchanges here.
     When every cutoff is one literal timestamp, pass scalar_cutoff:
-    the plan becomes filter → ONE groupBy(key) with map-side partial
-    aggregation → left join onto the instance keys (the reference's
-    scalar "tuple path", cfm.py:399-432) — strictly cheaper than the
-    join-then-aggregate shape needed for per-row cutoffs. That path
-    returns `cutoffs` itself plus the outputs: it needs no cutoff_col
-    and keeps every column, so a caller's frame (a stacked input's
-    child frame) takes its aggregates in one join.
+    the same aggregation body then groups the child rows visible at the
+    literal by the entity key alone (map-side partial aggregation) and
+    left-joins the result onto `cutoffs` (_asof_scalar) — strictly
+    cheaper than the cutoffs ⋈ events shape per-row cutoffs need. That
+    shape returns `cutoffs` itself plus the outputs: it needs no
+    cutoff_col and keeps every column, so a caller's frame (a stacked
+    input's child frame) takes its aggregates in one join.
     """
     child = _nan_to_null(child, specs)
     if strategy == "sortmerge" and training_window is None:
@@ -192,123 +207,14 @@ def _nan_to_null(child: DataFrame, specs: list[AggSpec]) -> DataFrame:
 def _asof_scalar(child, key_col, time_col, cutoffs, instance_col, specs,
                  include_cutoff_time, training_window, n_observations,
                  scalar_cutoff):
-    """Scalar-cutoff fast path: filter events once, aggregate per key
-    (partial agg map-side), left-join results onto `cutoffs`."""
-    cut_lit = F.lit(scalar_cutoff).cast("timestamp")
-    ev = child
+    """A scalar cutoff: the child rows visible at the literal, grouped
+    by the entity key and attached to `cutoffs` by left joins."""
+    cut = F.lit(scalar_cutoff).cast("timestamp")
     if time_col is not None:
-        ev = ev.filter(
-            _time_predicate(F.col(time_col), cut_lit, include_cutoff_time,
-                            training_window)
-        )
-    if n_observations is not None:
-        w = W.partitionBy(key_col).orderBy(F.col(time_col).desc_nulls_last())
-        ev = ev.withColumn("__rn", F.row_number().over(w)).filter(
-            F.col("__rn") <= n_observations
-        )
-    expr_specs = [s for s in specs if s.primitive.strategy == "expr"]
-    two_specs = [s for s in specs if s.primitive.strategy == "twostage"]
-    flag_specs, counts_specs, complex_specs = [], [], []
-    for s in two_specs:
-        fam = s.primitive.batch_family
-        masked = s.where_col or s.sec_time_col
-        if fam == "counts":
-            counts_specs.append(s)
-        elif fam == "flag" and not (s.primitive.flag_ordered and masked):
-            flag_specs.append(s)
-        else:
-            complex_specs.append(s)
-
-    def scalar_mask(s):
-        m = F.col(s.where_col) if s.where_col else None
-        if s.sec_time_col:
-            sm = F.col(s.sec_time_col) < cut_lit
-            m = sm if m is None else (m & sm)
-        return m
-
-    out = cutoffs
-    if expr_specs or flag_specs:
-        aggs = []
-        if flag_specs:
-            wk = W.partitionBy(key_col)
-            wo = wk.orderBy(
-                F.col(time_col).asc_nulls_last() if time_col
-                else F.monotonically_increasing_id()
-            )
-            fctx = AggContext(
-                time=F.col(time_col) if time_col else None, cutoff=cut_lit)
-            for i, s in enumerate(flag_specs):
-                v = _wrap_where(F.col(s.input_cols[0]), scalar_mask(s))
-                cols, agg = s.primitive.flag_parts(
-                    v, s.out_name, fctx, wk, wo, f"s{i}")
-                for cname, cexpr in cols.items():
-                    ev = ev.withColumn(cname, cexpr)
-                aggs.append(agg.alias(s.out_name))
-        for s in expr_specs:
-            where = F.col(s.where_col) if s.where_col else None
-            if s.sec_time_col:
-                mask = F.col(s.sec_time_col) < cut_lit
-                where = mask if where is None else (where & mask)
-            if s.primitive.uses_time_index and not s.input_cols:
-                inputs = []
-                local_ctx = AggContext(
-                    time=_wrap_where(F.col(time_col), where), cutoff=cut_lit
-                )
-            else:
-                inputs = [_spec_input(F.col(c), s, cut_lit)
-                          for c in s.input_cols]
-                local_ctx = AggContext(
-                    time=(_wrap_where(F.col(time_col), where)
-                          if time_col else None),
-                    cutoff=cut_lit,
-                )
-            aggs.append(s.primitive.expr(inputs, local_ctx).alias(s.out_name))
-        agged = ev.groupBy(F.col(key_col).alias(instance_col)).agg(*aggs)
-        out = out.join(agged, on=instance_col, how="left")
-    if counts_specs:
-        # shared ranked value-counts subplan per (input, mask) group
-        groups: dict = {}
-        for s in counts_specs:
-            groups.setdefault(
-                (s.input_cols[0], s.where_col, s.sec_time_col), []
-            ).append(s)
-        for gkey in sorted(groups, key=str):
-            gspecs = groups[gkey]
-            vals = _wrap_where(F.col(gkey[0]), scalar_mask(gspecs[0]))
-            counts = (
-                ev.select(F.col(key_col).alias(instance_col),
-                          vals.alias("_vcv"))
-                .filter(F.col("_vcv").isNotNull())
-                .groupBy(instance_col, "_vcv")
-                .agg(F.count(F.lit(1)).alias("_cnt"))
-            )
-            wrk = W.partitionBy(instance_col).orderBy(
-                F.desc("_cnt"), F.asc("_vcv"))
-            part = (
-                counts.withColumn("_rn", F.row_number().over(wrk))
-                .groupBy(instance_col)
-                .agg(*[s.primitive.counts_agg("_vcv", s.out_name)
-                       for s in gspecs])
-            )
-            out = out.join(part, on=instance_col, how="left")
-    for s in complex_specs:
-        sub = ev
-        if s.where_col:
-            sub = sub.filter(F.col(s.where_col))
-        if s.sec_time_col:
-            # NULL values whose governing secondary time has not passed
-            sec_mask = F.col(s.sec_time_col) < cut_lit
-            for c in s.input_cols:
-                sub = sub.withColumn(c, F.when(sec_mask, F.col(c)))
-        ctx2 = AggContext(time=F.col(time_col) if time_col else None,
-                          cutoff=cut_lit)
-        part = s.primitive.twostage(
-            sub.withColumn("__gk", F.col(key_col)), ["__gk"],
-            s.input_cols, s.out_name, ctx2,
-        ).withColumnRenamed("__gk", instance_col)
-        out = out.join(part, on=instance_col, how="left")
-    return _fill_defaults(out, {s.out_name: s.primitive.default_value
-                                for s in specs})
+        child = child.filter(_pit_mask(F.col(time_col), cut,
+                                       include_cutoff_time, training_window))
+    return _aggregate_rows(child, [(key_col, instance_col)], cut, None,
+                           time_col, specs, n_observations, onto=cutoffs)
 
 
 # ----------------------------------------------------------------------
@@ -321,9 +227,8 @@ def _asof_join(child, key_col, time_col, cutoffs, instance_col, specs,
                          F.col(cutoff_col).alias("__c"))
     cond = F.col(key_col) == F.col("__k")
     if time_col is not None:
-        cond = cond & _time_predicate(
-            F.col(time_col), F.col("__c"), include_cutoff_time,
-            training_window)
+        cond = cond & _pit_mask(F.col(time_col), F.col("__c"),
+                                include_cutoff_time, training_window)
     # Join strategy deliberately left to the planner (guide §3.1 was
     # evaluated here in round 8): forcing a shuffled-hash build on the
     # cutoff side wins ~10% at sparse cutoff densities (4/entity) but
@@ -333,33 +238,36 @@ def _asof_join(child, key_col, time_col, cutoffs, instance_col, specs,
     # degrades gracefully in both regimes.
     return _aggregate_rows(
         cut.join(child, cond, "left"),
-        [("__k", instance_col), ("__c", cutoff_col)], "__c", key_col,
+        [("__k", instance_col), ("__c", cutoff_col)], F.col("__c"), key_col,
         time_col, specs, n_observations)
 
 
-def _aggregate_rows(rows, group, cutoff, present, time_col, specs,
-                    n_observations=None, carry=()):
-    """One output row per cutoff row, from `rows`: a LEFT join of the
-    cutoff rows with their child rows, NaN already mapped to null
-    (_nan_to_null). The join strategy's second half, and how cfm
-    aggregates the per-row frames it joins itself.
+def _aggregate_rows(rows, group, cut, present, time_col, specs,
+                    n_observations=None, carry=(), onto=None):
+    """One output row per cutoff row from `rows`, the child rows visible
+    at their cutoffs, NaN already mapped to null (_nan_to_null). Every
+    as-of aggregation on the join path runs here, at both cutoff forms.
 
     group: (column of rows, output name) pairs that identify a cutoff
-    row; cutoff: the column of rows holding its cutoff time; present: a
-    child column that is null exactly on a cutoff row without child
-    rows (the join's null-extended row); carry: (column, output name)
-    pairs of further cutoff-row columns, kept as they are. Returns the
-    group and carry columns plus one column per spec, defaults filled."""
+    row; cut: the cutoff as a Column of rows (a literal at a scalar
+    cutoff); carry: (column, output name) pairs of further cutoff-row
+    columns, kept as they are. present names a child column that is
+    null exactly on a cutoff row without child rows — `rows` is then a
+    LEFT join of the cutoff rows with their child rows and its groups
+    are the full cutoff set. present=None says `rows` holds no
+    null-extended rows: the result attaches to `onto`, the cutoff
+    frame, by left joins on the output names, every column kept.
+    Returns the group and carry columns (or onto's) plus one column per
+    spec, defaults filled."""
     gcols = [F.col(c) for c, _ in group]
     keys = [n for _, n in group]
-    cut = F.col(cutoff)
     expr_specs = [s for s in specs if s.primitive.strategy == "expr"]
     two_specs = [s for s in specs if s.primitive.strategy == "twostage"]
     # holistic batching: "flag" primitives merge into the main groupBy
     # (zero extra joins); "counts" primitives share one per-(key,value)
     # counts subplan per distinct (input, mask); the rest run per-spec
-    # but off the SHARED cutoff-join frame — never k separate
-    # cutoffs x events joins (one fact scan/shuffle per holistic)
+    # but off the SHARED rows — never k separate cutoffs x events joins
+    # (one fact scan/shuffle per holistic)
     flag_specs, counts_specs, complex_specs = [], [], []
     for s in two_specs:
         fam = s.primitive.batch_family
@@ -374,72 +282,77 @@ def _aggregate_rows(rows, group, cutoff, present, time_col, specs,
         else:
             complex_specs.append(s)
 
+    def sec_mask(s):
+        # secondary-time-index mask (reference entityset.py:1450-1455):
+        # values are NULL until their governing time has passed
+        return F.col(s.sec_time_col) < cut if s.sec_time_col else None
+
     def spec_mask(s):
         m = F.col(s.where_col) if s.where_col else None
         if s.sec_time_col:
-            # secondary-time-index mask (reference
-            # entityset.py:1450-1455): values are NULL until their
-            # governing time has passed
-            sm = F.col(s.sec_time_col) < cut
-            m = sm if m is None else (m & sm)
+            m = sec_mask(s) if m is None else (m & sec_mask(s))
         return m
 
     if n_observations is not None:
         # use_previous in observations: last-n child rows per cutoff
         w = W.partitionBy(*gcols).orderBy(
             F.col(time_col).desc_nulls_last())
-        rows = rows.withColumn("__rn", F.row_number().over(w)).filter(
-            (F.col("__rn") <= n_observations) | F.col(present).isNull()
-        )
+        keep = F.col("__rn") <= n_observations
+        if present is not None:
+            keep = keep | F.col(present).isNull()
+        rows = rows.withColumn("__rn", F.row_number().over(w)).filter(keep)
 
-    ctx = AggContext(time=F.col(time_col) if time_col else None,
-                     cutoff=cut)
+    time = F.col(time_col) if time_col else None
+    ctx = AggContext(time=time, cutoff=cut)
+
     # null-extended rows drop out of every aggregate; the count guard
     # reproduces "no child rows -> NULL -> fill default" for primitives
     # that fill nulls (percent_true's fillna(False))
-    guard = F.count(F.col(present)) > 0
+    guard = F.count(F.col(present)) > 0 if present is not None else None
+
+    def guarded(agg):
+        return agg if guard is None else F.when(guard, agg)
+
     aggs = []
     if flag_specs:
         wk = W.partitionBy(*gcols)
-        wo = wk.orderBy(
-            F.col(time_col).asc_nulls_last()
-            if time_col else F.monotonically_increasing_id()
-        )
+        wo = wk.orderBy(time.asc_nulls_last() if time_col
+                        else F.monotonically_increasing_id())
         for i, s in enumerate(flag_specs):
             v = _wrap_where(F.col(s.input_cols[0]), spec_mask(s))
             cols, agg = s.primitive.flag_parts(
                 v, s.out_name, ctx, wk, wo, f"j{i}")
             for cname, cexpr in cols.items():
                 rows = rows.withColumn(cname, cexpr)
-            aggs.append(F.when(guard, agg).alias(s.out_name))
+            aggs.append(guarded(agg).alias(s.out_name))
     for s in expr_specs:
-        where = spec_mask(s)
-        if s.primitive.uses_time_index and not s.input_cols:
+        # a where mask removes the row, its time included; a
+        # secondary-time-index mask nulls only the values, so LAST of
+        # a latest value not yet resolved is null (reference iloc[-1])
+        local_ctx = ctx if not (s.where_col and time_col) else AggContext(
+            time=F.when(F.col(s.where_col), time), cutoff=cut)
+        if s.input_cols:
+            inputs = [_spec_input(F.col(c), s, cut) for c in s.input_cols]
+        elif s.primitive.uses_time_index:
             inputs = []
-            local_ctx = AggContext(
-                time=_wrap_where(F.col(time_col), where), cutoff=cut)
-        elif not s.input_cols:
+        else:
             # pruned-input primitives (unmasked COUNT): count the
             # mandatory child column — F.count(F.lit(1)) would count
             # the null-extended row as 1
-            inputs = [_wrap_where(F.col(present), where)]
-            local_ctx = ctx
-        else:
-            inputs = [_spec_input(F.col(c), s, cut) for c in s.input_cols]
-            local_ctx = ctx if not s.where_col else AggContext(
-                time=(_wrap_where(F.col(time_col), where)
-                      if time_col else None),
-                cutoff=cut,
-            )
-        aggs.append(
-            F.when(guard, s.primitive.expr(inputs, local_ctx))
-            .alias(s.out_name))
+            here = F.col(present) if present is not None else F.lit(1)
+            inputs = [_wrap_where(here, spec_mask(s))]
+        aggs.append(guarded(s.primitive.expr(inputs, local_ctx))
+                    .alias(s.out_name))
     aggs += [F.first(F.col(c)).alias(n) for c, n in carry]
     out_keys = [F.col(c).alias(n) for c, n in group]
-    # the LEFT join keeps every cutoff row, so the groupBy output IS the
-    # full cutoff set — no join-back needed
-    out = (rows.groupBy(*out_keys).agg(*aggs) if aggs
-           else rows.select(*out_keys).distinct())
+    # with present set the LEFT join keeps every cutoff row, so the
+    # groupBy output IS the full cutoff set — no join-back needed
+    out = onto
+    if aggs:
+        agged = rows.groupBy(*out_keys).agg(*aggs)
+        out = agged if out is None else out.join(agged, on=keys, how="left")
+    elif out is None:
+        out = rows.select(*out_keys).distinct()
 
     if counts_specs:
         # ONE per-(key, value) counts subplan per distinct
@@ -471,28 +384,27 @@ def _aggregate_rows(rows, group, cutoff, present, time_col, specs,
             )
             out = out.join(part, on=keys, how="left")
 
+    gnames = [c for c, _ in group]
     for s in complex_specs:
         # multi-stage holistics (consecutive runs, since-last) off the
-        # SHARED joined frame — n_observations clamp inherited from it
-        # (last-N per reference is applied BEFORE the where filter)
-        inner = rows.filter(F.col(present).isNotNull())
+        # SHARED rows — n_observations clamp inherited from them
+        # (last-N per reference is applied BEFORE the where filter).
+        # The group keeps its row names, so ctx's cutoff reads here too
+        inner = rows
+        if present is not None:
+            inner = inner.filter(F.col(present).isNotNull())
         if s.where_col:
             inner = inner.filter(F.col(s.where_col))
-        sec_mask = F.col(s.sec_time_col) < cut if s.sec_time_col else None
         inner = inner.select(
-            *out_keys,
-            *[_wrap_where(F.col(c), sec_mask).alias(c)
-              for c in s.input_cols],
-            *( [F.col(time_col)]
-               if time_col and time_col not in s.input_cols else [] ),
+            *gcols,
+            *[_wrap_where(F.col(c), sec_mask(s)).alias(c)
+              for c in s.input_cols if c not in gnames],
+            *([time] if time_col and time_col not in s.input_cols else []),
         )
-        ctx2 = AggContext(
-            time=F.col(time_col) if time_col else None,
-            cutoff=F.col(dict(group)[cutoff]),
-        )
-        part = s.primitive.twostage(inner, keys, s.input_cols, s.out_name,
-                                    ctx2)
-        out = out.join(part, on=keys, how="left")
+        part = s.primitive.twostage(inner, gnames, s.input_cols, s.out_name,
+                                    ctx)
+        out = out.join(part.withColumnsRenamed(dict(group)), on=keys,
+                       how="left")
 
     return _fill_defaults(out, {s.out_name: s.primitive.default_value
                                 for s in specs})

@@ -66,6 +66,7 @@ from featuretools_spark.asof import (
     _fill_defaults,
     _finalize,
     _nan_to_null,
+    _pit_mask,
     asof_aggregate,
 )
 from featuretools_spark.entityset import LTI_COLUMN_NAME, EntitySet
@@ -112,11 +113,10 @@ def _pit_child(es, name: str, time_col, pit) -> DataFrame:
     if time_col is None:
         return es[name]
     sc, inc, _tw = pit
-    cut = F.lit(sc).cast("timestamp")
-    pred = (F.col(time_col) <= cut) if inc else (F.col(time_col) < cut)
     return _cached_frame(
         (id(es), name, "pit", str(sc), inc),
-        lambda: es[name].filter(pred),
+        lambda: es[name].filter(
+            _pit_mask(F.col(time_col), _cut(pit), inc, None)),
     )
 
 
@@ -255,8 +255,7 @@ def calculate_feature_matrix(
         # be pure extra work.
         base_keys = cutoffs.select(index_col, CUTOFF_COL) \
             .repartition(F.col(index_col)).distinct()
-        if matrix_is_bare:
-            matrix = base_keys
+        matrix = base_keys
 
     # ---- aggregation features, one as-of aggregation per group ----
     if approx_td is not None and scalar_cutoff is None:
@@ -839,7 +838,7 @@ def _aggregate_keyed(es, feats, bases, keys, index_col, names, pit, window,
     specs = _specs(es, feats, names, static + varying, scols + vcols)
     return _aggregate_rows(
         _nan_to_null(rows, specs), [(up[c], c) for c in row_keys],
-        CUTOFF_COL, key_col, time_col, specs, nobs,
+        cut, key_col, time_col, specs, nobs,
         carry=[(n, c) for c, n in up.items() if c not in row_keys])
 
 
@@ -1015,14 +1014,13 @@ def _apply_scalar_pit(es, table, df, pit):
     ti = es.time_index(table)
     if ti is None:
         return df
-    sc, inc, tw = pit
-    cut = F.lit(sc).cast("timestamp")
+    _, inc, tw = pit
     lti = (
         F.col(LTI_COLUMN_NAME)
         if es.meta[table].last_time_index and LTI_COLUMN_NAME in df.columns
         else None
     )
-    return df.filter(_pit_mask(F.col(ti), cut, inc, tw, lti=lti))
+    return df.filter(_pit_mask(F.col(ti), _cut(pit), inc, tw, lti=lti))
 
 
 def _child_frame(es, path, pit):
@@ -1085,23 +1083,6 @@ def _cut(pit) -> Column:
     else the frame's CUTOFF_COL."""
     return (F.col(CUTOFF_COL) if pit[0] is None
             else F.lit(pit[0]).cast("timestamp"))
-
-
-def _pit_mask(time_col, cutoff, include_cutoff_time, training_window,
-              lti=None):
-    """Column-expression form of the reference's _handle_time row filter
-    (entityset.py:1407-1447): keep t <= cutoff (or <), and inside the
-    training window — where a row's last_time_index falling in the
-    window also keeps it (child activity makes the row 'current')."""
-    pred = time_col <= cutoff if include_cutoff_time else time_col < cutoff
-    if training_window is not None:
-        start = training_window.subtract_from(cutoff)
-        wmask = time_col > start if include_cutoff_time else time_col >= start
-        if lti is not None:
-            lmask = lti > start if include_cutoff_time else lti >= start
-            wmask = wmask | lmask
-        pred = pred & wmask
-    return pred
 
 
 def _sec_governing_col(es, table, feature):

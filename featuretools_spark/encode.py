@@ -129,7 +129,7 @@ def remove_low_information_features(
 
 
 #: widest matrix the pairwise plan handles comfortably. MEASURED
-#: (tools/bench_corr_width.py, 100k rows, local[32], 8g heap): gram
+#: (BENCH/corr_width_r6.json, 100k rows, local[32], 8g heap): gram
 #: beats pairwise already at 16 columns (6.4s vs 11.1s) and pairwise
 #: OOMs by 64 columns — each pair needs ~6 non-dedupable moment
 #: aggregate buffers (pair-masked, so Catalyst cannot share them

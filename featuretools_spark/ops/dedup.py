@@ -247,7 +247,7 @@ def simhash_near_duplicates(
     output contract is {hamming <= max_hamming} INTERSECT
     {jaccard >= verify_jaccard}, NOT the full J>=t pair set. Recall
     of planted near-dups stays pinned by the quantitative pytest
-    (test_round6 witness-margin tests). hash_fn="md5" makes the
+    (test_dedup_quality witness-margin tests). hash_fn="md5" makes the
     whole pipeline engine-agnostic so a SQL oracle can reproduce the
     contract exactly at any scale.
 

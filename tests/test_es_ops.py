@@ -1,9 +1,10 @@
 """EntitySet ops: interesting values + DFS where clauses, secondary
 time index masking, encode_features, selection ops, normalize, concat,
-query_by_values."""
+query_by_values, and the one-pass Gram-matrix correlation."""
 
 import datetime as dt
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -131,3 +132,80 @@ def test_normalize_and_concat_and_query(spark):
     q2 = es.query_by_values("log", ["s1"], column_name="sess",
                             time_last=dt.datetime(2024, 1, 1))
     assert {r["id"] for r in q2.collect()} == {1}
+
+
+# ----------------------------------------------------------------------
+# one-pass Gram-matrix correlation (VERDICT r5 stretch: the pairwise
+# F.corr plan is quadratic in width — 1k columns would be ~500k agg
+# expressions; the gram path is O(1) plan size)
+# ----------------------------------------------------------------------
+def _corr_pdf():
+    import numpy as np
+    import pandas as pd
+    rnd = np.random.default_rng(7)
+    rows = 400
+    base = rnd.normal(size=rows)
+    return pd.DataFrame({
+        "a": base,
+        "b": base * 2.0 + rnd.normal(scale=1e-3, size=rows),
+        "c": rnd.normal(size=rows),
+        "d": np.where(rnd.random(rows) < 0.3, np.nan,
+                      base + rnd.normal(scale=0.5, size=rows)),
+        "e": -base,
+        "f": np.ones(rows),
+    })
+
+
+def test_corr_gram_matches_pandas_pairwise_complete(spark):
+    import numpy as np
+    from featuretools_spark.encode import _corr_matrix_gram
+    pdf = _corr_pdf()
+    df = spark.createDataFrame(pdf).repartition(5)
+    got = _corr_matrix_gram(df, list(pdf.columns))
+    want = pdf.corr(min_periods=1).to_numpy()
+    assert np.allclose(got, want, atol=1e-9, equal_nan=True)
+
+
+def test_corr_gram_drop_set_matches_pairwise(spark):
+    from featuretools_spark.encode import (
+        remove_highly_correlated_features,
+    )
+    df = spark.createDataFrame(_corr_pdf()).repartition(3)
+    out_p = remove_highly_correlated_features(df, 0.95, method="pairwise")
+    out_g = remove_highly_correlated_features(df, 0.95, method="gram")
+    assert out_p.columns == out_g.columns
+    assert "b" not in out_g.columns      # 0.99-corr copy of a dropped
+    assert "e" not in out_g.columns      # perfect anti-correlation
+    assert {"a", "c", "d", "f"} <= set(out_g.columns)
+
+
+def test_corr_gram_empty_input_drops_nothing(spark):
+    from featuretools_spark.encode import (
+        remove_highly_correlated_features,
+    )
+    cols = list(_corr_pdf().columns)
+    df = spark.createDataFrame(
+        _corr_pdf().iloc[:0], schema=" double, ".join(cols) + " double")
+    out = remove_highly_correlated_features(df, 0.95, method="gram")
+    assert out.columns == list(_corr_pdf().columns)
+
+
+# gram-path correlation clamps negative variance and rejects
+# |corr| > 1 garbage instead of letting it cross the drop threshold
+def test_gram_corr_clamps_degenerate_variance(spark):
+    from featuretools_spark.encode import _corr_matrix_gram
+
+    # a near-constant column whose B - A^2/N cancels catastrophically
+    # in float64, plus a real column
+    n = 400
+    rows = [(1.0e9 + (i % 2) * 1e-4, float(i)) for i in range(n)]
+    df = spark.createDataFrame(rows, ["nearconst", "ramp"])
+    corr = _corr_matrix_gram(df, ["nearconst", "ramp"])
+    finite = corr[np.isfinite(corr)]
+    assert np.all(np.abs(finite) <= 1.0 + 1e-9), corr
+
+    # exactly-constant column: NaN (no variance), never a drop signal
+    rows2 = [(7.0, float(i)) for i in range(50)]
+    df2 = spark.createDataFrame(rows2, ["const", "ramp"])
+    corr2 = _corr_matrix_gram(df2, ["const", "ramp"])
+    assert np.isnan(corr2[0, 1]) and np.isnan(corr2[1, 0])

@@ -2,15 +2,19 @@
 zero temporal leakage, token-array pass-through equality,
 partitioning invariance, include_cutoff_time semantics — and the as-of
 evaluators (scalar, join, sortmerge running windows) agreeing on
-windows, salting, last-N, empty windows, trend precision and NaN."""
+windows, salting, last-N, empty windows, trend precision and NaN; one
+result schema whichever strategy runs, and the grouped-kernel shuffle
+width (cfm._kernel_nparts)."""
 
 import datetime as dt
 import math
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
 import featuretools_spark as fts
+from featuretools_spark import cfm
 from featuretools_spark.datagen import make_cutoffs, make_entities, make_sequences
 from featuretools_spark.features import (
     AggregationFeature,
@@ -219,7 +223,7 @@ def _assert_close(a, b):
 def test_sortmerge_matches_join_windows(spark, seq_es_untimed,
                                        include_cutoff, window):
     """sortmerge parity across the 4 window-boundary modes: the marker
-    tiebreak must reproduce _time_predicate exactly, and a bounded
+    tiebreak must reproduce _pit_mask exactly, and a bounded
     sortmerge call (routed to the join path) must equal join."""
     es, seqs = seq_es_untimed
     cuts = make_cutoffs(spark, seqs, per_entity=3)
@@ -576,6 +580,61 @@ def test_percent_true_where_matches_pandas(spark, strategy, per_row):
         assert got[e] == pytest.approx(want[e], rel=1e-12), (e, got, want)
 
 
+@pytest.mark.parametrize("per_row", [False, True])
+@pytest.mark.parametrize("strategy", ["join", "sortmerge"])
+def test_secondary_mask_nulls_values_not_times(spark, strategy, per_row):
+    """A secondary-time-index mask nulls a value and leaves its row in
+    time order (reference entityset.py:1450-1455), so FIRST and LAST
+    read pandas' iloc[0] and iloc[-1]: null when that row's value is
+    not yet resolved at the cutoff. Only a where mask removes a row
+    (`ok` holds on every row, so LAST WHERE ok is LAST). u1's latest
+    cost and u2's earliest resolve after the cutoff."""
+    import pandas as pd
+
+    t0 = dt.datetime(2024, 5, 1)
+    cut = t0 + dt.timedelta(days=10)
+    late = cut + dt.timedelta(days=1)
+    rows = [  # (entity, day, cost, resolved)
+        ("u1", 1, 100.0, t0), ("u1", 2, 200.0, t0), ("u1", 3, 300.0, late),
+        ("u2", 1, 100.0, late), ("u2", 2, 200.0, t0), ("u2", 3, 300.0, t0),
+    ]
+    child = spark.createDataFrame(
+        [(f"d{i}", e, t0 + dt.timedelta(days=d), c, True, r)
+         for i, (e, d, c, r) in enumerate(rows)],
+        "doc_id string, entity_id string, event_time timestamp, "
+        "cost double, ok boolean, resolved timestamp")
+    es = fts.EntitySet("sec")
+    es.add_dataframe("entities", spark.createDataFrame(
+        [("u1",), ("u2",)], "entity_id string"), index="entity_id")
+    es.add_dataframe("events", child, index="doc_id",
+                     time_index="event_time",
+                     secondary_time_index={"resolved": ["cost"]})
+    es.add_relationship("entities", "entity_id", "events", "entity_id")
+    cost = IdentityFeature(es, "events", "cost")
+    ok = IdentityFeature(es, "events", "ok")
+    feats = [AggregationFeature(cost, "entities", "last", es=es),
+             AggregationFeature(cost, "entities", "first", es=es),
+             AggregationFeature(cost, "entities", "last", where=ok, es=es)]
+
+    pdf = pd.DataFrame(rows, columns=["e", "day", "cost", "resolved"])
+    pdf["cost"] = pdf["cost"].where(pdf["resolved"] < cut)
+    want = {}
+    for e, g in pdf.sort_values("day").groupby("e"):
+        vals = (g["cost"].iloc[-1], g["cost"].iloc[0], g["cost"].iloc[-1])
+        want[e] = tuple(None if pd.isna(v) else v for v in vals)
+    assert want["u1"] == (None, 100.0, None)
+    assert want["u2"] == (300.0, None, 300.0)
+
+    cutoff = spark.createDataFrame(
+        [("u1", cut), ("u2", cut)], "entity_id string, time timestamp"
+    ) if per_row else cut
+    fm = fts.calculate_feature_matrix(feats, es, cutoff_time=cutoff,
+                                      strategy=strategy)
+    got = {r["entity_id"]: tuple(r[f.get_name()] for f in feats)
+           for r in fm.collect()}
+    assert got == want
+
+
 @pytest.mark.parametrize("strategy,salt", [("join", None),
                                            ("sortmerge", None),
                                            ("sortmerge", 4)])
@@ -616,3 +675,124 @@ def test_std_keeps_digits_on_large_offset_values(spark, strategy, salt):
     for (_, (sd, var)), n in zip(got, n_seen):
         assert sd == pytest.approx(np.std(vals[:n]), rel=1e-6), (n, sd)
         assert var == pytest.approx(np.var(vals[:n]), rel=1e-6), (n, var)
+
+
+# ----------------------------------------------------------------------
+# one result schema for every as-of strategy
+# ----------------------------------------------------------------------
+@pytest.fixture(scope="module")
+def strategy_es(spark):
+    seqs = make_sequences(spark, n_rows=3000, n_entities=60).cache()
+    ents = make_entities(seqs)
+    es = fts.EntitySet("strategy")
+    es.add_dataframe("entities", ents, index="entity_id",
+                     time_index="first_seen")
+    es.add_dataframe("sequences", seqs, index="doc_id",
+                     time_index="event_time")
+    es.add_relationship("entities", "entity_id", "sequences", "entity_id")
+    cuts = make_cutoffs(spark, seqs, per_entity=3).cache()
+    n_tok = IdentityFeature(es, "sequences", "n_tok")
+    feats = [
+        AggregationFeature(
+            IdentityFeature(es, "sequences", "doc_id"), "entities",
+            "count", es=es),
+        AggregationFeature(n_tok, "entities", "sum", es=es),
+        AggregationFeature(n_tok, "entities", "mean", es=es),
+    ]
+    return es, cuts, feats
+
+
+def test_strategy_schema_parity_count_is_long(spark, strategy_es):
+    """The result schema must not depend on the strategy the caller
+    picks: the sortmerge casts count-family outputs back to long at the
+    merge boundary (asof._output_type) to match the join path's
+    bigint."""
+    es, cuts, feats = strategy_es
+    dj = dict(fts.calculate_feature_matrix(
+        feats, es, cutoff_time=cuts, strategy="join").dtypes)
+    ds = dict(fts.calculate_feature_matrix(
+        feats, es, cutoff_time=cuts, strategy="sortmerge").dtypes)
+    assert dj == ds
+    assert dj["COUNT(sequences)"] == "bigint"
+
+
+# ----------------------------------------------------------------------
+# grouped-kernel shuffle width scales with input size
+# ----------------------------------------------------------------------
+def test_kernel_nparts_grows_with_input(spark):
+    os.environ["FT_SPARK_KERNEL_PART_BYTES"] = str(1 << 12)  # 4 KiB
+    try:
+        small = cfm._kernel_nparts(spark.range(10))
+        big = cfm._kernel_nparts(spark.range(1_000_000))
+    finally:
+        os.environ.pop("FT_SPARK_KERNEL_PART_BYTES")
+    floor = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert small == floor            # never below the session width
+    assert big > small               # and grows with input bytes
+    # cap guard
+    os.environ["FT_SPARK_KERNEL_PART_BYTES"] = "1"
+    os.environ["FT_SPARK_KERNEL_MAX_PARTS"] = "100"
+    try:
+        assert cfm._kernel_nparts(spark.range(1_000_000)) == 100
+    finally:
+        os.environ.pop("FT_SPARK_KERNEL_PART_BYTES")
+        os.environ.pop("FT_SPARK_KERNEL_MAX_PARTS")
+
+
+def test_kernel_nparts_ignores_join_multiplied_estimates(spark):
+    """Regression: Catalyst propagates sizeInBytes MULTIPLICATIVELY
+    through joins, so the plan-root stat of a multi-join plan
+    overshoots by orders of magnitude — and repartition(n, cols) is a
+    user width AQE will not coalesce, so the overshoot became 32768
+    real tasks on a 150-row test. _kernel_nparts must size from the
+    LEAF scans: a self-join chain over a tiny input stays at the
+    session floor no matter how many joins the plan stacks."""
+    import pyspark.sql.functions as F
+
+    a = spark.range(100).withColumn("k", F.col("id") % 10)
+    j = a
+    for i in range(4):
+        j = j.join(a.select("k", F.col("id").alias(f"id{i}")), "k")
+    os.environ["FT_SPARK_KERNEL_PART_BYTES"] = str(64 << 20)
+    try:
+        got = cfm._kernel_nparts(j)
+    finally:
+        os.environ.pop("FT_SPARK_KERNEL_PART_BYTES")
+    assert got == int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+
+def test_kernel_nparts_ignores_statless_rdd_leaves(spark):
+    """Regression: a LogicalRDD leaf (any createDataFrame / Arrow /
+    checkpoint boundary — e.g. the test suites' cutoff DataFrames)
+    has no statistics and reports the defaultSizeInBytes sentinel;
+    summing it drove the kernel width straight to the 32768 cap on a
+    150-row input. Unknown-sized leaves must contribute the floor."""
+    pdf = spark.createDataFrame(
+        [(i, float(i)) for i in range(50)], "k long, v double")
+    leaves = pdf._jdf.queryExecution().optimizedPlan().collectLeaves()
+    it, has_rdd_leaf = leaves.iterator(), False
+    while it.hasNext():
+        n = it.next()
+        if "RDD" in n.nodeName():
+            has_rdd_leaf = True
+    got = cfm._kernel_nparts(pdf)
+    floor = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    if has_rdd_leaf:
+        assert got == floor
+    else:  # environment materialized it as LocalRelation: still tiny
+        assert got == floor
+
+
+# _kernel_nparts' floor is the session's configured width
+def test_kernel_floor_exempt_from_escalated_width(spark):
+    from featuretools_spark import cfm
+
+    df = spark.range(100).withColumn("g", F.col("id") % 4)
+    base = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert cfm._kernel_nparts(df) == base
+    try:
+        # a session genuinely CONFIGURED wide keeps its width
+        spark.conf.set("spark.sql.shuffle.partitions", "4096")
+        assert cfm._kernel_nparts(df) == 4096
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", str(base))
