@@ -668,29 +668,6 @@ def test_simhash_candidate_volume_guard(spark):
     assert n > 0
 
 
-# simhash_near_duplicates releases its persisted chunk table on the
-# success path
-def test_simhash_releases_chunk_cache(spark):
-    from featuretools_spark.ops.dedup import simhash_near_duplicates
-
-    texts = [
-        ("a", "the quick brown fox jumps over the lazy dog again"),
-        ("b", "the quick brown fox jumps over the lazy dog againn"),
-        ("c", "entirely different content with no overlap at all xyz"),
-    ]
-    df = spark.createDataFrame(texts, ["doc_id", "text"])
-    before = spark.sparkContext._jsc.getPersistentRDDs().size()
-    out = simhash_near_duplicates(df, "doc_id", "text", max_hamming=10)
-    out.count()  # materialize the result
-    after = spark.sparkContext._jsc.getPersistentRDDs().size()
-    # the chunk table must be unpersisted; at most the (small, eager)
-    # localCheckpoint of the filtered pairs remains, and THAT one the
-    # ContextCleaner reclaims once `out` is dereferenced — the leak
-    # was the signature-scale chunk cache surviving every call
-    assert after <= before + 1, (
-        f"simhash leaked {after - before} persisted RDD(s)")
-
-
 def test_redact_pii_counts_and_text(spark):
     from featuretools_spark.ops.scrub import redact_pii
 

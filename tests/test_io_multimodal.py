@@ -618,39 +618,3 @@ def test_frame_sample_max_ticks_caps_and_is_detectable(spark):
     assert max(r["frame_t"] for r in rows) == pytest.approx(4 * 0.25)
     full = frame_sample(df, every_s=0.25).collect()   # default cap 1024
     assert len(full) == 12
-
-
-# progressive scans with out-of-band Ss/Se/Ah/Al raise ValueError (the
-# strict=False degrade-to-NULL contract catches only ValueError), never
-# numpy IndexError
-def _patch_first_ac_sos(payload: bytes, se_value: int) -> bytes:
-    """Return payload with the first AC scan's Se byte overwritten.
-
-    SOS layout: FF DA | len(2) | Ns(1) | Ns*(Cs,TdTa) | Ss | Se | AhAl.
-    """
-    d = bytearray(payload)
-    pos = 0
-    while True:
-        pos = d.find(b"\xff\xda", pos)
-        if pos < 0:
-            raise AssertionError("no AC SOS found to patch")
-        ns = d[pos + 4]
-        ss_at = pos + 5 + 2 * ns
-        if d[ss_at] > 0:  # AC scan
-            d[ss_at + 1] = se_value
-            return bytes(d)
-        pos += 2
-
-
-def test_progressive_rejects_out_of_band_se():
-    from featuretools_spark.ops.jpeg import (
-        decode_jpeg, encode_jpeg_progressive)
-
-    arr = (np.arange(16 * 16 * 3) % 251).reshape(16, 16, 3).astype(
-        np.uint8)
-    good = encode_jpeg_progressive(arr)
-    decode_jpeg(good)  # sanity: unpatched payload decodes
-
-    bad = _patch_first_ac_sos(good, 200)
-    with pytest.raises(ValueError, match="spectral selection"):
-        decode_jpeg(bad)

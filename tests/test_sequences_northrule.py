@@ -781,18 +781,3 @@ def test_kernel_nparts_ignores_statless_rdd_leaves(spark):
         assert got == floor
     else:  # environment materialized it as LocalRelation: still tiny
         assert got == floor
-
-
-# _kernel_nparts' floor is the session's configured width
-def test_kernel_floor_exempt_from_escalated_width(spark):
-    from featuretools_spark import cfm
-
-    df = spark.range(100).withColumn("g", F.col("id") % 4)
-    base = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    assert cfm._kernel_nparts(df) == base
-    try:
-        # a session genuinely CONFIGURED wide keeps its width
-        spark.conf.set("spark.sql.shuffle.partitions", "4096")
-        assert cfm._kernel_nparts(df) == 4096
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", str(base))
