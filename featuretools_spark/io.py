@@ -7,6 +7,10 @@ split into deterministic partitions (hash buckets of the instance
 key); each bucket writes an independent parquet directory plus a
 _MANIFEST json with row counts, wall time and the feature list —
 re-running skips buckets whose manifest exists (idempotent resume).
+A bucket's rows are counted by an observe() in the write's own
+execution, so the manifest costs no Spark job, and every manifest is
+written to a temp file and renamed into place, so a crash leaves the
+old file or none, never a truncated one.
 
 Iceberg note: with an Iceberg catalog on the classpath the same flow
 maps to `df.writeTo(table).overwritePartitions()`; this container has
@@ -20,7 +24,7 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -44,6 +48,9 @@ def backfill_with_checkpoints(
     fm_builder: callable (bucket_predicate_column) -> DataFrame; it
     must apply the predicate to the CUTOFF side so each slice is an
     independent re-runnable job.
+    Each bucket's `rows` is counted during its write (an observe() on
+    the builder's frame), with no read-back. `spark` is accepted and
+    not used.
     Returns the run summary (also written to <out_dir>/_RUN.json).
     """
     os.makedirs(out_dir, exist_ok=True)
@@ -60,8 +67,10 @@ def backfill_with_checkpoints(
             continue
         t0 = time.time()
         df = fm_builder(b, n_buckets)
-        df.write.mode("overwrite").parquet(part_dir)
-        rows = spark.read.parquet(part_dir).count() if spark else df.count()
+        obs = Observation()
+        df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+            "overwrite").parquet(part_dir)
+        rows = obs.get["rows"]
         manifest = {
             "bucket": b,
             "rows": rows,
@@ -69,13 +78,20 @@ def backfill_with_checkpoints(
             "columns": df.columns,
             "written_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }
-        with open(manifest_path, "w") as fh:
-            json.dump(manifest, fh)
+        _write_json(manifest_path, manifest)
         summary["buckets"][b] = manifest
         summary["total_rows"] += rows
-    with open(os.path.join(out_dir, "_RUN.json"), "w") as fh:
-        json.dump(summary, fh, indent=1)
+    _write_json(os.path.join(out_dir, "_RUN.json"), summary, indent=1)
     return summary
+
+
+def _write_json(path: str, obj, **kw) -> None:
+    """Dump `obj` to a temp file beside `path`, then rename it over
+    `path`. The `_` prefix keeps the temp file out of parquet reads."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as fh:
+        json.dump(obj, fh, **kw)
+    os.replace(tmp, path)
 
 
 def bucket_of(col, n_buckets: int):

@@ -101,7 +101,7 @@ def main(argv=None):
         )
 
     summary = backfill_with_checkpoints(
-        build, args.output, n_buckets=args.buckets, spark=spark
+        build, args.output, n_buckets=args.buckets
     )
     print(json.dumps({
         "total_rows": summary["total_rows"],

@@ -188,3 +188,22 @@ def test_corr_gram_empty_input_drops_nothing(spark):
         _corr_pdf().iloc[:0], schema=" double, ".join(cols) + " double")
     out = remove_highly_correlated_features(df, 0.95, method="gram")
     assert out.columns == list(_corr_pdf().columns)
+
+
+def test_gram_corr_clamps_degenerate_variance(spark):
+    from featuretools_spark.encode import _corr_matrix_gram
+
+    # a near-constant column whose B - A^2/N cancels catastrophically
+    # in float64, plus a real column
+    n = 400
+    rows = [(1.0e9 + (i % 2) * 1e-4, float(i)) for i in range(n)]
+    df = spark.createDataFrame(rows, ["nearconst", "ramp"])
+    corr = _corr_matrix_gram(df, ["nearconst", "ramp"])
+    finite = corr[np.isfinite(corr)]
+    assert np.all(np.abs(finite) <= 1.0 + 1e-9), corr
+
+    # exactly-constant column: NaN (no variance), never a drop signal
+    rows2 = [(7.0, float(i)) for i in range(50)]
+    df2 = spark.createDataFrame(rows2, ["const", "ramp"])
+    corr2 = _corr_matrix_gram(df2, ["const", "ramp"])
+    assert np.isnan(corr2[0, 1]) and np.isnan(corr2[1, 0])

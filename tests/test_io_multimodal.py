@@ -24,9 +24,8 @@ from featuretools_spark.ops.multimodal import (
 CUT = dt.datetime(2024, 1, 20)
 
 
-def test_backfill_checkpoint_resume(es, spark, tmp_path):
-    out_dir = str(tmp_path / "bf")
-
+def _users_builder(es):
+    """A backfill builder over the users at CUT: SUM(events.value)."""
     def build(bucket, n_buckets):
         v = IdentityFeature(es, "events", "value")
         feats = [AggregationFeature(v, "users", "sum", es=es)]
@@ -36,23 +35,119 @@ def test_backfill_checkpoint_resume(es, spark, tmp_path):
             .withColumn("time", F.lit(CUT))
         )
         return fts.calculate_feature_matrix(feats, es, cutoff_time=cuts)
+    return build
 
-    s1 = backfill_with_checkpoints(build, out_dir, n_buckets=4, spark=spark)
+
+def _jobs_in_group(spark, group, fn):
+    """Run fn() under a job group; the number of Spark jobs it started."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_backfill_checkpoint_resume(es, tmp_path):
+    out_dir = str(tmp_path / "bf")
+    build = _users_builder(es)
+    s1 = backfill_with_checkpoints(build, out_dir, n_buckets=4)
     assert s1["total_rows"] == es["users"].count()
     assert not s1["resumed"]
     # second run: everything resumes from manifests
-    s2 = backfill_with_checkpoints(build, out_dir, n_buckets=4, spark=spark)
+    s2 = backfill_with_checkpoints(build, out_dir, n_buckets=4)
     assert sorted(s2["resumed"]) == [0, 1, 2, 3]
     assert s2["total_rows"] == s1["total_rows"]
     # delete one bucket -> only it recomputes
     shutil.rmtree(os.path.join(out_dir, "bucket=2"))
-    s3 = backfill_with_checkpoints(build, out_dir, n_buckets=4, spark=spark)
+    s3 = backfill_with_checkpoints(build, out_dir, n_buckets=4)
     assert sorted(s3["resumed"]) == [0, 1, 3]
     assert s3["total_rows"] == s1["total_rows"]
     # manifests carry lineage-ish metadata
     with open(os.path.join(out_dir, "bucket=0", "_MANIFEST.json")) as fh:
         m = json.load(fh)
     assert m["rows"] > 0 and "columns" in m and "wall_s" in m
+
+
+def test_backfill_manifest_rows_cost_no_job(es, spark, tmp_path):
+    """A bucket's manifest `rows` is counted in the write itself: one
+    backfill bucket starts exactly as many Spark jobs as writing the
+    builder's frame alone, and its rows equal a read-back of the
+    bucket."""
+    build = _users_builder(es)
+    alone = str(tmp_path / "alone")
+    out_dir = str(tmp_path / "bf")
+    n_write = _jobs_in_group(
+        spark, "bf-write-alone",
+        lambda: build(0, 1).write.mode("overwrite").parquet(alone))
+    n_backfill = _jobs_in_group(
+        spark, "bf-one-bucket",
+        lambda: backfill_with_checkpoints(build, out_dir, n_buckets=1))
+    assert n_write > 0
+    assert n_backfill == n_write
+    with open(os.path.join(out_dir, "bucket=0", "_MANIFEST.json")) as fh:
+        m = json.load(fh)
+    assert m["rows"] == spark.read.parquet(
+        os.path.join(out_dir, "bucket=0")).count() == es["users"].count()
+
+
+def test_backfill_empty_buckets_count_zero_and_resume(es, spark, tmp_path):
+    """More buckets than users leaves some buckets empty: their write
+    still reports its count (rows: 0), every manifest matches the
+    bucket's users, and a second run resumes every bucket. Empty
+    frames of other shapes (limit(0), no rows at all) count 0 too."""
+    n = es["users"].count() + 1
+    want = {r["b"]: r["count"] for r in es["users"].groupBy(
+        bucket_of(F.col("user_id"), n).alias("b")).count().collect()}
+    assert len(want) < n  # at least one empty bucket
+    out_dir = str(tmp_path / "bf")
+    build = _users_builder(es)
+    s1 = backfill_with_checkpoints(build, out_dir, n_buckets=n)
+    for b in range(n):
+        assert s1["buckets"][b]["rows"] == want.get(b, 0), b
+        assert spark.read.parquet(
+            os.path.join(out_dir, f"bucket={b}")).count() == want.get(b, 0)
+    assert s1["total_rows"] == es["users"].count()
+    s2 = backfill_with_checkpoints(build, out_dir, n_buckets=n)
+    assert sorted(s2["resumed"]) == list(range(n))
+    assert s2["total_rows"] == s1["total_rows"]
+
+    empties = [
+        lambda: spark.range(5).limit(0),
+        lambda: spark.createDataFrame([], "id long"),
+    ]
+    s3 = backfill_with_checkpoints(lambda b, k: empties[b](),
+                                   str(tmp_path / "empty"), n_buckets=2)
+    assert [s3["buckets"][b]["rows"] for b in (0, 1)] == [0, 0]
+
+
+def test_backfill_crash_mid_manifest_recomputes_bucket(
+        es, tmp_path, monkeypatch):
+    """A crash while a manifest is being written leaves no manifest
+    behind (temp file + rename): the next run recomputes that bucket
+    and resumes the finished ones."""
+    import featuretools_spark.io as io
+
+    out_dir = str(tmp_path / "bf")
+    build = _users_builder(es)
+    real_dump = json.dump
+
+    def dump_dies_on_bucket_2(obj, fh, **kw):
+        if isinstance(obj, dict) and obj.get("bucket") == 2:
+            fh.write(json.dumps(obj)[:10])  # a partial manifest
+            raise OSError("disk full")
+        real_dump(obj, fh, **kw)
+
+    monkeypatch.setattr(io.json, "dump", dump_dies_on_bucket_2)
+    with pytest.raises(OSError, match="disk full"):
+        backfill_with_checkpoints(build, out_dir, n_buckets=3)
+    monkeypatch.setattr(io.json, "dump", real_dump)
+
+    s = backfill_with_checkpoints(build, out_dir, n_buckets=3)
+    assert sorted(s["resumed"]) == [0, 1]
+    assert s["total_rows"] == es["users"].count()
 
 
 def test_multimodal_plumbing(spark):
@@ -600,6 +695,39 @@ def test_corrupt_jpeg_raises_valueerror_not_keyerror():
         decode_jpeg(bytes(b))
     with pytest.raises(ValueError, match="truncated|corrupt JPEG"):
         decode_jpeg(bytes(b[:24]))
+
+
+def _patch_first_ac_sos(payload: bytes, se_value: int) -> bytes:
+    """Return payload with the first AC scan's Se byte overwritten.
+
+    SOS layout: FF DA | len(2) | Ns(1) | Ns*(Cs,TdTa) | Ss | Se | AhAl.
+    """
+    d = bytearray(payload)
+    pos = 0
+    while True:
+        pos = d.find(b"\xff\xda", pos)
+        if pos < 0:
+            raise AssertionError("no AC SOS found to patch")
+        ns = d[pos + 4]
+        ss_at = pos + 5 + 2 * ns
+        if d[ss_at] > 0:  # AC scan
+            d[ss_at + 1] = se_value
+            return bytes(d)
+        pos += 2
+
+
+def test_progressive_rejects_out_of_band_se():
+    from featuretools_spark.ops.jpeg import (
+        decode_jpeg, encode_jpeg_progressive)
+
+    arr = (np.arange(16 * 16 * 3) % 251).reshape(16, 16, 3).astype(
+        np.uint8)
+    good = encode_jpeg_progressive(arr)
+    decode_jpeg(good)  # sanity: unpatched payload decodes
+
+    bad = _patch_first_ac_sos(good, 200)
+    with pytest.raises(ValueError, match="spectral selection"):
+        decode_jpeg(bad)
 
 
 def test_frame_sample_max_ticks_caps_and_is_detectable(spark):

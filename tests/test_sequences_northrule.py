@@ -781,3 +781,70 @@ def test_kernel_nparts_ignores_statless_rdd_leaves(spark):
         assert got == floor
     else:  # environment materialized it as LocalRelation: still tiny
         assert got == floor
+
+
+def test_kernel_floor_exempt_from_escalated_width(spark):
+    from featuretools_spark import cfm
+
+    df = spark.range(100).withColumn("g", F.col("id") % 4)
+    base = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert cfm._kernel_nparts(df) == base
+    try:
+        # a session genuinely CONFIGURED wide keeps its width
+        spark.conf.set("spark.sql.shuffle.partitions", "4096")
+        assert cfm._kernel_nparts(df) == 4096
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", str(base))
+
+
+@pytest.mark.parametrize("strategy", ["join", "sortmerge"])
+def test_duplicate_cutoff_rows_keep_their_pass_columns(spark, strategy):
+    """Two per-row cutoff rows with the same (instance, time) and
+    different pass-column values come back as two rows: each keeps its
+    own label, and both carry the features of that (instance, time),
+    as pandas computes them from the events at or before the cutoff."""
+    import pandas as pd
+
+    t0 = dt.datetime(2024, 5, 1)
+    mid = t0 + dt.timedelta(days=3, hours=12)
+    late = t0 + dt.timedelta(days=5, hours=12)
+    events = [(f"d{i}", e, t0 + dt.timedelta(days=i), v)
+              for i, (e, v) in enumerate([("u1", 3.0), ("u1", -1.0),
+                                          ("u2", 5.0), ("u1", 7.0),
+                                          ("u2", 2.0), ("u2", 4.0)])]
+    cutoffs = {"x": ("u1", mid), "y": ("u1", mid), "z": ("u2", mid),
+               "w": ("u2", late)}
+    es = fts.EntitySet("dup_cutoffs")
+    es.add_dataframe("entities", spark.createDataFrame(
+        [("u1",), ("u2",)], "entity_id string"), index="entity_id")
+    es.add_dataframe("events", spark.createDataFrame(
+        events, "doc_id string, entity_id string, event_time timestamp, "
+        "v double"), index="doc_id", time_index="event_time")
+    es.add_relationship("entities", "entity_id", "events", "entity_id")
+    v = IdentityFeature(es, "events", "v")
+    feats = [AggregationFeature(v, "entities", p, es=es)
+             for p in ("sum", "mean", "max")]
+    feats.append(AggregationFeature(IdentityFeature(es, "events", "doc_id"),
+                                    "entities", "count", es=es))
+
+    pdf = pd.DataFrame(events, columns=["doc_id", "e", "t", "v"])
+
+    def want(e, cut):
+        g = pdf[(pdf["e"] == e) & (pdf["t"] <= cut)]
+        return (g["v"].sum(), g["v"].mean(), g["v"].max(), len(g))
+
+    cuts = spark.createDataFrame(
+        [(e, t, label) for label, (e, t) in cutoffs.items()],
+        "entity_id string, time timestamp, label string")
+    fm = fts.calculate_feature_matrix(feats, es, cutoff_time=cuts,
+                                      strategy=strategy)
+    rows = fm.collect()
+    got = {r["label"]: (r["entity_id"],
+                        tuple(r[f.get_name()] for f in feats))
+           for r in rows}
+    assert len(rows) == len(cutoffs) and got.keys() == cutoffs.keys()
+    for label, (e, cut) in cutoffs.items():
+        assert got[label][0] == e, label
+        assert got[label][1] == pytest.approx(want(e, cut), rel=1e-12), (
+            label, got[label], want(e, cut))
+    assert got["x"] == got["y"]
