@@ -251,12 +251,17 @@ def _aggregate_rows(rows, group, cut, present, time_col, specs,
     group: (column of rows, output name) pairs that identify a cutoff
     row; cut: the cutoff as a Column of rows (a literal at a scalar
     cutoff); carry: (column, output name) pairs of further cutoff-row
-    columns, kept as they are. present names a child column that is
-    null exactly on a cutoff row without child rows — `rows` is then a
-    LEFT join of the cutoff rows with their child rows and its groups
-    are the full cutoff set. present=None says `rows` holds no
-    null-extended rows: the result attaches to `onto`, the cutoff
-    frame, by left joins on the output names, every column kept.
+    columns, each the same on every row of a group, kept as they are:
+    a fixed-width value through a first(), any other value as one more
+    grouping key (a first() over a string makes the aggregate
+    sort-based). The holistic subplans group and join on `group`
+    alone, so a null carry value joins like any other. present names
+    a child column that is null exactly on a cutoff row without child
+    rows — `rows` is then a LEFT join of the cutoff rows with their
+    child rows and its groups are the full cutoff set. present=None
+    says `rows` holds no null-extended rows: the result attaches to
+    `onto`, the cutoff frame, by left joins on the output names, every
+    column kept.
     Returns the group and carry columns (or onto's) plus one column per
     spec, defaults filled."""
     gcols = [F.col(c) for c, _ in group]
@@ -343,16 +348,23 @@ def _aggregate_rows(rows, group, cut, present, time_col, specs,
             inputs = [_wrap_where(here, spec_mask(s))]
         aggs.append(guarded(s.primitive.expr(inputs, local_ctx))
                     .alias(s.out_name))
-    aggs += [F.first(F.col(c)).alias(n) for c, n in carry]
+    types = dict(rows.dtypes)
+    fixed = [(c, n) for c, n in carry
+             if types[c].split("(")[0] in _FIXED_WIDTH]
+    aggs += [F.first(F.col(c)).alias(n) for c, n in fixed]
     out_keys = [F.col(c).alias(n) for c, n in group]
+    along = [F.col(c).alias(n) for c, n in carry if (c, n) not in fixed]
     # with present set the LEFT join keeps every cutoff row, so the
     # groupBy output IS the full cutoff set — no join-back needed
     out = onto
     if aggs:
-        agged = rows.groupBy(*out_keys).agg(*aggs)
+        agged = rows.groupBy(*out_keys, *along).agg(*aggs)
         out = agged if out is None else out.join(agged, on=keys, how="left")
     elif out is None:
-        out = rows.select(*out_keys).distinct()
+        # the groups alone (distinct() cannot take a map carry; the
+        # unread count is pruned from the plan)
+        out = rows.groupBy(*out_keys, *along).agg(
+            F.count(F.lit(1)).alias("__n")).drop("__n")
 
     if counts_specs:
         # ONE per-(key, value) counts subplan per distinct
@@ -408,6 +420,11 @@ def _aggregate_rows(rows, group, cut, present, time_col, specs,
 
     return _fill_defaults(out, {s.out_name: s.primitive.default_value
                                 for s in specs})
+
+
+# the simple type names whose first() keeps an aggregate hash-based
+_FIXED_WIDTH = ("boolean", "tinyint", "smallint", "int", "bigint", "float",
+                "double", "decimal", "date", "timestamp", "timestamp_ntz")
 
 
 def _fill_defaults(out: DataFrame, defaults: dict) -> DataFrame:

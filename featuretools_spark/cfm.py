@@ -38,13 +38,19 @@ with a single declarative plan:
   paths fold one hop at a time. Everything else (a training window,
   std/trend/holistic primitives) joins each C row to its A ancestor
   through the PIT-filtered hops
+- one key frame per call: at a scalar cutoff the target table with
+  the literal cutoff, at per-row cutoffs the cutoff rows with their
+  pass columns and, under "join", a row key. The aggregation groups
+  chain on it; at per-row cutoffs one left join then brings in the
+  target's columns (its own features, the directs' foreign keys, the
+  target-grain mask's time columns, the identity inputs of matrix
+  transforms), so the target and the cutoff rows are each read once
 - transform features compile to Column expressions on the target
   frame; uses_full_dataframe (window) transforms are computed over
   the full table in time order BEFORE instance filtering
   (feature_set.py:102-155 semantics) — sound because all our window
-  frames look only backward in time (no leakage). At a scalar cutoff
-  (strategy "join") they are the key frame the aggregations left-join
-  onto, so the target table is scanned once
+  frames look only backward in time (no leakage). At per-row cutoffs
+  a transform that reads the cutoff computes on the matrix
 
 Internally all features get sanitized column names (_f0.._fn); the
 final select renames to reference-parity feature names.
@@ -141,8 +147,16 @@ def calculate_feature_matrix(
     trade, reference cfm.py:234-276): expensive aggregates are
     computed once per (instance, binned time) instead of per exact
     cutoff. Identity/transform/direct features stay exact.
-    Returns a DataFrame keyed by (instance, time) + one column per
-    feature, named with reference-parity feature names.
+    Returns a DataFrame with one row per cutoff row (per target row at
+    a scalar cutoff): the instance, its time, the pass columns, and
+    one column per feature, named with reference-parity feature names.
+
+    One key frame per call carries every stage. At a scalar cutoff it
+    is the target table with the literal cutoff, the target's own
+    features and the columns later stages read. At per-row cutoffs it
+    is the cutoff rows themselves, pass columns on them: under "join"
+    the aggregation groups chain on those rows, each grouped back per
+    cutoff row, and one left join then brings in the target's columns.
 
     strategy: "join" (default) | "sortmerge" | "auto". "sortmerge"
     evaluates unbounded aggregations as JVM running windows (asof.py),
@@ -150,6 +164,8 @@ def calculate_feature_matrix(
     call runs on the join path, where AQE's skew join splits a hot
     key. "auto" runs "join", decided from the call's arguments with no
     data read: no measured rule yet says when the running windows win.
+    "sortmerge" and `approximate` aggregate over the key frame's
+    distinct (instance, cutoff) or binned keys and left-join back.
     """
     if strategy not in ("join", "sortmerge", "auto"):
         raise ValueError(
@@ -165,28 +181,8 @@ def calculate_feature_matrix(
             raise ValueError("all features must target the same dataframe")
     index_col = es.index(target)
     training_window = Timedelta.parse(training_window) if training_window else None
-
     cutoffs, pass_cols, scalar_cutoff = _build_cutoffs(
-        es, target, index_col, cutoff_time
-    )
-    if instance_ids is not None:
-        cutoffs = cutoffs.filter(F.col(index_col).isin(list(instance_ids)))
-    if (pass_cols and scalar_cutoff is None
-            and _is_derived_plan(cutoffs)):
-        # The cutoff table feeds TWO independent plan consumers when
-        # it carries pass columns: the distinct (instance, time) key
-        # set driving the aggregations, and the final pass-column
-        # re-attach join. Each subtree re-evaluates the user's cutoff
-        # plan — a full extra scan+aggregate when cutoff_time is
-        # DERIVED rather than stored (exchange reuse cannot fire:
-        # column pruning gives the two subtrees different shapes). A
-        # LAZY localCheckpoint materializes the (small, target-grain)
-        # cutoff rows once at first use and lets every consumer read
-        # the stored partitions — no extra eager job, one evaluation
-        # of the arbitrary user plan (guide §2.4 "remove passes").
-        # Cheap stored scans are left alone: re-scanning a parquet
-        # file twice beats holding a copy in block storage.
-        cutoffs = cutoffs.localCheckpoint(eager=False)
+        es, index_col, cutoff_time)
 
     # ---- dedupe features by name, keep order; slices pull in bases ----
     ordered, seen = [], set()
@@ -224,16 +220,10 @@ def calculate_feature_matrix(
     ordered_all = ordered + hidden
 
     internal = {f.get_name(): f"_f{i}" for i, f in enumerate(ordered_all)}
-    if scalar_cutoff is not None:
-        # scalar path: the target index is unique by contract — no
-        # exchange needed to dedupe
-        base_keys = cutoffs.select(index_col, CUTOFF_COL)
-    else:
-        base_keys = cutoffs.select(index_col, CUTOFF_COL).distinct()
-    matrix = base_keys
-    matrix_is_bare = True
-
-    approx_td = Timedelta.parse(approximate) if approximate else None
+    pit = (scalar_cutoff, include_cutoff_time, training_window)
+    # binning applies to per-row cutoffs only
+    approx_td = (Timedelta.parse(approximate)
+                 if approximate and scalar_cutoff is None else None)
 
     agg_feats = [f for f in ordered_all if isinstance(f, AggregationFeature)]
     direct_feats = [f for f in ordered_all if isinstance(f, DirectFeature)]
@@ -242,75 +232,116 @@ def calculate_feature_matrix(
         if not isinstance(f, (AggregationFeature, DirectFeature))
         and f.get_name() not in mt_names
     ]
-    if strategy == "join" and scalar_cutoff is None and agg_feats:
-        # ONE exchange serves both the key dedup and the as-of join
-        # (guide §2.4 "two operations keyed the same way share one
-        # exchange"): hash-partitioning by the entity alone already
-        # satisfies the distinct's (entity, cutoff) clustering AND the
-        # join's entity clustering, so the explicit repartition
-        # replaces the distinct's (entity, cutoff) exchange + the
-        # join's entity re-exchange with a single shuffle of the
-        # cutoff rows. Not done for sortmerge: its marker union
-        # repartitions everything anyway, so a pre-exchange here would
-        # be pure extra work.
-        base_keys = cutoffs.select(index_col, CUTOFF_COL) \
-            .repartition(F.col(index_col)).distinct()
-        matrix = base_keys
+
+    # ---- the target's columns, from one read of the target ----
+    # its own features (window transforms over the whole table, before
+    # any instance filter; at per-row cutoffs those reading the cutoff
+    # compute on the matrix), the directs' foreign keys, the columns of
+    # the target-grain mask and the identity inputs of the transforms
+    # computed on the matrix
+    tti = es.time_index(target)
+    tlti = (LTI_COLUMN_NAME if es.meta[target].last_time_index
+            and LTI_COLUMN_NAME in es[target].columns else None)
+    tgt_sec = {
+        internal[f.get_name()]: _sec_governing_col(es, target, f)
+        for f in ordered_all
+        if not isinstance(f, AggregationFeature)
+    }
+    on_matrix = [] if scalar_cutoff is not None else [
+        f for f in other_feats if _uses_calc_time(f)]
+    on_target = [f for f in other_feats if not _uses_calc_time(f)
+                 or scalar_cutoff is not None]
+    # the window inputs of the transforms computed on the matrix see
+    # the whole target in time order, as at a scalar cutoff: they
+    # compute here and ride along
+    wins: dict = {}
+    for f in on_matrix:
+        _window_deps(f, wins)
+    wins = {n: (f, f"_ft_w{i}") for i, (n, f) in enumerate(wins.items())}
+    raw = {f.relationship.child_col for f in direct_feats}
+    raw |= {c for c in (tti, tlti, *tgt_sec.values()) if c}
+    for f in matrix_trans + on_matrix:
+        _ident_deps(f, target, raw)
+    raw.discard(index_col)
+    tfeats = on_target + [f for f, _ in wins.values()]
+    tdf, tcols = _materialize_features(es, target, es[target], tfeats, tti,
+                                       pit=pit)
+    tnames = [internal[f.get_name()] for f in on_target]
+    tnames += [c for _, c in wins.values()]
+    tgt_cols = [*[F.col(c).alias(n) for c, n in zip(tcols, tnames)],
+                *sorted(raw)]
+
+    # ---- the key frame ----
+    if scalar_cutoff is not None:
+        keys = tdf.select(
+            index_col,
+            F.lit(scalar_cutoff).cast("timestamp").alias(CUTOFF_COL),
+            *tgt_cols)
+    else:
+        keys = cutoffs
+    if instance_ids is not None:
+        keys = keys.filter(F.col(index_col).isin(list(instance_ids)))
+    # under "join" each aggregation group groups back per key-frame row;
+    # "sortmerge" and approximate compute per distinct (instance,
+    # cutoff) or binned key and fan out onto the key frame
+    chain = strategy == "join" and approx_td is None
+    if scalar_cutoff is None and _is_derived_plan(keys):
+        # the cutoff rows can feed more than one read (the fan-out of
+        # "sortmerge" and approximate, a holistic aggregation's subplan,
+        # a per-cutoff direct's key frame): a lazy localCheckpoint
+        # evaluates the user's cutoff plan once, at first use, and keeps
+        # the row key below stable across reads
+        keys = keys.localCheckpoint(eager=False)
+    matrix = keys
 
     # ---- aggregation features, one as-of aggregation per group ----
-    if approx_td is not None and scalar_cutoff is None:
-        step = int(round(approx_td.to_seconds()))
-        binned_expr = F.timestamp_seconds(
-            F.floor(F.unix_micros(F.col(CUTOFF_COL)) / F.lit(step * 1_000_000))
-            * F.lit(step)
-        )
-        agg_keys = base_keys.select(
-            index_col, binned_expr.alias(CUTOFF_COL)
-        ).distinct()
-    else:
-        agg_keys = base_keys
-
-    # at a scalar cutoff the join path keeps every column of its key
-    # frame, so the target's own features ride the first aggregation:
-    # one scan of the target instead of a second scan and a join
-    pit = (scalar_cutoff, include_cutoff_time, training_window)
-    scalar_join = scalar_cutoff is not None and strategy == "join"
-    if scalar_join and other_feats:
-        tdf, tcols = _materialize_features(
-            es, target, es[target], other_feats, es.time_index(target),
-            pit=pit)
-        matrix = tdf.select(
-            index_col, F.lit(scalar_cutoff).cast("timestamp").alias(CUTOFF_COL),
-            *[F.col(c).alias(internal[f.get_name()])
-              for c, f in zip(tcols, other_feats)])
-        if instance_ids is not None:
-            matrix = matrix.filter(F.col(index_col).isin(list(instance_ids)))
-
     if strategy == "join":
         agg_feats = _rolled_up(es, agg_feats, training_window)
-    for feats in _agg_groups(agg_feats):
-        part = _aggregate_group(
-            es, feats, matrix if scalar_join and matrix_is_bare else agg_keys,
-            index_col, internal, pit, strategy, salt,
-        )
-        if approx_td is not None and scalar_cutoff is None:
-            # remap approx results onto exact cutoffs via the binned key
-            part = part.withColumnRenamed(CUTOFF_COL, "_ft_bin")
-            matrix = matrix.withColumn("_ft_bin", binned_expr).join(
-                part, on=[index_col, "_ft_bin"], how="left"
-            ).drop("_ft_bin")
-            matrix_is_bare = False
-        elif matrix_is_bare:
-            # part carries exactly the base key set, defaults filled —
-            # skip the join
-            matrix = part
-            matrix_is_bare = False
+    groups = _agg_groups(agg_feats)
+    row_keys = None
+    if chain and scalar_cutoff is None and groups:
+        # the row key keeps cutoff rows with the same (instance, time)
+        # apart; the pass columns and earlier groups' outputs ride each
+        # groupBy as carries (asof._aggregate_rows), and leading with
+        # the instance lets the as-of join's partitioning serve it
+        matrix = matrix.withColumn(_ROW_KEY, F.monotonically_increasing_id())
+        row_keys = [index_col, CUTOFF_COL, _ROW_KEY]
+    if not chain:
+        on = [index_col, CUTOFF_COL]
+        agg_keys = keys.select(index_col, CUTOFF_COL)
+        if approx_td is not None:
+            step = int(round(approx_td.to_seconds()))
+            binned = F.timestamp_seconds(
+                F.floor(F.unix_micros(F.col(CUTOFF_COL))
+                        / F.lit(step * 1_000_000)) * F.lit(step))
+            matrix = matrix.withColumn("_ft_bin", binned)
+            agg_keys = keys.select(index_col, binned.alias(CUTOFF_COL))
+            on = [index_col, "_ft_bin"]
+        if scalar_cutoff is None:
+            agg_keys = agg_keys.distinct()
+    for feats in groups:
+        if chain:
+            matrix = _aggregate_group(es, feats, matrix, index_col, internal,
+                                      pit, row_keys=row_keys)
             continue
-        else:
-            matrix = matrix.join(part, on=[index_col, CUTOFF_COL], how="left")
-        # re-fill defaults lost through the outer join
-        matrix = _fill_defaults(matrix, {
-            internal[f.get_name()]: f.primitive.default_value for f in feats})
+        part = _aggregate_group(es, feats, agg_keys, index_col, internal, pit,
+                                strategy, salt)
+        matrix = _fill_defaults(
+            matrix.join(part.withColumnRenamed(CUTOFF_COL, on[1]), on=on,
+                        how="left"),
+            {internal[f.get_name()]: f.primitive.default_value for f in feats})
+    matrix = matrix.drop(_ROW_KEY, "_ft_bin")
+
+    # ---- the target's columns onto the cutoff rows ----
+    if scalar_cutoff is None and tgt_cols:
+        matrix = matrix.join(tdf.select(index_col, *tgt_cols), on=index_col,
+                             how="left")
+    if on_matrix:
+        matrix, mcols = _materialize_features(
+            es, target, matrix, on_matrix, tti, pit=pit,
+            computed={n: c for n, (_, c) in wins.items()})
+        matrix = matrix.withColumnsRenamed({
+            c: internal[f.get_name()] for c, f in zip(mcols, on_matrix)})
 
     # ---- direct features ----
     # one left join per relationship of the parent's masked columns on
@@ -318,48 +349,15 @@ def calculate_feature_matrix(
     # aggregation, a cutoff-reading transform) is computed on the
     # parent's (key, cutoff) frame and joined on both (_join_directs)
     if direct_feats:
-        fks = {f.relationship.child_col for f in direct_feats}
-        fk_map = es[target].select(index_col, *fks)
-        matrix = matrix.join(fk_map, on=index_col, how="left")
+        fks = sorted({f.relationship.child_col for f in direct_feats})
         matrix = _join_directs(
             es, matrix, direct_feats, internal, pit,
-            keys=base_keys.join(fk_map, on=index_col, how="left"))
-        matrix = matrix.drop(*fks)
-
-    # ---- identity + transform features on the target ----
-    if other_feats and not scalar_join:
-        tdf = es[target]
-        ti = es.time_index(target)
-        # full-dataframe (window) transforms: compute over the whole
-        # table in time order first
-        tdf, tcols = _materialize_features(es, target, tdf, other_feats, ti,
-                                           cutoff_frame=base_keys,
-                                           index_col=index_col)
-        sel = tdf.select(
-            index_col,
-            *( [CUTOFF_COL] if CUTOFF_COL in tdf.columns else [] ),
-            *[F.col(c).alias(internal[f.get_name()])
-              for c, f in zip(tcols, other_feats)],
-        )
-        join_keys = [index_col] + (
-            [CUTOFF_COL] if CUTOFF_COL in sel.columns else []
-        )
-        matrix = matrix.join(sel, on=join_keys, how="left")
+            keys=None if scalar_cutoff is not None else
+            keys.select(index_col, CUTOFF_COL).join(
+                tdf.select(index_col, *fks), on=index_col, how="left"))
 
     # ---- transforms of aggregation/direct outputs, on the matrix ----
     if matrix_trans:
-        ident_cols: set = set()
-        for f in matrix_trans:
-            _ident_deps(f, target, ident_cols)
-        if ident_cols:
-            matrix = matrix.join(
-                es[target].select(
-                    index_col,
-                    *[F.col(c).alias(f"_ft_mt_{c}")
-                      for c in sorted(ident_cols)],
-                ),
-                on=index_col, how="left",
-            )
         # window/groupby transforms ON the matrix (reference
         # feature_set_calculator.py:526-592): the agg inputs are
         # already per-(instance, cutoff), so an expr window transform
@@ -377,7 +375,7 @@ def calculate_feature_matrix(
             if n in internal and n in done:
                 return F.col(internal[n])
             if isinstance(f, IdentityFeature) and f.entity == target:
-                return F.col(f"_ft_mt_{f.column}")
+                return F.col(f.column)
             if isinstance(f, TransformFeature):
                 prim = f.primitive
                 if getattr(prim, "strategy", "expr") == "pandas":
@@ -448,7 +446,6 @@ def calculate_feature_matrix(
             else:
                 matrix = matrix.withColumn(internal[n], mcomp(f))
             done.add(n)
-        matrix = matrix.drop(*[f"_ft_mt_{c}" for c in sorted(ident_cols)])
 
     # ---- target-grain point-in-time mask ----
     # reference _handle_time (entityset.py:1407-1457) filters the
@@ -458,71 +455,34 @@ def calculate_feature_matrix(
     # primitive default for aggregations and NULL for everything
     # else; secondary-time-index columns of the target are NULLed
     # while sec_time >= cutoff.
-    tti = es.time_index(target)
-    tgt_sec = {
-        internal[f.get_name()]: _sec_governing_col(es, target, f)
-        for f in ordered_all
-        if not isinstance(f, AggregationFeature)
-    }
-    need_tsec = sorted({c for c in tgt_sec.values() if c})
-    if ordered_all and (tti or need_tsec):
-        tgt_has_lti = (
-            es.meta[target].last_time_index
-            and LTI_COLUMN_NAME in es[target].columns
+    tcond = (
+        _pit_mask(F.col(tti), F.col(CUTOFF_COL), include_cutoff_time,
+                  training_window, lti=F.col(tlti) if tlti else None)
+        if tti else None
+    )
+    masked = {}
+    for f in ordered_all:
+        cname = internal[f.get_name()]
+        cond = tcond
+        sec = tgt_sec.get(cname)
+        if sec:
+            smask = F.col(sec) < F.col(CUTOFF_COL)
+            cond = smask if cond is None else (cond & smask)
+        if cond is None:
+            continue
+        dv = (
+            f.primitive.default_value
+            if isinstance(f, AggregationFeature) else None
         )
-        tsel = es[target].select(
-            index_col,
-            *([F.col(tti).alias("_ft_tgt_ti")] if tti else []),
-            *([F.col(LTI_COLUMN_NAME).alias("_ft_tgt_lti")]
-              if tgt_has_lti else []),
-            *[F.col(c).alias(f"_ft_tsec_{c}") for c in need_tsec],
-        )
-        matrix = matrix.join(tsel, on=index_col, how="left")
-        tcond = (
-            _pit_mask(F.col("_ft_tgt_ti"), F.col(CUTOFF_COL),
-                      include_cutoff_time, training_window,
-                      lti=F.col("_ft_tgt_lti") if tgt_has_lti else None)
-            if tti else None
-        )
-        for f in ordered_all:
-            cname = internal[f.get_name()]
-            cond = tcond
-            sec = tgt_sec.get(cname)
-            if sec:
-                smask = F.col(f"_ft_tsec_{sec}") < F.col(CUTOFF_COL)
-                cond = smask if cond is None else (cond & smask)
-            if cond is None:
-                continue
-            dv = (
-                f.primitive.default_value
-                if isinstance(f, AggregationFeature) else None
-            )
-            col = F.when(cond, F.col(cname))
-            if dv is not None:
-                col = col.otherwise(F.lit(dv))
-            matrix = matrix.withColumn(cname, col)
-        matrix = matrix.drop(
-            "_ft_tgt_ti", "_ft_tgt_lti",
-            *[f"_ft_tsec_{c}" for c in need_tsec],
-        )
+        col = F.when(cond, F.col(cname))
+        if dv is not None:
+            col = col.otherwise(F.lit(dv))
+        masked[cname] = col
 
-    # ---- final projection: rename + attach pass columns ----
-    out_cols = [F.col(index_col), F.col(CUTOFF_COL).alias("time")]
-    if pass_cols:
-        # repartition the (narrow) cutoff side by the entity key alone:
-        # both join children then report HashPartitioning(entity),
-        # which co-partitions a join on (entity, cutoff) with NO
-        # exchange of the WIDE matrix side — the matrix leaves the
-        # aggregation/kernel already entity-partitioned (guide §2.4;
-        # spark.sql.requireAllClusterKeysForCoPartition=false default)
-        matrix = matrix.join(
-            cutoffs.select(
-                index_col, CUTOFF_COL, *pass_cols
-            ).repartition(F.col(index_col)),
-            on=[index_col, CUTOFF_COL],
-            how="left",
-        )
-        out_cols += [F.col(c) for c in pass_cols]
+    # ---- final projection: rename, pass columns, mask ----
+    out_cols = [F.col(index_col), F.col(CUTOFF_COL).alias("time"),
+                *[F.col(_pass_col(i)).alias(c)
+                  for i, c in enumerate(pass_cols)]]
     emitted = {f.get_name() for f in features if not isinstance(f, FeatureOutputSlice)}
     for f in ordered:
         if f.get_name() in emitted:
@@ -530,7 +490,7 @@ def calculate_feature_matrix(
     for f in slices:
         base_col = F.col(internal[f.base_feature.get_name()])
         out_cols.append(F.element_at(base_col, f.n + 1).alias(f.get_name()))
-    return matrix.select(*out_cols)
+    return matrix.withColumns(masked).select(*out_cols)
 
 
 # ----------------------------------------------------------------------
@@ -723,11 +683,14 @@ def _aggregate_group(es, feats, keys, index_col, names, pit, strategy="join",
     None at per-row cutoffs. keys carries index_col and, at per-row
     cutoffs, CUTOFF_COL. At a scalar cutoff with strategy "join" keys
     may be any frame keyed by index_col; at per-row cutoffs, any frame
-    whose row_keys columns identify a row. The aggregates attach to it
-    and every column it carries is kept (how stacked inputs attach to a
-    child frame). Per-row cutoffs with row_keys, a deep path or an
-    input that varies per cutoff take _aggregate_keyed. Returns keys
-    plus one column per feature, defaults filled."""
+    whose row_keys columns (default: index_col, CUTOFF_COL) identify a
+    row. The aggregates attach to it and every column it carries is
+    kept (how the matrix chains its groups and stacked inputs attach to
+    a child frame). Per-row cutoffs take _aggregate_keyed, except a
+    "sortmerge" group over one hop with inputs that do not vary per
+    cutoff, which runs asof_aggregate over distinct (index_col,
+    CUTOFF_COL) keys. Returns keys plus one column per feature,
+    defaults filled."""
     win, nobs = _use_previous(feats[0])
     sc, inc, tw = pit
     # reference applies BOTH filters (ES pre-filtered by
@@ -742,7 +705,7 @@ def _aggregate_group(es, feats, keys, index_col, names, pit, strategy="join",
     time_col = es.time_index(child)
     bases = [b for f in feats
              for b in (*f.base_features, *filter(None, [f.where]))]
-    if sc is None and (row_keys or len(path) > 1
+    if sc is None and (strategy == "join" or len(path) > 1
                        or any(map(_per_cutoff, bases))):
         return _aggregate_keyed(es, feats, bases, keys, index_col, names,
                                 pit, window, nobs, row_keys)
@@ -969,9 +932,20 @@ def _is_derived_plan(df) -> bool:
         "Deduplicate", "Distinct"))
 
 
-def _build_cutoffs(es, target, index_col, cutoff_time):
-    """Normalize cutoff_time into a DataFrame (index_col, CUTOFF_COL,
-    *pass_cols)."""
+# the cutoff rows' row key, and the name a pass column takes on the
+# matrix (apart from the target's columns the matrix also carries)
+_ROW_KEY = "_ft_row"
+
+
+def _pass_col(i: int) -> str:
+    return f"_ft_p{i}"
+
+
+def _build_cutoffs(es, index_col, cutoff_time):
+    """Normalize cutoff_time. A cutoff table gives (its rows as
+    (index_col, CUTOFF_COL, *_pass_col(i)), the pass column names,
+    None); a scalar or None (the latest time in the EntitySet) gives
+    (None, [], the cutoff)."""
     if isinstance(cutoff_time, DataFrame):
         cols = cutoff_time.columns
         inst = index_col if index_col in cols else (
@@ -982,17 +956,14 @@ def _build_cutoffs(es, target, index_col, cutoff_time):
         df = cutoff_time.select(
             F.col(inst).alias(index_col),
             F.col(tcol).cast("timestamp").alias(CUTOFF_COL),
-            *pass_cols,
+            *[F.col(c).alias(_pass_col(i)) for i, c in enumerate(pass_cols)],
         )
         return df, pass_cols, None
     if cutoff_time is None:
         cutoff_time = _max_time(es)
     if isinstance(cutoff_time, str):
         cutoff_time = _dt.datetime.fromisoformat(cutoff_time)
-    df = es[target].select(
-        F.col(index_col), F.lit(cutoff_time).cast("timestamp").alias(CUTOFF_COL)
-    )
-    return df, [], cutoff_time
+    return None, [], cutoff_time
 
 
 def _max_time(es):
@@ -1150,6 +1121,16 @@ def _ident_deps(f, table, acc: set):
         _ident_deps(d, table, acc)
 
 
+def _window_deps(f, acc: dict):
+    """Top-most dependencies of f that are window transforms over the
+    table (uses_full_dataframe) and do not read the cutoff, by name."""
+    for d in f.get_dependencies():
+        if _uses_full_df(d) and not _uses_calc_time(d):
+            acc.setdefault(d.get_name(), d)
+        else:
+            _window_deps(d, acc)
+
+
 def _per_cutoff(f) -> bool:
     """True when f's value at a row varies with the cutoff: it reads
     the cutoff, or is or contains an aggregation or a direct feature
@@ -1158,19 +1139,17 @@ def _per_cutoff(f) -> bool:
             or _has_agg_or_direct_dep(f) or _uses_calc_time(f))
 
 
-def _materialize_features(es, table, df, feats, time_col,
-                          cutoff_frame=None, index_col=None, pit=None,
-                          row_keys=None):
+def _materialize_features(es, table, df, feats, time_col, pit=None,
+                          row_keys=None, computed=None):
     """Add one column per feature to df; returns (df, colnames).
+    computed: feature name -> the column of df already holding it.
 
     Pure row-wise transforms compile into a single select; window
     transforms (uses_full_dataframe) compile into Window expressions
     over (partition?, time) — computed over all rows before any
     instance filtering. uses_calc_time transforms read the cutoff of
     pit = (cutoff, include_cutoff_time, training_window) (_cut: the
-    literal at a scalar cutoff, else df's CUTOFF_COL); without a pit
-    df is joined with cutoff_frame first (adding CUTOFF_COL and
-    possibly duplicating rows per cutoff).
+    literal at a scalar cutoff, else df's CUTOFF_COL).
 
     Stacked inputs — AggregationFeature/DirectFeature nodes at this
     table's grain (depth>=2 DFS, e.g. MEAN(orders.SUM(lineitem.x)))
@@ -1216,29 +1195,11 @@ def _materialize_features(es, table, df, feats, time_col,
         if directs:
             df = _join_directs(es, df, directs, precomputed, pit, keys=keys)
     cutoff = F.col(CUTOFF_COL) if CUTOFF_COL in df.columns else None
-    if needs_cutoff and pit is not None:
-        # a scalar cutoff is one literal, a per-row one is on df: no
-        # cutoff join
-        cutoff = _cut(pit)
-    elif needs_cutoff:
-        if cutoff_frame is None:
+    if needs_cutoff:
+        if pit is None:
             raise ValueError("uses_calc_time feature outside cutoff context")
-        # window transforms must be computed BEFORE the cutoff join
-        # duplicates rows per cutoff (a cum_sum evaluated after would
-        # be inflated by the number of cutoffs per instance) — register
-        # their materialized columns so compile_feat reuses them
-        # instead of recompiling the Window expression post-join
-        win_feats = [f for f in feats if _uses_full_df(f)
-                     and not _uses_calc_time(f)]
-        if win_feats:
-            df, wcols = _materialize_features(es, table, df, win_feats,
-                                              time_col)
-            precomputed.update(
-                {f.get_name(): c for f, c in zip(win_feats, wcols)}
-            )
-        if CUTOFF_COL not in df.columns:
-            df = df.join(cutoff_frame, on=index_col, how="inner")
-            cutoff = F.col(CUTOFF_COL)
+        # a scalar cutoff is one literal, a per-row one is on df
+        cutoff = _cut(pit)
 
     ctx = TransformContext(
         time=F.col(time_col) if time_col else None,
@@ -1260,7 +1221,7 @@ def _materialize_features(es, table, df, feats, time_col,
     expr_feats = [f for f in feats if id(f) not in _pandas_ids]
 
     out_cols = []
-    new_cols = dict(precomputed)
+    new_cols = {**(computed or {}), **precomputed}
 
     def compile_feat(f) -> Column:
         name = f.get_name()
@@ -1282,7 +1243,7 @@ def _materialize_features(es, table, df, feats, time_col,
 
     results = {}
     for f in expr_feats:
-        if f.get_name() in new_cols:  # precomputed pre-cutoff-join
+        if f.get_name() in new_cols:  # stacked, or given in computed
             results[f.get_name()] = new_cols[f.get_name()]
             continue
         c = compile_feat(f)
@@ -1293,7 +1254,7 @@ def _materialize_features(es, table, df, feats, time_col,
         results[f.get_name()] = cname
 
     for f in pandas_feats:
-        if f.get_name() in new_cols:  # precomputed pre-cutoff-join
+        if f.get_name() in new_cols:  # stacked, or given in computed
             results[f.get_name()] = new_cols[f.get_name()]
             continue
         base_cols = []
@@ -1477,15 +1438,15 @@ def _apply_pandas_transform(df, prim, in_cols, out_col, order_cols, part_cols):
 _MAT_COUNTER = 0
 
 
-def _uses_calc_time(f) -> bool:
-    prim = getattr(f, "primitive", None)
-    if prim is not None and getattr(prim, "uses_calc_time", False):
-        return True
-    return any(_uses_calc_time(d) for d in f.get_dependencies())
-
-
 def _uses_full_df(f) -> bool:
     prim = getattr(f, "primitive", None)
     if prim is not None and getattr(prim, "uses_full_dataframe", False):
         return True
     return any(_uses_full_df(d) for d in f.get_dependencies())
+
+
+def _uses_calc_time(f) -> bool:
+    prim = getattr(f, "primitive", None)
+    if prim is not None and getattr(prim, "uses_calc_time", False):
+        return True
+    return any(_uses_calc_time(d) for d in f.get_dependencies())

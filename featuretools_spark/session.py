@@ -28,13 +28,15 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # allow co-partitioned joins when both sides share the SAME
-        # subset of the join keys (e.g. as-of matrices leave the
-        # aggregation entity-partitioned; the pass-column re-attach
-        # joins on (entity, cutoff) — entity-only co-partitioning is
-        # sufficient clustering and skips re-shuffling the wide
-        # matrix side; guide §2.4). Scale-independent planner
-        # behavior, not a local[32] tune: the subset key's skew equals
-        # the skew the upstream aggregation already carried.
+        # subset of the join keys: the sortmerge running windows leave
+        # their output entity-partitioned, and the joins on (entity,
+        # cutoff) after them (the merge with join-routed specs, the
+        # fan-out of "sortmerge" and approximate results onto the key
+        # frame) then need no re-shuffle of an entity-partitioned
+        # side; the same holds for a per-cutoff direct's (key, cutoff)
+        # join (guide §2.4). Scale-independent planner behavior, not a
+        # local[32] tune: the subset key's skew equals the skew the
+        # upstream aggregation already carried.
         .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -234,3 +234,40 @@ def test_direct_chain_enumerated_by_dfs(es3):
     fm = fts.calculate_feature_matrix(
         feats, es3, cutoff_time=dt.datetime(1995, 6, 1))
     assert fm.count() == es3["lineitem"].count()
+
+
+def test_window_input_of_a_cutoff_transform_sees_the_whole_target(es, duck):
+    """TIME_SINCE(LAG(o_orderdate)) at per-row cutoffs, two cutoffs per
+    order: the lag runs over the whole orders table in time order, not
+    over the cutoff rows, so each order reads the date of the order
+    before it in the table at both of its cutoffs. An order placed
+    after the cutoff reads null (the target-grain mask)."""
+    lag = TransformFeature("lag", [IdentityFeature(es, "orders",
+                                                   "o_orderdate")])
+    since = TransformFeature("time_since", [lag])
+    keys = [r[0] for r in es["orders"].select("o_orderkey")
+            .orderBy("o_orderkey").limit(30).collect()]
+    cuts = [dt.datetime(1997, 1, 1), dt.datetime(1999, 1, 1)]
+    cutoff_time = es["orders"].sparkSession.createDataFrame(
+        [(k, c) for k in keys for c in cuts],
+        "o_orderkey long, time timestamp")
+    rows = fts.calculate_feature_matrix([since], es,
+                                        cutoff_time=cutoff_time).collect()
+    want = {(k, c): v for k, c, v in duck.execute(
+        """WITH o AS (SELECT o_orderkey, o_orderdate,
+                             lag(o_orderdate) OVER (
+                                 ORDER BY o_orderdate, o_orderkey) AS prev
+                      FROM orders),
+                c AS (SELECT UNNEST(?) AS t)
+           SELECT o_orderkey, t,
+                  CASE WHEN o_orderdate <= t
+                       THEN epoch(t) - epoch(prev) END
+           FROM o, c WHERE o_orderkey IN (SELECT UNNEST(?))""",
+        [cuts, keys]).fetchall()}
+    assert len(rows) == len(want) == 60
+    assert sum(v is not None for v in want.values()) > 20
+    for r in rows:
+        w = want[(r["o_orderkey"], r["time"])]
+        got = r[since.get_name()]
+        assert got == pytest.approx(w) if w is not None else got is None, (
+            r, w)

@@ -9,6 +9,7 @@ width (cfm._kernel_nparts)."""
 import datetime as dt
 import math
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -797,23 +798,19 @@ def test_kernel_floor_exempt_from_escalated_width(spark):
         spark.conf.set("spark.sql.shuffle.partitions", str(base))
 
 
-@pytest.mark.parametrize("strategy", ["join", "sortmerge"])
-def test_duplicate_cutoff_rows_keep_their_pass_columns(spark, strategy):
-    """Two per-row cutoff rows with the same (instance, time) and
-    different pass-column values come back as two rows: each keeps its
-    own label, and both carry the features of that (instance, time),
-    as pandas computes them from the events at or before the cutoff."""
+T0 = dt.datetime(2024, 5, 1)
+
+
+def _two_entity_es(spark):
+    """Six events of two entities, and four aggregations of them.
+    Returns (es, features, want): want(entity, cutoff) is what pandas
+    computes for the features from the events at or before cutoff."""
     import pandas as pd
 
-    t0 = dt.datetime(2024, 5, 1)
-    mid = t0 + dt.timedelta(days=3, hours=12)
-    late = t0 + dt.timedelta(days=5, hours=12)
-    events = [(f"d{i}", e, t0 + dt.timedelta(days=i), v)
+    events = [(f"d{i}", e, T0 + dt.timedelta(days=i), v)
               for i, (e, v) in enumerate([("u1", 3.0), ("u1", -1.0),
                                           ("u2", 5.0), ("u1", 7.0),
                                           ("u2", 2.0), ("u2", 4.0)])]
-    cutoffs = {"x": ("u1", mid), "y": ("u1", mid), "z": ("u2", mid),
-               "w": ("u2", late)}
     es = fts.EntitySet("dup_cutoffs")
     es.add_dataframe("entities", spark.createDataFrame(
         [("u1",), ("u2",)], "entity_id string"), index="entity_id")
@@ -833,6 +830,22 @@ def test_duplicate_cutoff_rows_keep_their_pass_columns(spark, strategy):
         g = pdf[(pdf["e"] == e) & (pdf["t"] <= cut)]
         return (g["v"].sum(), g["v"].mean(), g["v"].max(), len(g))
 
+    return es, feats, want
+
+
+@pytest.mark.parametrize("strategy", ["join", "sortmerge"])
+def test_duplicate_cutoff_rows_keep_their_pass_columns(spark, strategy):
+    """Two per-row cutoff rows with the same (instance, time) and
+    different pass-column values come back as two rows: each keeps its
+    own label, and both carry the features of that (instance, time),
+    as pandas computes them from the events at or before the cutoff.
+    The string label is a group key of the aggregation, not a first()
+    carry, so the aggregate stays hash-based: no SortAggregate."""
+    es, feats, want = _two_entity_es(spark)
+    mid = T0 + dt.timedelta(days=3, hours=12)
+    late = T0 + dt.timedelta(days=5, hours=12)
+    cutoffs = {"x": ("u1", mid), "y": ("u1", mid), "z": ("u2", mid),
+               "w": ("u2", late)}
     cuts = spark.createDataFrame(
         [(e, t, label) for label, (e, t) in cutoffs.items()],
         "entity_id string, time timestamp, label string")
@@ -848,3 +861,103 @@ def test_duplicate_cutoff_rows_keep_their_pass_columns(spark, strategy):
         assert got[label][1] == pytest.approx(want(e, cut), rel=1e-12), (
             label, got[label], want(e, cut))
     assert got["x"] == got["y"]
+    plan = fm._jdf.queryExecution().executedPlan().toString()
+    assert "SortAggregate" not in plan, plan
+
+
+@pytest.mark.parametrize("strategy", ["join", "sortmerge"])
+def test_null_key_cutoff_rows_keep_their_pass_columns(spark, strategy):
+    """A cutoff row with a null time or a null instance id matches no
+    event. It comes back as its own row, with its own label and the
+    features' default values (sum and count 0, mean and max null),
+    beside an ordinary row."""
+    es, feats, want = _two_entity_es(spark)
+    mid = T0 + dt.timedelta(days=3, hours=12)
+    cuts = spark.createDataFrame(
+        [("u1", mid, "a"), ("u2", None, "b"), (None, T0, "c")],
+        "entity_id string, time timestamp, label string")
+    rows = fts.calculate_feature_matrix(
+        feats, es, cutoff_time=cuts, strategy=strategy).collect()
+    got = {r["label"]: r for r in rows}
+    assert len(rows) == 3 and got.keys() == {"a", "b", "c"}
+    assert (got["a"]["entity_id"], got["a"]["time"]) == ("u1", mid)
+    assert tuple(got["a"][f.get_name()] for f in feats) == pytest.approx(
+        want("u1", mid), rel=1e-12)
+    for label, e, t in (("b", "u2", None), ("c", None, T0)):
+        r = got[label]
+        assert (r["entity_id"], r["time"]) == (e, t), r
+        assert tuple(r[f.get_name()] for f in feats) == (0, None, None, 0), r
+
+
+@pytest.mark.parametrize("strategy, holistic", [
+    ("join", False), ("sortmerge", False), ("join", True)])
+def test_derived_cutoff_plan_is_evaluated_once(spark, strategy, holistic):
+    """Cutoff rows derived through a Python UDF are evaluated once per
+    call, whichever strategy runs: an accumulator the UDF bumps per
+    source row reads the source row count after one collect(). The
+    rows are derived through a groupBy, or, with a holistic MODE that
+    reads the joined rows apart from the main groupBy, through a union:
+    no exchange below the cutoff rows for Spark to reuse between the
+    two reads."""
+    es, feats, want = _two_entity_es(spark)
+    acc = spark.sparkContext.accumulator(0)
+
+    def bump(label):
+        acc.add(1)
+        return label
+
+    src = spark.createDataFrame(
+        [("u1", T0 + dt.timedelta(days=d), f"l{d}") for d in range(4)]
+        + [("u2", T0 + dt.timedelta(days=d), f"m{d}") for d in (2, 3, 4)],
+        "entity_id string, time timestamp, label string")
+    src = src.withColumn("label", F.udf(bump, "string")("label"))
+    if holistic:
+        feats = feats + [AggregationFeature(
+            IdentityFeature(es, "events", "doc_id"), "entities", "mode",
+            es=es)]
+        cuts = src.filter(F.col("entity_id") == "u1").unionByName(
+            src.filter(F.col("entity_id") == "u2"))
+    else:
+        cuts = src.groupBy("entity_id", "time").agg(
+            F.max("label").alias("label"))
+    rows = fts.calculate_feature_matrix(feats, es, cutoff_time=cuts,
+                                        strategy=strategy).collect()
+    assert acc.value == 7
+    assert len(rows) == 7
+    for r in rows:
+        assert tuple(r[f.get_name()] for f in feats[:4]) == pytest.approx(
+            want(r["entity_id"], r["time"]), rel=1e-12), r
+
+
+@pytest.mark.parametrize("strategy", ["join", "sortmerge"])
+def test_pass_columns_ride_every_group(spark, strategy):
+    """Two aggregation groups at per-row cutoffs: a MODE, whose counts
+    subplan joins back on the cutoff rows, and a windowed COUNT that
+    chains after it. A null string label and a map column come back as
+    given, the MODE of the null-labelled row included, and no carried
+    column makes an aggregate sort-based (a first() over a string
+    would)."""
+    es, _, _ = _two_entity_es(spark)
+    doc = IdentityFeature(es, "events", "doc_id")
+    feats = [AggregationFeature(doc, "entities", "mode", es=es),
+             AggregationFeature(doc, "entities", "count", es=es,
+                                use_previous="2 days")]
+    mid = T0 + dt.timedelta(days=3, hours=12)
+    late = T0 + dt.timedelta(days=5, hours=12)
+    cuts = spark.createDataFrame(
+        [("u1", mid, "a"), ("u2", late, None)],
+        "entity_id string, time timestamp, label string",
+    ).withColumn("tags", F.create_map(F.lit("e"), F.col("entity_id")))
+    fm = fts.calculate_feature_matrix(feats, es, cutoff_time=cuts,
+                                      strategy=strategy)
+    got = {r["entity_id"]: r for r in fm.collect()}
+    mode, count = (f.get_name() for f in feats)
+    assert got.keys() == {"u1", "u2"}
+    assert (got["u1"]["label"], got["u1"]["tags"]) == ("a", {"e": "u1"})
+    assert (got["u2"]["label"], got["u2"]["tags"]) == (None, {"e": "u2"})
+    # u1 at day 3.5: d0, d1, d3 once each, the first in order wins, and
+    # d3 in the last 2 days. u2 at day 5.5: d2, d4, d5; d4 and d5
+    assert (got["u1"][mode], got["u1"][count]) == ("d0", 1)
+    assert (got["u2"][mode], got["u2"][count]) == ("d2", 2)
+    plan = fm._jdf.queryExecution().executedPlan().toString()
+    assert not re.search(r"SortAggregate\([^\n]*first\(", plan), plan
