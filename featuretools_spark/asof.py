@@ -3,62 +3,54 @@
 This is the throughput-critical redesign of the reference's
 `calculate_feature_matrix` cutoff loop (calculate_feature_matrix.py:
 437-506 re-filters the whole EntitySet once per unique cutoff time —
-O(#cutoffs) passes). We do ONE pass, with two physical strategies,
-both pure JVM (no row crosses into Python):
+O(#cutoffs) passes). We do ONE pass, with two physical evaluators,
+both pure JVM (no row crosses into Python). cfm._aggregate_group picks
+one per feature group; nothing here routes.
 
-strategy="join" (default; whole-stage codegen): one aggregation body,
-_aggregate_rows, over the child rows visible at each cutoff, in one of
-two key shapes:
-    - per-row cutoffs: cutoffs ⋈ events on the entity key with the
-      time predicate as a join condition (a LEFT join, so a cutoff
-      without events is one null-extended row), grouped by
-      (instance, cutoff). Catalyst/AQE pick broadcast-hash when the
-      cutoff side is small and handle skew
-      (spark.sql.adaptive.skewJoin). Cost model: per-entity work is
-      |events(entity)| × |cutoffs(entity)| — optimal when cutoffs per
-      entity are few (the common backfill shape: 1-10 label times per
-      entity);
-    - a scalar cutoff: the events filtered once by the same predicate
-      against the literal, grouped by the entity key with map-side
-      partial aggregation, then left-joined onto the instance keys
-      (the reference's scalar "tuple path", cfm.py:399-432).
+The join (_aggregate_rows; whole-stage codegen): one aggregation body
+over the child rows visible at each cutoff, in one of two key shapes
+the caller builds:
+    - a scalar cutoff (every group, whatever the strategy): the child
+      rows filtered once by the time predicate against the literal,
+      grouped by the entity key with map-side partial aggregation,
+      then left-joined onto the instance keys (the reference's scalar
+      "tuple path", cfm.py:399-432);
+    - per-row cutoffs (cfm._aggregate_keyed): the cutoff rows LEFT-
+      joined with the events on the entity key, the time predicate a
+      join condition (a cutoff without events is one null-extended
+      row), grouped back per cutoff row. Per-entity work is
+      |events(entity)| x |cutoffs(entity)|: optimal when cutoffs per
+      entity are few (the common backfill shape: 1-10 label times).
     Time predicates follow the reference's _handle_time
     (entityset.py:1407-1457, _pit_mask): include_cutoff_time=True →
     t <= cutoff, window t > cutoff-w; False → t < cutoff, window
     t >= cutoff-w.
 
-strategy="sortmerge" (marker union + running windows):
-    union events with one MARKER row per cutoff, hash-partition on the
-    entity key and sort within partitions by (key, time, tiebreak):
-    one Exchange, one Sort. Markers sort into the event stream at their
-    cutoffs, so each primitive is finalized from a few running window
-    aggregates (its _PARTIALS: counts, sums, variance, min/max,
-    first/last valid value and time) read at the marker rows.
-    O(events + cutoffs) instead of the join's events × cutoffs.
-    Routing is decided from the call's own arguments:
-    - a call with a training_window runs on strategy="join" whole. A
-      window bounds the join's expansion, and bounded running windows
-      (a prefix difference hi − lo) never measured faster than join
-      beyond the run-to-run spread, at 200k or 2M events;
-    - in an unbounded call, specs a running window cannot compute
-      route to strategy="join" and merge back on (instance, cutoff):
-      holistic primitives (median, num_unique, ...), use_previous in
-      observations, non-numeric inputs and secondary-time-index masks
-      (_split_kernel_specs).
-    The caller picks the strategy; both give the same schema
-    (_output_type).
+The running windows (_asof_sortmerge; per-row cutoffs only): union
+events with one MARKER row per cutoff, hash-partition on the entity
+key and sort within partitions by (key, time, tiebreak): one Exchange,
+one Sort. Markers sort into the event stream at their cutoffs, so each
+primitive is finalized from a few running window aggregates (its
+_PARTIALS: counts, sums, variance, min/max, first/last valid value and
+time) read at the marker rows. O(events + cutoffs) instead of the
+join's events x cutoffs. Only a strategy="sortmerge" group that is
+unbounded (no training window, no use_previous), over one hop, with
+inputs that do not vary per cutoff runs here, and only its specs a
+running window computes (_split_kernel_specs); the rest of the group
+runs on the join and merges back on (instance, cutoff). Both give the
+same schema (_output_type).
     Skew note: a single entity stays in one partition by default.
     Pass salt=S for EXPLICIT hot-key salting: events hash into S
     sub-streams, markers replicate to each, and a groupBy(key,
     cutoff) combines the per-salt partials — a 50%-hot entity runs
-    ~2x faster salted (BENCH/BASELINE.md skew section).
-    Alternatively use strategy="join", where AQE's skew join splits
-    the hot key.
+    ~2x faster salted (BENCH/BASELINE.md skew section). The join
+    needs no salt: AQE's skew join splits the hot key.
 
-Every path first maps NaN to null in the float/double value columns,
-so NaN is skipped the way pandas (the reference) skips it. All return
-one row per cutoff row, with primitive default values filled for
-instances that have no qualifying events.
+Both evaluators read child rows whose float/double value columns have
+NaN mapped to null (_nan_to_null), so NaN is skipped the way pandas
+(the reference) skips it. Both return one row per cutoff row, with
+primitive default values filled for instances that have no qualifying
+events.
 """
 
 from __future__ import annotations
@@ -119,77 +111,6 @@ def _spec_input(col: Column, s: AggSpec, cutoff: Column) -> Column:
                        F.col(s.where_col) if s.where_col else None)
 
 
-def asof_aggregate(
-    child: DataFrame,
-    key_col: str,
-    time_col: str | None,
-    cutoffs: DataFrame,
-    instance_col: str,
-    specs: list[AggSpec],
-    cutoff_col: str = CUTOFF_COL,
-    include_cutoff_time: bool = True,
-    training_window: Timedelta | None = None,
-    n_observations: int | None = None,
-    strategy: str = "join",
-    scalar_cutoff=None,
-    salt: int | None = None,
-) -> DataFrame:
-    """Compute per-(instance, cutoff) aggregations of child rows with
-    t ~ cutoff semantics. Returns [instance_col, cutoff_col, *outs].
-
-    strategy="sortmerge" runs an unbounded call on the running windows
-    (its holistic specs on the join path); a call with a
-    training_window runs on the join path whole.
-
-    salt (sortmerge only): EXPLICIT hot-entity salting — events hash
-    into `salt` sub-streams, cutoff markers replicate to every
-    sub-stream and one JVM groupBy combines the per-salt partials, so
-    a single hot entity spreads across up to `salt` partitions instead
-    of straggling in one. Specs routed to the join path ignore it.
-
-    `cutoffs` must be distinct on (instance_col, cutoff_col) — the
-    caller (cfm) guarantees it, avoiding redundant exchanges here.
-    When every cutoff is one literal timestamp, pass scalar_cutoff:
-    the same aggregation body then groups the child rows visible at the
-    literal by the entity key alone (map-side partial aggregation) and
-    left-joins the result onto `cutoffs` (_asof_scalar) — strictly
-    cheaper than the cutoffs ⋈ events shape per-row cutoffs need. That
-    shape returns `cutoffs` itself plus the outputs: it needs no
-    cutoff_col and keeps every column, so a caller's frame (a stacked
-    input's child frame) takes its aggregates in one join.
-    """
-    child = _nan_to_null(child, specs)
-    if strategy == "sortmerge" and training_window is None:
-        kern, rest = _split_kernel_specs(child, time_col, specs,
-                                         n_observations)
-        parts = []
-        if kern:
-            parts.append(_asof_sortmerge(
-                child, key_col, time_col, cutoffs, instance_col, kern,
-                cutoff_col, include_cutoff_time, salt=salt,
-            ))
-        if rest:
-            parts.append(_asof_join(
-                child, key_col, time_col, cutoffs, instance_col, rest,
-                cutoff_col, include_cutoff_time, training_window,
-                n_observations,
-            ))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.join(p, on=[instance_col, cutoff_col], how="full")
-        return out
-    if scalar_cutoff is not None:
-        return _asof_scalar(
-            child, key_col, time_col, cutoffs, instance_col, specs,
-            include_cutoff_time, training_window, n_observations,
-            scalar_cutoff,
-        )
-    return _asof_join(
-        child, key_col, time_col, cutoffs, instance_col, specs,
-        cutoff_col, include_cutoff_time, training_window, n_observations,
-    )
-
-
 def _nan_to_null(child: DataFrame, specs: list[AggSpec]) -> DataFrame:
     """NaN -> null in the float/double columns the specs read, so every
     evaluator skips NaN the way pandas (the reference) does; Spark's
@@ -202,44 +123,6 @@ def _nan_to_null(child: DataFrame, specs: list[AggSpec]) -> DataFrame:
         for c, t in child.dtypes if c in read and t in ("float", "double")
     }
     return child.withColumns(fixes) if fixes else child
-
-
-def _asof_scalar(child, key_col, time_col, cutoffs, instance_col, specs,
-                 include_cutoff_time, training_window, n_observations,
-                 scalar_cutoff):
-    """A scalar cutoff: the child rows visible at the literal, grouped
-    by the entity key and attached to `cutoffs` by left joins."""
-    cut = F.lit(scalar_cutoff).cast("timestamp")
-    if time_col is not None:
-        child = child.filter(_pit_mask(F.col(time_col), cut,
-                                       include_cutoff_time, training_window))
-    return _aggregate_rows(child, [(key_col, instance_col)], cut, None,
-                           time_col, specs, n_observations, onto=cutoffs)
-
-
-# ----------------------------------------------------------------------
-# strategy 1: conditional-aggregation join (pure JVM)
-# ----------------------------------------------------------------------
-def _asof_join(child, key_col, time_col, cutoffs, instance_col, specs,
-               cutoff_col, include_cutoff_time, training_window,
-               n_observations):
-    cut = cutoffs.select(F.col(instance_col).alias("__k"),
-                         F.col(cutoff_col).alias("__c"))
-    cond = F.col(key_col) == F.col("__k")
-    if time_col is not None:
-        cond = cond & _pit_mask(F.col(time_col), F.col("__c"),
-                                include_cutoff_time, training_window)
-    # Join strategy deliberately left to the planner (guide §3.1 was
-    # evaluated here in round 8): forcing a shuffled-hash build on the
-    # cutoff side wins ~10% at sparse cutoff densities (4/entity) but
-    # loses 3x at dense ones (64/entity: the "small" build side is
-    # events x 64, measured 10.4s -> 32.5s at 20M rows), and the
-    # engine cannot know the density without counting. Sort-merge
-    # degrades gracefully in both regimes.
-    return _aggregate_rows(
-        cut.join(child, cond, "left"),
-        [("__k", instance_col), ("__c", cutoff_col)], F.col("__c"), key_col,
-        time_col, specs, n_observations)
 
 
 def _aggregate_rows(rows, group, cut, present, time_col, specs,
@@ -431,10 +314,11 @@ def _fill_defaults(out: DataFrame, defaults: dict) -> DataFrame:
     """Replace NULL (not NaN — a NaN result, e.g. a sum over inf and
     -inf, stays NaN as in pandas) with each column's default value,
     cast to the column's type. Like DataFrame.fillna, a numeric default
-    fills only numeric columns."""
+    fills only numeric columns. The cast takes the type's name: a
+    DataType object reaches the JVM as JSON, one more py4j call each."""
     types = {f.name: f.dataType for f in out.schema.fields}
     fills = {
-        c: F.coalesce(F.col(c), F.lit(dv).cast(types[c]))
+        c: F.coalesce(F.col(c), F.lit(dv).cast(types[c].simpleString()))
         for c, dv in defaults.items()
         if dv is not None and isinstance(types[c], T.NumericType)
     }
@@ -442,7 +326,7 @@ def _fill_defaults(out: DataFrame, defaults: dict) -> DataFrame:
 
 
 # ----------------------------------------------------------------------
-# strategy 2: marker union + JVM running windows
+# the running windows: marker union + JVM window aggregates
 # ----------------------------------------------------------------------
 # The partial columns each primitive is finalized from. A partial is a
 # running window aggregate over one (value, mask) stream, read at the
@@ -508,22 +392,21 @@ def _output_type(spec, child_types: dict) -> str:
     return "double"
 
 
-def _split_kernel_specs(child, time_col, specs, n_observations):
-    """Partition an unbounded call's specs into (running-window,
+def _split_kernel_specs(child, time_col, specs):
+    """Partition an unbounded group's specs into (running-window,
     join-routed).
 
     The running windows take every _PARTIALS primitive. Everything
-    else routes to the JVM join strategy and is merged back on
-    (instance, cutoff), so strategy='sortmerge' never raises:
-    - holistic primitives (median, num_unique, mode, entropy, ...);
-    - non-numeric inputs and secondary-time-index masks;
-    - use_previous in observations: a last-N row limit per cutoff,
-      not a running aggregate, so the whole group goes to join.
+    else runs on the join and is merged back on (instance, cutoff), so
+    strategy='sortmerge' never raises: holistic primitives (median,
+    num_unique, mode, entropy, ...), non-numeric inputs and
+    secondary-time-index masks. A child without a time index has no
+    event order, so all of its specs run on the join.
     Splitting measured faster than running the whole call on join, on
     a 4-vCPU host at 64 cutoffs per entity with median added: request
     p50 7.47 vs 7.75 s, split faster in 4 of 5 pairs.
     """
-    if time_col is None or n_observations is not None:
+    if time_col is None:
         return [], list(specs)
     numeric_ok = {
         f.name: f.dataType.typeName() in _NUMERIC_TYPES

@@ -68,12 +68,13 @@ from featuretools_spark.asof import (
     CUTOFF_COL,
     AggSpec,
     _aggregate_rows,
+    _asof_sortmerge,
     _combine,
     _fill_defaults,
     _finalize,
     _nan_to_null,
     _pit_mask,
-    asof_aggregate,
+    _split_kernel_specs,
 )
 from featuretools_spark.entityset import LTI_COLUMN_NAME, EntitySet
 from featuretools_spark.features import (
@@ -158,14 +159,17 @@ def calculate_feature_matrix(
     the aggregation groups chain on those rows, each grouped back per
     cutoff row, and one left join then brings in the target's columns.
 
-    strategy: "join" (default) | "sortmerge" | "auto". "sortmerge"
-    evaluates unbounded aggregations as JVM running windows (asof.py),
-    with explicit hot-key salting through salt=; a training_window
-    call runs on the join path, where AQE's skew join splits a hot
-    key. "auto" runs "join", decided from the call's arguments with no
-    data read: no measured rule yet says when the running windows win.
-    "sortmerge" and `approximate` aggregate over the key frame's
-    distinct (instance, cutoff) or binned keys and left-join back.
+    strategy: "join" (default) | "sortmerge" | "auto". It picks the
+    evaluator at per-row cutoffs only; a scalar cutoff ignores it and
+    salt, and every group takes the join. At per-row cutoffs
+    "sortmerge" runs an unbounded, single-hop group with inputs that
+    do not vary per cutoff on the JVM running windows (asof.py), with
+    explicit hot-key salting through salt=; every other group, and
+    every group of a training_window call, runs on the join, where
+    AQE's skew join splits a hot key. "auto" runs "join", decided from
+    the call's arguments with no data read: no measured rule yet says
+    when the running windows win. `approximate` aggregates over the
+    key frame's distinct binned keys and left-joins back.
     """
     if strategy not in ("join", "sortmerge", "auto"):
         raise ValueError(
@@ -281,23 +285,20 @@ def calculate_feature_matrix(
         keys = cutoffs
     if instance_ids is not None:
         keys = keys.filter(F.col(index_col).isin(list(instance_ids)))
-    # under "join" each aggregation group groups back per key-frame row;
-    # "sortmerge" and approximate compute per distinct (instance,
-    # cutoff) or binned key and fan out onto the key frame
-    chain = strategy == "join" and approx_td is None
+    # each aggregation group groups back per key-frame row; approximate
+    # computes per distinct binned key and fans out onto the key frame
+    chain = approx_td is None
     if scalar_cutoff is None and _is_derived_plan(keys):
-        # the cutoff rows can feed more than one read (the fan-out of
-        # "sortmerge" and approximate, a holistic aggregation's subplan,
-        # a per-cutoff direct's key frame): a lazy localCheckpoint
-        # evaluates the user's cutoff plan once, at first use, and keeps
-        # the row key below stable across reads
+        # the cutoff rows can feed more than one read (the running
+        # windows' distinct keys, approximate's fan-out, a holistic
+        # aggregation's subplan, a per-cutoff direct's key frame): a
+        # lazy localCheckpoint evaluates the user's cutoff plan once, at
+        # first use, and keeps the row key below stable across reads
         keys = keys.localCheckpoint(eager=False)
     matrix = keys
 
     # ---- aggregation features, one as-of aggregation per group ----
-    if strategy == "join":
-        agg_feats = _rolled_up(es, agg_feats, training_window)
-    groups = _agg_groups(agg_feats)
+    groups = _agg_groups(_rolled_up(es, agg_feats, training_window))
     row_keys = None
     if chain and scalar_cutoff is None and groups:
         # the row key keeps cutoff rows with the same (instance, time)
@@ -307,28 +308,22 @@ def calculate_feature_matrix(
         matrix = matrix.withColumn(_ROW_KEY, F.monotonically_increasing_id())
         row_keys = [index_col, CUTOFF_COL, _ROW_KEY]
     if not chain:
-        on = [index_col, CUTOFF_COL]
-        agg_keys = keys.select(index_col, CUTOFF_COL)
-        if approx_td is not None:
-            step = int(round(approx_td.to_seconds()))
-            binned = F.timestamp_seconds(
-                F.floor(F.unix_micros(F.col(CUTOFF_COL))
-                        / F.lit(step * 1_000_000)) * F.lit(step))
-            matrix = matrix.withColumn("_ft_bin", binned)
-            agg_keys = keys.select(index_col, binned.alias(CUTOFF_COL))
-            on = [index_col, "_ft_bin"]
-        if scalar_cutoff is None:
-            agg_keys = agg_keys.distinct()
+        step = int(round(approx_td.to_seconds()))
+        binned = F.timestamp_seconds(
+            F.floor(F.unix_micros(F.col(CUTOFF_COL))
+                    / F.lit(step * 1_000_000)) * F.lit(step))
+        matrix = matrix.withColumn("_ft_bin", binned)
+        agg_keys = keys.select(index_col, binned.alias(CUTOFF_COL)).distinct()
     for feats in groups:
         if chain:
             matrix = _aggregate_group(es, feats, matrix, index_col, internal,
-                                      pit, row_keys=row_keys)
+                                      pit, strategy, salt, row_keys)
             continue
         part = _aggregate_group(es, feats, agg_keys, index_col, internal, pit,
                                 strategy, salt)
         matrix = _fill_defaults(
-            matrix.join(part.withColumnRenamed(CUTOFF_COL, on[1]), on=on,
-                        how="left"),
+            matrix.join(part.withColumnRenamed(CUTOFF_COL, "_ft_bin"),
+                        on=[index_col, "_ft_bin"], how="left"),
             {internal[f.get_name()]: f.primitive.default_value for f in feats})
     matrix = matrix.drop(_ROW_KEY, "_ft_bin")
 
@@ -677,19 +672,25 @@ def _aggregate_group(es, feats, keys, index_col, names, pit, strategy="join",
                      salt=None, row_keys=None) -> DataFrame:
     """One as-of aggregation for a group from _agg_groups: the deepest
     child of the group's path, the group's inputs materialized on it,
-    one AggSpec per feature (output column names[f.get_name()]).
+    one AggSpec per feature (output column names[f.get_name()]). The
+    one place that picks a group's evaluator.
 
     pit = (cutoff, include_cutoff_time, training_window); the cutoff is
     None at per-row cutoffs. keys carries index_col and, at per-row
-    cutoffs, CUTOFF_COL. At a scalar cutoff with strategy "join" keys
-    may be any frame keyed by index_col; at per-row cutoffs, any frame
-    whose row_keys columns (default: index_col, CUTOFF_COL) identify a
-    row. The aggregates attach to it and every column it carries is
-    kept (how the matrix chains its groups and stacked inputs attach to
-    a child frame). Per-row cutoffs take _aggregate_keyed, except a
-    "sortmerge" group over one hop with inputs that do not vary per
-    cutoff, which runs asof_aggregate over distinct (index_col,
-    CUTOFF_COL) keys. Returns keys plus one column per feature,
+    cutoffs, CUTOFF_COL. At a scalar cutoff keys may be any frame keyed
+    by index_col; at per-row cutoffs, any frame whose row_keys columns
+    (default: index_col, CUTOFF_COL) identify a row. The aggregates
+    attach to it and every column it carries is kept (how the matrix
+    chains its groups and stacked inputs attach to a child frame).
+
+    A scalar cutoff takes the join whatever strategy and salt say: the
+    PIT-filtered child rows grouped by the entity key. Per-row cutoffs
+    take _aggregate_keyed, except a "sortmerge" group with no training
+    window or use_previous, over one hop, with inputs that do not vary
+    per cutoff: the specs a running window computes
+    (asof._split_kernel_specs) run on asof._asof_sortmerge over the
+    distinct (index_col, CUTOFF_COL) of keys, salted by salt, and the
+    rest on _aggregate_keyed. Returns keys plus one column per feature,
     defaults filled."""
     win, nobs = _use_previous(feats[0])
     sc, inc, tw = pit
@@ -703,10 +704,12 @@ def _aggregate_group(es, feats, keys, index_col, names, pit, strategy="join",
     path = feats[0].relationship_path
     child = path[-1].child_name
     time_col = es.time_index(child)
-    bases = [b for f in feats
-             for b in (*f.base_features, *filter(None, [f.where]))]
-    if sc is None and (strategy == "join" or len(path) > 1
-                       or any(map(_per_cutoff, bases))):
+    bases = _group_bases(feats)
+    # a window bounds the join's expansion, and bounded running windows
+    # (a prefix difference hi - lo) never measured faster than the join
+    # beyond the run-to-run spread, at 200k or 2M events
+    if sc is None and (strategy != "sortmerge" or window or nobs
+                       or len(path) > 1 or any(map(_per_cutoff, bases))):
         return _aggregate_keyed(es, feats, bases, keys, index_col, names,
                                 pit, window, nobs, row_keys)
     if sc is None:
@@ -717,16 +720,39 @@ def _aggregate_group(es, feats, keys, index_col, names, pit, strategy="join",
     # inputs (and stacked inputs at a scalar cutoff) are computed once
     child_df, cols = _materialize_features(es, child, child_df, bases,
                                            time_col, pit=pit)
-    return asof_aggregate(
-        child_df, key_col, time_col, keys, index_col,
-        _specs(es, feats, names, bases, cols),
-        include_cutoff_time=inc,
-        training_window=window,
-        n_observations=nobs,
-        strategy=strategy,
-        scalar_cutoff=sc if strategy == "join" else None,
-        salt=salt,
-    )
+    specs = _specs(es, feats, names, bases, cols)
+    child_df = _nan_to_null(child_df, specs)
+    if sc is not None:
+        cut = _cut(pit)
+        if time_col is not None:
+            child_df = child_df.filter(
+                _pit_mask(F.col(time_col), cut, inc, window))
+        return _aggregate_rows(child_df, [(key_col, index_col)], cut, None,
+                               time_col, specs, nobs, onto=keys)
+    kern, rest = _split_kernel_specs(child_df, time_col, specs)
+    joined = {s.out_name for s in rest}
+    rest_feats = [f for f in feats if names[f.get_name()] in joined]
+    out = keys
+    if rest_feats:
+        out = _aggregate_keyed(es, rest_feats, _group_bases(rest_feats), keys,
+                               index_col, names, pit, window, nobs, row_keys)
+    if not kern:
+        return out
+    on = [index_col, CUTOFF_COL]
+    windows = _asof_sortmerge(child_df, key_col, time_col,
+                              keys.select(*on).distinct(), index_col, kern,
+                              CUTOFF_COL, inc, salt=salt)
+    # a left join: the windows hold one row per distinct (instance,
+    # cutoff) of keys, and keys' rows are the output's
+    return _fill_defaults(out.join(windows, on=on, how="left"),
+                          {s.out_name: s.primitive.default_value
+                           for s in kern})
+
+
+def _group_bases(feats) -> list:
+    """The base and where features of a group's aggregations."""
+    return [b for f in feats
+            for b in (*f.base_features, *filter(None, [f.where]))]
 
 
 def _aggregate_keyed(es, feats, bases, keys, index_col, names, pit, window,
@@ -784,6 +810,13 @@ def _aggregate_keyed(es, feats, bases, keys, index_col, names, pit, window,
     cond = F.col(link) == F.col(key_col)
     if time_col:
         cond = cond & _pit_mask(F.col(time_col), cut, inc, window)
+    # Join strategy deliberately left to the planner (guide §3.1 was
+    # evaluated here in round 8): forcing a shuffled-hash build on the
+    # cutoff side wins ~10% at sparse cutoff densities (4/entity) but
+    # loses 3x at dense ones (64/entity: the "small" build side is
+    # events x 64, measured 10.4s -> 32.5s at 20M rows), and the
+    # engine cannot know the density without counting. Sort-merge
+    # degrades gracefully in both regimes.
     rows = rows.join(child_df, cond, "left")
     # a row of keys without child rows is one null-extended row; so is
     # each hop row without child rows, which is dropped when the row of

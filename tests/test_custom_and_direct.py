@@ -1,7 +1,8 @@
 """Custom user primitives (the UDF surface, reference
 primitives/base/primitive_base.py:11-161 + custom-primitive tests at
 tests/primitive_tests/test_agg_feats.py:530-635) and dynamic direct
-features (parent aggregations pulled down to the child grain)."""
+features (parent aggregations pulled down to the child grain), and
+FeatureOutputSlice over a multi-output aggregation."""
 
 import datetime as dt
 
@@ -12,9 +13,11 @@ import featuretools_spark as fts
 from featuretools_spark.features import (
     AggregationFeature,
     DirectFeature,
+    FeatureOutputSlice,
     IdentityFeature,
     TransformFeature,
 )
+from featuretools_spark.primitives import get_aggregation_primitive
 from featuretools_spark.primitives.base import (
     AggregationPrimitive,
     TransformPrimitive,
@@ -271,3 +274,17 @@ def test_window_input_of_a_cutoff_transform_sees_the_whole_target(es, duck):
         got = r[since.get_name()]
         assert got == pytest.approx(w) if w is not None else got is None, (
             r, w)
+
+
+def test_feature_output_slice(es):
+    et = IdentityFeature(es, "events", "event_type")
+    prim = get_aggregation_primitive("n_most_common")
+    prim.n = 2
+    nmc = AggregationFeature(et, "users", prim, es=es)
+    s0 = FeatureOutputSlice(nmc, 0)
+    s1 = FeatureOutputSlice(nmc, 1)
+    fm = fts.calculate_feature_matrix([s0, s1], es, cutoff_time=CUT)
+    assert s0.get_name() in fm.columns and s1.get_name() in fm.columns
+    row = fm.collect()[0]
+    a, b = row[s0.get_name()], row[s1.get_name()]
+    assert a is not None and b is not None and a != b

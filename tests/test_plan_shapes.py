@@ -8,7 +8,8 @@ map job into a 100-TB shuffle, so pin the executed plan here.
 
 The as-of evaluators are pure JVM: no plan crosses into Python, and
 strategy="sortmerge" is one Exchange + one Sort under its running
-windows (plus the salt merge's Exchange when salted).
+windows (plus the salt merge's Exchange when salted). A scalar cutoff
+never runs the windows: its plan is the join's whatever the strategy.
 
 A depth-2 DFS at a scalar cutoff attaches its stacked inputs to the
 child frame: no table joins itself on its own index. At per-row
@@ -21,7 +22,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import featuretools_spark as fts
-from featuretools_spark.asof import CUTOFF_COL, AggSpec, asof_aggregate
+from featuretools_spark.asof import CUTOFF_COL, AggSpec, _asof_sortmerge
 from featuretools_spark.datagen import make_sequences
 from featuretools_spark.features import AggregationFeature, IdentityFeature
 from featuretools_spark.ops.classify import classifier_score
@@ -128,6 +129,23 @@ def _specs(*names):
             for p in names]
 
 
+def _seq_feats(seqs, *names, **kw):
+    """The EntitySet over seqs (no parent time index) and one
+    aggregation per primitive name, of n_tok or (time_since_last) of
+    the event time."""
+    es = fts.EntitySet("asof_inputs")
+    es.add_dataframe("entities", seqs.select("entity_id").distinct(),
+                     index="entity_id")
+    es.add_dataframe("sequences", seqs, index="doc_id",
+                     time_index="event_time")
+    es.add_relationship("entities", "entity_id", "sequences", "entity_id")
+    col = {p: "event_time" if p == "time_since_last" else "n_tok"
+           for p in names}
+    return es, [AggregationFeature(IdentityFeature(es, "sequences", col[p]),
+                                   "entities", p, es=es, **kw)
+                for p in names]
+
+
 WINDOWED = ("count", "sum", "mean", "std", "last", "time_since_last")
 
 
@@ -142,22 +160,31 @@ def test_sortmerge_asof_plan_shape(spark, asof_inputs, case, salt):
     Aggregate. A bounded call and last-N route to the join path (no
     marker Union)."""
     seqs, cuts = asof_inputs
-    kw = {
-        "unbounded": dict(specs=_specs(*WINDOWED, "min", "first")),
-        "30 days": dict(specs=_specs(*WINDOWED),
-                        training_window=Timedelta(30, "d")),
-        "30 days with max": dict(specs=_specs(*WINDOWED, "max"),
-                                 training_window=Timedelta(30, "d")),
-        "5 observations": dict(specs=_specs(*WINDOWED), n_observations=5),
-        "trend": dict(specs=_specs("trend", "count")),
-    }[case]
-    out = asof_aggregate(seqs, "entity_id", "event_time", cuts, "entity_id",
-                         strategy="sortmerge", salt=salt, **kw)
+    bounded = {
+        "30 days": (WINDOWED, dict(training_window="30 days"), {}),
+        "30 days with max": ((*WINDOWED, "max"),
+                             dict(training_window="30 days"), {}),
+        "5 observations": (WINDOWED, {},
+                           dict(use_previous="5 observations")),
+    }
+    if case in bounded:
+        names, kw, feat_kw = bounded[case]
+        es, feats = _seq_feats(seqs, *names, **feat_kw)
+        out = fts.calculate_feature_matrix(
+            feats, es, cutoff_time=cuts, strategy="sortmerge", salt=salt,
+            **kw)
+    else:
+        specs = (_specs(*WINDOWED, "min", "first") if case == "unbounded"
+                 else _specs("trend", "count"))
+        out = _asof_sortmerge(seqs, "entity_id", "event_time", cuts,
+                              "entity_id", specs, CUTOFF_COL, True,
+                              salt=salt)
     nodes = _nodes(out)
     for node in PYTHON_NODES:
         assert node not in nodes, node
-    if case in ("30 days", "30 days with max", "5 observations"):
+    if case in bounded:
         assert "Union" not in nodes
+        assert len(out.collect()) == cuts.count()
         return
     windows = [i for i, n in enumerate(nodes) if n == "Window"]
     exchanges = [i for i, n in enumerate(nodes) if n == "Exchange"]
@@ -171,6 +198,33 @@ def test_sortmerge_asof_plan_shape(spark, asof_inputs, case, salt):
     has_agg = any("Aggregate" in n for n in nodes[:windows[0]])
     assert has_agg == (salt is not None)
     assert len(out.collect()) == cuts.count()
+
+
+def _normalized_plan(df) -> str:
+    """The optimized plan with expression ids and the engine's
+    per-call column counters cut out."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    plan = re.sub(r"#\d+L?", "#", plan)
+    return re.sub(r"_ft_(u|hop|m)\d+", r"_ft_\1", plan)
+
+
+def test_scalar_cutoff_never_runs_the_running_windows(spark, asof_inputs):
+    """At a scalar cutoff strategy="sortmerge" and salt= change
+    nothing: the optimized plan is the join's, string for string, with
+    no marker Union and no Window, and the values are equal."""
+    seqs, _ = asof_inputs
+    es, feats = _seq_feats(seqs, "count", "sum", "mean", "std",
+                           "time_since_last")
+    t = dt.datetime(2024, 2, 10)
+    join = fts.calculate_feature_matrix(feats, es, cutoff_time=t)
+    want = _normalized_plan(join)
+    assert "Union" not in want and "Window" not in want
+    rows = {r["entity_id"]: r for r in join.collect()}
+    for salt in (None, 4):
+        fm = fts.calculate_feature_matrix(feats, es, cutoff_time=t,
+                                          strategy="sortmerge", salt=salt)
+        assert _normalized_plan(fm) == want, salt
+        assert {r["entity_id"]: r for r in fm.collect()} == rows, salt
 
 
 def test_sortmerge_matrix_has_no_python_node(spark, hot_seq_es):

@@ -4,7 +4,8 @@ partitioning invariance, include_cutoff_time semantics — and the as-of
 evaluators (scalar, join, sortmerge running windows) agreeing on
 windows, salting, last-N, empty windows, trend precision and NaN; one
 result schema whichever strategy runs, and the grouped-kernel shuffle
-width (cfm._kernel_nparts)."""
+width (cfm._kernel_nparts). Also the cutoff helpers: temporal cutoffs
+(time_utils) and approximate binning."""
 
 import datetime as dt
 import math
@@ -23,6 +24,7 @@ from featuretools_spark.features import (
     TransformFeature,
 )
 from featuretools_spark.primitives.transform import GreaterThanScalar
+from featuretools_spark.time_utils import make_temporal_cutoffs
 from featuretools_spark.timedelta import Timedelta
 
 
@@ -961,3 +963,52 @@ def test_pass_columns_ride_every_group(spark, strategy):
     assert (got["u2"][mode], got["u2"][count]) == ("d2", 2)
     plan = fm._jdf.queryExecution().executedPlan().toString()
     assert not re.search(r"SortAggregate\([^\n]*first\(", plan), plan
+
+
+def test_make_temporal_cutoffs(spark):
+    cuts = spark.createDataFrame(
+        [(1, dt.datetime(2024, 1, 10))], "uid long, time timestamp"
+    )
+    out = make_temporal_cutoffs(cuts, "uid", window_size="1 day",
+                                num_windows=3)
+    times = sorted(r["time"] for r in out.collect())
+    assert times == [dt.datetime(2024, 1, 8), dt.datetime(2024, 1, 9),
+                     dt.datetime(2024, 1, 10)]
+    out2 = make_temporal_cutoffs(cuts, "uid", num_windows=3,
+                                 start=dt.datetime(2024, 1, 8))
+    times2 = sorted(r["time"] for r in out2.collect())
+    assert times2 == times
+
+
+def test_approximate_binning(es, spark):
+    """With approximate=2 days, all cutoffs inside one 2-day bin share
+    the aggregate computed at the bin floor."""
+    cuts = spark.createDataFrame(
+        [(0, dt.datetime(2024, 1, 15, 6)), (0, dt.datetime(2024, 1, 15, 18)),
+         (0, dt.datetime(2024, 1, 19))],
+        "user_id long, time timestamp",
+    )
+    v = IdentityFeature(es, "events", "value")
+    f = AggregationFeature(v, "users", "sum", es=es)
+    exact = fts.calculate_feature_matrix([f], es, cutoff_time=cuts)
+    approx = fts.calculate_feature_matrix([f], es, cutoff_time=cuts,
+                                          approximate="2 days")
+    ex = {r["time"]: r[f.get_name()] for r in exact.collect()}
+    ap = {r["time"]: r[f.get_name()] for r in approx.collect()}
+    t1, t2 = dt.datetime(2024, 1, 15, 6), dt.datetime(2024, 1, 15, 18)
+    # same bin -> identical approximate values, exact values differ
+    assert ap[t1] == ap[t2]
+    assert ex[t1] != ex[t2]
+    # approximate value = exact value at the bin floor (2-day bins
+    # anchor to the epoch grid: floor(2024-01-15T06) = 2024-01-14T00)
+    import calendar
+
+    floor_s = (calendar.timegm(t1.timetuple()) // 172800) * 172800
+    floor_ts = dt.datetime.utcfromtimestamp(floor_s)
+    floor_exact = fts.calculate_feature_matrix(
+        [f], es,
+        cutoff_time=spark.createDataFrame(
+            [(0, floor_ts)], "user_id long, time timestamp"
+        ),
+    ).collect()[0][f.get_name()]
+    assert ap[t1] == floor_exact

@@ -1,4 +1,5 @@
-"""Feature JSON round-trip + pandas-kernel transforms (EWM)."""
+"""Feature JSON and EntitySet parquet round-trips + pandas-kernel
+transforms (EWM)."""
 
 import datetime as dt
 
@@ -14,6 +15,7 @@ from featuretools_spark.features import (
     IdentityFeature,
     TransformFeature,
 )
+from featuretools_spark.io import es_from_parquet, es_to_parquet
 from featuretools_spark.serialization import (
     feature_from_dict,
     feature_to_dict,
@@ -228,3 +230,16 @@ def test_grouped_kernel_streams_across_arrow_batches(spark):
     assert len(out) == n
     for i in pdf["id"]:
         assert abs(out[i] - want[i]) < 1e-9, (i, out[i], want[i])
+
+
+def test_es_parquet_roundtrip(es, spark, tmp_path):
+    d = str(tmp_path / "es_out")
+    es.add_interesting_values(max_values=1, dataframe_name="events")
+    es_to_parquet(es, d)
+    es2 = es_from_parquet(spark, d)
+    assert set(es2.tables) == set(es.tables)
+    assert es2.index("events") == "event_id"
+    assert es2.time_index("events") == "ts"
+    assert len(es2.relationships) == len(es.relationships)
+    assert es2.meta["events"].interesting_values
+    assert es2["events"].count() == es["events"].count()
