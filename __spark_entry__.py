@@ -338,9 +338,10 @@ def q_ewm_of_agg(spark, sf_dir):
     """Pandas-kernel transform OF an aggregation output, computed ON
     the matrix (reference feature_set_calculator.py:526-592):
     EWM_AVERAGE(SUM(orders.o_totalprice)) grouped by c_nationkey in
-    (cutoff, c_custkey) matrix order — the round-3 NotImplementedError
-    at cfm.py matrix_trans is lifted; grouped kernels run applyInPandas
-    per group, global ones via the distributed EWM scan."""
+    (cutoff, c_custkey) matrix order. cfm._materialize_features
+    compiles it, as it compiles table transforms; a grouped kernel runs
+    one mapInPandas per shuffle partition, a global one the distributed
+    EWM scan."""
     from featuretools_spark.features import GroupByTransformFeature
     from featuretools_spark.primitives.transform import (
         ExponentialWeightedAverage,

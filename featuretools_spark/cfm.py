@@ -45,12 +45,17 @@ with a single declarative plan:
   target's columns (its own features, the directs' foreign keys, the
   target-grain mask's time columns, the identity inputs of matrix
   transforms), so the target and the cutoff rows are each read once
-- transform features compile to Column expressions on the target
-  frame; uses_full_dataframe (window) transforms are computed over
-  the full table in time order BEFORE instance filtering
-  (feature_set.py:102-155 semantics) — sound because all our window
-  frames look only backward in time (no leakage). At per-row cutoffs
-  a transform that reads the cutoff computes on the matrix
+- transform features compile in one place (_materialize_features)
+  on whatever frame holds their inputs: a table, or the matrix for a
+  transform of an aggregation or direct output (in (cutoff, instance)
+  order) and, at per-row cutoffs, for one that reads the cutoff.
+  Expression primitives become Column expressions; a pandas-kernel
+  primitive (the EWM family), at any depth, runs on its inputs'
+  columns through _apply_pandas_transform. uses_full_dataframe
+  (window) transforms on a table are computed over the full table in
+  time order BEFORE instance filtering (feature_set.py:102-155
+  semantics) — sound because all our window frames look only
+  backward in time (no leakage)
 
 Internally all features get sanitized column names (_f0.._fn); the
 final select renames to reference-parity feature names.
@@ -58,6 +63,7 @@ final select renames to reference-parity feature names.
 
 from __future__ import annotations
 
+import dataclasses as _dc
 import datetime as _dt
 
 from pyspark.sql import Column, DataFrame, Window as W
@@ -92,39 +98,6 @@ from featuretools_spark.primitives.base import (
     TransformContext,
 )
 from featuretools_spark.timedelta import Timedelta
-
-
-# ----------------------------------------------------------------------
-# shared-scan cache: at a scalar cutoff one cfm call reads the same
-# PIT-filtered fact and hop frames from several consumers — deep-path
-# groups, stacked inputs, where bases. The cache builds each (table,
-# cutoff) filter once per top-level call and hands every consumer the
-# same DataFrame. Frames are not persisted: a persisted frame is rebuilt
-# as an InMemoryRelation on every request, one AQE table-cache stage
-# (an extra Spark job) each, which measured slower than re-reading the
-# column-pruned parquet scan (CHANGES.md).
-# ----------------------------------------------------------------------
-_SCAN_CACHE: dict = {}
-
-
-def _cached_frame(key, make) -> DataFrame:
-    if key not in _SCAN_CACHE:
-        _SCAN_CACHE[key] = make()
-    return _SCAN_CACHE[key]
-
-
-def _pit_child(es, name: str, time_col, pit) -> DataFrame:
-    """Deepest-child fact frame, PIT-pre-filtered at a scalar cutoff
-    (the as-of layer re-applies the full predicate incl. training
-    window)."""
-    if time_col is None:
-        return es[name]
-    sc, inc, _tw = pit
-    return _cached_frame(
-        (id(es), name, "pit", str(sc), inc),
-        lambda: es[name].filter(
-            _pit_mask(F.col(time_col), _cut(pit), inc, None)),
-    )
 
 
 def calculate_feature_matrix(
@@ -177,7 +150,6 @@ def calculate_feature_matrix(
             "or 'auto'")
     if strategy == "auto":
         strategy = "join"
-    _SCAN_CACHE.clear()
     es = entityset or _find_es(features)
     target = features[0].entity
     for f in features:
@@ -352,95 +324,17 @@ def calculate_feature_matrix(
                 tdf.select(index_col, *fks), on=index_col, how="left"))
 
     # ---- transforms of aggregation/direct outputs, on the matrix ----
+    # (reference feature_set_calculator.py:526-592): their inputs are
+    # already per (instance, cutoff), so a window or groupby transform
+    # runs over the matrix in (cutoff, instance) order, with no extra
+    # pass over a table
     if matrix_trans:
-        # window/groupby transforms ON the matrix (reference
-        # feature_set_calculator.py:526-592): the agg inputs are
-        # already per-(instance, cutoff), so an expr window transform
-        # is just Window.partitionBy(groupby).orderBy(cutoff, index)
-        # over the matrix — no extra pass over the fact table
-        morder = [CUTOFF_COL, index_col]
-        mctx = TransformContext(cutoff=F.col(CUTOFF_COL), order_cols=morder)
-        done = set(internal) - mt_names
-        mt_cols: dict = {}  # feature name -> materialized matrix column
-
-        def mcomp(f) -> Column:
-            n = f.get_name()
-            if n in mt_cols:
-                return F.col(mt_cols[n])
-            if n in internal and n in done:
-                return F.col(internal[n])
-            if isinstance(f, IdentityFeature) and f.entity == target:
-                return F.col(f.column)
-            if isinstance(f, TransformFeature):
-                prim = f.primitive
-                if getattr(prim, "strategy", "expr") == "pandas":
-                    raise AssertionError(
-                        f"pandas-kernel node {n!r} must be materialized "
-                        "by _mt_ensure before expr compilation"
-                    )
-                if isinstance(f, GroupByTransformFeature):
-                    local = TransformContext(
-                        cutoff=mctx.cutoff, order_cols=morder,
-                        partition_cols=[mcomp(f.groupby)],
-                    )
-                    return prim.expr(
-                        [mcomp(b) for b in f.base_features], local)
-                return prim.expr([mcomp(b) for b in f.base_features], mctx)
-            raise ValueError(f"cannot compile {f!r} on the matrix")
-
-        def _mt_ensure(f):
-            """Materialize pandas-kernel transform nodes bottom-up so
-            mcomp only ever compiles expr nodes. Reference computes
-            these through the same full-frame path as any transform
-            (feature_set_calculator.py:526-592); here the agg inputs
-            are already per-(instance, cutoff) on the matrix, so a
-            grouped kernel is applyInPandas per groupby value and a
-            global kernel goes through the distributed EWM / halo /
-            capped-global machinery in _apply_pandas_transform."""
-            nonlocal matrix
-            global _MAT_COUNTER
-            n = f.get_name()
-            if n in mt_cols or (n in internal and n in done):
-                return
-            if isinstance(f, (AggregationFeature, DirectFeature)):
-                return  # hoisted as hidden features, already on matrix
-            for b in f.get_dependencies():
-                _mt_ensure(b)
-            prim = getattr(f, "primitive", None)
-            if prim is None or getattr(prim, "strategy", "expr") != "pandas":
-                return
-            base_cols = []
-            for b in f.base_features:
-                _MAT_COUNTER += 1
-                bname = f"_ft_m{_MAT_COUNTER}"
-                matrix = matrix.withColumn(
-                    bname, mcomp(b).cast("double"))
-                base_cols.append(bname)
-            part_cols = []
-            if isinstance(f, GroupByTransformFeature):
-                _MAT_COUNTER += 1
-                gname = f"_ft_m{_MAT_COUNTER}"
-                matrix = matrix.withColumn(gname, mcomp(f.groupby))
-                part_cols = [gname]
-            out_col = internal.get(n)
-            if out_col is None:
-                _MAT_COUNTER += 1
-                out_col = f"_ft_m{_MAT_COUNTER}"
-            matrix = _apply_pandas_transform(
-                matrix, prim, base_cols, out_col, morder, part_cols)
-            matrix = matrix.drop(*base_cols, *part_cols)
-            mt_cols[n] = out_col
-
-        for f in matrix_trans:
-            _mt_ensure(f)
-            n = f.get_name()
-            if n in mt_cols:
-                if mt_cols[n] != internal[n]:
-                    matrix = matrix.withColumn(
-                        internal[n], F.col(mt_cols[n]))
-            else:
-                matrix = matrix.withColumn(internal[n], mcomp(f))
-            done.add(n)
+        matrix, mcols = _materialize_features(
+            es, target, matrix, matrix_trans, None, pit=pit,
+            computed={n: c for n, c in internal.items() if n not in mt_names},
+            order_cols=[CUTOFF_COL, index_col])
+        matrix = matrix.withColumnsRenamed({
+            c: internal[f.get_name()] for c, f in zip(mcols, matrix_trans)})
 
     # ---- target-grain point-in-time mask ----
     # reference _handle_time (entityset.py:1407-1457) filters the
@@ -1043,21 +937,18 @@ def _child_frame(es, path, pit):
     the customer grain).
     """
     child_name = path[-1].child_name
-    df = _pit_child(es, child_name, es.time_index(child_name), pit)
+    df, ti = es[child_name], es.time_index(child_name)
+    if ti is not None:
+        # the as-of layer re-applies the full predicate, training window
+        # included
+        df = df.filter(_pit_mask(F.col(ti), _cut(pit), pit[1], None))
     if len(path) == 1:
         return df, path[0].child_col
     key_col = "_ft_ancestor_key"
     # mapping: (index of the next rel's parent table) -> top ancestor key
     mapping = None
     for rel, nxt in zip(path, path[1:]):
-        # the intermediate hop table, shared + PIT-filtered via the
-        # scan cache (the same orders hop serves deep-path groups and
-        # stacked inputs in one call)
-        tbl = _cached_frame(
-            (id(es), rel.child_name, "hop", str(pit[0]), pit[1],
-             str(pit[2])),
-            lambda t=rel.child_name: _apply_scalar_pit(es, t, es[t], pit),
-        )
+        tbl = _apply_scalar_pit(es, rel.child_name, es[rel.child_name], pit)
         if mapping is None:
             mapping = tbl.select(
                 F.col(nxt.parent_col).alias("_ft_link"),
@@ -1173,16 +1064,26 @@ def _per_cutoff(f) -> bool:
 
 
 def _materialize_features(es, table, df, feats, time_col, pit=None,
-                          row_keys=None, computed=None):
-    """Add one column per feature to df; returns (df, colnames).
-    computed: feature name -> the column of df already holding it.
+                          row_keys=None, computed=None, order_cols=None):
+    """Add one column per feature to df; returns (df, colnames). The one
+    compiler of transform features, on a table or on the matrix.
+    computed: feature name -> the column of df already holding it; such
+    a feature is neither computed again nor descended into. order_cols:
+    df's time order, by default (time_col, the table's index); the
+    matrix passes (CUTOFF_COL, instance).
 
-    Pure row-wise transforms compile into a single select; window
-    transforms (uses_full_dataframe) compile into Window expressions
-    over (partition?, time) — computed over all rows before any
-    instance filtering. uses_calc_time transforms read the cutoff of
-    pit = (cutoff, include_cutoff_time, training_window) (_cut: the
-    literal at a scalar cutoff, else df's CUTOFF_COL).
+    Row-wise transforms compile into Column expressions; window
+    transforms (uses_full_dataframe) into Window expressions over
+    (partition?, order_cols) — on a table, over all rows before any
+    instance filtering. A groupby transform partitions by its groupby
+    feature, compiled like any input. uses_calc_time transforms read
+    the cutoff of pit = (cutoff, include_cutoff_time, training_window)
+    (_cut: the literal at a scalar cutoff, else df's CUTOFF_COL).
+    Pandas-kernel transforms (the EWM family) run first, at any depth
+    and inputs first: each one's inputs compile to double columns and
+    its groupby to a column, _apply_pandas_transform adds its output
+    and the temporary columns are dropped; consumers read the output
+    like any column.
 
     Stacked inputs — AggregationFeature/DirectFeature nodes at this
     table's grain (depth>=2 DFS, e.g. MEAN(orders.SUM(lineitem.x)))
@@ -1191,34 +1092,42 @@ def _materialize_features(es, table, df, feats, time_col, pit=None,
     aggregation group is one aggregate per table row (fsc.py:764-771),
     each relationship's direct features one left join of the parent's
     masked columns on the foreign key (fsc.py:594-650). At a scalar
-    cutoff df is the table filtered to t <= cutoff (_pit_child or the
-    hop filter) and an aggregate joins on the table index; at per-row
-    cutoffs df is the table's rows per cutoff, CUTOFF_COL among its
-    columns and row_keys identifying a row, and an aggregate groups
-    back to those rows (_aggregate_keyed). df needs no target-grain
-    mask: the consuming aggregation drops rows outside the cutoff's
-    window.
+    cutoff df is the table filtered to t <= cutoff (_child_frame) and
+    an aggregate joins on the table index; at per-row cutoffs df is
+    the table's rows per cutoff, CUTOFF_COL among its columns and
+    row_keys identifying a row, and an aggregate groups back to those
+    rows (_aggregate_keyed). df needs no target-grain mask: the
+    consuming aggregation drops rows outside the cutoff's window.
     """
-    global _MAT_COUNTER
-    needs_cutoff = any(_uses_calc_time(f) for f in feats)
-    precomputed: dict = {}
+    new_cols = dict(computed or {})
 
+    def fresh() -> str:
+        global _MAT_COUNTER
+        _MAT_COUNTER += 1
+        return f"_ft_m{_MAT_COUNTER}"
+
+    # the stacked inputs under feats, and the pandas-kernel nodes,
+    # inputs before consumers
     special: list = []
+    kernels: dict = {}
 
-    def _collect_special(f):
+    def _collect(f):
+        name = f.get_name()
+        if name in new_cols or name in kernels:
+            return
         if isinstance(f, (AggregationFeature, DirectFeature)):
             special.append(f)
             return
         for d in f.get_dependencies():
-            _collect_special(d)
+            _collect(d)
+        if getattr(getattr(f, "primitive", None), "strategy", "") == "pandas":
+            kernels[name] = f
 
     for f in feats:
-        _collect_special(f)
+        _collect(f)
     if special:
         uniq = list({f.get_name(): f for f in special}.values())
-        for f in uniq:
-            _MAT_COUNTER += 1
-            precomputed[f.get_name()] = f"_ft_m{_MAT_COUNTER}"
+        precomputed = {f.get_name(): fresh() for f in uniq}
         keys = df
         aggs = [f for f in uniq if isinstance(f, AggregationFeature)]
         for group in _agg_groups(_rolled_up(es, aggs, pit[2])):
@@ -1227,34 +1136,15 @@ def _materialize_features(es, table, df, feats, time_col, pit=None,
         directs = [f for f in uniq if isinstance(f, DirectFeature)]
         if directs:
             df = _join_directs(es, df, directs, precomputed, pit, keys=keys)
-    cutoff = F.col(CUTOFF_COL) if CUTOFF_COL in df.columns else None
-    if needs_cutoff:
-        if pit is None:
-            raise ValueError("uses_calc_time feature outside cutoff context")
-        # a scalar cutoff is one literal, a per-row one is on df
-        cutoff = _cut(pit)
-
+        new_cols.update(precomputed)
+    if pit is None and any(_uses_calc_time(f) for f in feats):
+        raise ValueError("uses_calc_time feature outside cutoff context")
     ctx = TransformContext(
         time=F.col(time_col) if time_col else None,
-        cutoff=cutoff,
-        order_cols=[c for c in (time_col, es.index(table)) if c],
+        cutoff=_cut(pit) if pit else None,
+        order_cols=order_cols or [c for c in (time_col, es.index(table))
+                                  if c],
     )
-
-    # pandas-kernel transforms (EWM family etc.) run via applyInPandas
-    # over the groupby partition (or one global group — a deliberate
-    # scale trade-off matching the reference's full-column semantics)
-    pandas_feats = [
-        f for f in feats
-        if getattr(getattr(f, "primitive", None), "strategy", "") == "pandas"
-    ]
-    # identity-based membership: FeatureBase.__eq__ is overloaded to
-    # BUILD an equality feature, so `f not in pandas_feats` would
-    # misclassify every feature whenever pandas_feats is non-empty
-    _pandas_ids = {id(f) for f in pandas_feats}
-    expr_feats = [f for f in feats if id(f) not in _pandas_ids]
-
-    out_cols = []
-    new_cols = {**(computed or {}), **precomputed}
 
     def compile_feat(f) -> Column:
         name = f.get_name()
@@ -1262,55 +1152,38 @@ def _materialize_features(es, table, df, feats, time_col, pit=None,
             return F.col(new_cols[name])
         if isinstance(f, IdentityFeature):
             return F.col(f.column)
-        if isinstance(f, GroupByTransformFeature):
-            local = TransformContext(
-                time=ctx.time, cutoff=ctx.cutoff, order_cols=ctx.order_cols,
-                partition_cols=[f.groupby.column],
-            )
+        if isinstance(f, TransformFeature):
+            local = ctx
+            if isinstance(f, GroupByTransformFeature):
+                local = _dc.replace(ctx, partition_cols=[
+                    compile_feat(f.groupby)])
             inputs = [compile_feat(b) for b in f.base_features]
             return f.primitive.expr(inputs, local)
-        if isinstance(f, TransformFeature):
-            inputs = [compile_feat(b) for b in f.base_features]
-            return f.primitive.expr(inputs, ctx)
         raise ValueError(f"cannot materialize {f!r} on table {table}")
 
-    results = {}
-    for f in expr_feats:
-        if f.get_name() in new_cols:  # stacked, or given in computed
-            results[f.get_name()] = new_cols[f.get_name()]
-            continue
-        c = compile_feat(f)
-        _MAT_COUNTER += 1
-        cname = f"_ft_m{_MAT_COUNTER}"
-        df = df.withColumn(cname, c)
-        new_cols[f.get_name()] = cname
-        results[f.get_name()] = cname
-
-    for f in pandas_feats:
-        if f.get_name() in new_cols:  # stacked, or given in computed
-            results[f.get_name()] = new_cols[f.get_name()]
-            continue
-        base_cols = []
-        for b in f.base_features:
-            c = compile_feat(b)
-            _MAT_COUNTER += 1
-            bname = f"_ft_m{_MAT_COUNTER}"
-            df = df.withColumn(bname, c.cast("double"))
-            base_cols.append(bname)
-        _MAT_COUNTER += 1
-        cname = f"_ft_m{_MAT_COUNTER}"
-        part_cols = (
-            [f.groupby.column]
-            if isinstance(f, GroupByTransformFeature)
-            else []
-        )
+    for name, f in kernels.items():
+        ins = {fresh(): compile_feat(b).cast("double")
+               for b in f.base_features}
+        grp = ({fresh(): compile_feat(f.groupby)}
+               if isinstance(f, GroupByTransformFeature) else {})
+        new_cols[name] = fresh()
         df = _apply_pandas_transform(
-            df, f.primitive, base_cols, cname, ctx.order_cols, part_cols
-        )
-        new_cols[f.get_name()] = cname
-        results[f.get_name()] = cname
+            df.withColumns({**ins, **grp}), f.primitive, list(ins),
+            new_cols[name], ctx.order_cols, list(grp)).drop(*ins, *grp)
 
-    return df, [results[f.get_name()] for f in feats]
+    for f in feats:
+        name = f.get_name()
+        if name not in new_cols:
+            c = compile_feat(f)
+            new_cols[name] = fresh()
+            df = df.withColumn(new_cols[name], c)
+    return df, [new_cols[f.get_name()] for f in feats]
+
+
+# the grouped pandas kernel's input bytes per partition, and its most
+# partitions
+_KERNEL_PART_BYTES = 64 << 20
+_KERNEL_MAX_PARTS = 32768
 
 
 def _kernel_nparts(df) -> int:
@@ -1320,10 +1193,9 @@ def _kernel_nparts(df) -> int:
     groups per partition as data grows — memory stays bounded (the
     group loop streams Arrow batches), but parallelism and straggler
     smoothing don't. Width = sum of the optimized plan's LEAF scan
-    size estimates (no job runs) / FT_SPARK_KERNEL_PART_BYTES
-    (default 64 MiB), floored at the session shuffle width — never
-    fewer partitions than any other agg would get — and capped at
-    FT_SPARK_KERNEL_MAX_PARTS (default 32768).
+    size estimates (no job runs) / _KERNEL_PART_BYTES, floored at the
+    session shuffle width — never fewer partitions than any other agg
+    would get — and capped at _KERNEL_MAX_PARTS.
 
     Leaf sum, NOT the plan root's sizeInBytes: Catalyst propagates
     size estimates MULTIPLICATIVELY through joins, so the root stat
@@ -1338,13 +1210,8 @@ def _kernel_nparts(df) -> int:
     sentinel (~Long.MaxValue); those are EXCLUDED from the sum — an
     unknown-sized input contributes the floor, never the cap. No
     real scan is an exabyte, so believable = < 2^60 bytes."""
-    import os
-
     floor = int(df.sparkSession.conf.get(
         "spark.sql.shuffle.partitions", "200"))
-    target = int(os.environ.get("FT_SPARK_KERNEL_PART_BYTES",
-                                str(64 << 20)))
-    cap = int(os.environ.get("FT_SPARK_KERNEL_MAX_PARTS", "32768"))
     try:
         leaves = (df._jdf.queryExecution().optimizedPlan()
                   .collectLeaves())
@@ -1356,7 +1223,8 @@ def _kernel_nparts(df) -> int:
                 size += s
     except Exception:
         return floor
-    return max(floor, min(-(-size // target), cap))
+    return max(floor, min(-(-size // _KERNEL_PART_BYTES),
+                          _KERNEL_MAX_PARTS))
 
 
 def _apply_pandas_transform(df, prim, in_cols, out_col, order_cols, part_cols):

@@ -9,7 +9,6 @@ width (cfm._kernel_nparts). Also the cutoff helpers: temporal cutoffs
 
 import datetime as dt
 import math
-import os
 import re
 
 import pytest
@@ -722,27 +721,20 @@ def test_strategy_schema_parity_count_is_long(spark, strategy_es):
 # ----------------------------------------------------------------------
 # grouped-kernel shuffle width scales with input size
 # ----------------------------------------------------------------------
-def test_kernel_nparts_grows_with_input(spark):
-    os.environ["FT_SPARK_KERNEL_PART_BYTES"] = str(1 << 12)  # 4 KiB
-    try:
-        small = cfm._kernel_nparts(spark.range(10))
-        big = cfm._kernel_nparts(spark.range(1_000_000))
-    finally:
-        os.environ.pop("FT_SPARK_KERNEL_PART_BYTES")
+def test_kernel_nparts_grows_with_input(spark, monkeypatch):
+    monkeypatch.setattr(cfm, "_KERNEL_PART_BYTES", 1 << 12)  # 4 KiB
+    small = cfm._kernel_nparts(spark.range(10))
+    big = cfm._kernel_nparts(spark.range(1_000_000))
     floor = int(spark.conf.get("spark.sql.shuffle.partitions"))
     assert small == floor            # never below the session width
     assert big > small               # and grows with input bytes
     # cap guard
-    os.environ["FT_SPARK_KERNEL_PART_BYTES"] = "1"
-    os.environ["FT_SPARK_KERNEL_MAX_PARTS"] = "100"
-    try:
-        assert cfm._kernel_nparts(spark.range(1_000_000)) == 100
-    finally:
-        os.environ.pop("FT_SPARK_KERNEL_PART_BYTES")
-        os.environ.pop("FT_SPARK_KERNEL_MAX_PARTS")
+    monkeypatch.setattr(cfm, "_KERNEL_PART_BYTES", 1)
+    monkeypatch.setattr(cfm, "_KERNEL_MAX_PARTS", 100)
+    assert cfm._kernel_nparts(spark.range(1_000_000)) == 100
 
 
-def test_kernel_nparts_ignores_join_multiplied_estimates(spark):
+def test_kernel_nparts_ignores_join_multiplied_estimates(spark, monkeypatch):
     """Regression: Catalyst propagates sizeInBytes MULTIPLICATIVELY
     through joins, so the plan-root stat of a multi-join plan
     overshoots by orders of magnitude — and repartition(n, cols) is a
@@ -756,11 +748,8 @@ def test_kernel_nparts_ignores_join_multiplied_estimates(spark):
     j = a
     for i in range(4):
         j = j.join(a.select("k", F.col("id").alias(f"id{i}")), "k")
-    os.environ["FT_SPARK_KERNEL_PART_BYTES"] = str(64 << 20)
-    try:
-        got = cfm._kernel_nparts(j)
-    finally:
-        os.environ.pop("FT_SPARK_KERNEL_PART_BYTES")
+    monkeypatch.setattr(cfm, "_KERNEL_PART_BYTES", 64 << 20)
+    got = cfm._kernel_nparts(j)
     assert got == int(spark.conf.get("spark.sql.shuffle.partitions"))
 
 

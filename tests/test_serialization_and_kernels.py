@@ -113,6 +113,30 @@ def test_mixed_pandas_and_expr_transforms(spark, es):
     assert sum(r[lag_col] is not None for r in rows) > 0
 
 
+def test_transform_of_pandas_kernel_transform_on_table(spark, es):
+    """A transform over a pandas-kernel transform on a table compiles
+    like the same shape over an aggregation output on the matrix: the
+    kernel runs first, then the expression reads its output."""
+    from featuretools_spark.primitives.transform import (
+        ExponentialWeightedAverage,
+    )
+
+    v = IdentityFeature(es, "events", "value")
+    uid = IdentityFeature(es, "events", "user_id")
+    ewm = GroupByTransformFeature(
+        ExponentialWeightedAverage(com=0.5), [v], groupby=uid
+    )
+    absolute = TransformFeature("absolute", [ewm])
+    fm = fts.calculate_feature_matrix(
+        [ewm, absolute], es, cutoff_time=dt.datetime(2024, 3, 1)
+    )
+    rows = fm.collect()
+    pairs = [(r[ewm.get_name()], r[absolute.get_name()]) for r in rows]
+    assert sum(a is not None for _, a in pairs) > 0
+    for e, a in pairs:
+        assert (a is None) if e is None else a == abs(e), (e, a)
+
+
 def test_pandas_kernel_transform_of_agg_output(spark, es):
     """VERDICT r3 #2: EWM (a pandas-kernel transform) OF an
     aggregation output, both grouped and global, computed ON the
