@@ -267,10 +267,10 @@ def q_per_row_cutoffs(spark, sf_dir):
 
 
 def q_holistic_wide(spark, sf_dir):
-    """Holistic-heavy per-row-cutoff query: four counts-family and two
-    flag-family primitives. With round-3 batching the whole thing is
-    ONE cutoffs-x-events join for the flag pass plus ONE shared ranked
-    value-counts subplan (pre-batching: one join per primitive)."""
+    """Holistic-heavy per-row-cutoff query: three counts-family and two
+    flag-family primitives. The flag pass rides the one
+    cutoffs-x-events join's groupBy, and the counts primitives share
+    ONE ranked value-counts subplan."""
     from featuretools_spark.primitives import get_aggregation_primitive
 
     es = _es_events(spark, sf_dir)

@@ -137,8 +137,8 @@ def _aggregate_rows(rows, group, cut, present, time_col, specs,
     columns, each the same on every row of a group, kept as they are:
     a fixed-width value through a first(), any other value as one more
     grouping key (a first() over a string makes the aggregate
-    sort-based). The holistic subplans group and join on `group`
-    alone, so a null carry value joins like any other. present names
+    sort-based). The counts subplans group and join on `group` alone,
+    so a null carry value joins like any other. present names
     a child column that is null exactly on a cutoff row without child
     rows — `rows` is then a LEFT join of the cutoff rows with their
     child rows and its groups are the full cutoff set. present=None
@@ -149,26 +149,16 @@ def _aggregate_rows(rows, group, cut, present, time_col, specs,
     spec, defaults filled."""
     gcols = [F.col(c) for c, _ in group]
     keys = [n for _, n in group]
+    # each holistic primitive has one of two forms: "counts" (mode /
+    # n_most_common / entropy) reduce one shared per-(key, value)
+    # counts subplan per distinct (input, mask); every other one is a
+    # "flag": window columns over the rows and one aggregate in the
+    # main groupBy (zero extra joins)
     expr_specs = [s for s in specs if s.primitive.strategy == "expr"]
-    two_specs = [s for s in specs if s.primitive.strategy == "twostage"]
-    # holistic batching: "flag" primitives merge into the main groupBy
-    # (zero extra joins); "counts" primitives share one per-(key,value)
-    # counts subplan per distinct (input, mask); the rest run per-spec
-    # but off the SHARED rows — never k separate cutoffs x events joins
-    # (one fact scan/shuffle per holistic)
-    flag_specs, counts_specs, complex_specs = [], [], []
-    for s in two_specs:
-        fam = s.primitive.batch_family
-        masked = s.where_col or s.sec_time_col
-        if fam == "counts":
-            counts_specs.append(s)
-        elif fam == "flag" and not (s.primitive.flag_ordered and masked):
-            # an ordered flag's lag/lead adjacency changes when a mask
-            # removes rows, so masked ordered flags take the row-filter
-            # path below
-            flag_specs.append(s)
-        else:
-            complex_specs.append(s)
+    counts_specs = [s for s in specs
+                    if s.primitive.batch_family == "counts"]
+    flag_specs = [s for s in specs if s.primitive.strategy != "expr"
+                  and s.primitive.batch_family != "counts"]
 
     def sec_mask(s):
         # secondary-time-index mask (reference entityset.py:1450-1455):
@@ -203,15 +193,22 @@ def _aggregate_rows(rows, group, cut, present, time_col, specs,
 
     aggs = []
     if flag_specs:
-        wk = W.partitionBy(*gcols)
-        wo = wk.orderBy(time.asc_nulls_last() if time_col
-                        else F.monotonically_increasing_id())
+        order = (time.asc_nulls_last() if time_col
+                 else F.monotonically_increasing_id())
         for i, s in enumerate(flag_specs):
+            # a where removes rows: the spec's windows partition by the
+            # mask too, so lag/lead, runs and group stats see only the
+            # rows inside it, and its flag columns are null outside it.
+            # A cutoff row with no rows inside the mask gets the default
+            where = F.col(s.where_col) if s.where_col else None
+            wk = W.partitionBy(*gcols, *([where] if s.where_col else []))
             v = _wrap_where(F.col(s.input_cols[0]), spec_mask(s))
             cols, agg = s.primitive.flag_parts(
-                v, s.out_name, ctx, wk, wo, f"j{i}")
+                v, s.out_name, ctx, wk, wk.orderBy(order), f"j{i}")
             for cname, cexpr in cols.items():
-                rows = rows.withColumn(cname, cexpr)
+                rows = rows.withColumn(cname, _wrap_where(cexpr, where))
+            if s.where_col:
+                agg = F.when(F.max(where), agg)
             aggs.append(guarded(agg).alias(s.out_name))
     for s in expr_specs:
         # a where mask removes the row, its time included; a
@@ -278,28 +275,6 @@ def _aggregate_rows(rows, group, cut, present, time_col, specs,
                        for s in gspecs])
             )
             out = out.join(part, on=keys, how="left")
-
-    gnames = [c for c, _ in group]
-    for s in complex_specs:
-        # multi-stage holistics (consecutive runs, since-last) off the
-        # SHARED rows — n_observations clamp inherited from them
-        # (last-N per reference is applied BEFORE the where filter).
-        # The group keeps its row names, so ctx's cutoff reads here too
-        inner = rows
-        if present is not None:
-            inner = inner.filter(F.col(present).isNotNull())
-        if s.where_col:
-            inner = inner.filter(F.col(s.where_col))
-        inner = inner.select(
-            *gcols,
-            *[_wrap_where(F.col(c), sec_mask(s)).alias(c)
-              for c in s.input_cols if c not in gnames],
-            *([time] if time_col and time_col not in s.input_cols else []),
-        )
-        part = s.primitive.twostage(inner, gnames, s.input_cols, s.out_name,
-                                    ctx)
-        out = out.join(part.withColumnsRenamed(dict(group)), on=keys,
-                       how="left")
 
     return _fill_defaults(out, {s.out_name: s.primitive.default_value
                                 for s in specs})

@@ -228,10 +228,10 @@ def calculate_feature_matrix(
     on_target = [f for f in other_feats if not _uses_calc_time(f)
                  or scalar_cutoff is not None]
     # the window inputs of the transforms computed on the matrix see
-    # the whole target in time order, as at a scalar cutoff: they
+    # the whole target in time order, as when requested alone: they
     # compute here and ride along
     wins: dict = {}
-    for f in on_matrix:
+    for f in matrix_trans + on_matrix:
         _window_deps(f, wins)
     wins = {n: (f, f"_ft_w{i}") for i, (n, f) in enumerate(wins.items())}
     raw = {f.relationship.child_col for f in direct_feats}
@@ -263,7 +263,7 @@ def calculate_feature_matrix(
     if scalar_cutoff is None and _is_derived_plan(keys):
         # the cutoff rows can feed more than one read (the running
         # windows' distinct keys, approximate's fan-out, a holistic
-        # aggregation's subplan, a per-cutoff direct's key frame): a
+        # counts subplan, a per-cutoff direct's key frame): a
         # lazy localCheckpoint evaluates the user's cutoff plan once, at
         # first use, and keeps the row key below stable across reads
         keys = keys.localCheckpoint(eager=False)
@@ -326,12 +326,15 @@ def calculate_feature_matrix(
     # ---- transforms of aggregation/direct outputs, on the matrix ----
     # (reference feature_set_calculator.py:526-592): their inputs are
     # already per (instance, cutoff), so a window or groupby transform
-    # runs over the matrix in (cutoff, instance) order, with no extra
-    # pass over a table
+    # of an aggregation or direct output runs over the matrix in
+    # (cutoff, instance) order, with no extra pass over a table; a
+    # window of target columns under them is read from wins
     if matrix_trans:
         matrix, mcols = _materialize_features(
             es, target, matrix, matrix_trans, None, pit=pit,
-            computed={n: c for n, c in internal.items() if n not in mt_names},
+            computed={**{n: c for n, c in internal.items()
+                         if n not in mt_names},
+                      **{n: c for n, (_, c) in wins.items()}},
             order_cols=[CUTOFF_COL, index_col])
         matrix = matrix.withColumnsRenamed({
             c: internal[f.get_name()] for c, f in zip(mcols, matrix_trans)})
@@ -1047,9 +1050,14 @@ def _ident_deps(f, table, acc: set):
 
 def _window_deps(f, acc: dict):
     """Top-most dependencies of f that are window transforms over the
-    table (uses_full_dataframe) and do not read the cutoff, by name."""
+    table (uses_full_dataframe) and read neither the cutoff nor an
+    aggregation or direct output, by name. The walk stops at
+    aggregation and direct nodes: below them is another table."""
     for d in f.get_dependencies():
-        if _uses_full_df(d) and not _uses_calc_time(d):
+        if isinstance(d, (AggregationFeature, DirectFeature)):
+            continue
+        if (_uses_full_df(d) and not _uses_calc_time(d)
+                and not _has_agg_or_direct_dep(d)):
             acc.setdefault(d.get_name(), d)
         else:
             _window_deps(d, acc)

@@ -2,8 +2,8 @@
 
 Re-expresses the reference data model (featuretools/entityset/
 entityset.py:28-745, relationship.py:1-200) over pyspark.sql.DataFrame:
-tables are lazy DataFrames (parquet/Iceberg scans — Catalyst prunes
-columns and pushes predicates), relationships are metadata, and the
+tables are lazy DataFrames (any DataFrame source — Catalyst prunes
+columns and pushes predicates into the scan), relationships are metadata, and the
 last-time-index is computed as a distributed agg-join loop instead of
 the reference's recursive pandas reindex (entityset.py:1063-1243).
 """
@@ -41,29 +41,6 @@ class Relationship:
             f"<Relationship: {self.child_name}.{self.child_col} -> "
             f"{self.parent_name}.{self.parent_col}>"
         )
-
-
-@dataclass(frozen=True)
-class RelationshipPath:
-    """Sequence of (is_forward, relationship) hops — the addressing
-    scheme for multi-hop features (reference relationship.py:141-200).
-    is_forward=True is a child→parent hop."""
-
-    hops: tuple  # tuple[(bool, Relationship), ...]
-
-    def __iter__(self):
-        return iter(self.hops)
-
-    def __len__(self):
-        return len(self.hops)
-
-    @property
-    def name(self) -> str:
-        # dotted path of table names, reference-style
-        parts = []
-        for is_fwd, rel in self.hops:
-            parts.append(rel.parent_name if is_fwd else rel.child_name)
-        return ".".join(parts)
 
 
 class TableMeta:

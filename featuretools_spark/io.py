@@ -12,10 +12,8 @@ execution, so the manifest costs no Spark job, and every manifest is
 written to a temp file and renamed into place, so a crash leaves the
 old file or none, never a truncated one.
 
-Iceberg note: with an Iceberg catalog on the classpath the same flow
-maps to `df.writeTo(table).overwritePartitions()`; this container has
-no Iceberg jars, so the connector is gated behind an import-try and
-the parquet+manifest path is the default.
+Buckets are written as parquet only; there is no table-format
+(Iceberg) writer.
 """
 
 from __future__ import annotations
@@ -26,14 +24,6 @@ import time
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
-
-
-def has_iceberg(spark) -> bool:
-    try:
-        spark.conf.get("spark.sql.catalog.spark_catalog")
-        return True
-    except Exception:
-        return False
 
 
 def backfill_with_checkpoints(

@@ -5,9 +5,9 @@ Parity targets are the reference's pandas/numpy kernels
 see SURVEY.md §2.4 for the file:line map). Every primitive here is a
 single Catalyst aggregate expression where possible (fast path =
 reference's `to_agg`, feature_set_calculator.py:713-746); holistic
-ones (mode / n_most_common / entropy / *_count) are two-stage keyed
-sub-plans (slow path analog of `to_apply`, fsc.py:748-772) — still
-pure JVM, no Python UDFs.
+ones (mode / entropy / *_count / runs / peaks, the analog of
+`to_apply`, fsc.py:748-772) reduce a shared counts frame or window
+columns over the child rows — still pure JVM, no Python UDFs.
 
 Parity details handled (SURVEY §7.4): np.std/var are population
 (ddof=0) → stddev_pop/var_pop; pandas skew/kurtosis are
@@ -17,7 +17,7 @@ moments; mode ties break to the smallest value (pandas order).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window as W
+from pyspark.sql import Column, Window as W
 from pyspark.sql import functions as F
 
 from featuretools_spark.primitives.base import (
@@ -533,11 +533,15 @@ class Trend(AggregationPrimitive):
 
 
 # ----------------------------------------------------------------------
-# two-stage (holistic) primitives: mode / n_most_common / entropy /
-# count-vs-group-stat. Implemented as keyed sub-plans: one extra
-# shuffle on (keys, value), still fully JVM-side and combinable by
-# Catalyst. Reference: mode.py:7, n_most_common.py:7, entropy.py:7,
-# count_above_mean.py:8 ...
+# holistic primitives (strategy "twostage"), in one of two forms the
+# as-of engine batches (asof._aggregate_rows):
+#   "counts": mode / n_most_common / n_most_common_frequency / entropy
+#     reduce one ranked per-(key, value) counts frame (counts_agg), one
+#     subplan per distinct (input, mask). Reference: mode.py:7,
+#     n_most_common.py:7, entropy.py:7.
+#   "flag": window columns over the child rows plus one aggregate in
+#     the engine's main groupBy (flag_parts). Reference:
+#     count_above_mean.py:8 ...
 # ----------------------------------------------------------------------
 @agg_primitive
 class Mode(AggregationPrimitive):
@@ -551,20 +555,6 @@ class Mode(AggregationPrimitive):
         # _rn == 1 is unique per key, so max() just picks that value
         # (type-preserving for any orderable input)
         return F.max(F.when(F.col("_rn") == 1, F.col(vcol))).alias(out_name)
-
-    def twostage(self, df, keys, input_cols, out_name, ctx):
-        v = input_cols[0]
-        counts = (
-            df.filter(F.col(v).isNotNull())
-            .groupBy(*keys, v)
-            .agg(F.count(F.lit(1)).alias("_cnt"))
-        )
-        w = W.partitionBy(*keys).orderBy(F.desc("_cnt"), F.asc(v))
-        return (
-            counts.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select(*keys, F.col(v).alias(out_name))
-        )
 
 
 @agg_primitive
@@ -586,26 +576,6 @@ class NMostCommon(AggregationPrimitive):
         ))
         return F.transform(pairs, lambda p: p["val"]).alias(out_name)
 
-    def twostage(self, df, keys, input_cols, out_name, ctx):
-        v = input_cols[0]
-        counts = (
-            df.filter(F.col(v).isNotNull())
-            .groupBy(*keys, v)
-            .agg(F.count(F.lit(1)).alias("_cnt"))
-        )
-        w = W.partitionBy(*keys).orderBy(F.desc("_cnt"), F.asc(v))
-        ranked = counts.withColumn("_rn", F.row_number().over(w)).filter(
-            F.col("_rn") <= self.n
-        )
-        return ranked.groupBy(*keys).agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("_rn"), F.col(v).alias("val")))
-            ).alias("_pairs")
-        ).select(
-            *keys,
-            F.transform(F.col("_pairs"), lambda p: p["val"]).alias(out_name),
-        )
-
 
 @agg_primitive
 class Entropy(AggregationPrimitive):
@@ -620,33 +590,15 @@ class Entropy(AggregationPrimitive):
         clogc = F.sum(F.col("_cnt") * F.log(F.col("_cnt").cast("double")))
         return (F.log(n) - clogc / n).alias(out_name)
 
-    def twostage(self, df, keys, input_cols, out_name, ctx):
-        v = input_cols[0]
-        counts = (
-            df.filter(F.col(v).isNotNull())
-            .groupBy(*keys, v)
-            .agg(F.count(F.lit(1)).alias("_cnt"))
-        )
-        per_key = counts.groupBy(*keys).agg(
-            F.sum("_cnt").alias("_n"),
-            F.sum(F.col("_cnt") * F.log(F.col("_cnt").cast("double"))).alias("_clogc"),
-        )
-        # H = ln n - (1/n) Σ c ln c  (scipy.stats.entropy on value counts)
-        return per_key.select(
-            *keys,
-            (
-                F.log(F.col("_n").cast("double"))
-                - F.col("_clogc") / F.col("_n").cast("double")
-            ).alias(out_name),
-        )
 
-
-class _CountVsGroupStat(AggregationPrimitive):
+class _Flag(AggregationPrimitive):
     strategy = "twostage"
-    default_value = 0
-    _cmp = None  # "above" | "below"
-    _stat = "mean"
     batch_family = "flag"
+    default_value = 0
+
+
+class _CountVsGroupStat(_Flag):
+    _cmp = None  # "above" | "below"
 
     def flag_parts(self, v, out_name, ctx, wk, wo, uid):
         v = v.cast("double")
@@ -654,17 +606,6 @@ class _CountVsGroupStat(AggregationPrimitive):
         flag = (v > stat) if self._cmp == "above" else (v < stat)
         c = f"_bf_{uid}"
         return {c: flag}, F.count(F.when(F.col(c), 1)).cast("double")
-
-    def twostage(self, df, keys, input_cols, out_name, ctx):
-        v = F.col(input_cols[0]).cast("double")
-        w = W.partitionBy(*keys)
-        stat = F.avg(v).over(w) if self._stat == "mean" else None
-        flag = v > stat if self._cmp == "above" else v < stat
-        return (
-            df.withColumn("_flag", flag)
-            .groupBy(*keys)
-            .agg(F.count(F.when(F.col("_flag"), 1)).cast("double").alias(out_name))
-        )
 
 
 @agg_primitive
@@ -679,11 +620,8 @@ class CountBelowMean(_CountVsGroupStat):
     _cmp = "below"
 
 
-class _ExtremumCount(AggregationPrimitive):
-    strategy = "twostage"
-    default_value = 0
+class _ExtremumCount(_Flag):
     _which = "max"
-    batch_family = "flag"
 
     def flag_parts(self, v, out_name, ctx, wk, wo, uid):
         if self._which == "max":
@@ -694,21 +632,6 @@ class _ExtremumCount(AggregationPrimitive):
             target = F.median(v).over(wk)
         c = f"_bf_{uid}"
         return {c: v == target}, F.count(F.when(F.col(c), 1))
-
-    def twostage(self, df, keys, input_cols, out_name, ctx):
-        v = F.col(input_cols[0])
-        w = W.partitionBy(*keys)
-        if self._which == "max":
-            target = F.max(v).over(w)
-        elif self._which == "min":
-            target = F.min(v).over(w)
-        else:  # median
-            target = F.median(v).over(w)
-        return (
-            df.withColumn("_t", target)
-            .groupBy(*keys)
-            .agg(F.count(F.when(v == F.col("_t"), 1)).alias(out_name))
-        )
 
 
 @agg_primitive
@@ -730,11 +653,8 @@ class MedianCount(_ExtremumCount):
 
 
 @agg_primitive
-class CountInsideNthSTD(AggregationPrimitive):
+class CountInsideNthSTD(_Flag):
     name = "count_inside_nth_std"
-    strategy = "twostage"
-    default_value = 0
-    batch_family = "flag"
 
     def __init__(self, n=1):
         self.n = n
@@ -746,24 +666,10 @@ class CountInsideNthSTD(AggregationPrimitive):
         inside = F.abs(v - mu) <= F.lit(float(self.n)) * sd
         return {c: inside}, F.count(F.when(F.col(c), 1))
 
-    def twostage(self, df, keys, input_cols, out_name, ctx):
-        v = F.col(input_cols[0]).cast("double")
-        w = W.partitionBy(*keys)
-        mu, sd = F.avg(v).over(w), F.stddev_pop(v).over(w)
-        inside = F.abs(v - mu) <= F.lit(float(self.n)) * sd
-        return (
-            df.withColumn("_in", inside)
-            .groupBy(*keys)
-            .agg(F.count(F.when(F.col("_in"), 1)).alias(out_name))
-        )
-
 
 @agg_primitive
-class CountOutsideNthSTD(AggregationPrimitive):
+class CountOutsideNthSTD(_Flag):
     name = "count_outside_nth_std"
-    strategy = "twostage"
-    default_value = 0
-    batch_family = "flag"
 
     def __init__(self, n=1):
         self.n = n
@@ -775,44 +681,21 @@ class CountOutsideNthSTD(AggregationPrimitive):
         outside = F.abs(v - mu) > F.lit(float(self.n)) * sd
         return {c: outside}, F.count(F.when(F.col(c), 1))
 
-    def twostage(self, df, keys, input_cols, out_name, ctx):
-        v = F.col(input_cols[0]).cast("double")
-        w = W.partitionBy(*keys)
-        mu, sd = F.avg(v).over(w), F.stddev_pop(v).over(w)
-        outside = F.abs(v - mu) > F.lit(float(self.n)) * sd
-        return (
-            df.withColumn("_out", outside)
-            .groupBy(*keys)
-            .agg(F.count(F.when(F.col("_out"), 1)).alias(out_name))
-        )
-
 
 # ----------------------------------------------------------------------
-# time-ordered sequence aggregates (gaps-and-islands / lag tricks —
-# reference is_monotonically_increasing.py:7, max_consecutive_true.py:7,
-# num_peaks.py:9, num_zero_crossings.py:8). Two-stage with an ordered
-# window, still JVM-side.
+# time-ordered sequence aggregates: flags over the time-ordered window
+# wo (lag/lead, running max). Reference is_monotonically_increasing.py:7,
+# max_consecutive_true.py:7, num_peaks.py:9, num_zero_crossings.py:8.
 # ----------------------------------------------------------------------
-class _OrderedTwoStage(AggregationPrimitive):
-    strategy = "twostage"
+class _Ordered(_Flag):
     uses_time_index = True
-
-    def _ordered_window(self, keys, ctx):
-        return W.partitionBy(*keys).orderBy(*ctx_order(ctx))
-
-
-def ctx_order(ctx):
-    if ctx.time is not None:
-        return [ctx.time.asc_nulls_last()]
-    return [F.monotonically_increasing_id()]
 
 
 @agg_primitive
-class IsMonotonicallyIncreasing(_OrderedTwoStage):
+class IsMonotonicallyIncreasing(_Ordered):
     name = "is_monotonically_increasing"
     return_kind = "boolean"
-    batch_family = "flag"
-    flag_ordered = True
+    default_value = None
 
     def flag_parts(self, v, out_name, ctx, wk, wo, uid):
         v = v.cast("double")
@@ -820,23 +703,12 @@ class IsMonotonicallyIncreasing(_OrderedTwoStage):
         return {c: v - F.lag(v).over(wo)}, F.coalesce(
             F.min(F.col(c) >= 0), F.lit(True))
 
-    def twostage(self, df, keys, input_cols, out_name, ctx):
-        v = F.col(input_cols[0]).cast("double")
-        w = self._ordered_window(keys, ctx)
-        step = v - F.lag(v).over(w)
-        return (
-            df.withColumn("_step", step)
-            .groupBy(*keys)
-            .agg((F.coalesce(F.min(F.col("_step") >= 0), F.lit(True))).alias(out_name))
-        )
-
 
 @agg_primitive
-class IsMonotonicallyDecreasing(_OrderedTwoStage):
+class IsMonotonicallyDecreasing(_Ordered):
     name = "is_monotonically_decreasing"
     return_kind = "boolean"
-    batch_family = "flag"
-    flag_ordered = True
+    default_value = None
 
     def flag_parts(self, v, out_name, ctx, wk, wo, uid):
         v = v.cast("double")
@@ -844,44 +716,30 @@ class IsMonotonicallyDecreasing(_OrderedTwoStage):
         return {c: v - F.lag(v).over(wo)}, F.coalesce(
             F.min(F.col(c) <= 0), F.lit(True))
 
-    def twostage(self, df, keys, input_cols, out_name, ctx):
-        v = F.col(input_cols[0]).cast("double")
-        w = self._ordered_window(keys, ctx)
-        step = v - F.lag(v).over(w)
-        return (
-            df.withColumn("_step", step)
-            .groupBy(*keys)
-            .agg((F.coalesce(F.min(F.col("_step") <= 0), F.lit(True))).alias(out_name))
-        )
 
+class _MaxConsecutive(_Ordered):
+    """The longest run of consecutive rows whose _flag is true, in wo's
+    order: a row's run length is its row number minus that of the last
+    break (a false or null flag) at or before it."""
 
-class _MaxConsecutive(_OrderedTwoStage):
-    default_value = 0
-
-    def _flag(self, v):
+    def _flag(self, v, wk):
         raise NotImplementedError
 
-    def twostage(self, df, keys, input_cols, out_name, ctx):
-        v = F.col(input_cols[0])
-        w = self._ordered_window(keys, ctx)
-        flagged = df.withColumn("_f", self._flag(v).cast("int"))
-        # gaps-and-islands: rn - rn_within_flag groups consecutive runs
-        flagged = flagged.withColumn("_rn", F.row_number().over(w))
-        w2 = W.partitionBy(*keys, "_f").orderBy("_rn")
-        flagged = flagged.withColumn("_grp", F.col("_rn") - F.row_number().over(w2))
-        runs = (
-            flagged.filter(F.col("_f") == 1)
-            .groupBy(*keys, "_grp")
-            .agg(F.count(F.lit(1)).alias("_len"))
-        )
-        return runs.groupBy(*keys).agg(F.max("_len").alias(out_name))
+    def flag_parts(self, v, out_name, ctx, wk, wo, uid):
+        f, r, n = f"_bf_{uid}", f"_bf_{uid}r", f"_bf_{uid}n"
+        last_break = F.max(F.when(~F.coalesce(F.col(f), F.lit(False)),
+                                  F.col(r))).over(
+            wo.rowsBetween(W.unboundedPreceding, W.currentRow))
+        run = F.when(F.col(f), F.col(r) - F.coalesce(last_break, F.lit(0)))
+        return ({f: self._flag(v, wk), r: F.row_number().over(wo), n: run},
+                F.max(F.col(n)).cast("long"))
 
 
 @agg_primitive
 class MaxConsecutiveTrue(_MaxConsecutive):
     name = "max_consecutive_true"
 
-    def _flag(self, v):
+    def _flag(self, v, wk):
         return F.coalesce(v.cast("boolean"), F.lit(False))
 
 
@@ -889,7 +747,7 @@ class MaxConsecutiveTrue(_MaxConsecutive):
 class MaxConsecutiveFalse(_MaxConsecutive):
     name = "max_consecutive_false"
 
-    def _flag(self, v):
+    def _flag(self, v, wk):
         return ~F.coalesce(v.cast("boolean"), F.lit(True))
 
 
@@ -897,7 +755,7 @@ class MaxConsecutiveFalse(_MaxConsecutive):
 class MaxConsecutivePositives(_MaxConsecutive):
     name = "max_consecutive_positives"
 
-    def _flag(self, v):
+    def _flag(self, v, wk):
         return v > 0
 
 
@@ -905,7 +763,7 @@ class MaxConsecutivePositives(_MaxConsecutive):
 class MaxConsecutiveNegatives(_MaxConsecutive):
     name = "max_consecutive_negatives"
 
-    def _flag(self, v):
+    def _flag(self, v, wk):
         return v < 0
 
 
@@ -913,16 +771,13 @@ class MaxConsecutiveNegatives(_MaxConsecutive):
 class MaxConsecutiveZeros(_MaxConsecutive):
     name = "max_consecutive_zeros"
 
-    def _flag(self, v):
+    def _flag(self, v, wk):
         return v == 0
 
 
 @agg_primitive
-class NumPeaks(_OrderedTwoStage):
+class NumPeaks(_Ordered):
     name = "num_peaks"
-    default_value = 0
-    batch_family = "flag"
-    flag_ordered = True
 
     def flag_parts(self, v, out_name, ctx, wk, wo, uid):
         v = v.cast("double")
@@ -930,24 +785,10 @@ class NumPeaks(_OrderedTwoStage):
         c = f"_bf_{uid}"
         return {c: (v > prev) & (v > nxt)}, F.count(F.when(F.col(c), 1))
 
-    def twostage(self, df, keys, input_cols, out_name, ctx):
-        v = F.col(input_cols[0]).cast("double")
-        w = self._ordered_window(keys, ctx)
-        prev, nxt = F.lag(v).over(w), F.lead(v).over(w)
-        peak = (v > prev) & (v > nxt)
-        return (
-            df.withColumn("_peak", peak)
-            .groupBy(*keys)
-            .agg(F.count(F.when(F.col("_peak"), 1)).alias(out_name))
-        )
-
 
 @agg_primitive
-class NumZeroCrossings(_OrderedTwoStage):
+class NumZeroCrossings(_Ordered):
     name = "num_zero_crossings"
-    default_value = 0
-    batch_family = "flag"
-    flag_ordered = True
 
     def flag_parts(self, v, out_name, ctx, wk, wo, uid):
         sign = F.signum(v.cast("double"))
@@ -956,57 +797,30 @@ class NumZeroCrossings(_OrderedTwoStage):
         crossing = sign.isNotNull() & prev.isNotNull() & (sign * prev < 0)
         return {c: crossing}, F.count(F.when(F.col(c), 1))
 
-    def twostage(self, df, keys, input_cols, out_name, ctx):
-        v = F.col(input_cols[0]).cast("double")
-        w = self._ordered_window(keys, ctx)
-        sign = F.signum(v)
-        prev = F.lag(sign).over(w)
-        crossing = sign.isNotNull() & prev.isNotNull() & (sign * prev < 0)
-        return (
-            df.withColumn("_x", crossing)
-            .groupBy(*keys)
-            .agg(F.count(F.when(F.col("_x"), 1)).alias(out_name))
-        )
+
+class _NumSinceLast(_Ordered):
+    input_kinds = ("boolean",)
+    _count = True  # count true rows after the last false, or vice versa
+
+    def flag_parts(self, v, out_name, ctx, wk, wo, uid):
+        b = F.coalesce(v.cast("boolean"), F.lit(False))
+        hit = b if self._count else ~b
+        last = F.max(F.when(~hit, ctx.time)).over(wk)
+        c = f"_bf_{uid}"
+        return ({c: hit & (last.isNull() | (ctx.time > last))},
+                F.count(F.when(F.col(c), 1)))
 
 
 @agg_primitive
-class NumTrueSinceLastFalse(_OrderedTwoStage):
+class NumTrueSinceLastFalse(_NumSinceLast):
     name = "num_true_since_last_false"
-    input_kinds = ("boolean",)
-    default_value = 0
-
-    def twostage(self, df, keys, input_cols, out_name, ctx):
-        v = F.coalesce(F.col(input_cols[0]).cast("boolean"), F.lit(False))
-        tcol = ctx.time
-        flagged = df.withColumn("_b", v)
-        last_false = flagged.groupBy(*keys).agg(
-            F.max(F.when(~F.col("_b"), tcol)).alias("_lf")
-        )
-        joined = flagged.join(last_false, on=keys, how="left")
-        after = F.col("_lf").isNull() | (tcol > F.col("_lf"))
-        return joined.groupBy(*keys).agg(
-            F.count(F.when(F.col("_b") & after, 1)).alias(out_name)
-        )
+    _count = True
 
 
 @agg_primitive
-class NumFalseSinceLastTrue(_OrderedTwoStage):
+class NumFalseSinceLastTrue(_NumSinceLast):
     name = "num_false_since_last_true"
-    input_kinds = ("boolean",)
-    default_value = 0
-
-    def twostage(self, df, keys, input_cols, out_name, ctx):
-        v = F.coalesce(F.col(input_cols[0]).cast("boolean"), F.lit(False))
-        tcol = ctx.time
-        flagged = df.withColumn("_b", v)
-        last_true = flagged.groupBy(*keys).agg(
-            F.max(F.when(F.col("_b"), tcol)).alias("_lt")
-        )
-        joined = flagged.join(last_true, on=keys, how="left")
-        after = F.col("_lt").isNull() | (tcol > F.col("_lt"))
-        return joined.groupBy(*keys).agg(
-            F.count(F.when((~F.col("_b")) & after, 1)).alias(out_name)
-        )
+    _count = False
 
 
 @agg_primitive
@@ -1027,47 +841,14 @@ class NMostCommonFrequency(AggregationPrimitive):
         ))
         return F.transform(pairs, lambda p: p["c"]).alias(out_name)
 
-    def twostage(self, df, keys, input_cols, out_name, ctx):
-        v = input_cols[0]
-        counts = (
-            df.filter(F.col(v).isNotNull())
-            .groupBy(*keys, v)
-            .agg(F.count(F.lit(1)).alias("_cnt"))
-        )
-        w = W.partitionBy(*keys).orderBy(F.desc("_cnt"), F.asc(v))
-        ranked = counts.withColumn("_rn", F.row_number().over(w)).filter(
-            F.col("_rn") <= self.n
-        )
-        return ranked.groupBy(*keys).agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("_rn"), F.col("_cnt").alias("c")))
-            ).alias("_pairs")
-        ).select(
-            *keys,
-            F.transform(F.col("_pairs"), lambda p: p["c"]).alias(out_name),
-        )
 
-
-class _NumConsecutiveVsMean(_OrderedTwoStage):
-    default_value = 0
+class _NumConsecutiveVsMean(_MaxConsecutive):
     _cmp = "greater"
 
-    def twostage(self, df, keys, input_cols, out_name, ctx):
-        v = F.col(input_cols[0]).cast("double")
-        wk = W.partitionBy(*keys)
+    def _flag(self, v, wk):
+        v = v.cast("double")
         mean = F.avg(v).over(wk)
-        flag = (v > mean) if self._cmp == "greater" else (v < mean)
-        w = self._ordered_window(keys, ctx)
-        flagged = df.withColumn("_f", flag.cast("int"))
-        flagged = flagged.withColumn("_rn", F.row_number().over(w))
-        w2 = W.partitionBy(*keys, "_f").orderBy("_rn")
-        flagged = flagged.withColumn("_grp", F.col("_rn") - F.row_number().over(w2))
-        runs = (
-            flagged.filter(F.col("_f") == 1)
-            .groupBy(*keys, "_grp")
-            .agg(F.count(F.lit(1)).alias("_len"))
-        )
-        return runs.groupBy(*keys).agg(F.max("_len").alias(out_name))
+        return (v > mean) if self._cmp == "greater" else (v < mean)
 
 
 @agg_primitive

@@ -4,9 +4,10 @@ reference's PrimitiveBase (primitives/base/primitive_base.py:11-161).
 A primitive is a *Column-expression builder*: `expr(inputs, ctx)`
 returns a Catalyst Column so the whole feature compiles into one
 `groupBy().agg(...)` / `select(...)` and stays inside whole-stage
-codegen. Primitives Spark cannot express in one aggregate expression
-declare `strategy = "twostage"` and build a small keyed sub-plan
-(value-counts + window) that CFM joins back. Only genuinely
+codegen. Holistic primitives Spark cannot express in one aggregate
+expression declare `strategy = "twostage"` and one of two batched
+forms (counts_agg over a shared value-counts frame, or flag_parts:
+window columns plus one aggregate). Only genuinely
 order-dependent kernels (ewm, savgol) fall back to pandas via the
 as-of kernel's vectorized path — never per-row Python.
 """
@@ -15,7 +16,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 
 
 @dataclass
@@ -76,31 +77,20 @@ class AggregationPrimitive:
         and a masked-out row does not."""
         return value
 
-    def twostage(
-        self, df: DataFrame, keys: list, input_cols: list, out_name: str, ctx: AggContext
-    ) -> DataFrame:
-        """Return a DataFrame with columns keys + [out_name], one row
-        per key tuple present in df."""
-        raise NotImplementedError
-
-    # -- batched twostage protocol (optional) ------------------------
-    # batch_family lets the as-of engine compute MANY holistic
-    # primitives in ONE pass over the cutoffs x events frame instead of
-    # one join per primitive (each twostage() call is its own fact
-    # scan + shuffle otherwise):
+    # -- holistic protocol (strategy = "twostage") --------------------
+    # The as-of engine computes every holistic primitive of a group in
+    # ONE pass over the cutoffs x events rows, in one of two forms:
     #   "counts": computable from a shared per-(key, value) counts
     #     frame ranked by (freq desc, value asc) — implement
     #     counts_agg(). One groupBy serves every counts primitive on
-    #     the same input column.
-    #   "flag":   one window column + one aggregate — implement
-    #     flag_parts(). All flag primitives merge into the engine's
-    #     main groupBy (zero extra joins). flag_ordered marks
-    #     primitives whose window is time-ordered: those are only
-    #     batchable when no where/secondary mask removes rows (a
-    #     null-masked value changes lag/lead adjacency).
-    #   None:     fall back to per-spec twostage().
+    #     the same input column and mask.
+    #   "flag" (any other batch_family): window columns + one
+    #     aggregate — implement flag_parts(). All flag primitives
+    #     merge into the engine's main groupBy (zero extra joins). A
+    #     where mask partitions the spec's windows and nulls its
+    #     columns outside the mask, so time-ordered windows (lag/lead,
+    #     runs) see only the rows inside it.
     batch_family: str | None = None
-    flag_ordered: bool = False
 
     def counts_agg(self, vcol: str, out_name: str) -> Column:
         """Aggregate expression over the ranked value-counts frame
@@ -111,11 +101,13 @@ class AggregationPrimitive:
     def flag_parts(self, v: Column, out_name: str, ctx: AggContext,
                    wk, wo, uid: str):
         """Return (cols, agg): `cols` maps intermediate column names to
-        window expressions to attach before the engine's groupBy, `agg`
-        is the final aggregate expression (UNaliased — the engine
-        aliases and, on the join path, guards it for empty windows).
-        wk is Window.partitionBy(keys); wo additionally time-orders.
-        uid makes intermediate column names unique per spec."""
+        window expressions to attach, in order (a later one may read an
+        earlier one by name), before the engine's groupBy; `agg` is the
+        final aggregate expression (UNaliased — the engine aliases and
+        guards it for empty windows). wk is Window.partitionBy(keys,
+        plus the where column under a where); wo additionally
+        time-orders. uid makes intermediate column names unique per
+        spec."""
         raise NotImplementedError
 
     def display_name(self) -> str:

@@ -142,15 +142,19 @@ def test_every_expr_aggregation_executes(spark, typed_df):
 
 
 def test_every_twostage_aggregation_executes(spark, typed_df):
-    ctx = AggContext(time=F.col("ts"), cutoff=F.lit(dt.datetime(2025, 1, 1)))
+    """Each holistic primitive, in the as-of engine's aggregation body."""
+    from featuretools_spark.asof import AggSpec, _aggregate_rows
+
+    cut = F.lit(dt.datetime(2025, 1, 1))
     failures = []
     for name, cls in sorted(AGG_PRIMITIVES.items()):
         prim = get_aggregation_primitive(name)
         if prim.strategy != "twostage":
             continue
-        in_cols = _cols_for(prim)
+        spec = AggSpec("out", prim, _cols_for(prim))
         try:
-            out = prim.twostage(typed_df, ["grp"], in_cols, "out", ctx)
+            out = _aggregate_rows(typed_df, [("grp", "grp")], cut, None, "ts",
+                                  [spec])
             n = out.count()
             assert n <= 3
         except Exception as exc:  # noqa

@@ -193,7 +193,7 @@ def test_stacked_features_per_row_cutoffs(spark, es):
 
 
 def test_holistic_over_stacked_per_row_cutoffs(spark, es):
-    """Holistic (twostage) primitives over a stacked depth-2 input at
+    """Holistic primitives, both forms, over a stacked depth-2 input at
     PER-ROW cutoffs, two distinct cutoffs among the rows: the stacked
     SUM attaches per (order, cutoff) to the orders rows joined to
     their (customer, cutoff) keys, and every holistic reads those rows.
@@ -214,7 +214,7 @@ def test_holistic_over_stacked_per_row_cutoffs(spark, es):
         AggregationFeature(inner, "customer", "count_above_mean",
                            es=es),                                   # flag
         AggregationFeature(inner, "customer",
-                           "max_consecutive_positives", es=es),      # complex
+                           "max_consecutive_positives", es=es),      # flag
     ]
     cols = [f.get_name() for f in feats]
     t1, t2 = dt.datetime(1995, 1, 1), dt.datetime(1997, 1, 1)
@@ -241,6 +241,45 @@ def test_holistic_over_stacked_per_row_cutoffs(spark, es):
                 else:
                     assert abs(float(x) - float(y)) < 1e-9, (
                         r["c_custkey"], t, want, have)
+
+
+@pytest.mark.parametrize("per_row", [False, True])
+def test_window_under_matrix_transform_matches_window_alone(spark, es,
+                                                            per_row):
+    """A window transform of target columns inside a transform of an
+    aggregation output computes over the whole target in time order,
+    as when it is requested alone, not over the matrix in (cutoff,
+    instance) order: CUM_SUM(o_totalprice) + COUNT(lineitem) -
+    COUNT(lineitem) equals CUM_SUM(o_totalprice)."""
+    import datetime as dt
+
+    from pyspark.sql import functions as F
+
+    from featuretools_spark.features import (
+        AggregationFeature, TransformFeature,
+    )
+
+    cum = TransformFeature("cum_sum",
+                           [IdentityFeature(es, "orders", "o_totalprice")])
+    n = AggregationFeature(IdentityFeature(es, "lineitem", "_li_id"),
+                           "orders", "count", es=es)
+    mixed = (cum + n) - n
+    cut = dt.datetime(1998, 1, 1)
+    if per_row:
+        cut = es["orders"].select(
+            "o_orderkey", F.lit(cut).cast("timestamp").alias("time"))
+    alone = {r[0]: r[1] for r in fts.calculate_feature_matrix(
+        [cum], es, cutoff_time=cut).select(
+            "o_orderkey", cum.get_name()).collect()}
+    got = {r[0]: r[1] for r in fts.calculate_feature_matrix(
+        [mixed], es, cutoff_time=cut).select(
+            "o_orderkey", mixed.get_name()).collect()}
+    assert got.keys() == alone.keys()
+    bad = [k for k in alone
+           if (got[k] is None) != (alone[k] is None)
+           or (got[k] is not None
+               and abs(got[k] - alone[k]) > 1e-6 * max(1.0, abs(alone[k])))]
+    assert not bad, [(k, got[k], alone[k]) for k in bad[:3]]
 
 
 @pytest.mark.parametrize("window,include,lti", [

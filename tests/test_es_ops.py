@@ -87,6 +87,47 @@ def test_secondary_time_index_masking(spark):
     assert fm2.collect()[0][f.get_name()] == 100.0
 
 
+@pytest.mark.parametrize("per_row", [False, True])
+def test_secondary_time_index_masks_holistic_over_foreign_key(spark,
+                                                              per_row):
+    """A holistic primitive over the child's foreign key, under a
+    secondary time index, sees the mask as over any other column: it
+    equals the same primitive over a copy of the key, in both forms
+    (counts and flag) and at both cutoff forms."""
+    t = dt.datetime(2024, 1, 1)
+    rows = [(i, 10 + i % 2, t + dt.timedelta(days=i),
+             t + dt.timedelta(days=i + (i % 3) * 4)) for i in range(12)]
+    child = spark.createDataFrame(
+        rows, "id long, uid long, ts timestamp, resolved_at timestamp"
+    ).withColumn("uid_copy", F.col("uid"))
+    es = fts.EntitySet("sec_fk")
+    es.add_dataframe("parents", child.select("uid").distinct(), index="uid")
+    es.add_dataframe(
+        "child", child, index="id", time_index="ts",
+        secondary_time_index={"resolved_at": ["uid", "uid_copy"]},
+    )
+    es.add_relationship("parents", "uid", "child", "uid")
+    prims = ("mode", "n_most_common_frequency", "max_count",
+             "max_consecutive_positives")
+    feats = {(p, c): AggregationFeature(IdentityFeature(es, "child", c),
+                                        "parents", p, es=es)
+             for p in prims for c in ("uid", "uid_copy")}
+    cut = dt.datetime(2024, 1, 9)
+    if per_row:
+        cut = spark.createDataFrame([(10, cut), (11, cut)],
+                                    "uid long, time timestamp")
+    fm = fts.calculate_feature_matrix(list(feats.values()), es,
+                                      cutoff_time=cut).collect()
+    assert len(fm) == 2
+    for r in fm:
+        for p in prims:
+            key = r[feats[(p, "uid")].get_name()]
+            assert key == r[feats[(p, "uid_copy")].get_name()], (p, r)
+    # masked values drop out: each uid has 2 rows resolved before the
+    # cutoff, of 5 and 4 rows at or before it
+    assert {r["uid"]: r["MAX_COUNT(child.uid)"] for r in fm} == {10: 2, 11: 2}
+
+
 def test_encode_and_selection(spark):
     df = spark.createDataFrame(
         [(1, "a", 1.0, None, 5.0), (2, "b", 2.0, None, 10.0),

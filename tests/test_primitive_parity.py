@@ -142,20 +142,43 @@ def test_rolling_mean_gap(spark, small_sdf, small_pdf):
         assert _close(got[i], want[i], 1e-9), (i, got[i], want[i])
 
 
-def _agg_parity(spark, small_sdf, small_pdf, prim_name, col, pd_fn, tol=1e-9):
+def _agg_parity(spark, small_sdf, small_pdf, prim_name, col, pd_fn, tol=1e-9,
+                where=None, cutoff=dt.datetime(2025, 1, 1),
+                use_previous=None, sec=None):
+    """Aggregate `col` of each grp's rows with prim_name and compare
+    with pd_fn over the same rows, sorted by (ts, id): those at or
+    before the cutoff (a datetime, or a {grp: datetime} of per-row
+    cutoffs), the last use_previous ("<n> observations") of them, and
+    of those the rows whose `where` column is True. `sec` names a
+    secondary time index over `col`: its value reads NaN where `sec`
+    is at or after the cutoff."""
     es = fts.EntitySet("p")
     grps = small_sdf.select(F.col("grp")).distinct()
     es.add_dataframe("grps", grps, index="grp")
-    es.add_dataframe("rows", small_sdf, index="id", time_index="ts")
+    es.add_dataframe("rows", small_sdf, index="id", time_index="ts",
+                     secondary_time_index={sec: [col]} if sec else None)
     es.add_relationship("grps", "grp", "rows", "grp")
     feat = AggregationFeature(
-        IdentityFeature(es, "rows", col), "grps", prim_name, es=es
+        IdentityFeature(es, "rows", col), "grps", prim_name, es=es,
+        where=IdentityFeature(es, "rows", where) if where else None,
+        use_previous=use_previous,
     )
-    fm = fts.calculate_feature_matrix(
-        [feat], es, cutoff_time=dt.datetime(2025, 1, 1)
-    )
+    cut = cutoff
+    if isinstance(cutoff, dict):
+        cut = spark.createDataFrame(
+            [(int(g), t) for g, t in cutoff.items()],
+            "grp long, time timestamp")
+    fm = fts.calculate_feature_matrix([feat], es, cutoff_time=cut)
     got = {r["grp"]: r[feat.get_name()] for r in fm.collect()}
-    for g, sub in small_pdf.groupby("grp"):
+    for g, sub in small_pdf.sort_values(["ts", "id"]).groupby("grp"):
+        t = cutoff[g] if isinstance(cutoff, dict) else cutoff
+        sub = sub[sub["ts"] <= t]
+        if use_previous:
+            sub = sub.tail(int(use_previous.split()[0]))
+        if sec:
+            sub = sub.assign(**{col: sub[col].where(sub[sec] < t)})
+        if where:
+            sub = sub[sub[where] == True]  # noqa: E712 (None is not kept)
         want = pd_fn(sub)
         assert _close(got[g], want, tol), (prim_name, g, got[g], want)
 
@@ -266,3 +289,145 @@ def test_sum_over_cancelling_infinities_is_nan(spark, per_row):
     assert math.isnan(want.loc[1, "mean"]) and math.isnan(got[1][1])
     assert got[2] == (want.loc[2, "sum"], want.loc[2, "mean"]) == (1.5, 1.5)
     assert got[3] == (0.0, None)
+
+
+# ----------------------------------------------------------------------
+# holistic primitives vs pandas loops over each group's rows in (ts, id)
+# order, with and without a where mask
+# ----------------------------------------------------------------------
+@pytest.fixture(scope="module")
+def hol_pdf(small_pdf):
+    """small_pdf plus `keep`, a where column (True, False or None), and
+    `mono`, increasing in time in grp 0, decreasing in grp 1 and
+    unordered in grp 2."""
+    hours = (small_pdf["ts"] - pd.Timestamp("2024-01-01")).dt.total_seconds() / 3600
+    mono = np.select([small_pdf["grp"] == 0, small_pdf["grp"] == 1],
+                     [hours, -hours], small_pdf["den"])
+    keep = [None if i % 5 == 0 else i % 3 != 0 for i in small_pdf["id"]]
+    return small_pdf.assign(keep=pd.Series(keep, dtype=object), mono=mono,
+                            res=small_pdf["ts"] + pd.to_timedelta(
+                                small_pdf["id"] % 3, unit="D"))
+
+
+@pytest.fixture(scope="module")
+def hol_sdf(spark, hol_pdf):
+    return spark.createDataFrame(hol_pdf).cache()
+
+
+def _runs(flags):
+    """Longest run of True in `flags`; a False or a null breaks a run."""
+    best = cur = 0
+    for f in flags:
+        cur = cur + 1 if f is True or f is np.True_ else 0
+        best = max(best, cur)
+    return best
+
+
+def _since_last(b, hit):
+    """Rows with b == hit after the last row with b != hit."""
+    n = 0
+    for v in b:
+        n = n + 1 if v == hit else 0
+    return n
+
+
+def _adjacent(v):
+    """Consecutive pairs (prev, cur) of v, both non-null."""
+    return [(a, c) for a, c in zip(v[:-1], v[1:])
+            if not (np.isnan(a) or np.isnan(c))]
+
+
+def _monotone(v, ok):
+    if len(v) == 0:
+        return None  # no rows: the default, NaN
+    return all(ok(a, c) for a, c in _adjacent(v))
+
+
+def _vs_mean(v, below):
+    m = np.nanmean(v) if np.isfinite(v).any() else np.nan
+    return (v < m) if below else (v > m)
+
+
+_HOLISTIC = {
+    "max_consecutive_true": ("flag", lambda s: _runs(
+        [bool(x) for x in s["flag"]])),
+    "max_consecutive_false": ("flag", lambda s: _runs(
+        [not x for x in s["flag"]])),
+    "max_consecutive_positives": ("val", lambda s: _runs(
+        list(s["val"].values > 0))),
+    "max_consecutive_negatives": ("den", lambda s: _runs(
+        list(s["den"].values < 0))),
+    "max_consecutive_zeros": ("den", lambda s: _runs(
+        list(s["den"].values == 0))),
+    "num_true_since_last_false": ("flag", lambda s: _since_last(
+        list(s["flag"]), True)),
+    "num_false_since_last_true": ("flag", lambda s: _since_last(
+        list(s["flag"]), False)),
+    # the mean comparisons read den, whose small integer sums are exact:
+    # val's grp-0 mean lies within an ulp of one of its values, and
+    # pandas and Spark sum in different orders
+    "num_consecutive_greater_mean": ("den", lambda s: _runs(
+        list(_vs_mean(s["den"].values, False)))),
+    "num_consecutive_less_mean": ("den", lambda s: _runs(
+        list(_vs_mean(s["den"].values, True)))),
+    "count_below_mean": ("den", lambda s: float(
+        _vs_mean(s["den"].values, True).sum())),
+    "min_count": ("den", lambda s: int(
+        (s["den"] == s["den"].min()).sum())),
+    "median_count": ("den", lambda s: int(
+        (s["den"] == s["den"].median()).sum())),
+    "count_inside_nth_std": ("val", lambda s: int(
+        ((s["val"] - s["val"].mean()).abs() <= s["val"].std(ddof=0)).sum())),
+    "count_outside_nth_std": ("val", lambda s: int(
+        ((s["val"] - s["val"].mean()).abs() > s["val"].std(ddof=0)).sum())),
+    "is_monotonically_increasing": ("mono", lambda s: _monotone(
+        s["mono"].values, lambda a, c: c >= a)),
+    "is_monotonically_decreasing": ("mono", lambda s: _monotone(
+        s["mono"].values, lambda a, c: c <= a)),
+    "num_zero_crossings": ("val", lambda s: sum(
+        np.sign(a) * np.sign(c) < 0 for a, c in _adjacent(s["val"].values))),
+}
+
+
+@pytest.mark.parametrize("where", [None, "keep"])
+@pytest.mark.parametrize("prim_name", sorted(_HOLISTIC))
+def test_agg_holistic_parity(spark, hol_sdf, hol_pdf, prim_name, where):
+    col, fn = _HOLISTIC[prim_name]
+    _agg_parity(spark, hol_sdf, hol_pdf, prim_name, col, fn, where=where)
+
+
+def test_agg_holistic_per_row_cutoffs(spark, hol_sdf, hol_pdf):
+    col, fn = _HOLISTIC["max_consecutive_positives"]
+    _agg_parity(spark, hol_sdf, hol_pdf, "max_consecutive_positives", col,
+                fn, where="keep", cutoff={0: dt.datetime(2024, 1, 5),
+                                          1: dt.datetime(2024, 1, 9),
+                                          2: dt.datetime(2024, 1, 12)})
+
+
+@pytest.mark.parametrize("prim_name", ["is_monotonically_increasing",
+                                       "max_consecutive_true"])
+def test_agg_holistic_where_without_rows(spark, hol_sdf, hol_pdf,
+                                         prim_name):
+    """Each grp's cutoff falls just before its first row inside the
+    where: it has rows, none of them kept, and reads the default."""
+    first = hol_pdf[hol_pdf["keep"] == True].groupby("grp")["ts"].min()  # noqa: E712
+    cut = {g: (t - pd.Timedelta(seconds=1)).to_pydatetime()
+           for g, t in first.items()}
+    assert all(((hol_pdf["grp"] == g) & (hol_pdf["ts"] <= t)).any()
+               for g, t in cut.items())
+    col, fn = _HOLISTIC[prim_name]
+    _agg_parity(spark, hol_sdf, hol_pdf, prim_name, col, fn, where="keep",
+                cutoff=cut)
+
+
+def test_agg_holistic_secondary_time_index(spark, hol_sdf, hol_pdf):
+    col, fn = _HOLISTIC["num_consecutive_greater_mean"]
+    _agg_parity(spark, hol_sdf, hol_pdf, "num_consecutive_greater_mean",
+                col, fn, cutoff=dt.datetime(2024, 1, 8), sec="res")
+
+
+def test_agg_holistic_use_previous_observations(spark, hol_sdf, hol_pdf):
+    col, fn = _HOLISTIC["num_true_since_last_false"]
+    _agg_parity(spark, hol_sdf, hol_pdf, "num_true_since_last_false", col,
+                fn, where="keep", cutoff=dt.datetime(2024, 1, 9),
+                use_previous="5 observations")
