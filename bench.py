@@ -37,14 +37,12 @@ HEADLINE = [
     "dfs_depth2",        # stacked depth-2 DFS walk (agg-of-agg)
     "ewm_by_user",       # per-entity pandas kernel (applyInPandas)
     "backfill_skew",     # flagship input with one hot entity (~10% of rows)
-    "backfill_skew_sm",  # hot-key input through the unsalted kernel
-    "backfill_skew_sm_salted",  # ... with explicit salting (salt=8)
+    "backfill_skew_sm",  # hot-key input through the running windows
     "backfill_dense",    # 64 cutoffs/entity through the join path
-    "backfill_dense_sm", # ... through the kernel. r5 RETRACTION: the
-                         # kernel does NOT win dense on this host at
-                         # any measured density (4..256/entity) — see
-                         # BENCH/BASELINE.md round-5 profile; kept as
-                         # the tracking benchmark for that gap
+    "backfill_dense_sm", # ... through the running windows, which beat
+                         # the join at this density since the JVM
+                         # windows replaced the round-5 Arrow sweep
+                         # (ROADMAP.md item 5 sweep table)
     "holistic_wide",     # 6 holistic prims at per-row cutoffs, batched
                          # (r3: one flag-pass join + one shared counts
                          # subplan instead of one join per primitive)
@@ -184,11 +182,8 @@ def _backfill_queries(sf: float):
 
     def _dense_cutoffs(spark):
         """64 cutoffs per entity: the dense-backfill shape where the
-        kernel's O(events + cutoffs) sweep was EXPECTED to beat the
-        join's |events| x |cutoffs| row expansion — measured round 5:
-        it does not, at any density up to 256 (the join's codegen
-        processes expanded rows faster than the kernel's per-cutoff
-        Python cost; profile in BENCH/BASELINE.md)."""
+        running windows' O(events + cutoffs) beats the join's
+        |events| x |cutoffs| row expansion (ROADMAP.md item 5)."""
         if "dense_cuts" not in _cache:
             path = f"/tmp/ft_bench_densecuts_{n_rows}_{max_tok}"
             try:
@@ -209,7 +204,7 @@ def _backfill_queries(sf: float):
         if names is None or any("dense" in n for n in names):
             _dense_cutoffs(spark)
 
-    def run(spark, strategy, seqs=None, cuts=None, salt=None):
+    def run(spark, strategy, seqs=None, cuts=None):
         if seqs is None:
             seqs = _materialized(spark)
             cuts = _cutoffs(spark) if cuts is None else cuts
@@ -250,11 +245,11 @@ def _backfill_queries(sf: float):
                 feats.append(
                     AggregationFeature(ts, "entities", pname, es=es))
         return fts.calculate_feature_matrix(feats, es, cutoff_time=cuts,
-                                            strategy=strategy, salt=salt)
+                                            strategy=strategy)
 
-    def run_skew(spark, strategy="join", salt=None):
+    def run_skew(spark, strategy="join"):
         seqs, cuts = _skewed(spark)
-        return run(spark, strategy, seqs=seqs, cuts=cuts, salt=salt)
+        return run(spark, strategy, seqs=seqs, cuts=cuts)
 
     def run_dense(spark, strategy):
         return run(spark, strategy, cuts=_dense_cutoffs(spark))
@@ -267,8 +262,6 @@ def _backfill_queries(sf: float):
             lambda spark, sf_dir: run_dense(spark, "sortmerge"),
         "backfill_skew": lambda spark, sf_dir: run_skew(spark),
         "backfill_skew_sm": lambda spark, sf_dir: run_skew(spark, "sortmerge"),
-        "backfill_skew_sm_salted":
-            lambda spark, sf_dir: run_skew(spark, "sortmerge", salt=8),
         "__prepare__": prepare,
         # hooks for tools/profile_sortmerge.py's density sweep — not
         # bench queries
@@ -394,8 +387,8 @@ def run_once(sf_dir: str, cpus: int, queries=None) -> dict:
         "rep_order": "round_robin",
         "cooldown_s": cooldown,
         # latest committed scaling-protocol evidence (north rule §N->4N);
-        # produced by `python bench.py --scaling`, full context in
-        # BENCH/BASELINE.md
+        # produced by `python bench.py --scaling`, summarized in
+        # BENCH/scaling_summary.json
         "scaling": _latest_scaling(),
     }
 

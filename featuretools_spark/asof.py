@@ -39,12 +39,12 @@ inputs that do not vary per cutoff runs here, and only its specs a
 running window computes (_split_kernel_specs); the rest of the group
 runs on the join and merges back on (instance, cutoff). Both give the
 same schema (_output_type).
-    Skew note: a single entity stays in one partition by default.
-    Pass salt=S for EXPLICIT hot-key salting: events hash into S
-    sub-streams, markers replicate to each, and a groupBy(key,
-    cutoff) combines the per-salt partials — a 50%-hot entity runs
-    ~2x faster salted (BENCH/BASELINE.md skew section). The join
-    needs no salt: AQE's skew join splits the hot key.
+    Skew note: a hot entity stays in one partition, its events and
+    markers one sorted block. Measured at 2M events with one entity
+    holding 50% or 10% of them, the windows still beat the join at 64
+    cutoffs per entity and lose to it at 4 (ROADMAP item 5); hashing
+    the hot entity into sub-streams lost to the better of the two at
+    every shape. On the join, AQE's skew join splits the hot key.
 
 Both evaluators read child rows whose float/double value columns have
 NaN mapped to null (_nan_to_null), so NaN is skipped the way pandas
@@ -315,7 +315,8 @@ def _fill_defaults(out: DataFrame, defaults: dict) -> DataFrame:
 #   mn, mx        min and max value
 #   ft, lt        time (micros) of the first and last valid value
 #   fv, lv        the first and last valid value
-#   sx, sx2, sxy  sums of x, x² and x·value; x = seconds from the cutoff
+#   sx, sx2, sxy  sums of x, x² and x·value; x = seconds from the
+#                 entity's first row
 _PARTIALS = {
     "count": ["n"],
     "sum": ["n", "s"],
@@ -336,8 +337,6 @@ _PARTIALS = {
     "any": ["n", "mx"],
     "all": ["n", "mn"],
 }
-# partials that combine across salt sub-streams by summing
-_ADDITIVE = {"n", "s", "na", "sx", "sx2", "sxy"}
 _BOOL_PRIMS = {"any", "all"}
 _INTEGRAL_T = {"tinyint", "smallint", "int", "bigint"}
 _NUMERIC_TYPES = (
@@ -403,44 +402,6 @@ def _split_kernel_specs(child, time_col, specs):
     return kern, rest
 
 
-def _chan_merge(acc, x):
-    """One step of Chan, Golub and LeVeque's (1979) pairwise update:
-    (n, mean, m2) accumulator `acc` absorbs sub-stream `x` = (n, s, vp).
-    A sum of n·mean² terms would cancel as a sum of squares does."""
-    n = acc["n"] + x["n"]
-    d = x["s"] / x["n"] - acc["mean"]
-    return F.when(x["n"] == 0, acc).otherwise(F.struct(
-        n.alias("n"),
-        (acc["mean"] + d * x["n"] / n).alias("mean"),
-        (acc["m2"] + x["vp"] * x["n"] + d * d * acc["n"] * x["n"] / n)
-        .alias("m2"),
-    ))
-
-
-def _combine(p, e, c):
-    """Aggregate expression merging partial `p` (row expression `e`)
-    over a cutoff's salt sub-streams; c(q) is the row expression of
-    the stream's partial q."""
-    if p in _ADDITIVE:
-        return F.sum(e)
-    if p in ("mn", "ft"):
-        return F.min(e)
-    if p in ("mx", "lt"):
-        return F.max(e)
-    if p == "fv":
-        return F.min_by(e, c("ft"))
-    if p == "lv":
-        return F.max_by(e, c("lt"))
-    # vp: fold the at most `salt` sub-streams pairwise
-    subs = F.collect_list(F.struct(
-        c("n").alias("n"), c("s").alias("s"), e.alias("vp")))
-    zero = F.struct(F.lit(0).cast("long").alias("n"),
-                    F.lit(0.0).alias("mean"), F.lit(0.0).alias("m2"))
-    return F.aggregate(subs, zero, _chan_merge,
-                       lambda acc: F.when(acc["n"] > 0,
-                                          acc["m2"] / acc["n"]))
-
-
 def _finalize(pname, c, ct_us):
     """The primitive's value from its partials; c(p) is the column
     holding partial p, ct_us the cutoff in micros."""
@@ -497,29 +458,24 @@ def _finalize(pname, c, ct_us):
 
 
 def _asof_sortmerge(child, key_col, time_col, cutoffs, instance_col, specs,
-                    cutoff_col, include_cutoff_time, salt=None):
+                    cutoff_col, include_cutoff_time):
     """Marker union, one exchange, one sort, JVM running windows, for
     an unbounded window.
 
     Each cutoff becomes a MARKER row (tag 1), unioned into the event
-    stream (tag 0). One hash exchange on the entity key[, salt]
-    co-locates each entity; sortWithinPartitions(key[, salt], time,
-    tiebreak) interleaves markers with events at exactly the cutoff
-    position (the tiebreak encodes include_cutoff_time). A running
-    window aggregate (ROWS UNBOUNDED PRECEDING..CURRENT ROW) read at a
-    marker covers every event sorted before it, so each primitive's
-    _PARTIALS are running windows read at the markers:
-
-        unsalted   finalized at the marker rows directly
-        salted     one groupBy(key, cutoff) combines the per-salt
-                   partials, then finalizes
+    stream (tag 0). One hash exchange on the entity key co-locates each
+    entity; sortWithinPartitions(key, time, tiebreak) interleaves
+    markers with events at exactly the cutoff position (the tiebreak
+    encodes include_cutoff_time). A running window aggregate (ROWS
+    UNBOUNDED PRECEDING..CURRENT ROW) read at a marker covers every
+    event sorted before it, so each primitive's _PARTIALS are running
+    windows finalized at the marker rows: no Aggregate.
 
     No row crosses into Python: shipping the stream to a vectorized
     Python sweep of the same algorithm cost more in JVM→Python
     serialization than in math (~7 s of an 11.7 s stage at 20M events
     + 12.8M markers, BENCH r8).
     """
-    salted = salt is not None and salt > 1
     specs = [
         AggSpec(s.out_name, s.primitive,
                 [] if s.primitive.name == "count" else s.input_cols,
@@ -534,23 +490,11 @@ def _asof_sortmerge(child, key_col, time_col, cutoffs, instance_col, specs,
     # False wants them outside -> markers sort before ties (-1)
     srt = 1 if include_cutoff_time else -1
 
-    # salting: events hash into `salt` sub-streams; every marker
-    # replicates to every sub-stream, so each (key, salt) block is a
-    # self-contained as-of problem whose partials the groupBy combines
-    ev_salt = (
-        [F.pmod(
-            F.xxhash64(F.col(key_col),
-                       F.col(time_col).cast("timestamp")),
-            F.lit(salt),
-        ).cast("int").alias("__salt")]
-        if salted else []
-    )
     ev = child.filter(F.col(time_col).isNotNull()).select(
         F.col(key_col).alias("__k"),
         F.unix_micros(F.col(time_col).cast("timestamp")).alias("__t"),
         F.lit(0).cast("byte").alias("__srt"),
         F.lit(0).cast("byte").alias("__tag"),
-        *ev_salt,
         *[F.col(c).cast("double").alias(f"__v_{c}") for c in value_cols],
         *[F.col(c).cast("boolean").alias(f"__w_{c}") for c in where_cols],
     )
@@ -559,32 +503,29 @@ def _asof_sortmerge(child, key_col, time_col, cutoffs, instance_col, specs,
         F.unix_micros(F.col(cutoff_col).cast("timestamp")).alias("__t"),
         F.lit(srt).cast("byte").alias("__srt"),
         F.lit(1).cast("byte").alias("__tag"),
-        *([F.explode(F.sequence(F.lit(0), F.lit(salt - 1))).alias("__salt")]
-          if salted else []),
         *[F.lit(None).cast("double").alias(f"__v_{c}") for c in value_cols],
         *[F.lit(None).cast("boolean").alias(f"__w_{c}") for c in where_cols],
     )
-    range_cols = ["__k", "__salt"] if salted else ["__k"]
-    # hash-partition on the entity key (and salt): the windows need all
-    # rows of a block in ONE partition and the within-partition sort,
-    # never cross-partition order — so no range partitioner and its
-    # sampling job (an extra evaluation of the whole union)
+    # hash-partition on the entity key: the windows need all rows of an
+    # entity in ONE partition and the within-partition sort, never
+    # cross-partition order — so no range partitioner and its sampling
+    # job (an extra evaluation of the whole union)
     unioned = (
         ev.unionByName(markers)
-        .repartition(*[F.col(c) for c in range_cols])
-        .sortWithinPartitions(*range_cols, "__t", "__srt")
+        .repartition(F.col("__k"))
+        .sortWithinPartitions("__k", "__t", "__srt")
     )
     w = (
-        W.partitionBy(*range_cols)
+        W.partitionBy("__k")
         .orderBy("__t", "__srt")
         .rowsBetween(W.unboundedPreceding, W.currentRow)
     )
-    trend = any(s.primitive.name == "trend" for s in specs)
-    if trend:
-        # trend's x sums run on seconds from the block's first row: raw
+    if any(s.primitive.name == "trend" for s in specs):
+        # trend's x sums run on seconds from the entity's first row: raw
         # epoch seconds (~1.7e9) square to ~3e18 and lose the
-        # window-scale precision of varx. Same window spec, so this
-        # stacks on the same sort.
+        # window-scale precision of varx (varx and cov do not change
+        # under the shift). Same window spec, so this stacks on the
+        # same sort.
         unioned = unioned.withColumn("__o", F.nth_value("__t", 1).over(w))
     t = F.col("__t")
     is_ev = F.col("__tag") == F.lit(0)
@@ -626,33 +567,8 @@ def _asof_sortmerge(child, key_col, time_col, cutoffs, instance_col, specs,
             "sxy": lambda: F.sum(x * v),
         }
         running += [agg[p]().over(w).alias(nm) for p, nm in names.items()]
-    marked = unioned.select(
-        "__k", t.alias("__c"), *(["__o"] if trend else []), *running,
-    ).filter(~is_ev)
+    marked = unioned.select("__k", t.alias("__c"), *running).filter(~is_ev)
 
-    # each partial at its marker row: trend's x sums re-centred at the
-    # cutoff, so every salt sub-stream of one (key, cutoff) shares one
-    # origin (exact shifts: sx' = sx − n·d, sx2' = sx2 − 2d·sx + n·d²,
-    # sxy' = sxy − d·sy)
-    rows: dict = {}
-    d = (F.col("__c") - F.col("__o")) / F.lit(1e6) if trend else None
-    for names in streams.values():
-        c = {p: F.col(nm) for p, nm in names.items()}
-        for p, nm in names.items():
-            e = c[p]
-            if p == "sx":
-                e = e - c["n"] * d
-            elif p == "sx2":
-                e = e - 2.0 * d * c["sx"] + c["n"] * d * d
-            elif p == "sxy":
-                e = e - d * c["s"]
-            rows[nm] = e
-    if salted:
-        marked = marked.groupBy("__k", "__c").agg(*[
-            _combine(p, rows[nm], lambda q, n=names: rows[n[q]]).alias(nm)
-            for names in streams.values() for p, nm in names.items()
-        ])
-        rows = {nm: F.col(nm) for nm in rows}
     key_type = cutoffs.schema[instance_col].dataType.simpleString()
     child_t = dict(child.dtypes)
     c_us = F.col("__c")
@@ -660,7 +576,7 @@ def _asof_sortmerge(child, key_col, time_col, cutoffs, instance_col, specs,
         F.col("__k").cast(key_type).alias(instance_col),
         F.timestamp_micros(c_us).alias(cutoff_col),
         *[_finalize(s.primitive.name,
-                    lambda p, n=streams[stream(s)]: rows[n[p]], c_us)
+                    lambda p, n=streams[stream(s)]: F.col(n[p]), c_us)
           .cast(_output_type(s, child_t)).alias(s.out_name) for s in specs],
     )
     return _fill_defaults(result, {s.out_name: s.primitive.default_value

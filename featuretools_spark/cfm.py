@@ -75,7 +75,6 @@ from featuretools_spark.asof import (
     AggSpec,
     _aggregate_rows,
     _asof_sortmerge,
-    _combine,
     _fill_defaults,
     _finalize,
     _nan_to_null,
@@ -110,7 +109,6 @@ def calculate_feature_matrix(
     approximate=None,
     strategy: str = "join",
     cutoff_time_in_index: bool = True,
-    salt: int | None = None,
 ) -> DataFrame:
     """Compute the feature matrix.
 
@@ -128,21 +126,22 @@ def calculate_feature_matrix(
     One key frame per call carries every stage. At a scalar cutoff it
     is the target table with the literal cutoff, the target's own
     features and the columns later stages read. At per-row cutoffs it
-    is the cutoff rows themselves, pass columns on them: under "join"
-    the aggregation groups chain on those rows, each grouped back per
+    is the cutoff rows themselves, pass columns on them: the
+    aggregation groups chain on those rows, each grouped back per
     cutoff row, and one left join then brings in the target's columns.
+    Under `approximate` the groups chain on the key frame's distinct
+    binned keys instead, and one left join fans their outputs out onto
+    the key frame.
 
     strategy: "join" (default) | "sortmerge" | "auto". It picks the
-    evaluator at per-row cutoffs only; a scalar cutoff ignores it and
-    salt, and every group takes the join. At per-row cutoffs
-    "sortmerge" runs an unbounded, single-hop group with inputs that
-    do not vary per cutoff on the JVM running windows (asof.py), with
-    explicit hot-key salting through salt=; every other group, and
-    every group of a training_window call, runs on the join, where
-    AQE's skew join splits a hot key. "auto" runs "join", decided from
-    the call's arguments with no data read: no measured rule yet says
-    when the running windows win. `approximate` aggregates over the
-    key frame's distinct binned keys and left-joins back.
+    evaluator at per-row cutoffs only; at a scalar cutoff every group
+    takes the join. At per-row cutoffs "sortmerge" runs an unbounded,
+    single-hop group with inputs that do not vary per cutoff on the
+    JVM running windows (asof.py); every other group, and every group
+    of a training_window call, runs on the join, where AQE's skew join
+    splits a hot key. "auto" runs "join", decided from the call's
+    arguments with no data read: no measured rule yet says when the
+    running windows win.
     """
     if strategy not in ("join", "sortmerge", "auto"):
         raise ValueError(
@@ -257,9 +256,6 @@ def calculate_feature_matrix(
         keys = cutoffs
     if instance_ids is not None:
         keys = keys.filter(F.col(index_col).isin(list(instance_ids)))
-    # each aggregation group groups back per key-frame row; approximate
-    # computes per distinct binned key and fans out onto the key frame
-    chain = approx_td is None
     if scalar_cutoff is None and _is_derived_plan(keys):
         # the cutoff rows can feed more than one read (the running
         # windows' distinct keys, approximate's fan-out, a holistic
@@ -270,34 +266,38 @@ def calculate_feature_matrix(
     matrix = keys
 
     # ---- aggregation features, one as-of aggregation per group ----
+    # the groups chain on one frame, each grouped back per row of it:
+    # the key frame, or under approximate its distinct binned keys,
+    # which one left join then fans out onto the key frame
     groups = _agg_groups(_rolled_up(es, agg_feats, training_window))
-    row_keys = None
-    if chain and scalar_cutoff is None and groups:
-        # the row key keeps cutoff rows with the same (instance, time)
-        # apart; the pass columns and earlier groups' outputs ride each
-        # groupBy as carries (asof._aggregate_rows), and leading with
-        # the instance lets the as-of join's partitioning serve it
-        matrix = matrix.withColumn(_ROW_KEY, F.monotonically_increasing_id())
-        row_keys = [index_col, CUTOFF_COL, _ROW_KEY]
-    if not chain:
+    fan_out = approx_td is not None and bool(groups)
+    agged, row_keys = matrix, None
+    if fan_out:
         step = int(round(approx_td.to_seconds()))
         binned = F.timestamp_seconds(
             F.floor(F.unix_micros(F.col(CUTOFF_COL))
                     / F.lit(step * 1_000_000)) * F.lit(step))
         matrix = matrix.withColumn("_ft_bin", binned)
-        agg_keys = keys.select(index_col, binned.alias(CUTOFF_COL)).distinct()
+        agged = keys.select(index_col, binned.alias(CUTOFF_COL)).distinct()
+    elif scalar_cutoff is None and groups:
+        # the row key keeps cutoff rows with the same (instance, time)
+        # apart; the pass columns and earlier groups' outputs ride each
+        # groupBy as carries (asof._aggregate_rows), and leading with
+        # the instance lets the as-of join's partitioning serve it
+        agged = matrix.withColumn(_ROW_KEY, F.monotonically_increasing_id())
+        row_keys = [index_col, CUTOFF_COL, _ROW_KEY]
     for feats in groups:
-        if chain:
-            matrix = _aggregate_group(es, feats, matrix, index_col, internal,
-                                      pit, strategy, salt, row_keys)
-            continue
-        part = _aggregate_group(es, feats, agg_keys, index_col, internal, pit,
-                                strategy, salt)
+        agged = _aggregate_group(es, feats, agged, index_col, internal, pit,
+                                 strategy, row_keys)
+    if fan_out:
+        # a left join: a cutoff row whose key is null reads the defaults
         matrix = _fill_defaults(
-            matrix.join(part.withColumnRenamed(CUTOFF_COL, "_ft_bin"),
+            matrix.join(agged.withColumnRenamed(CUTOFF_COL, "_ft_bin"),
                         on=[index_col, "_ft_bin"], how="left"),
-            {internal[f.get_name()]: f.primitive.default_value for f in feats})
-    matrix = matrix.drop(_ROW_KEY, "_ft_bin")
+            {internal[f.get_name()]: f.primitive.default_value
+             for feats in groups for f in feats}).drop("_ft_bin")
+    else:
+        matrix = agged.drop(_ROW_KEY)
 
     # ---- the target's columns onto the cutoff rows ----
     if scalar_cutoff is None and tgt_cols:
@@ -415,11 +415,13 @@ def _use_previous(f):
 # partials instead of joining every C row to its A ancestor. The
 # partials (asof._PARTIALS: n, s, mn, mx) are stacked inputs at the M
 # grain, so they ride the groupBy(C -> M key[, cutoff]) that already
-# computes the M-grain stacked inputs; A combines them (asof._combine)
+# computes the M-grain stacked inputs; A combines them (_COMBINE)
 # inside the groupBy(M -> A key) of its M-level features and finalizes
 # (asof._finalize). Longer paths fold one hop at a time.
 # ----------------------------------------------------------------------
 _ROLLUP_PRIMS = ("count", "sum", "mean", "min", "max")
+# how one grain's partials merge into the next grain's
+_COMBINE = {"n": F.sum, "s": F.sum, "mn": F.min, "mx": F.max}
 # value types whose rollup types equal the join path's: a decimal's sum
 # of sums widens its precision, and float * count is computed in float
 _ROLLUP_TYPES = ("tinyint", "smallint", "int", "bigint", "double")
@@ -467,7 +469,7 @@ class _RollUp(AggregationPrimitive):
             rows = dict(zip(parts, inputs))
 
         def c(q):
-            return _combine(q, rows[q], None)
+            return _COMBINE[q](rows[q])
 
         return (_finalize(self.target, c, None) if self.final
                 else c(self.target))
@@ -566,7 +568,7 @@ def _rolled(es, target, path, x, weighted, final=False, default=None):
 
 
 def _aggregate_group(es, feats, keys, index_col, names, pit, strategy="join",
-                     salt=None, row_keys=None) -> DataFrame:
+                     row_keys=None) -> DataFrame:
     """One as-of aggregation for a group from _agg_groups: the deepest
     child of the group's path, the group's inputs materialized on it,
     one AggSpec per feature (output column names[f.get_name()]). The
@@ -580,14 +582,14 @@ def _aggregate_group(es, feats, keys, index_col, names, pit, strategy="join",
     attach to it and every column it carries is kept (how the matrix
     chains its groups and stacked inputs attach to a child frame).
 
-    A scalar cutoff takes the join whatever strategy and salt say: the
+    A scalar cutoff takes the join whatever the strategy: the
     PIT-filtered child rows grouped by the entity key. Per-row cutoffs
     take _aggregate_keyed, except a "sortmerge" group with no training
     window or use_previous, over one hop, with inputs that do not vary
     per cutoff: the specs a running window computes
     (asof._split_kernel_specs) run on asof._asof_sortmerge over the
-    distinct (index_col, CUTOFF_COL) of keys, salted by salt, and the
-    rest on _aggregate_keyed. Returns keys plus one column per feature,
+    distinct (index_col, CUTOFF_COL) of keys, and the rest on
+    _aggregate_keyed. Returns keys plus one column per feature,
     defaults filled."""
     win, nobs = _use_previous(feats[0])
     sc, inc, tw = pit
@@ -638,7 +640,7 @@ def _aggregate_group(es, feats, keys, index_col, names, pit, strategy="join",
     on = [index_col, CUTOFF_COL]
     windows = _asof_sortmerge(child_df, key_col, time_col,
                               keys.select(*on).distinct(), index_col, kern,
-                              CUTOFF_COL, inc, salt=salt)
+                              CUTOFF_COL, inc)
     # a left join: the windows hold one row per distinct (instance,
     # cutoff) of keys, and keys' rows are the output's
     return _fill_defaults(out.join(windows, on=on, how="left"),

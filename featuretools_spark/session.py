@@ -30,11 +30,11 @@ def get_spark(
         # allow co-partitioned joins when both sides share the SAME
         # subset of the join keys: the sortmerge running windows leave
         # their output entity-partitioned, and the joins on (entity,
-        # cutoff) after them (the merge with join-routed specs, the
-        # fan-out of "sortmerge" and approximate results onto the key
-        # frame) then need no re-shuffle of an entity-partitioned
-        # side; the same holds for a per-cutoff direct's (key, cutoff)
-        # join (guide §2.4). Scale-independent planner behavior, not a
+        # cutoff) after them (the windows' output onto the chained key
+        # frame, approximate's one fan-out of every group's output onto
+        # the key frame) then need no re-shuffle of an
+        # entity-partitioned side; the same holds for a per-cutoff
+        # direct's (key, cutoff) join (guide §2.4). Scale-independent planner behavior, not a
         # local[32] tune: the subset key's skew equals the skew the
         # upstream aggregation already carried.
         .config("spark.sql.requireAllClusterKeysForCoPartition", "false")

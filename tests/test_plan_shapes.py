@@ -8,8 +8,8 @@ map job into a 100-TB shuffle, so pin the executed plan here.
 
 The as-of evaluators are pure JVM: no plan crosses into Python, and
 strategy="sortmerge" is one Exchange + one Sort under its running
-windows (plus the salt merge's Exchange when salted). A scalar cutoff
-never runs the windows: its plan is the join's whatever the strategy.
+windows, with no Aggregate. A scalar cutoff never runs the windows:
+its plan is the join's whatever the strategy.
 
 A depth-2 DFS at a scalar cutoff attaches its stacked inputs to the
 child frame: no table joins itself on its own index. At per-row
@@ -149,16 +149,14 @@ def _seq_feats(seqs, *names, **kw):
 WINDOWED = ("count", "sum", "mean", "std", "last", "time_since_last")
 
 
-@pytest.mark.parametrize("salt", [None, 4])
 @pytest.mark.parametrize("case", ["unbounded", "30 days",
                                   "30 days with max", "5 observations",
                                   "trend"])
-def test_sortmerge_asof_plan_shape(spark, asof_inputs, case, salt):
+def test_sortmerge_asof_plan_shape(spark, asof_inputs, case):
     """No sortmerge as-of plan crosses into Python. Its running windows
-    sit on exactly one Exchange and one Sort; unsalted calls aggregate
-    nothing, salted ones add only the salt merge's Exchange and
-    Aggregate. A bounded call and last-N route to the join path (no
-    marker Union)."""
+    sit on exactly one Exchange and one Sort, with no Exchange above
+    them and no Aggregate. A bounded call and last-N route to the join
+    path (no marker Union)."""
     seqs, cuts = asof_inputs
     bounded = {
         "30 days": (WINDOWED, dict(training_window="30 days"), {}),
@@ -171,14 +169,12 @@ def test_sortmerge_asof_plan_shape(spark, asof_inputs, case, salt):
         names, kw, feat_kw = bounded[case]
         es, feats = _seq_feats(seqs, *names, **feat_kw)
         out = fts.calculate_feature_matrix(
-            feats, es, cutoff_time=cuts, strategy="sortmerge", salt=salt,
-            **kw)
+            feats, es, cutoff_time=cuts, strategy="sortmerge", **kw)
     else:
         specs = (_specs(*WINDOWED, "min", "first") if case == "unbounded"
                  else _specs("trend", "count"))
         out = _asof_sortmerge(seqs, "entity_id", "event_time", cuts,
-                              "entity_id", specs, CUTOFF_COL, True,
-                              salt=salt)
+                              "entity_id", specs, CUTOFF_COL, True)
     nodes = _nodes(out)
     for node in PYTHON_NODES:
         assert node not in nodes, node
@@ -194,9 +190,8 @@ def test_sortmerge_asof_plan_shape(spark, asof_inputs, case, salt):
     below = [i for i in exchanges if i > sorts[0]]
     above = [i for i in exchanges if i < windows[0]]
     assert len(below) == 1
-    assert len(above) == (1 if salt else 0)
-    has_agg = any("Aggregate" in n for n in nodes[:windows[0]])
-    assert has_agg == (salt is not None)
+    assert not above
+    assert not any("Aggregate" in n for n in nodes)
     assert len(out.collect()) == cuts.count()
 
 
@@ -209,9 +204,9 @@ def _normalized_plan(df) -> str:
 
 
 def test_scalar_cutoff_never_runs_the_running_windows(spark, asof_inputs):
-    """At a scalar cutoff strategy="sortmerge" and salt= change
-    nothing: the optimized plan is the join's, string for string, with
-    no marker Union and no Window, and the values are equal."""
+    """At a scalar cutoff strategy="sortmerge" changes nothing: the
+    optimized plan is the join's, string for string, with no marker
+    Union and no Window, and the values are equal."""
     seqs, _ = asof_inputs
     es, feats = _seq_feats(seqs, "count", "sum", "mean", "std",
                            "time_since_last")
@@ -220,11 +215,10 @@ def test_scalar_cutoff_never_runs_the_running_windows(spark, asof_inputs):
     want = _normalized_plan(join)
     assert "Union" not in want and "Window" not in want
     rows = {r["entity_id"]: r for r in join.collect()}
-    for salt in (None, 4):
-        fm = fts.calculate_feature_matrix(feats, es, cutoff_time=t,
-                                          strategy="sortmerge", salt=salt)
-        assert _normalized_plan(fm) == want, salt
-        assert {r["entity_id"]: r for r in fm.collect()} == rows, salt
+    fm = fts.calculate_feature_matrix(feats, es, cutoff_time=t,
+                                      strategy="sortmerge")
+    assert _normalized_plan(fm) == want
+    assert {r["entity_id"]: r for r in fm.collect()} == rows
 
 
 def test_sortmerge_matrix_has_no_python_node(spark, hot_seq_es):

@@ -2,7 +2,7 @@
 zero temporal leakage, token-array pass-through equality,
 partitioning invariance, include_cutoff_time semantics — and the as-of
 evaluators (scalar, join, sortmerge running windows) agreeing on
-windows, salting, last-N, empty windows, trend precision and NaN; one
+windows, last-N, empty windows, trend precision and NaN; one
 result schema whichever strategy runs, and the grouped-kernel shuffle
 width (cfm._kernel_nparts). Also the cutoff helpers: temporal cutoffs
 (time_utils) and approximate binning."""
@@ -259,10 +259,12 @@ def test_sortmerge_matches_join_windows(spark, seq_es_untimed,
 
 
 @pytest.mark.parametrize("window", [None, "3 days"])
-def test_salted_sortmerge_matches_join(spark, seq_es_untimed, window):
-    """Explicit hot-key salting: events split into salt sub-streams,
-    markers replicate, one JVM groupBy combines the per-salt partials —
-    results must equal the join strategy for every primitive."""
+def test_sortmerge_matches_join_including_trend(spark, seq_es_untimed,
+                                                window):
+    """Every primitive the running windows compute, trend and the
+    boolean reducers included, unbounded (the running windows) and
+    windowed (routed to the join path): results must equal the join
+    strategy to 1e-9."""
     es, seqs = seq_es_untimed
     cuts = make_cutoffs(spark, seqs, per_entity=3)
     n_tok = IdentityFeature(es, "sequences", "n_tok")
@@ -297,8 +299,8 @@ def test_salted_sortmerge_matches_join(spark, seq_es_untimed, window):
     a = _fm_dict(fts.calculate_feature_matrix(
         feats, es, strategy="join", **kw), cols)
     b = _fm_dict(fts.calculate_feature_matrix(
-        feats, es, strategy="sortmerge", salt=4, **kw), cols)
-    _assert_close(a, b)
+        feats, es, strategy="sortmerge", **kw), cols)
+    _assert_close_rel(a, b)
     assert sum(v[0] > 0 for v in a.values()) > len(a) / 4
 
 
@@ -360,21 +362,19 @@ def _assert_close_rel(a, b):
                 assert x == y, (k, x, y)
 
 
-@pytest.mark.parametrize("salt", [None, 4])
 @pytest.mark.parametrize("window", [None, "30 days"])
-def test_sortmerge_matches_join_all_primitives(spark, hot_seq_es, window,
-                                               salt):
+def test_sortmerge_matches_join_all_primitives(spark, hot_seq_es, window):
     """Every running-window primitive (and a where-masked count) on a
-    hot-entity input: sortmerge, unsalted and salted, unbounded (the
-    running windows) and windowed (routed to the join path), equals the
-    join strategy to 1e-9."""
+    hot-entity input: sortmerge, unbounded (the running windows) and
+    windowed (routed to the join path), equals the join strategy to
+    1e-9."""
     es, cuts, feats = hot_seq_es
     cols = [f.get_name() for f in feats]
     kw = dict(cutoff_time=cuts, training_window=window)
     a = _fm_dict(fts.calculate_feature_matrix(
         feats, es, strategy="join", **kw), cols)
     b = _fm_dict(fts.calculate_feature_matrix(
-        feats, es, strategy="sortmerge", salt=salt, **kw), cols)
+        feats, es, strategy="sortmerge", **kw), cols)
     _assert_close_rel(a, b)
 
 
@@ -448,11 +448,10 @@ def test_masked_count_string_index_sortmerge(spark, plain_es):
     assert any(v > 0 for _, v in res["join"])  # mask actually selects rows
 
 
-@pytest.mark.parametrize("salt", [None, 4])
-def test_trend_subhour_window_kernel(spark, salt):
+def test_trend_subhour_window_kernel(spark):
     """sortmerge TREND must not zero out sub-hour windows: its x sums
-    run on block-origin seconds re-centred at each cutoff, so varx
-    keeps window-span precision (raw epoch seconds lose it)."""
+    run on seconds from the entity's first row, so varx keeps
+    window-span precision (raw epoch seconds lose it)."""
     # 10 events 37s apart (~6 min span), exact slope 2.0/s; the first
     # timestamp is NOT minute-aligned so the reference unit dividend = 1
     t0 = dt.datetime(2024, 5, 1, 13, 7, 11)
@@ -477,19 +476,19 @@ def test_trend_subhour_window_kernel(spark, salt):
          ("e1", t0 + dt.timedelta(hours=2))],
         "entity_id string, time timestamp")
     fm = fts.calculate_feature_matrix([tr], es, cutoff_time=cuts,
-                                      strategy="sortmerge", salt=salt)
+                                      strategy="sortmerge")
     tcol = [c for c in fm.columns if "TREND" in c.upper()][0]
     vals = [r[tcol] for r in fm.collect()]
     assert len(vals) == 2
     for v in vals:
-        assert v == pytest.approx(2.0, rel=1e-9), (salt, vals)
+        assert v == pytest.approx(2.0, rel=1e-9), vals
 
 
 def test_nan_is_skipped_on_every_path(spark):
     """NaN in a double value column is skipped like a null, as pandas
     (the reference) skips it: sum 4.0, mean 2.0, max 3.0 over
     [1.0, NaN, 3.0] on the scalar, join and sortmerge paths —
-    unbounded, windowed and salted."""
+    unbounded and windowed."""
     t0 = dt.datetime(2024, 5, 1)
     rows = [(f"d{i}", "e1", t0 + dt.timedelta(days=i), v)
             for i, v in enumerate([1.0, float("nan"), 3.0])]
@@ -517,8 +516,6 @@ def test_nan_is_skipped_on_every_path(spark):
         "sortmerge 30 days": (feats, dict(
             cutoff_time=cuts, strategy="sortmerge",
             training_window="30 days")),
-        "sortmerge salt=4": (feats, dict(cutoff_time=cuts,
-                                         strategy="sortmerge", salt=4)),
     }
     for path, (fs, kw) in paths.items():
         rows = fts.calculate_feature_matrix(fs, es, **kw).collect()
@@ -637,15 +634,12 @@ def test_secondary_mask_nulls_values_not_times(spark, strategy, per_row):
     assert got == want
 
 
-@pytest.mark.parametrize("strategy,salt", [("join", None),
-                                           ("sortmerge", None),
-                                           ("sortmerge", 4)])
-def test_std_keeps_digits_on_large_offset_values(spark, strategy, salt):
+@pytest.mark.parametrize("strategy", ["join", "sortmerge"])
+def test_std_keeps_digits_on_large_offset_values(spark, strategy):
     """STD and VARIANCE of values with a large offset and a small spread
     (v = 1e9 + i % 4) stay within rel 1e-6 of numpy at per-row cutoffs:
-    the running windows read Spark's (n, avg, m2) variance buffer and
-    merge salt sub-streams by Chan et al.'s pairwise update, where a
-    sum of squares would lose every digit."""
+    the join and the running windows both read Spark's (n, avg, m2)
+    variance buffer, where a sum of squares would lose every digit."""
     import numpy as np
 
     t0 = dt.datetime(2024, 5, 1)
@@ -670,7 +664,7 @@ def test_std_keeps_digits_on_large_offset_values(spark, strategy, salt):
         [("e1", t0 + dt.timedelta(hours=n - 0.5)) for n in n_seen],
         "entity_id string, time timestamp")
     fm = fts.calculate_feature_matrix(feats, es, cutoff_time=cuts,
-                                      strategy=strategy, salt=salt)
+                                      strategy=strategy)
     got = sorted((r["time"], tuple(r[f.get_name()] for f in feats))
                  for r in fm.collect())
     assert len(got) == len(n_seen)
@@ -1001,3 +995,49 @@ def test_approximate_binning(es, spark):
         ),
     ).collect()[0][f.get_name()]
     assert ap[t1] == floor_exact
+
+
+def test_approximate_fans_out_once_over_every_group(es, spark):
+    """Under approximate every aggregation group chains on the distinct
+    binned keys, and one left join fans them all out onto the cutoff
+    rows: two groups (a plain SUM and a use_previous COUNT) read their
+    exact values at the bin floor, a cutoff row with a null key reads
+    the defaults, and the optimized plan joins on the bin once."""
+    import calendar
+
+    t1, t2 = dt.datetime(2024, 1, 15, 6), dt.datetime(2024, 1, 15, 18)
+    cuts = spark.createDataFrame(
+        [(0, t1), (0, t2), (0, dt.datetime(2024, 1, 19)), (None, t1)],
+        "user_id long, time timestamp",
+    )
+    v = IdentityFeature(es, "events", "value")
+    feats = [
+        AggregationFeature(v, "users", "sum", es=es),
+        AggregationFeature(v, "users", "count", es=es,
+                           use_previous="3 days"),
+    ]
+    names = [f.get_name() for f in feats]
+    approx = fts.calculate_feature_matrix(feats, es, cutoff_time=cuts,
+                                          approximate="2 days")
+    plan = approx._jdf.queryExecution().optimizedPlan().toString()
+    assert sum("Join" in ln and "_ft_bin" in ln
+               for ln in plan.splitlines()) == 1, plan
+    got = {(r["user_id"], r["time"]): tuple(r[n] for n in names)
+           for r in approx.collect()}
+
+    def floor(t):
+        s = (calendar.timegm(t.timetuple()) // 172800) * 172800
+        return dt.datetime.utcfromtimestamp(s)
+
+    floors = spark.createDataFrame(
+        [(0, floor(t)) for t in (t1, dt.datetime(2024, 1, 19))],
+        "user_id long, time timestamp")
+    exact = {r["time"]: tuple(r[n] for n in names)
+             for r in fts.calculate_feature_matrix(
+                 feats, es, cutoff_time=floors).collect()}
+    assert got[(0, t1)] == got[(0, t2)] == exact[floor(t1)]
+    assert got[(0, dt.datetime(2024, 1, 19))] == \
+        exact[floor(dt.datetime(2024, 1, 19))]
+    assert got[(None, t1)] == (0, 0)
+    # the comparison is not one of defaults
+    assert all(x > 0 for x in exact[floor(t1)]), exact
